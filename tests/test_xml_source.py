@@ -182,3 +182,72 @@ def test_parquet_sink(tmp_path, spark, corpus):
     assert nodes.count() == corpus.nodes.count()
     props = spark.read.parquet(os.path.join(out, "node_properties"))
     assert props.count() == corpus.properties.count()
+
+
+def _sink_jobs(spark, corpus, xrefs, db_path, group):
+    """(counts, Spark job ids) of one write_corpus_sqlite call run
+    under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "write_corpus_sqlite drain shape")
+    try:
+        counts = write_corpus_sqlite(corpus, db_path, cross_references=xrefs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return counts, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_sqlite_sink_one_job_per_table(tmp_path, spark, corpus):
+    from pyspark.sql import functions as F
+
+    from xml_to_sqlite3_spark.operators.relationships import detect_all_relationships
+
+    xrefs = detect_all_relationships(corpus.nodes, corpus.properties).withColumn(
+        "source_file", F.col("document_id")
+    )
+    # checkpointed so the sink and collect() read the same partitions
+    wide = xrefs.repartition(64).localCheckpoint()
+    narrow = xrefs.repartition(4).localCheckpoint()
+    assert wide.rdd.getNumPartitions() == 64
+
+    db_wide = str(tmp_path / "wide.sqlite3")
+    counts, jobs_wide = _sink_jobs(spark, corpus, wide, db_wide, "sqlite-drain-64")
+    _, jobs_narrow = _sink_jobs(
+        spark, corpus, narrow, str(tmp_path / "narrow.sqlite3"), "sqlite-drain-4"
+    )
+    # one drain job per table plus the shuffle stages of the
+    # documents aggregate and the two dedupe windows (7 in all),
+    # whatever the partition count; a per-partition drain would run
+    # 64+ jobs for the cross references alone
+    assert len(jobs_wide) == len(jobs_narrow) <= 8
+
+    cols = ["source_node_id", "target_node_id", "reference_type", "attribute_name",
+            "confidence", "source_file"]
+    expected = [tuple(r) for r in wide.select(*cols).collect()]
+    con = sqlite3.connect(db_wide)
+    got = con.execute(
+        f"SELECT {', '.join(cols)} FROM cross_references ORDER BY id"
+    ).fetchall()
+    con.close()
+    assert counts["cross_references"] == len(expected) > 0
+    assert got == expected  # partition order, so the ids follow it
+
+    # rewriting the same documents replaces their xrefs, never doubles them
+    write_corpus_sqlite(corpus, db_wide, cross_references=wide)
+    con = sqlite3.connect(db_wide)
+    assert con.execute("SELECT count(*) FROM cross_references").fetchone()[0] == len(expected)
+    con.close()
+    # and documents that now have no xrefs lose their old ones
+    write_corpus_sqlite(corpus, db_wide, cross_references=wide.limit(0))
+    con = sqlite3.connect(db_wide)
+    assert con.execute("SELECT count(*) FROM cross_references").fetchone()[0] == 0
+    con.close()
+
+    # a frame without source_file writes NULLs there
+    db_plain = str(tmp_path / "plain.sqlite3")
+    write_corpus_sqlite(corpus, db_plain, cross_references=xrefs.drop("source_file"))
+    con = sqlite3.connect(db_plain)
+    n, n_null = con.execute(
+        "SELECT count(*), sum(source_file IS NULL) FROM cross_references"
+    ).fetchone()
+    con.close()
+    assert n == len(expected) and n_null == n

@@ -69,11 +69,11 @@ def main(argv: list[str] | None = None) -> int:
             content_col=args.content_col,
         )
 
+    from pyspark.sql import functions as F
+
     xrefs = None
     if not args.no_relationships:
         from .operators.relationships import detect_all_relationships
-
-        from pyspark.sql import functions as F
 
         # carry the originating document as source_file (reference
         # column; also the delete-then-insert idempotence key)
@@ -81,13 +81,23 @@ def main(argv: list[str] | None = None) -> int:
             "source_file", F.col("document_id")
         )
 
+    # relationship detection runs once, inside the write: the
+    # Cross-references count comes from the sink, never a re-count
+    n_xrefs = 0
     if args.parquet_out:
         if os.path.exists(args.parquet_out) and not args.force:
             print(f"error: output exists (use --force): {args.parquet_out}", file=sys.stderr)
             return 2
         write_corpus_parquet(corpus, args.parquet_out)
         if xrefs is not None:
-            xrefs.write.mode("overwrite").parquet(os.path.join(args.parquet_out, "cross_references"))
+            from pyspark.sql import Observation
+
+            # counted by the write job itself, no extra Spark job
+            xref_obs = Observation("cross_references")
+            xrefs.observe(xref_obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
+                os.path.join(args.parquet_out, "cross_references")
+            )
+            n_xrefs = xref_obs.get["n"]
     else:
         if os.path.exists(args.output):
             if not args.force:
@@ -95,21 +105,21 @@ def main(argv: list[str] | None = None) -> int:
                 return 2
             os.remove(args.output)
         os.makedirs(os.path.dirname(os.path.abspath(args.output)), exist_ok=True)
-        write_corpus_sqlite(corpus, args.output, cross_references=xrefs, batch_size=args.batch_size)
+        counts = write_corpus_sqlite(
+            corpus, args.output, cross_references=xrefs, batch_size=args.batch_size
+        )
+        n_xrefs = counts.get("cross_references", 0)
 
     if args.verbose:
         for row in corpus.errors.collect():
             print(f"Error processing {row['filename']}: {row['parse_error']}")
 
     # main.rb:118-135 print_stats parity
-    from pyspark.sql import functions as F
-
     stats = corpus.nodes.agg(
         F.count(F.lit(1)).alias("total_nodes"),
         F.countDistinct("node_type").alias("node_types"),
         F.countDistinct("document_id").alias("documents"),
     ).collect()[0]
-    n_xrefs = xrefs.count() if xrefs is not None else 0
 
     print(f"Conversion complete! ({time.perf_counter() - t0:.1f}s)")
     print("\nDatabase Statistics:")

@@ -6,18 +6,25 @@ including the schema_migrations versioning table, so a user of the
 reference can point their existing SQL at our output unchanged.
 
 SQLite is inherently a single-writer file — the reference serializes
-all writes through one fiber too (lib/database_writer.rb). We stream
-partitions to the driver via toLocalIterator (bounded memory) and
-batch-insert. This is the COMPAT path for modest outputs; the scale
-path is parquet_sink.
+all writes through one fiber too (lib/database_writer.rb). Each table
+reaches the driver in ONE Spark job as Arrow record batches and is
+batch-inserted from there.
+
+Memory contract: the driver holds one table's Arrow result at a time
+(documents, then nodes, then node_properties, then cross_references).
+``spark.driver.maxResultSize`` caps that result, so a table too large
+for the driver fails loudly with a maxResultSize error rather than an
+out-of-memory kill. This is the single-file COMPAT sink for modest
+outputs; the scale sink is parquet_sink.
 """
 
 from __future__ import annotations
 
 import sqlite3
-from collections.abc import Iterable
+from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..sources.xml_source import XmlCorpus, dedupe_last_writer
 
@@ -123,6 +130,17 @@ def _insert_stream(
     return n
 
 
+def _arrow_rows(df: DataFrame) -> Iterator[tuple]:
+    """The frame's rows as tuples, in partition order, from ONE Spark
+    job: ``toArrow`` runs a single job over every partition and orders
+    the record batches by partition index (``toLocalIterator`` runs one
+    job per partition, a fixed cost that dominated small conversions).
+    The driver holds the whole Arrow result while the rows are
+    consumed, capped by ``spark.driver.maxResultSize``."""
+    for batch in df.toArrow().to_batches():
+        yield from zip(*(col.to_pylist() for col in batch.columns))
+
+
 def write_corpus_sqlite(
     corpus: XmlCorpus,
     db_path: str,
@@ -131,7 +149,10 @@ def write_corpus_sqlite(
     optimize: bool = True,
 ) -> dict[str, int]:
     """Write the corpus (and optionally detected relationships) to a
-    reference-schema SQLite database. Returns per-table row counts."""
+    reference-schema SQLite database. Returns per-table row counts.
+
+    Each table reaches the driver in one Spark job; see the module
+    docstring for the memory contract."""
     con = sqlite3.connect(db_path)
     con.execute("PRAGMA journal_mode = WAL")
     con.execute("PRAGMA foreign_keys = OFF")
@@ -140,44 +161,31 @@ def write_corpus_sqlite(
     counts: dict[str, int] = {}
 
     # documents are already unique by construction (corpus_from_parsed
-    # groups by document_id) — no dedupe window needed here
-    docs = corpus.documents
+    # groups by document_id) — no dedupe window needed here. One row
+    # per input file, so the list also serves the xref delete below.
+    docs = list(_arrow_rows(corpus.documents.select("id", "filename", "file_size", "file_hash")))
     counts["documents"] = _insert_stream(
         con,
         "INSERT OR REPLACE INTO documents (id, filename, file_size, file_hash)"
         " VALUES (?, ?, ?, ?)",
-        (
-            (r["id"], r["filename"], r["file_size"], r["file_hash"])
-            for r in docs.select(
-                "id", "filename", "file_size", "file_hash"
-            ).toLocalIterator()
-        ),
+        docs,
         batch_size,
     )
 
     # Resolve duplicate primary keys by parse ordinal BEFORE
     # streaming: with raw INSERT OR REPLACE the winner would be
-    # whichever partition toLocalIterator happens to deliver last —
-    # nondeterministic across runs, and inconsistent with
-    # parquet_sink's documented deterministic last-writer-wins.
+    # whichever row arrives last, which depends on partitioning —
+    # and inconsistent with parquet_sink's documented deterministic
+    # last-writer-wins.
     nodes = dedupe_last_writer(corpus.nodes, ["id"], "ordinal")
     counts["nodes"] = _insert_stream(
         con,
         "INSERT OR REPLACE INTO nodes (id, node_type, document_id, parent_id, position,"
         " content, xpath) VALUES (?, ?, ?, ?, ?, ?, ?)",
-        (
-            (
-                r["id"],
-                r["node_type"],
-                r["document_id"],
-                r["parent_id"],
-                r["position"],
-                r["content"],
-                r["xpath"],
-            )
-            for r in nodes.select(
+        _arrow_rows(
+            nodes.select(
                 "id", "node_type", "document_id", "parent_id", "position", "content", "xpath"
-            ).toLocalIterator()
+            )
         ),
         batch_size,
     )
@@ -189,12 +197,7 @@ def write_corpus_sqlite(
         con,
         "INSERT OR REPLACE INTO node_properties (node_id, property_name, property_value,"
         " data_type) VALUES (?, ?, ?, ?)",
-        (
-            (r["node_id"], r["property_name"], r["property_value"], r["data_type"])
-            for r in properties.select(
-                "node_id", "property_name", "property_value", "data_type"
-            ).toLocalIterator()
-        ),
+        _arrow_rows(properties.select("node_id", "property_name", "property_value", "data_type")),
         batch_size,
     )
 
@@ -202,24 +205,27 @@ def write_corpus_sqlite(
         # cross_references has a synthetic autoincrement PK, so
         # INSERT OR REPLACE can never replace — re-writing the same
         # documents would silently duplicate every xref row. Delete
-        # the rows previously written for these source files first
-        # (same idempotence contract as the streaming path).
-        _delete_xrefs_on(con, [r["id"] for r in docs.select("id").toLocalIterator()])
+        # the rows previously written for these source files first;
+        # this is also what makes a replayed streaming batch
+        # idempotent. Committed on its own so a document that now has
+        # no xrefs still loses its old ones.
+        _delete_xrefs_on(con, [r[0] for r in docs])
+        con.commit()
+        source_file = (
+            F.col("source_file")
+            if "source_file" in cross_references.columns
+            else F.lit(None).cast("string").alias("source_file")
+        )
         counts["cross_references"] = _insert_stream(
             con,
             "INSERT OR REPLACE INTO cross_references (source_node_id, target_node_id,"
             " reference_type, attribute_name, confidence, source_file)"
             " VALUES (?, ?, ?, ?, ?, ?)",
-            (
-                (
-                    r["source_node_id"],
-                    r["target_node_id"],
-                    r["reference_type"],
-                    r["attribute_name"],
-                    r["confidence"],
-                    r["source_file"] if "source_file" in r else None,
+            _arrow_rows(
+                cross_references.select(
+                    "source_node_id", "target_node_id", "reference_type", "attribute_name",
+                    "confidence", source_file,
                 )
-                for r in cross_references.toLocalIterator()
             ),
             batch_size,
         )
@@ -232,52 +238,13 @@ def write_corpus_sqlite(
     return counts
 
 
-def _delete_xrefs_on(con: sqlite3.Connection, source_files: list) -> int:
+def _delete_xrefs_on(con: sqlite3.Connection, source_files: list) -> None:
     """Chunked DELETE of cross_references rows by source_file on an
     open connection (500 placeholders per statement — one per file
-    would exceed SQLite's bound-variable limit on backlog drains).
-    Tolerates the table not existing yet (first write)."""
-    deleted = 0
-    try:
-        for i in range(0, len(source_files), 500):
-            chunk = source_files[i : i + 500]
-            if not chunk:
-                continue
-            cur = con.execute(
-                "DELETE FROM cross_references WHERE source_file IN (%s)"
-                % ",".join("?" * len(chunk)),
-                chunk,
-            )
-            deleted += cur.rowcount
-    except sqlite3.OperationalError as e:
-        if "no such table" not in str(e):
-            raise
-    return deleted
-
-
-def delete_xrefs_for_sources(db_path: str, source_files: list) -> int:
-    """Drop the cross_references rows previously written for these
-    source files. cross_references has a synthetic autoincrement PK
-    (db/migrate/001, matching the reference), so INSERT OR REPLACE
-    cannot dedupe a replayed batch — idempotent relationship
-    maintenance is delete-then-insert keyed on source_file. Returns
-    rows deleted; a missing database (first batch) deletes nothing.
-    """
-    import os
-
-    if not source_files or not os.path.exists(db_path):
-        return 0
-    con = sqlite3.connect(db_path)
-    try:
-        deleted = _delete_xrefs_on(con, list(source_files))
-        con.commit()
-        return deleted
-    except sqlite3.OperationalError as e:
-        # ONLY the first-batch missing-table case is benign; a locked
-        # database etc. must propagate — swallowing it would skip the
-        # delete and break replay idempotence (duplicate xref rows)
-        if "no such table" in str(e):
-            return 0
-        raise
-    finally:
-        con.close()
+    would exceed SQLite's bound-variable limit on backlog drains)."""
+    for i in range(0, len(source_files), 500):
+        chunk = source_files[i : i + 500]
+        con.execute(
+            "DELETE FROM cross_references WHERE source_file IN (%s)" % ",".join("?" * len(chunk)),
+            chunk,
+        )

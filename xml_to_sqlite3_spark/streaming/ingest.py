@@ -175,14 +175,14 @@ def stream_corpus_to_sqlite(
     from pyspark.sql import functions as F
 
     from ..operators.relationships import detect_all_relationships
-    from ..sinks.sqlite_sink import delete_xrefs_for_sources, write_corpus_sqlite
+    from ..sinks.sqlite_sink import write_corpus_sqlite
     from ..sources.xml_source import corpus_from_parsed
 
     def on_batch(parsed, batch_id: int) -> None:
-        # the batch feeds ~6 actions (emptiness check, xref
-        # detection over two projections, doc-id collect, and three
-        # sink streams) — without persist each one would re-run the
-        # XML parse of the batch's files
+        # the batch feeds five actions (the emptiness check and the
+        # sink's one drain per table, the xref drain running detection
+        # over two projections) — without persist each one would
+        # re-run the XML parse of the batch's files
         parsed = parsed.persist()
         try:
             if parsed.isEmpty():
@@ -200,18 +200,11 @@ def stream_corpus_to_sqlite(
         # reference's per-document relationship_processor model.
         # cross_references has a synthetic PK (no natural upsert
         # key), so idempotence under batch replay is delete-by-
-        # source_file THEN insert.
+        # source_file THEN insert — which write_corpus_sqlite does
+        # itself for the batch's documents before inserting.
         xrefs = detect_all_relationships(corpus.nodes, corpus.properties).withColumn(
             "source_file", F.col("document_id")
         )
-        # driver-side doc-id collect: bounded by the micro-batch's
-        # FILE count (maxFilesPerTrigger caps it), not the corpus —
-        # and the delete-then-insert target is the single-node SQLite
-        # compat sink, which serializes through the driver by
-        # definition. A distributed sink would push the delete down
-        # as a MERGE instead (see stream_rollup_to_parquet below).
-        doc_ids = [r["id"] for r in corpus.documents.select("id").collect()]
-        delete_xrefs_for_sources(db_path, doc_ids)
         write_corpus_sqlite(
             corpus, db_path, cross_references=xrefs, optimize=False
         )
