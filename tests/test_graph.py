@@ -232,15 +232,20 @@ def test_triangle_count_matches_bruteforce_random(spark):
     assert (r["n_edges"], r["n_triangles"]) == (len(edges), want)
 
 
-def test_scoped_confs_restored(spark):
-    """pagerank / triangle_count / the streaming runner all scope
-    session confs (shuffle partitions, AQE, broadcast threshold) —
-    a leak would silently re-plan every later query in the session."""
+def test_scoped_confs_restored(spark, tmp_path):
+    """pagerank / triangle_count / the hierarchy walk / BPE training /
+    the streaming runner and reader all scope session confs (shuffle
+    partitions, AQE, broadcast threshold, limit scan width, no-data
+    batches, parquet nanos) — a leak would silently re-plan every
+    later query in the session."""
     keys = [
         "spark.sql.shuffle.partitions",
         "spark.sql.adaptive.enabled",
         "spark.sql.join.preferSortMergeJoin",
         "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.limit.initialNumPartitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.legacy.parquet.nanosAsLong",
     ]
 
     def snap():
@@ -262,6 +267,46 @@ def test_scoped_confs_restored(spark):
     pagerank(edges, n_iter=2).count()
     assert snap() == before
     triangle_count(edges).count()
+    assert snap() == before
+
+    from xml_to_sqlite3_spark.operators import hierarchy, text
+
+    xrefs = spark.createDataFrame(
+        [(p, c, "parent_child") for p, c in (("r", "a"), ("a", "b"), ("b", "c"))],
+        "source_node_id string, target_node_id string, reference_type string",
+    )
+    assert hierarchy.ancestors(spark, xrefs, "c").count() == 3
+    assert snap() == before
+    text.train_bpe(
+        spark.createDataFrame([("low lower lowest",), ("low low",)], "text string"),
+        n_merges=2,
+    ).count()
+    assert snap() == before
+
+    # the streaming reader on the legacy int64-nanos events encoding
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from xml_to_sqlite3_spark.plans import streaming_q
+
+    hours = [dt.datetime(2024, 1, 1, h, 5) for h in (0, 0, 1, 2)]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(4), pa.int64()),
+                "ts": pa.array(hours, pa.timestamp("ns")),
+                "user_id": pa.array([1, 2, 1, 2], pa.int64()),
+                "event_type": ["click"] * 4,
+                "value": [1.0, 2.0, 3.0, 4.0],
+                "props": ["{}"] * 4,
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    win = streaming_q.streaming_windowed(spark, str(tmp_path)).collect()
+    assert [r["n_events"] for r in win] == [2, 1, 1]
     assert snap() == before
 
 

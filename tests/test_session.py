@@ -1,0 +1,55 @@
+"""session.scoped_conf — the one implementation of session-conf
+overrides — and the guard that keeps it the only one."""
+
+from __future__ import annotations
+
+import pathlib
+import re
+
+import pytest
+
+from xml_to_sqlite3_spark.session import scoped_conf
+
+_UNSET_KEY = "spark.sql.limit.initialNumPartitions"
+_SET_KEY = "spark.sql.shuffle.partitions"
+
+
+def test_scoped_conf_restores_set_and_unset_keys(spark):
+    assert _UNSET_KEY not in spark.conf.getAll
+    prior = spark.conf.getAll[_SET_KEY]
+    overrides = {_UNSET_KEY: "7", _SET_KEY: "3"}
+
+    with scoped_conf(spark, overrides):
+        assert spark.conf.get(_UNSET_KEY) == "7"
+        assert spark.conf.get(_SET_KEY) == "3"
+    assert _UNSET_KEY not in spark.conf.getAll
+    assert spark.conf.getAll[_SET_KEY] == prior
+
+    with pytest.raises(RuntimeError, match="boom"):
+        with scoped_conf(spark, overrides):
+            raise RuntimeError("boom")
+    assert _UNSET_KEY not in spark.conf.getAll
+    assert spark.conf.getAll[_SET_KEY] == prior
+
+    # an override Spark rejects part-way still restores the ones before it
+    with pytest.raises(Exception):
+        with scoped_conf(spark, {**overrides, "spark.sql.adaptive.enabled": "maybe"}):
+            pass
+    assert _UNSET_KEY not in spark.conf.getAll
+    assert spark.conf.getAll[_SET_KEY] == prior
+
+
+def test_conf_mutation_only_in_session_module():
+    """Every session-conf override goes through scoped_conf: a
+    hand-rolled set/restore block elsewhere in the package can leak
+    its conf into every later query of the shared session."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "xml_to_sqlite3_spark"
+    pattern = re.compile(r"conf\.(set|unset)\(")
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "session.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert offenders == []

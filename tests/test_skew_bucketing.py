@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from xml_to_sqlite3_spark.operators.skew import salted_join, write_bucketed
+from xml_to_sqlite3_spark.session import scoped_conf
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -45,9 +46,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     write_bucketed(nodes, "b_nodes", "node_id", buckets=8, path=str(tmp_path / "bn"))
     write_bucketed(props, "b_props", "node_id", buckets=8, path=str(tmp_path / "bp"))
 
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = spark.table("b_nodes").join(spark.table("b_props"), "node_id")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
@@ -58,5 +57,3 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         plain = nodes.join(props, "node_id")
         plain_plan = plain._jdf.queryExecution().executedPlan().toString()
         assert "Exchange hashpartitioning" in plain_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

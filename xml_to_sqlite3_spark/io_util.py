@@ -8,6 +8,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import scoped_conf
+
 TABLES = (
     "region",
     "nation",
@@ -83,10 +85,7 @@ def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
     # and properties writes from two threads) can interleave so one
     # thread's restore lands between another's set and its read —
     # the module-level lock serializes the critical section.
-    with _NANOS_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
-            return spark.read.parquet(path)
-        finally:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+    with _NANOS_CONF_LOCK, scoped_conf(
+        spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}
+    ):
+        return spark.read.parquet(path)

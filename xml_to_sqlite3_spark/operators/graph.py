@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 
 def bfs_distances(
     edges: DataFrame,
@@ -237,6 +239,19 @@ def out_degree_spine(e: DataFrame) -> DataFrame:
     )
 
 
+def _copartitioned_join_confs(n_part: int) -> dict[str, str]:
+    """The confs pagerank and triangle_count scope around their joins:
+    a fixed partition count, no AQE, no sort-merge, no broadcast — so
+    joins over inputs already hash-partitioned on the key run as
+    exchange-free shuffled hash joins (see pagerank)."""
+    return {
+        "spark.sql.shuffle.partitions": str(n_part),
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.join.preferSortMergeJoin": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
@@ -270,7 +285,7 @@ def pagerank(
       re-attach by another exchange-free co-partitioned join. The
       iteration scopes spark.sql.shuffle.partitions /
       adaptive.enabled / preferSortMergeJoin /
-      autoBroadcastJoinThreshold (restored in a finally) to keep
+      autoBroadcastJoinThreshold (session.scoped_conf) to keep
       those joins exchange-free — AQE's runtime coalescing would
       break the partitioning match, and Catalyst's default-stats
       view of a checkpointed LogicalRDD looks "small", which
@@ -304,11 +319,8 @@ def pagerank(
     summation order perturbs ~1e-15 relative, far below the
     rounding, so results are deterministic run to run.
 
-    NOT thread-safe: the scoped confs mutate the session-global
-    spark.conf for the duration of the iteration (restored in the
-    finally) — any query PLANNED concurrently in the same session
-    compiles under them. Fine for the single-threaded harness; a
-    concurrent caller should scope the work to spark.newSession().
+    NOT thread-safe: the scoped confs are session-global for the
+    duration of the iteration — see session.scoped_conf.
 
     ``edges_deduped=True`` skips the (src, dst) dedup for an input
     already known distinct; ``spine`` accepts a PRECOMPUTED (node,
@@ -329,21 +341,7 @@ def pagerank(
     """
     spark = edges.sparkSession
     n_part = n_partitions or min(8, spark.sparkContext.defaultParallelism)
-    conf = spark.conf
-    scoped = {
-        "spark.sql.shuffle.partitions": str(n_part),
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    saved = {}
-    for k, v in scoped.items():
-        try:
-            saved[k] = conf.get(k)
-        except Exception:
-            saved[k] = None
-        conf.set(k, v)
-    try:
+    with scoped_conf(spark, _copartitioned_join_confs(n_part)):
         e = edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         ).repartition(n_part, "src")
@@ -435,12 +433,6 @@ def pagerank(
             if tol > 0.0 and stats["__delta"] is not None and stats["__delta"] <= tol:
                 break
         return ranks.select("node", F.round("rank", 8).alias("rank"))
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
 
 
 def orient_edges(
@@ -529,28 +521,14 @@ def triangle_count(
     skips the dedup/degree/orientation joins entirely — one
     repartition of the (u, w) longs and straight to the wedge join.
 
-    NOT thread-safe: scoped confs mutate the session-global
-    spark.conf (restored in the finally) — see pagerank's note.
+    NOT thread-safe: the scoped confs are session-global — see
+    session.scoped_conf.
     """
     if oriented is None and edges is None:
         raise ValueError("triangle_count needs edges or a precomputed oriented set")
     spark = (oriented if oriented is not None else edges).sparkSession
     n_part = min(16, spark.sparkContext.defaultParallelism)
-    conf = spark.conf
-    scoped = {
-        "spark.sql.shuffle.partitions": str(n_part),
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    saved = {}
-    for k, v in scoped.items():
-        try:
-            saved[k] = conf.get(k)
-        except Exception:
-            saved[k] = None
-        conf.set(k, v)
-    try:
+    with scoped_conf(spark, _copartitioned_join_confs(n_part)):
         if oriented is None:
             oriented = orient_edges(
                 edges, src_col, dst_col, n_partitions=n_part
@@ -589,12 +567,6 @@ def triangle_count(
         return tri.select(
             F.lit(n_e).cast("long").alias("n_edges"), "n_triangles"
         ).localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
 
 
 def adamic_adar_topk(

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 
 def node_tree(spark: SparkSession, nodes: DataFrame, max_depth: int = 100) -> DataFrame:
     """README node_tree: every node with its level below the roots
@@ -174,23 +176,13 @@ def _edge_walk(
     # measured +1.0s on the ancestors gate. Scoping the initial
     # partition count to "all of them" keeps the r15 one-job-per-
     # level shape while the limit still caps the driver transfer.
-    conf = spark.conf
-    saved_inp = None
-    try:
-        saved_inp = conf.get("spark.sql.limit.initialNumPartitions")
-    except Exception:  # noqa: BLE001 — unset on older builds
-        saved_inp = None
-    conf.set("spark.sql.limit.initialNumPartitions", "100000")
-    try:
+    # The conf is session-global for the whole walk (not re-entrant
+    # against concurrent queries — see session.scoped_conf).
+    with scoped_conf(spark, {"spark.sql.limit.initialNumPartitions": "100000"}):
         return _edge_walk_levels(
             spark, edges, node_id, frontier, rows, schema,
             match_col, step_col, prepend_path, max_depth,
         )
-    finally:
-        if saved_inp is None:
-            conf.unset("spark.sql.limit.initialNumPartitions")
-        else:
-            conf.set("spark.sql.limit.initialNumPartitions", saved_inp)
 
 
 def _edge_walk_levels(

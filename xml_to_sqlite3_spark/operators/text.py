@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 # Tiny fixed stopword lists — deterministic, mirrored in SQL.
 STOPWORDS_EN = ("the", "a", "and", "of", "to", "in", "is", "it", "that", "for")
 STOPWORDS_ES = ("el", "la", "de", "que", "y", "en", "un", "es", "no", "por")
@@ -348,21 +350,13 @@ def train_bpe(
       (_select_safe_batch: mutually disjoint pairs whose counts
       strictly dominate every pair a merge could create or grow),
       cutting count jobs ~2-3x with a bit-identical sequence. The
-      loop scopes shuffle partitions down to vocab scale (restored
-      in a finally — NOTE: session-global conf, like pagerank's
-      scoped block; not safe against queries planned CONCURRENTLY in
-      the same session). Both paths are pinned identical by
+      loop scopes shuffle partitions down to vocab scale
+      (session.scoped_conf). Both paths are pinned identical by
       tests/test_text_bpe.py.
     """
     spark = df.sparkSession
-    conf = spark.conf
     n_part = min(8, spark.sparkContext.defaultParallelism)
-    try:
-        saved_sp = conf.get("spark.sql.shuffle.partitions")
-    except Exception:
-        saved_sp = None
-    conf.set("spark.sql.shuffle.partitions", str(n_part))
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n_part)}):
         vocab = (
             df.select(F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("w"))
             .filter(F.col("w") != "")
@@ -462,11 +456,6 @@ def train_bpe(
             [(i, l, r, n) for i, (l, r, n) in enumerate(merges)],
             "rank int, left string, right string, pair_count long",
         )
-    finally:
-        if saved_sp is None:
-            conf.unset("spark.sql.shuffle.partitions")
-        else:
-            conf.set("spark.sql.shuffle.partitions", saved_sp)
 
 
 def apply_bpe(

@@ -21,6 +21,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io_util import ts_seconds
+from ..session import scoped_conf
 from ..streaming.ingest import (
     read_event_stream,
     sessionize_stream,
@@ -61,24 +62,11 @@ def _run_to_table(result: DataFrame, prefix: str, mode: str = "complete") -> Dat
     # against every streaming oracle). Scoped exactly like the
     # partition count: a streaming query clones its session at
     # start, so the restored conf cannot affect the running query.
-    import os
-
     scoped = {
         "spark.sql.shuffle.partitions": str(n_part),
-        "spark.sql.streaming.noDataMicroBatches.enabled": (
-            # A/B escape used by the r16 measurements (1 = old
-            # behavior, i.e. run the zero-input batches)
-            "true" if os.environ.get("SPARK_GRAFT_STREAM_NODATA") == "1" else "false"
-        ),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
     }
-    saved: dict[str, str | None] = {}
-    for key, val in scoped.items():
-        try:
-            saved[key] = spark.conf.get(key)
-        except Exception:
-            saved[key] = None
-        spark.conf.set(key, val)
-    try:
+    with scoped_conf(spark, scoped):
         q = (
             result.writeStream.outputMode(mode)
             .format("memory")
@@ -86,12 +74,6 @@ def _run_to_table(result: DataFrame, prefix: str, mode: str = "complete") -> Dat
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        for key, old in saved.items():
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
     q.awaitTermination()
     # materialize the sink contents, then drop the uuid-named temp
     # view — back-to-back gate/bench sessions would otherwise pin

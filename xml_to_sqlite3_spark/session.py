@@ -10,6 +10,8 @@ small scale factors used in tests.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -79,3 +81,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, overrides: dict[str, str]) -> Iterator[None]:
+    """Set ``overrides`` on the session's runtime conf for the body,
+    then put every key back exactly as it was: a key that had an
+    explicit value gets that value again, a key that had none is
+    unset (so it falls back to Spark's default, not a frozen copy of
+    it). Restoring also happens when the body raises.
+
+    These confs are SESSION-GLOBAL and this helper takes no lock: a
+    query planned concurrently in the same session (another thread)
+    compiles under the overrides, and two overlapping scopes can
+    restore in the wrong order. Callers that run concurrently must
+    serialize around the scope themselves or use ``spark.newSession()``.
+    """
+    conf = spark.conf
+    explicit = conf.getAll
+    saved = {k: explicit.get(k) for k in overrides}
+    try:
+        for k, v in overrides.items():
+            conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)

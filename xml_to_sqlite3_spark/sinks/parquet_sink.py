@@ -24,11 +24,12 @@ def write_corpus_parquet(
 ) -> None:
     """Write the corpus as four parquet tables.
 
-    INSERT OR REPLACE parity: primary-key duplicates are resolved
-    last-writer-wins (deterministically by filename) before writing,
-    like the reference's upsert (lib/database_writer.rb:44-56).
+    INSERT OR REPLACE parity: node and property primary-key
+    duplicates are resolved last-writer-wins before writing, like the
+    reference's upsert (lib/database_writer.rb:44-56). Documents are
+    already unique by construction (every XmlCorpus producer emits one
+    row per document id), the same rule the SQLite sink relies on.
     """
-    documents = dedupe_last_writer(corpus.documents, ["id"], "filename")
     # parse ordinal = the reference writer's insertion order, so the
     # winner matches its INSERT OR REPLACE outcome exactly
     nodes = dedupe_last_writer(corpus.nodes, ["id"], "ordinal").drop("ordinal")
@@ -43,7 +44,7 @@ def write_corpus_parquet(
             writer = df.write.mode(mode).partitionBy("bucket")
         writer.parquet(os.path.join(out_dir, name))
 
-    _write(documents, "documents")
+    _write(corpus.documents, "documents")
     _write(nodes, "nodes", "document_id")
     _write(properties, "node_properties", "node_id")
     _write(corpus.errors, "errors")

@@ -16,6 +16,8 @@ to the batch path.
 
 from __future__ import annotations
 
+import json
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,8 +48,6 @@ def read_event_stream(
     conditionally, so batch and stream cannot diverge.
     """
     nanos = events_ts_is_nanos(spark, path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = (
         spark.readStream.format("parquet")
         .schema(EVENT_SCHEMA_NANOS if nanos else EVENT_SCHEMA)
@@ -56,8 +56,6 @@ def read_event_stream(
     if path.endswith(".parquet"):
         # file streams watch directories; single-file layouts stream
         # their parent dir filtered to the one file
-        import os
-
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
     return normalize_event_ts(reader.load(path))
@@ -246,8 +244,6 @@ def stream_rollup_to_parquet(
     the same window values again). Watermarked, so state and the
     re-emitted delta stay bounded.
     """
-    import os
-
     from pyspark.sql import functions as SF
 
     events = read_event_stream(spark, events_path)
@@ -369,7 +365,6 @@ def _prune_chain_tail(
     entry unlinks its names; inodes shared with newer entries
     survive. A pruned chain still cold-attaches at head — the head
     entry is self-contained (pinned by tests)."""
-    import os
     import shutil
     import time
 
@@ -391,6 +386,25 @@ def _prune_chain_tail(
             shutil.rmtree(path, ignore_errors=True)
             removed += 1
     return removed
+
+
+def _read_state(path: str, default: dict) -> dict:
+    """A maintenance stream's JSON chain sidecar, or ``default``
+    before the first batch has published one."""
+    if os.path.exists(path):
+        with open(path) as f:
+            return json.load(f)
+    return default
+
+
+def _write_state(path: str, state: dict) -> None:
+    """Publish the chain sidecar atomically (tmp file + rename), so a
+    crash mid-write never leaves a torn sidecar behind."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(state, f)
+    os.rename(tmp, path)
 
 
 def _replay_rewind(state: dict, batch_id: int, chain_fields: tuple) -> None:
@@ -476,9 +490,6 @@ def stream_document_maintenance(
     Returns the StreamingQuery. Read the current artifacts after
     (or during) the run with :func:`current_maintained_entries`.
     """
-    import json
-    import os
-
     from ..operators.dedup import append_components, append_dedup_documents
     from ..operators.search import append_text_index
 
@@ -487,23 +498,10 @@ def stream_document_maintenance(
         ("components_chain",) if maintain_components else ()
     )
 
-    def _load_state() -> dict:
-        if os.path.exists(state_path):
-            with open(state_path) as f:
-                return json.load(f)
-        return {f_: "" for f_ in chain_fields}
-
-    def _save_state(state: dict) -> None:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        tmp = f"{state_path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.rename(tmp, state_path)
-
     def on_batch(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        state = _load_state()
+        state = _read_state(state_path, {f_: "" for f_ in chain_fields})
         state.setdefault("components_chain", "")
         if maintain_components and state["components_chain"] != state.get(
             "dedup_chain", ""
@@ -564,7 +562,7 @@ def stream_document_maintenance(
             state["components_chain"] = centry["append_key"]
         state["prev"] = prev
         state["last_batch"] = batch_id
-        _save_state(state)
+        _write_state(state_path, state)
         # chain-entry GC: superseded (non-head, past-retention) chain
         # entries for each artifact family (see _prune_chain_tail)
         from ..operators.dedup import _components_store_key, _minhash_store_key
@@ -625,8 +623,6 @@ def _require_complete(final: str, what: str, chain: str, params: str) -> None:
     set, or the caller's params differ from the stream's — and the
     raw parquet path-not-found that would otherwise surface names
     neither the chain nor the fix."""
-    import os
-
     if not os.path.exists(os.path.join(final, "_COMPLETE")):
         raise ValueError(
             f"{what}: the maintenance sidecar names append chain {chain!r} "
@@ -656,9 +652,6 @@ def current_maintained_entries(
     ``maintain_components=True``). Pure attach: the content-keyed
     entries already exist, so no Spark job beyond parquet reads runs
     here."""
-    import json
-    import os
-
     from ..operators.dedup import _minhash_store_key
     from ..operators.search import _index_cache_root, _index_key
 
@@ -786,30 +779,14 @@ def stream_embedding_maintenance(
 
     Returns the StreamingQuery; read the current index with
     :func:`current_maintained_index`."""
-    import json
-    import os
-
     from ..operators.similarity import append_ivf_pq_index
 
     state_path = os.path.join(checkpoint_dir, "ivfpq_chain.json")
 
-    def _load() -> dict:
-        if os.path.exists(state_path):
-            with open(state_path) as f:
-                return json.load(f)
-        return {"chain": ""}
-
-    def _save(state: dict) -> None:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        tmp = f"{state_path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.rename(tmp, state_path)
-
     def on_batch(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        state = _load()
+        state = _read_state(state_path, {"chain": ""})
         _replay_rewind(state, batch_id, ("chain",))
         prev = {"chain": state["chain"]}
         entry = append_ivf_pq_index(
@@ -828,7 +805,7 @@ def stream_embedding_maintenance(
         state["chain"] = entry["append_key"]
         state["prev"] = prev
         state["last_batch"] = batch_id
-        _save(state)
+        _write_state(state_path, state)
         # chain-entry GC (see _prune_chain_tail)
         import tempfile
 
@@ -881,8 +858,6 @@ def current_maintained_index(
     """Attach the IVF-PQ index a maintenance stream has built so far
     (None before the first batch commits). Pure attach — parquet
     reads only."""
-    import json
-    import os
     import tempfile
 
     from ..operators.similarity import _ivfpq_key
@@ -957,26 +932,10 @@ def stream_graph_maintenance(
 
     Returns the StreamingQuery; attach the current store with
     :func:`current_maintained_graph`."""
-    import json
-    import os
-
     from ..plans.node_graph import append_documents
     from ..sources.xml_source import corpus_from_parsed
 
     state_path = os.path.join(checkpoint_dir, "graph_chain.json")
-
-    def _load() -> dict:
-        if os.path.exists(state_path):
-            with open(state_path) as f:
-                return json.load(f)
-        return {"chain": ""}
-
-    def _save(state: dict) -> None:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        tmp = f"{state_path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.rename(tmp, state_path)
 
     def on_batch(parsed, batch_id: int) -> None:
         # the parse feeds two projections (nodes + properties), each
@@ -1003,7 +962,7 @@ def stream_graph_maintenance(
             props = corpus.properties.select(
                 "node_id", "property_name", "property_value", "data_type"
             )
-            state = _load()
+            state = _read_state(state_path, {"chain": ""})
             _replay_rewind(state, batch_id, ("chain",))
             prev = {"chain": state["chain"]}
             entry = append_documents(
@@ -1019,7 +978,7 @@ def stream_graph_maintenance(
             state["chain"] = entry["append_key"]
             state["prev"] = prev
             state["last_batch"] = batch_id
-            _save(state)
+            _write_state(state_path, state)
             # chain-entry GC (see _prune_chain_tail)
             from ..plans.node_graph import _graph_append_key, _graph_cache_root
 
@@ -1056,9 +1015,6 @@ def current_maintained_graph(
     far: ``{"path", "append_key", <table>: DataFrame, ...}``, or None
     before the first batch commits. Pure attach — parquet reads
     only."""
-    import json
-    import os
-
     from ..plans.node_graph import (
         _STORE_SUBDIRS,
         _graph_append_key,
