@@ -45,8 +45,9 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     import __spark_entry__ as entrymod
+    from xml_to_sqlite3_spark.cache_util import GRAPH
     from xml_to_sqlite3_spark.plans import node_graph as ng
-    from xml_to_sqlite3_spark.session import get_spark
+    from xml_to_sqlite3_spark.session import get_spark, release_query_state
 
     spark = get_spark(app_name="bench_heavy")
     qs = entrymod.queries()
@@ -57,7 +58,7 @@ def main() -> None:
     except Exception:  # noqa: BLE001
         pass
 
-    base_dir = os.path.join(ng._graph_cache_root(), ng._graph_cache_key(sf_dir))
+    base_dir = GRAPH.path(ng._graph_cache_key(sf_dir))
     build_mode = (
         "attach" if os.path.exists(os.path.join(base_dir, "_COMPLETE")) else "build"
     )
@@ -66,20 +67,7 @@ def main() -> None:
         df.count()
     build_s = round(time.perf_counter() - t0, 2)
 
-    def _release_query_state() -> None:
-        # bench.py's per-query isolation, which this harness was
-        # missing (caught in r12: graph_clustering read 26-30s here
-        # after eight other heavy queries vs 2.1-2.5s standalone —
-        # the same accumulated-storage-block eviction thrash bench.py
-        # documents). Dropping cached blocks + nudging the
-        # ContextCleaner between runs restores clean-session numbers.
-        try:
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001 — hygiene must never fail the bench
-            pass
-
-    _release_query_state()
+    release_query_state(spark)
     runs: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
     for name in names:
@@ -100,7 +88,7 @@ def main() -> None:
                 errors[name] = (str(e) or repr(e)).splitlines()[0][:300]
                 break
             arr.append(round(time.perf_counter() - t0, 2))
-            _release_query_state()
+            release_query_state(spark)
         if arr:
             runs[name] = arr
 

@@ -48,11 +48,11 @@ def main() -> None:
     spark = get_spark(app_name="measure_append")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from xml_to_sqlite3_spark.cache_util import content_key
+    from xml_to_sqlite3_spark.cache_util import GRAPH, content_key
     from xml_to_sqlite3_spark.plans import node_graph as ng
 
     base_ck = ng._graph_cache_key(args.base)
-    base_dir = os.path.join(ng._graph_cache_root(), base_ck)
+    base_dir = GRAPH.path(base_ck)
     base_mode = (
         "attach" if os.path.exists(os.path.join(base_dir, "_COMPLETE")) else "build"
     )

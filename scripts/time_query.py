@@ -19,7 +19,8 @@ _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _HERE)
 
 import __spark_entry__ as entrymod  # noqa: E402
-from xml_to_sqlite3_spark.session import get_spark  # noqa: E402
+from bench import STORE_WARMUPS  # noqa: E402
+from xml_to_sqlite3_spark.session import get_spark, release_query_state  # noqa: E402
 
 
 def main() -> None:
@@ -34,30 +35,11 @@ def main() -> None:
     spark = get_spark(app_name="time_query")
     qs = entrymod.queries()
 
-    def _release() -> None:
-        try:
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001
-            pass
-
     # warm stores the same way bench.py does (not timed here)
-    from xml_to_sqlite3_spark.operators.dedup import (
-        get_components_store,
-        get_minhash_store,
-    )
-    from xml_to_sqlite3_spark.plans.node_graph import get_graph
-
-    for df in get_graph(spark, sf_dir):
-        df.count()
-    for df in get_minhash_store(
-        spark, os.path.join(sf_dir, "documents.parquet"), n=3, k=64
-    ):
-        df.count()
-    get_components_store(
-        spark, os.path.join(sf_dir, "documents.parquet"), threshold=0.3, n=3
-    ).count()
-    _release()
+    for warm in STORE_WARMUPS.values():
+        for df in warm(spark, sf_dir):
+            df.count()
+    release_query_state(spark)
 
     for name in names:
         for rep in range(reps):
@@ -72,7 +54,7 @@ def main() -> None:
                 print(f"{name} rep{rep}: ERROR {e}", flush=True)
             spark.sparkContext.setJobDescription(None)
             df = None
-            _release()
+            release_query_state(spark)
     spark.stop()
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from xml_to_sqlite3_spark.cache_util import DEDUP
 from xml_to_sqlite3_spark.operators import dedup as D
 
 BASE = (
@@ -335,8 +336,7 @@ def test_minhash_store_attach_and_equivalence(spark, tmp_path, monkeypatch):
     # an earlier test would satisfy this first call WITHOUT building
     # under this test's root, and the attach below would then be a
     # (poisoned) rebuild — clear so the build demonstrably happens here
-    D._MINHASH_STORE_MEMO.clear()
-    D._SIMHASH_STORE_MEMO.clear()
+    DEDUP.memo.clear()
     tokens, sigs = D.get_minhash_store(spark, path, n=3, k=64)
     docs = spark.read.parquet(path)
     # store contents equal a direct computation (pure function of text)
@@ -348,7 +348,7 @@ def test_minhash_store_attach_and_equivalence(spark, tmp_path, monkeypatch):
     # attach path: drop the memo; the second call must ATTACH, never
     # rebuild — pin it by poisoning the build's first step (a silent
     # rebuild would raise; attach never shingles)
-    D._MINHASH_STORE_MEMO.clear()
+    DEDUP.memo.clear()
 
     def _boom(*a, **kw):
         raise AssertionError("rebuild attempted — attach contract broken")
@@ -386,7 +386,7 @@ def test_minhash_store_attach_and_equivalence(spark, tmp_path, monkeypatch):
     a = D.minhash_lsh_pairs(docs, threshold=0.2)
     b = D.minhash_lsh_pairs(docs, threshold=0.2, tokens=t2, sigs=s2)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    D.clear_minhash_store()
+    DEDUP.clear()
 
 
 def test_shingle_novelty_first_occurrence(spark):
@@ -431,16 +431,11 @@ def test_shingle_novelty_store_tokens_match_recompute(spark, tmp_path):
     assert direct == via_store
     with pytest.raises(ValueError):
         shingle_novelty(df, n=4, tokens=tagged)
-    # a LEGACY 60-bit store frame (no h2) fails loud at the default
-    # width and still serves at key_width=60
+    # a LEGACY 60-bit store frame (no h2) fails loud
     legacy = _shingle_tokens(df, 3, "doc_id", "text").select("doc_id", "h")
     legacy._mh_meta = {"n": 3, "k": 64}
     with pytest.raises(ValueError, match="h2"):
         shingle_novelty(df, n=3, tokens=legacy)
-    assert (
-        shingle_novelty(df, n=3, tokens=legacy, key_width=60).collect()
-        == direct
-    )
 
 
 def test_components_store_attach_and_equivalence(spark, tmp_path, monkeypatch):
@@ -449,8 +444,7 @@ def test_components_store_attach_and_equivalence(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_MINHASH_CACHE", str(tmp_path / "mh"))
     sf = "/root/testdata/sf0.001"
     path = f"{sf}/documents.parquet"
-    D._MINHASH_STORE_MEMO.clear()
-    D._COMPONENTS_STORE_MEMO.clear()
+    DEDUP.memo.clear()
     store = D.get_components_store(spark, path, threshold=0.3, n=3)
     # store contents equal a direct computation (pure function)
     docs = spark.read.parquet(path)
@@ -462,7 +456,7 @@ def test_components_store_attach_and_equivalence(spark, tmp_path, monkeypatch):
     assert store.exceptAll(direct).count() == 0
     # attach: drop the memo; the second call must ATTACH, never
     # rebuild — poison the build's pair step to prove it
-    D._COMPONENTS_STORE_MEMO.clear()
+    DEDUP.memo.clear()
 
     def _boom(*a, **kw):
         raise AssertionError("rebuild attempted — attach contract broken")
@@ -736,11 +730,9 @@ def test_fuzzy_match_default_api(spark):
 
 
 class TestExactIdentityKeyWidth:
-    """r14 VERDICT task 3: the exact-identity key width is a knob
-    (60 = legacy single md5 half, 120 = both halves — the 100 TB
-    default), and the DuckDB oracles replay at BOTH widths: results
-    are identical absent a 60-bit collision, which no sf-scale corpus
-    contains."""
+    """The exact-identity key is 120 bits (both md5 halves), and the
+    full-text DuckDB oracles replay it: results equal the string key
+    absent a collision."""
 
     def test_hash_halves_portable(self, spark):
         """Both md5 halves match an independent python replica of the
@@ -761,8 +753,7 @@ class TestExactIdentityKeyWidth:
             assert r["h2"] == int(hx[15:30], 16)
             assert 0 <= r["h"] < 1 << 60 and 0 <= r["h2"] < 1 << 60
 
-    @pytest.mark.parametrize("width", [60, 120])
-    def test_ngram_jaccard_oracle_replay(self, spark, width):
+    def test_ngram_jaccard_oracle_replay(self, spark):
         from tests.oracle_harness import compare
         from xml_to_sqlite3_spark.plans.llm_pipeline import (
             NGRAM_JACCARD_ORACLE,
@@ -776,13 +767,11 @@ class TestExactIdentityKeyWidth:
             threshold=0.01,
             n=3,
             tokens=tokens,
-            key_width=width,
         ).orderBy("doc_a", "doc_b")
         ok, detail = compare(got, NGRAM_JACCARD_ORACLE, sf)
-        assert ok, (width, detail)
+        assert ok, detail
 
-    @pytest.mark.parametrize("width", [60, 120])
-    def test_line_dedup_oracle_replay(self, spark, width):
+    def test_line_dedup_oracle_replay(self, spark):
         from tests.oracle_harness import compare
         from xml_to_sqlite3_spark.operators import curation as C
         from xml_to_sqlite3_spark.plans.curation_q import (
@@ -792,7 +781,7 @@ class TestExactIdentityKeyWidth:
 
         sf = "/root/testdata/sf0.001"
         got = (
-            C.line_dedup(_wrapped_docs(spark, sf), key_width=width)
+            C.line_dedup(_wrapped_docs(spark, sf))
             .select(
                 "doc_id",
                 F.md5("text_deduped").alias("text_md5"),
@@ -802,16 +791,7 @@ class TestExactIdentityKeyWidth:
             .orderBy("doc_id")
         )
         ok, detail = compare(got, LINE_DEDUP_ORACLE, sf)
-        assert ok, (width, detail)
-
-    def test_invalid_width_raises(self, spark):
-        df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-        with pytest.raises(ValueError, match="key_width"):
-            D.ngram_jaccard_pairs(df, key_width=128).collect()
-        from xml_to_sqlite3_spark.operators import curation as C
-
-        with pytest.raises(ValueError, match="key_width"):
-            C.line_dedup(df, key_width=128).collect()
+        assert ok, detail
 
 
 def test_hash_halves_cross_module_parity(spark):

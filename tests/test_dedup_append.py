@@ -20,6 +20,7 @@ import pytest
 pytestmark = pytest.mark.heavy
 from pyspark.sql import functions as F
 
+from xml_to_sqlite3_spark.cache_util import DEDUP
 from xml_to_sqlite3_spark.operators import dedup as D
 
 _THRESH = 0.2
@@ -62,10 +63,7 @@ def appended(spark, tmp_path_factory):
     data = tmp_path_factory.mktemp("corpora")
     old_env = os.environ.get("SPARK_GRAFT_MINHASH_CACHE")
     os.environ["SPARK_GRAFT_MINHASH_CACHE"] = str(root)
-    D._MINHASH_STORE_MEMO.clear()
-    D._SIMHASH_STORE_MEMO.clear()
-    D._WINDOW_STORE_MEMO.clear()
-    D._COMPONENTS_STORE_MEMO.clear()
+    DEDUP.memo.clear()
     schema = "doc_id long, text string"
     base = spark.createDataFrame(_BASE_DOCS, schema)
     delta = spark.createDataFrame(_DELTA_DOCS, schema)
@@ -108,7 +106,7 @@ def appended(spark, tmp_path_factory):
             "delta": delta,
         }
     finally:
-        D.clear_minhash_store()
+        DEDUP.clear()
         if old_env is None:
             os.environ.pop("SPARK_GRAFT_MINHASH_CACHE", None)
         else:

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from xml_to_sqlite3_spark.cache_util import GRAPH
 from xml_to_sqlite3_spark.operators.graph import (
     bfs_distances,
     connected_components,
@@ -93,11 +94,11 @@ def test_graph_cache_content_key_and_pruning(spark, tmp_path, monkeypatch):
     key1 = NG._graph_cache_key(sf_dir)
     n1, p1, x1 = NG.get_graph(spark, sf_dir)
     count1 = x1.count()
-    root = NG._graph_cache_root()
+    root = GRAPH.root()
     assert os.path.exists(os.path.join(root, key1, "_COMPLETE"))
 
     # fresh-session reuse: same key, no rebuild (dir untouched)
-    NG._GRAPH_CACHE.clear()
+    GRAPH.memo.clear()
     mtime_before = os.path.getmtime(os.path.join(root, key1, "_COMPLETE"))
     _, _, x1b = NG.get_graph(spark, sf_dir)
     assert x1b.count() == count1
@@ -113,7 +114,7 @@ def test_graph_cache_content_key_and_pruning(spark, tmp_path, monkeypatch):
     # age the key1 entry past the grace window
     old = os.path.getmtime(os.path.join(root, key1)) - 7200
     os.utime(os.path.join(root, key1), (old, old))
-    NG._GRAPH_CACHE.clear()
+    GRAPH.memo.clear()
     _, _, x2 = NG.get_graph(spark, sf_dir)
     assert x2.count() == count1  # same data, same result
     assert os.path.exists(os.path.join(root, key2, "_COMPLETE"))
@@ -124,12 +125,12 @@ def test_graph_cache_content_key_and_pruning(spark, tmp_path, monkeypatch):
     os.utime(victim2, (os.path.getatime(victim2), os.path.getmtime(victim2) + 10))
     key3 = NG._graph_cache_key(sf_dir)
     assert key3 not in (key1, key2)
-    NG._GRAPH_CACHE.clear()
+    GRAPH.memo.clear()
     _, _, x3 = NG.get_graph(spark, sf_dir)
     assert x3.count() == count1
     assert os.path.exists(os.path.join(root, key2))  # fresh -> spared
 
-    NG._GRAPH_CACHE.clear()
+    GRAPH.memo.clear()
 
 
 def _naive_pagerank(edges, damping=0.85, n_iter=10):
@@ -455,20 +456,17 @@ def test_kcore_store_table_equals_live_fixpoint(spark):
     the round count) — the graph_kcore gate reads this table."""
     from tests.conftest import SF_SMOKE
     from xml_to_sqlite3_spark.operators.graph import kcore_decomposition
-    from xml_to_sqlite3_spark.plans.node_graph import (
-        get_coreness,
-        get_tri_oriented,
-    )
+    from xml_to_sqlite3_spark.plans.node_graph import graph_table
 
     stored = {
         r["node_id"]: r["coreness"]
-        for r in get_coreness(spark, SF_SMOKE).collect()
+        for r in graph_table(spark, SF_SMOKE, "coreness").collect()
     }
     stats: dict = {}
     live = {
         r["node_id"]: r["coreness"]
         for r in kcore_decomposition(
-            None, und=get_tri_oriented(spark, SF_SMOKE), stats=stats
+            None, und=graph_table(spark, SF_SMOKE, "tri_oriented"), stats=stats
         ).collect()
     }
     assert stored == live and len(stored) > 0

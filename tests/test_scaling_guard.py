@@ -29,7 +29,7 @@ which is not physically consistent with an O(data) term; the module
 re-ran green solo (19s) and as a module (59s, all 17) on a quiet box.
 Root cause: in the FULL suite this module's measurements inherit the
 shared session's accumulated storage blocks/heap from hundreds of
-prior tests (the exact degradation bench.py's _release_query_state
+prior tests (the exact degradation session.release_query_state
 documents: dedup-family blocks slowed a later graph query 2.5x, and
 r15 measured link_prediction 3s -> 23-59s after heavy gates in one
 session). The hygiene restores each test to a clean-session baseline
@@ -41,6 +41,9 @@ from __future__ import annotations
 import time
 
 import pytest
+
+from xml_to_sqlite3_spark.cache_util import GRAPH
+from xml_to_sqlite3_spark.session import release_query_state
 
 # scale-ratio sweeps run 8 heavy queries at two SFs — excluded from the inner loop (-m "not heavy")
 pytestmark = pytest.mark.heavy
@@ -116,24 +119,13 @@ def _best_of_2(fn) -> float:
     return best
 
 
-def _release_session_state(spark) -> None:
-    """bench.py's _release_query_state, applied before each ratio
-    measurement: drop accumulated cached/checkpointed blocks and nudge
-    the ContextCleaner so a full-suite shared session measures the
-    same clean-session baseline the bench (and a solo run) does. See
-    the module docstring's r16 note for the driver failure this
-    defends against."""
-    try:
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-    except Exception:  # noqa: BLE001 — hygiene must never fail the guard
-        pass
-
-
 @pytest.mark.parametrize("name,bound", RATIO_BOUNDS)
 def test_scaling_ratio(name, bound, warmed, spark):
     qs = warmed
-    _release_session_state(spark)
+    # bench-style hygiene before each ratio measurement: a full-suite
+    # shared session must measure the same clean-session baseline the
+    # bench (and a solo run) does — see the module docstring's r16 note
+    release_query_state(spark)
     t_small = _best_of_2(lambda: qs[name](spark, SF_SMALL).collect())
     t_big = _best_of_2(lambda: qs[name](spark, SF_BIG).collect())
     ratio = t_big / max(t_small, _DENOM_FLOOR)
@@ -171,7 +163,7 @@ def test_kcore_rounds_tripwire(warmed, spark):
 
     rounds = {}
     for sf, bound in ((SF_SMALL, 30), (SF_BIG, 45)):
-        store = os.path.join(ng._graph_cache_root(), ng._graph_cache_key(sf))
+        store = GRAPH.path(ng._graph_cache_key(sf))
         sidecar = os.path.join(store, "kcore_stats.json")
         assert os.path.exists(sidecar), (
             f"{sf}: store published without kcore_stats.json — the build "

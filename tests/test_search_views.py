@@ -6,6 +6,7 @@ import os
 
 import pytest
 
+from xml_to_sqlite3_spark.cache_util import INDEX
 from xml_to_sqlite3_spark.operators.search import bm25_search, build_text_index
 from xml_to_sqlite3_spark.plans.views import (
     create_node_type_views,
@@ -81,7 +82,7 @@ def test_sqlite_node_type_views(spark, tmp_path):
 def test_text_index_cache_lifecycle(spark, tmp_path):
     """The persistent index cache: builds once, attaches on repeat
     calls, distinguishes build columns in its key, and
-    clear_index_cache removes what THIS session built (forcing a
+    INDEX.clear() removes what THIS session built (forcing a
     rebuild on the next call)."""
     import os
 
@@ -111,7 +112,7 @@ def test_text_index_cache_lifecycle(spark, tmp_path):
         entries = [d for d in os.listdir(str(tmp_path / "icache")) if d.startswith("i_")]
         assert len(entries) == 2, entries
 
-        S.clear_index_cache()
+        INDEX.clear()
         assert not os.path.exists(str(tmp_path / "icache")) or not [
             d for d in os.listdir(str(tmp_path / "icache")) if d.startswith("i_")
         ]
@@ -121,7 +122,7 @@ def test_text_index_cache_lifecycle(spark, tmp_path):
         assert n4 == 20 and idx4.count() == c1
     finally:
         os.environ.pop("SPARK_GRAFT_INDEX_CACHE", None)
-        S.clear_index_cache()
+        INDEX.clear()
 
 
 class TestRRFFusion:
@@ -166,7 +167,7 @@ class TestIndexAppend:
         data = tmp_path_factory.mktemp("icorpora")
         old = os.environ.get("SPARK_GRAFT_INDEX_CACHE")
         os.environ["SPARK_GRAFT_INDEX_CACHE"] = str(root)
-        S._INDEX_CACHE.clear()
+        INDEX.memo.clear()
         schema = "doc_id long, text string"
         base = spark.createDataFrame(
             [
@@ -195,7 +196,7 @@ class TestIndexAppend:
             yield {"spark": spark, "got": got, "want": want,
                    "base_path": base_path, "delta": delta, "S": S}
         finally:
-            S.clear_index_cache()
+            INDEX.clear()
             if old is None:
                 os.environ.pop("SPARK_GRAFT_INDEX_CACHE", None)
             else:
@@ -234,7 +235,7 @@ class TestIndexAppend:
 
     def test_cold_attach_no_retokenize(self, appended, monkeypatch):
         spark, S = appended["spark"], appended["S"]
-        S._INDEX_CACHE.clear()
+        INDEX.memo.clear()
 
         def _boom(*a, **kw):
             raise AssertionError("re-tokenize attempted — attach contract broken")

@@ -6,6 +6,7 @@ import math
 
 import pytest
 
+from xml_to_sqlite3_spark.cache_util import CODEBOOK
 from xml_to_sqlite3_spark.operators import similarity as S
 
 DIM = 8
@@ -142,7 +143,7 @@ def test_codebook_cache_attach_identical(spark, tmp_path, monkeypatch):
     built = S.get_codebook(spark, path, k=4, n_iter=2)
     # drop the in-session memo: the next call must ATTACH from disk —
     # pin it by poisoning the trainer (a silent retrain would raise)
-    S._CODEBOOK_MEMO.clear()
+    CODEBOOK.memo.clear()
 
     def _boom(*a, **kw):
         raise AssertionError("retrain attempted — attach contract broken")
@@ -151,7 +152,7 @@ def test_codebook_cache_attach_identical(spark, tmp_path, monkeypatch):
         mp.setattr(S, "spherical_kmeans", _boom)
         attached = S.get_codebook(spark, path, k=4, n_iter=2)
     assert np.array_equal(built, attached)
-    S.clear_codebook_cache()
+    CODEBOOK.clear()
 
 
 class TestHardNegatives:
@@ -427,7 +428,7 @@ class TestProductQuantization:
         data = str(tmp_path / "vecs")
         pq_corpus.write.parquet(data)
         b1 = S.get_pq_codebooks(spark, data, m=4, ks=8, n_iter=2)
-        S._CODEBOOK_MEMO.clear()
+        CODEBOOK.memo.clear()
 
         def _boom(*a, **kw):
             raise AssertionError("retrain attempted — attach contract broken")
@@ -436,7 +437,7 @@ class TestProductQuantization:
             mp.setattr(S, "pq_train", _boom)
             b2 = S.get_pq_codebooks(spark, data, m=4, ks=8, n_iter=2)
         assert np.array_equal(b1, b2)
-        S.clear_codebook_cache()
+        CODEBOOK.clear()
 
 
 class TestIvfPq:
@@ -528,7 +529,7 @@ class TestIvfPq:
             (r["vec_id"], r["cluster"], tuple(r["codes"])) for r in idx.collect()
         }
         assert got == live
-        S.clear_codebook_cache()
+        CODEBOOK.clear()
 
 
 class TestPca:
@@ -736,7 +737,7 @@ class TestIvfPqAppend:
             S.append_ivf_pq_index(
                 spark, base_path, w2, delta_key="x", base_append="nope", **kw
             )
-        S.clear_codebook_cache()
+        CODEBOOK.clear()
 
 
 class TestIvfPqResidual:
@@ -865,7 +866,7 @@ class TestIvfPqResidual:
             for r in e["index"].collect()
         }
         assert got == want
-        S.clear_codebook_cache()
+        CODEBOOK.clear()
 
 
 class TestIvfPqResidualMarker:
@@ -1046,4 +1047,4 @@ class TestOpqRotation:
         # rotated and raw books are DIFFERENT artifacts
         raw_books = S.get_pq_codebooks(spark, data, m=4, ks=8, n_iter=2)
         assert not np.array_equal(books, raw_books)
-        S.clear_codebook_cache()
+        CODEBOOK.clear()

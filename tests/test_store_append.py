@@ -20,6 +20,7 @@ pytestmark = pytest.mark.heavy
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from xml_to_sqlite3_spark.cache_util import GRAPH
 from xml_to_sqlite3_spark.plans import node_graph as ng
 
 
@@ -111,9 +112,7 @@ def test_append_cold_attaches(appended, spark):
 def test_append_base_store_untouched(appended, spark):
     """Hard-link isolation: the base entry still matches a fresh read
     of its own tables after the append published."""
-    base_dir = os.path.join(
-        ng._graph_cache_root(), ng._graph_cache_key(SF_SMOKE)
-    )
+    base_dir = GRAPH.path(ng._graph_cache_key(SF_SMOKE))
     base_docs = [
         r["document_id"]
         for r in spark.read.parquet(f"{base_dir}/doc_ids").collect()
@@ -202,7 +201,7 @@ def test_build_coreness_optout(spark):
 
     nodes, props, xrefs = ng.get_graph(spark, SF_SMOKE, build_coreness=False)
     assert nodes.count() > 0 and xrefs.count() > 0
-    final = os.path.join(ng._graph_cache_root(), ck_nocore)
+    final = GRAPH.path(ck_nocore)
     assert os.path.exists(os.path.join(final, "_COMPLETE"))
     assert not os.path.isdir(os.path.join(final, "coreness"))
     assert not os.path.exists(os.path.join(final, "kcore_stats.json"))
@@ -212,7 +211,7 @@ def test_build_coreness_optout(spark):
             continue
         assert os.path.isdir(os.path.join(final, sub)), sub
     # the DEFAULT configuration still serves coreness in this session
-    assert ng.get_coreness(spark, SF_SMOKE).count() > 0
+    assert ng.graph_table(spark, SF_SMOKE, "coreness").count() > 0
     # appending onto the nocore base also skips the fixpoint and
     # publishes a coreness-less entry
     dn, dp = ng.synthesize_delta_document(spark, SF_SMOKE, tag="nc")

@@ -9,6 +9,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from xml_to_sqlite3_spark.cache_util import CODEBOOK, DEDUP, GRAPH, INDEX
 from xml_to_sqlite3_spark.io_util import load
 from xml_to_sqlite3_spark.streaming import (
     read_event_stream,
@@ -321,8 +322,8 @@ def test_stream_document_maintenance_two_waves(spark, tmp_path, monkeypatch):
     assert post_ms(s_index) == post_ms(b_index) == post_ms(r_index)
     assert (s_n, s_avgdl) == (b_n, b_avgdl) == (r_n, r_avgdl)
 
-    D.clear_minhash_store()
-    S.clear_index_cache()
+    DEDUP.clear()
+    INDEX.clear()
 
 
 def test_stream_embedding_maintenance_two_waves(spark, tmp_path, monkeypatch):
@@ -393,7 +394,7 @@ def test_stream_embedding_maintenance_two_waves(spark, tmp_path, monkeypatch):
         (r["vec_id"], r["cluster"], tuple(r["codes"]))
         for r in batch["index"].collect()
     } == want
-    S.clear_codebook_cache()
+    CODEBOOK.clear()
 
 
 def test_maintenance_replay_rewind():
@@ -561,7 +562,7 @@ def test_stream_document_maintenance_components(spark, tmp_path, monkeypatch):
     rebuilt = D.get_components_store(spark, union_path)
     assert streamed == comp_ms(rebuilt)
 
-    D.clear_minhash_store()
+    DEDUP.clear()
 
 
 @pytest.mark.heavy
@@ -579,7 +580,7 @@ def test_stream_graph_maintenance_two_waves(spark, tmp_path, monkeypatch):
     )
 
     monkeypatch.setenv("SPARK_GRAFT_GRAPH_CACHE", str(tmp_path / "gc"))
-    ng.clear_graph_cache()
+    GRAPH.clear()
 
     def doc(tag, n_items=3):
         items = "".join(
@@ -632,7 +633,7 @@ def test_stream_graph_maintenance_two_waves(spark, tmp_path, monkeypatch):
     # the streamed store actually contains the XML documents
     doc_ids = {r["document_id"] for r in got["doc_ids"].collect()}
     assert {"wave_a", "wave_b"} <= doc_ids
-    ng.clear_graph_cache()
+    GRAPH.clear()
 
 
 def test_components_chain_lockstep_guard(spark, tmp_path):
@@ -670,7 +671,6 @@ def test_chain_entry_pruning_and_head_attach(spark, tmp_path, monkeypatch):
         _minhash_cache_root,
         _minhash_store_key,
     )
-    from xml_to_sqlite3_spark.operators import search as S
     from xml_to_sqlite3_spark.streaming.ingest import (
         current_maintained_entries,
         stream_document_maintenance,
@@ -728,9 +728,7 @@ def test_chain_entry_pruning_and_head_attach(spark, tmp_path, monkeypatch):
     )
 
     # COLD attach at head: drop every in-session handle, then re-read
-    D._MINHASH_STORE_MEMO.clear()
-    D._SIMHASH_STORE_MEMO.clear()
-    D._WINDOW_STORE_MEMO.clear()
+    DEDUP.memo.clear()
     cold = current_maintained_entries(spark, base_path, ckpt)
     assert sorted(
         r["doc_id"] for r in cold["dedup"]["doc_ids"].collect()
@@ -744,5 +742,5 @@ def test_chain_entry_pruning_and_head_attach(spark, tmp_path, monkeypatch):
     )
     assert sig_ms(cold["dedup"]["sigs"]) == sig_ms(rb_sigs)
 
-    D.clear_minhash_store()
-    S.clear_index_cache()
+    DEDUP.clear()
+    INDEX.clear()

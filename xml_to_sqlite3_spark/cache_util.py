@@ -1,9 +1,11 @@
 """Shared content-keyed on-disk cache machinery.
 
-One implementation of the build-once/attach-many parquet cache both
-the node-graph store (plans/node_graph.get_graph) and the BM25 text
-index (operators/search.get_text_index) publish through — the
-concurrency and pruning subtleties live HERE exactly once:
+One implementation of the build-once/attach-many store lifecycle
+every persistent artifact (node graph, MinHash/components, text
+index, vector codebooks and indexes) goes through: the four cache
+roots and their in-session memos are the :class:`Store` instances
+below, and the concurrency and pruning subtleties live HERE exactly
+once:
 
 - atomic publish: build into a pid-suffixed tmp dir, write the
   ``_COMPLETE`` marker last, then ONE os.rename — concurrent
@@ -24,8 +26,9 @@ import functools
 import hashlib
 import os
 import shutil
+import tempfile
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 
 @functools.lru_cache(maxsize=None)
@@ -227,3 +230,89 @@ def link_tree(base_dir: str, tmp: str, subdirs: tuple[str, ...], what: str = "st
                     # cross-device cache roots (or a filesystem
                     # without hard links): fall back to a real copy
                     shutil.copy2(s, d)
+
+
+# the hint every chained append gives when its base entry is missing
+CHAIN_HINT = "appends must stack onto an existing entry in order"
+
+
+class Store:
+    """One content-keyed cache root and its lifecycle: where entries
+    live, the in-session memo of what was loaded from them, the
+    fail-loud check for an entry that must already exist, and the
+    clear() that removes what this process built."""
+
+    def __init__(self, env: str, default: str) -> None:
+        self.env = env
+        self.default = default
+        # (applicationId, key) -> load(final). applicationId, not
+        # id(sparkContext): CPython reuses object addresses after GC,
+        # so an id()-keyed hit could hand back DataFrames bound to a
+        # STOPPED session
+        self.memo: dict = {}
+        self.owned: list[str] = []
+
+    def root(self) -> str:
+        """Read at call time: tests and the benchmark harness point
+        the env var (or TMPDIR) elsewhere per run."""
+        return os.environ.get(
+            self.env, os.path.join(tempfile.gettempdir(), self.default)
+        )
+
+    def path(self, key: str) -> str:
+        return os.path.join(self.root(), key)
+
+    def publish(self, key: str, build: Callable[[str], None]) -> str:
+        """The published dir for ``key``, running ``build`` first when
+        absent. Unmemoized: append chains mint a new key per wave, so a
+        memo would grow for the life of a maintenance stream."""
+        return content_cached_dir(self.root(), key, build, owned_dirs=self.owned)
+
+    def get(self, spark, key: str, build: Callable[[str], None], load: Callable):
+        """``load(final)`` of the published entry for ``key``, building
+        it first when absent; memoized per session."""
+        mk = (spark.sparkContext.applicationId, key)
+        if mk not in self.memo:
+            self.memo[mk] = load(self.publish(key, build))
+        return self.memo[mk]
+
+    def require(self, key: str, what: str, hint: str) -> str:
+        """The published dir for ``key``, or a ValueError naming
+        ``what`` and ``hint`` — a raw parquet path-not-found would
+        name neither the missing entry nor the fix."""
+        final = self.path(key)
+        if not os.path.exists(os.path.join(final, "_COMPLETE")):
+            raise ValueError(
+                f"{what} is not published: no published entry exists at "
+                f"{final} — {hint}"
+            )
+        return final
+
+    def clear(self) -> None:
+        """Drop the memo AND the entries THIS process built (tests use
+        it to force a rebuild). Attached-only entries are other
+        sessions' property: deleting them would bypass the pruning
+        path's grace window."""
+        self.memo.clear()
+        while self.owned:
+            shutil.rmtree(self.owned.pop(), ignore_errors=True)
+
+
+GRAPH = Store("SPARK_GRAFT_GRAPH_CACHE", "spark_graft_graph_cache")
+# MinHash/SimHash/window postings and the components closure
+DEDUP = Store("SPARK_GRAFT_MINHASH_CACHE", "spark_graft_minhash_cache")
+INDEX = Store("SPARK_GRAFT_INDEX_CACHE", "spark_graft_index_cache")
+# IVF/PQ/OPQ models (.npy) and the IVF-PQ index
+CODEBOOK = Store("SPARK_GRAFT_CODEBOOK_CACHE", "spark_graft_codebook_cache")
+
+
+def read_tables(spark, final: str, names: Iterable[str]) -> dict:
+    """``{name: DataFrame}`` for the parquet tables of a published
+    entry. A clear+rebuild lands NEW part files at the SAME path, so
+    each path's file-status cache is dropped first — a stale listing
+    would point reads at deleted files (FAILED_READ_FILE)."""
+    out = {}
+    for name in names:
+        spark.catalog.refreshByPath(f"{final}/{name}")
+        out[name] = spark.read.parquet(f"{final}/{name}")
+    return out

@@ -955,7 +955,6 @@ def line_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    key_width: int = 120,
 ) -> DataFrame:
     """Corpus-level exact line deduplication (the RefinedWeb /
     CCNet-style pass): every distinct line is kept only at its FIRST
@@ -967,28 +966,15 @@ def line_dedup(
     (window row_number over (id, idx) — map-side partial does not
     apply to row_number, but the key space is the distinct-line set,
     and a duplicate-heavy corpus shrinks it), then one shuffle on the
-    document id to reassemble. ``key_width`` (r14 VERDICT task 3)
-    picks the identity key the winner shuffle runs on: the default
-    120 partitions on BOTH portable md5 halves of the line —
-    fixed 16 bytes instead of the full line text on the hot shuffle,
-    collisions ~n^2/2^121 (negligible at the 10^12-line scale where
-    the full-text key's shuffle volume hurts); 60 is the legacy
-    single-half width (collision-safe only to ~10^8 lines — a
-    collision silently DELETES a distinct line as a duplicate).
-    Results are identical across widths absent a collision, so the
-    full-text DuckDB oracle replays both.
+    document id to reassemble. The winner shuffle runs on BOTH
+    portable md5 halves of the line — fixed 16 bytes instead of the
+    full line text on the hot shuffle, collisions ~n^2/2^121
+    (negligible at the 10^12-line scale; one 60-bit half is
+    collision-safe only to ~10^8 lines, and a collision silently
+    DELETES a distinct line as a duplicate). Results equal the
+    full-text DuckDB oracle absent a collision.
     """
-    if key_width == 60:
-        line_key = [stable_hash60(F.col("line"))]
-    elif key_width == 120:
-        line_key = [
-            stable_hash60(F.col("line")),
-            stable_hash60_hi(F.col("line")),
-        ]
-    else:
-        raise ValueError(
-            f"line_dedup: key_width must be 60 or 120, got {key_width!r}"
-        )
+    line_key = [stable_hash60(F.col("line")), stable_hash60_hi(F.col("line"))]
     # r15 (guide §8: decide with small rows, move big rows once).
     # The old form shuffled every surviving LINE TEXT twice — once
     # through the winner window on the line key, once through the

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..cache_util import CHAIN_HINT, DEDUP, content_key, link_tree, read_tables
+
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup: md5(text) groups; keeper = min id per group.
@@ -127,7 +129,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     max_df: int | None = None,
     tokens: DataFrame | None = None,
-    key_width: int = 120,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing at least
     one shingle, via an inverted index: explode shingles, join on
@@ -144,22 +145,20 @@ def ngram_jaccard_pairs(
     # Join the inverted index on the fixed-width shingle HASH, not
     # the shingle string — same pairs and counts at far less shuffle
     # volume, since fixed 8-byte keys replace the full n-gram text on
-    # both sides of the hot join. ``key_width`` picks the identity
-    # width (r14 VERDICT task 3): the default 120 joins on BOTH md5
-    # halves (collisions ~n^2/2^121 — safe at 10^12 shingles);
-    # 60 is the legacy single-half width, collision-safe only to
-    # ~10^8 shingles. One shared shingle pass (_shingle_tokens) with
-    # the set size carried through the explode — or the persistent
+    # both sides of the hot join. The key is BOTH md5 halves
+    # (collisions ~n^2/2^121 — safe at 10^12 shingles; one 60-bit
+    # half is collision-safe only to ~10^8). One shared shingle pass
+    # (_shingle_tokens) with the set size carried through the
+    # explode — or the persistent
     # store's postings with the size re-derived by one count+join
     # (postings are distinct per doc, so the count IS the set size).
-    kc = _key_cols(key_width, "ngram_jaccard_pairs")
+    kc = _KEY_COLS
     if tokens is not None:
         _check_store_meta(tokens, "tokens", n=n)
-        if "h2" not in tokens.columns and "h2" in kc:
+        if "h2" not in tokens.columns:
             raise ValueError(
-                "ngram_jaccard_pairs: key_width=120 needs the store's h2 "
-                "column — rebuild the dedup store (legacy 60-bit entry) "
-                "or pass key_width=60"
+                "ngram_jaccard_pairs: the 120-bit key needs the store's h2 "
+                "column — rebuild the dedup store (legacy 60-bit entry)"
             )
         tokens = _carry_meta(tokens.select("doc_id", *kc), tokens)
     else:
@@ -245,27 +244,10 @@ def _md5_long_hi(col) -> F.Column:
     return F.conv(F.substring(F.md5(col), 16, 15), 16, 10).cast("long")
 
 
-def _key_cols(key_width: int, fn_name: str) -> list[str]:
-    """The posting-key column set for an exact-identity operation:
-    ``["h"]`` at 60 bits (the legacy/compat width), ``["h", "h2"]``
-    at the default 120 bits. One definition so every exact-identity
-    join/groupBy widens in lockstep."""
-    if key_width == 60:
-        return ["h"]
-    if key_width == 120:
-        return ["h", "h2"]
-    raise ValueError(
-        f"{fn_name}: key_width must be 60 or 120, got {key_width!r}"
-    )
-
-
-def _span_key_exprs(key_width: int):
-    """(builder, alias) pairs hashing a window/line value into the
-    exact-identity key columns at ``key_width`` — the Column-side
-    twin of :func:`_key_cols`."""
-    names = _key_cols(key_width, "_span_key_exprs")
-    builders = {"h": _md5_long, "h2": _md5_long_hi}
-    return [(builders[a], a) for a in names]
+# the 120-bit posting key of every exact-identity join/groupBy, and
+# the (builder, alias) pairs hashing a window value into it
+_KEY_COLS = ["h", "h2"]
+_SPAN_KEY_EXPRS = ((_md5_long, "h"), (_md5_long_hi, "h2"))
 
 
 def _shingle_tokens(
@@ -788,7 +770,6 @@ def duplicated_spans(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    key_width: int = 120,
 ) -> DataFrame:
     """Substring-level duplication detection — the span-granular pass
     of Lee et al. 2022 ("Deduplicating Training Data Makes Language
@@ -823,13 +804,13 @@ def duplicated_spans(
         .select(
             "doc_id",
             "pos",
-            *[c(F.col("win")).alias(a) for c, a in _span_key_exprs(key_width)],
+            *[c(F.col("win")).alias(a) for c, a in _SPAN_KEY_EXPRS],
         )
         # two consumers below (the count and the semi-join probe) —
         # without this the window pass over the text runs twice
         .localCheckpoint(eager=True)
     )
-    kc = _key_cols(key_width, "duplicated_spans")
+    kc = _KEY_COLS
     dup_hashes = (
         postings.groupBy(*kc)
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -872,7 +853,6 @@ def remove_duplicated_spans(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    key_width: int = 120,
 ) -> DataFrame:
     """APPLY substring-level dedup (the removal step of Lee et al.
     2022): corpus-wide, every ``window_tokens``-token window that
@@ -904,11 +884,11 @@ def remove_duplicated_spans(
         .select(
             "doc_id",
             "pos",
-            *[c(F.col("win")).alias(a) for c, a in _span_key_exprs(key_width)],
+            *[c(F.col("win")).alias(a) for c, a in _SPAN_KEY_EXPRS],
         )
         .localCheckpoint(eager=True)
     )
-    kc = _key_cols(key_width, "remove_duplicated_spans")
+    kc = _KEY_COLS
     # per-hash: occurrence count and the first (doc, pos); the struct
     # min orders lexicographically on (doc_id, pos)
     firsts = postings.groupBy(*kc).agg(
@@ -995,11 +975,6 @@ def remove_duplicated_spans(
     )
 
 
-_MINHASH_STORE_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-_SIMHASH_STORE_MEMO: dict[tuple[str, str], DataFrame] = {}
-_WINDOW_STORE_MEMO: dict[tuple[str, str], DataFrame] = {}
-_MINHASH_STORE_DIRS: list[str] = []
-
 # every parquet table a published dedup-store entry holds; ALL are
 # per-document rows (pure functions of each document alone), so the
 # append path hard-links the whole list and lands delta files
@@ -1007,19 +982,22 @@ _MINHASH_STORE_DIRS: list[str] = []
 _DEDUP_STORE_SUBDIRS = ("tokens", "sigs", "simhash", "win8", "doc_ids")
 
 
-def _minhash_cache_root() -> str:
-    """THE dedup/components cache root — one definition (the
-    _index_cache_root/_graph_cache_root precedent) shared by the
-    store builders, both append paths, and the maintenance-stream
-    attach accessor, so an env-var or default-path change can never
-    strand a reader away from the entries the writers publish."""
-    import os
-    import tempfile
+# the dedup/components cache root, under this name for the benchmark
+# harness (perfbench/workloads.py sizes the store entries under it)
+_minhash_cache_root = DEDUP.root
 
-    return os.environ.get(
-        "SPARK_GRAFT_MINHASH_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_minhash_cache"),
-    )
+
+def _dedup_tables(spark, final: str, doc_path: str, n: int, k: int) -> dict:
+    """Every table of a published dedup-store entry, tagged for the
+    consumers' checks: tokens/sigs carry their (n, k) — a store built
+    under other parameters yields silently wrong pairs (see
+    _check_store_meta) — and win8 its window width."""
+    out = read_tables(spark, final, _DEDUP_STORE_SUBDIRS)
+    meta = {"n": n, "k": k, "src": doc_path}
+    out["tokens"]._mh_meta = meta  # type: ignore[attr-defined]
+    out["sigs"]._mh_meta = meta  # type: ignore[attr-defined]
+    out["win8"]._win_n = 8  # type: ignore[attr-defined]
+    return out
 
 
 def _minhash_store_key(
@@ -1029,8 +1007,6 @@ def _minhash_store_key(
     by the build, the three getters, the append paths, and the test
     harness, so a key-format or parameter-default change can never
     desynchronize a reader from the entry it expects."""
-    from ..cache_util import content_key
-
     extra = f"n{n}_k{k}_{id_col}_{text_col}"
     if append:
         extra = f"{extra}|append|{append}"
@@ -1061,7 +1037,6 @@ def _components_store_key(
     ``base_append``, so two chains maintained with different k must
     never share one components entry — if token derivation ever became
     k-sensitive, a shared entry would silently serve the wrong chain."""
-    from ..cache_util import content_key
     from . import graph as _graph_mod
 
     extra = f"t{threshold}_n{n}_k{k}_{id_col}_{text_col}"
@@ -1096,17 +1071,15 @@ def get_minhash_store(
     functions of (text, n, k, fixed perm seeds), so attached ==
     recomputed exactly; per-doc rows mean any subset of documents
     can be served by a semi-join filter on the store."""
-    import os
-    import tempfile
+    t = _minhash_tables(spark, doc_path, n, k, id_col, text_col)
+    return t["tokens"], t["sigs"]
 
-    from ..cache_util import content_cached_dir, content_key
 
+def _minhash_tables(
+    spark, doc_path: str, n: int, k: int, id_col: str, text_col: str
+) -> dict:
+    """Every table of the base dedup-store entry (see get_minhash_store)."""
     ck = _minhash_store_key(doc_path, n, k, id_col, text_col)
-    memo_key = (spark.sparkContext.applicationId, ck)
-    memo = _MINHASH_STORE_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
-    root = _minhash_cache_root()
 
     def _build(tmp: str) -> None:
         docs = spark.read.parquet(doc_path)
@@ -1141,24 +1114,9 @@ def get_minhash_store(
         with open(f"{tmp}/_COMPLETE", "w") as f:
             f.write(ck)
 
-    final = content_cached_dir(root, ck, _build, owned_dirs=_MINHASH_STORE_DIRS)
-    for sub in _DEDUP_STORE_SUBDIRS:
-        spark.catalog.refreshByPath(f"{final}/{sub}")
-    tokens = spark.read.parquet(f"{final}/tokens")
-    sigs = spark.read.parquet(f"{final}/sigs")
-    # consumers validate these against their own (n, k) arguments —
-    # a store built under other parameters yields silently wrong
-    # pairs (see _check_store_meta)
-    meta = {"n": n, "k": k, "src": doc_path}
-    tokens._mh_meta = meta  # type: ignore[attr-defined]
-    sigs._mh_meta = meta  # type: ignore[attr-defined]
-    out = (tokens, sigs)
-    _MINHASH_STORE_MEMO[memo_key] = out
-    _SIMHASH_STORE_MEMO[memo_key] = spark.read.parquet(f"{final}/simhash")
-    win8 = spark.read.parquet(f"{final}/win8")
-    win8._win_n = 8  # type: ignore[attr-defined] — consumers validate
-    _WINDOW_STORE_MEMO[memo_key] = win8
-    return out
+    return DEDUP.get(
+        spark, ck, _build, lambda final: _dedup_tables(spark, final, doc_path, n, k)
+    )
 
 
 def get_simhash_store(
@@ -1172,15 +1130,7 @@ def get_simhash_store(
     """(doc_id, simhash) from the shared dedup store (built by the
     same get_minhash_store entry — n/k participate in the key because
     the entry is one artifact)."""
-    from ..cache_util import content_key
-
-    ck = _minhash_store_key(doc_path, n, k, id_col, text_col)
-    memo_key = (spark.sparkContext.applicationId, ck)
-    if memo_key not in _SIMHASH_STORE_MEMO:
-        get_minhash_store(
-            spark, doc_path, n=n, k=k, id_col=id_col, text_col=text_col
-        )
-    return _SIMHASH_STORE_MEMO[memo_key]
+    return _minhash_tables(spark, doc_path, n, k, id_col, text_col)["simhash"]
 
 
 def get_window_store(
@@ -1195,19 +1145,7 @@ def get_window_store(
     dedup store (built by the same get_minhash_store entry; the
     window width is fixed at the decontamination family's n=8 — the
     n/k here are the STORE key's MinHash parameters)."""
-    from ..cache_util import content_key
-
-    ck = _minhash_store_key(doc_path, n, k, id_col, text_col)
-    memo_key = (spark.sparkContext.applicationId, ck)
-    if memo_key not in _WINDOW_STORE_MEMO:
-        get_minhash_store(
-            spark, doc_path, n=n, k=k, id_col=id_col, text_col=text_col
-        )
-    return _WINDOW_STORE_MEMO[memo_key]
-
-
-_COMPONENTS_STORE_MEMO: dict[tuple[str, str], DataFrame] = {}
-_COMPONENTS_STORE_DIRS: list[str] = []
+    return _minhash_tables(spark, doc_path, n, k, id_col, text_col)["win8"]
 
 
 def get_components_store(
@@ -1232,18 +1170,9 @@ def get_components_store(
     from the minhash store's postings (no re-shingling); keyed on
     this module AND operators/graph.py (connected_components is the
     other half of the build code)."""
-    import os
-    import tempfile
-
-    from ..cache_util import content_cached_dir
     from .graph import duplicate_groups
 
     ck = _components_store_key(doc_path, threshold, n, k, id_col, text_col)
-    memo_key = (spark.sparkContext.applicationId, ck)
-    memo = _COMPONENTS_STORE_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
-    root = _minhash_cache_root()
 
     def _build(tmp: str) -> None:
         docs = spark.read.parquet(doc_path)
@@ -1260,11 +1189,12 @@ def get_components_store(
         with open(f"{tmp}/_COMPLETE", "w") as f:
             f.write(ck)
 
-    final = content_cached_dir(root, ck, _build, owned_dirs=_COMPONENTS_STORE_DIRS)
-    spark.catalog.refreshByPath(f"{final}/components")
-    out = spark.read.parquet(f"{final}/components")
-    _COMPONENTS_STORE_MEMO[memo_key] = out
-    return out
+    return DEDUP.get(
+        spark,
+        ck,
+        _build,
+        lambda final: read_tables(spark, final, ("components",))["components"],
+    )
 
 
 def _dedup_append_guard(spark, base_dir: str, dd: DataFrame, id_col: str) -> None:
@@ -1343,30 +1273,24 @@ def append_dedup_documents(
     appended entries are a pipeline capability with their own
     identity.
     """
-    import os
-    import tempfile
-
-    from ..cache_util import content_cached_dir, content_key, link_tree
-
-    root = _minhash_cache_root()
     if base_append:
         base_ck = _minhash_store_key(
             doc_path, n, k, id_col, text_col, append=base_append
         )
-        if not os.path.exists(os.path.join(root, base_ck, "_COMPLETE")):
-            raise ValueError(
-                f"append_dedup_documents: chained base entry "
-                f"(append chain {base_append!r}) is not published — "
-                "appends must stack onto an existing entry in order"
-            )
+        base_dir = DEDUP.require(
+            base_ck,
+            "append_dedup_documents: chained base entry "
+            f"(append chain {base_append!r})",
+            CHAIN_HINT,
+        )
         chain = f"{base_append}+{delta_key}"
     else:
         get_minhash_store(
             spark, doc_path, n=n, k=k, id_col=id_col, text_col=text_col
         )
         base_ck = _minhash_store_key(doc_path, n, k, id_col, text_col)
+        base_dir = DEDUP.path(base_ck)
         chain = delta_key
-    base_dir = os.path.join(root, base_ck)
     ck = _minhash_store_key(doc_path, n, k, id_col, text_col, append=chain)
 
     def _build(tmp: str) -> None:
@@ -1408,18 +1332,12 @@ def append_dedup_documents(
         with open(f"{tmp}/_COMPLETE", "w") as f:
             f.write(ck)
 
-    final = content_cached_dir(root, ck, _build, owned_dirs=_MINHASH_STORE_DIRS)
-    out: dict = {"path": final, "append_key": chain}
-    meta = {"n": n, "k": k, "src": doc_path}
-    for sub in _DEDUP_STORE_SUBDIRS:
-        spark.catalog.refreshByPath(f"{final}/{sub}")
-        frame = spark.read.parquet(f"{final}/{sub}")
-        if sub in ("tokens", "sigs"):
-            frame._mh_meta = meta  # type: ignore[attr-defined]
-        if sub == "win8":
-            frame._win_n = 8  # type: ignore[attr-defined]
-        out[sub] = frame
-    return out
+    final = DEDUP.publish(ck, _build)
+    return {
+        "path": final,
+        "append_key": chain,
+        **_dedup_tables(spark, final, doc_path, n, k),
+    }
 
 
 def _incremental_jaccard_pairs(
@@ -1550,23 +1468,17 @@ def append_components(
     of publishing a parallel one. Returns {"path": dir, "append_key":
     chain, "components": DataFrame}.
     """
-    import os
-    import tempfile
-
-    from ..cache_util import content_cached_dir
     from .graph import connected_components
 
-    root = _minhash_cache_root()
     if base_append:
         base_ck = _components_store_key(
             doc_path, threshold, n, k, id_col, text_col, append=base_append
         )
-        if not os.path.exists(os.path.join(root, base_ck, "_COMPLETE")):
-            raise ValueError(
-                f"append_components: chained base entry (append chain "
-                f"{base_append!r}) is not published — appends must stack "
-                "onto an existing entry in order"
-            )
+        base_dir = DEDUP.require(
+            base_ck,
+            f"append_components: chained base entry (append chain {base_append!r})",
+            CHAIN_HINT,
+        )
         chain = f"{base_append}+{delta_key}"
     else:
         get_components_store(
@@ -1576,8 +1488,8 @@ def append_components(
         base_ck = _components_store_key(
             doc_path, threshold, n, k, id_col, text_col
         )
+        base_dir = DEDUP.path(base_ck)
         chain = delta_key
-    base_dir = os.path.join(root, base_ck)
     ck = _components_store_key(
         doc_path, threshold, n, k, id_col, text_col, append=chain
     )
@@ -1597,10 +1509,9 @@ def append_components(
             pre_ck = _minhash_store_key(
                 doc_path, n, k, id_col, text_col, append=base_append
             )
-            spark.catalog.refreshByPath(os.path.join(root, pre_ck, "tokens"))
-            base_tokens = spark.read.parquet(
-                os.path.join(root, pre_ck, "tokens")
-            )
+            base_tokens = read_tables(spark, DEDUP.path(pre_ck), ("tokens",))[
+                "tokens"
+            ]
         else:
             base_tokens, _ = get_minhash_store(
                 spark, doc_path, n=n, k=k, id_col=id_col, text_col=text_col
@@ -1668,12 +1579,11 @@ def append_components(
         with open(f"{tmp}/_COMPLETE", "w") as f:
             f.write(ck)
 
-    final = content_cached_dir(root, ck, _build, owned_dirs=_COMPONENTS_STORE_DIRS)
-    spark.catalog.refreshByPath(f"{final}/components")
+    final = DEDUP.publish(ck, _build)
     return {
         "path": final,
         "append_key": chain,
-        "components": spark.read.parquet(f"{final}/components"),
+        **read_tables(spark, final, ("components",)),
     }
 
 
@@ -2041,28 +1951,12 @@ def fuzzy_match(
     )
 
 
-def clear_minhash_store() -> None:
-    """Drop in-session handles AND on-disk entries THIS session built
-    (tests); attached-only entries are other sessions' property."""
-    import shutil
-
-    _MINHASH_STORE_MEMO.clear()
-    _SIMHASH_STORE_MEMO.clear()
-    _WINDOW_STORE_MEMO.clear()
-    _COMPONENTS_STORE_MEMO.clear()
-    while _MINHASH_STORE_DIRS:
-        shutil.rmtree(_MINHASH_STORE_DIRS.pop(), ignore_errors=True)
-    while _COMPONENTS_STORE_DIRS:
-        shutil.rmtree(_COMPONENTS_STORE_DIRS.pop(), ignore_errors=True)
-
-
 def shingle_novelty(
     df: DataFrame,
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
     tokens: DataFrame | None = None,
-    key_width: int = 120,
 ) -> DataFrame:
     """Per-document novelty against the corpus: the fraction of a
     document's distinct word n-gram shingles whose corpus-wide FIRST
@@ -2072,23 +1966,22 @@ def shingle_novelty(
     curriculum policies rank on exactly this).
 
     Reads the persistent MinHash store's hashed-shingle postings when
-    supplied (``tokens``) — no re-shingling; the fixed-width hash key
-    stands in for the shingle string (``key_width`` defaults to the
-    120-bit (h, h2) pair — see ngram_jaccard_pairs). Plan: one
+    supplied (``tokens``) — no re-shingling; the 120-bit (h, h2)
+    hash key stands in for the shingle string (see
+    ngram_jaccard_pairs). Plan: one
     groupBy on the hash key (first_doc = min(doc_id), map-side
     combinable) and one join back — no windows, no all-pairs.
 
     Returns (doc_id, n_shingles, novel, novel_frac) for every doc
     with at least one shingle, ordered by doc_id.
     """
-    kc = _key_cols(key_width, "shingle_novelty")
+    kc = _KEY_COLS
     if tokens is not None:
         _check_store_meta(tokens, "tokens", n=n)
-        if "h2" not in tokens.columns and "h2" in kc:
+        if "h2" not in tokens.columns:
             raise ValueError(
-                "shingle_novelty: key_width=120 needs the store's h2 "
-                "column — rebuild the dedup store (legacy 60-bit entry) "
-                "or pass key_width=60"
+                "shingle_novelty: the 120-bit key needs the store's h2 "
+                "column — rebuild the dedup store (legacy 60-bit entry)"
             )
         postings = tokens.select("doc_id", *kc)
     else:

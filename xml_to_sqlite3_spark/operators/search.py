@@ -13,9 +13,14 @@ terms against the index — no scan of the corpus text at query time.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from ..cache_util import CHAIN_HINT, INDEX, content_key, link_tree, read_tables
 
 K1 = 1.2
 B = 0.75
@@ -67,25 +72,20 @@ def build_text_index(
 # Persistent index cache: an inverted index is a write-once /
 # query-many artifact (the reference roadmap's FTS5 is a *persistent*
 # index), but localCheckpoint blocks die with the session — every new
-# session was paying the ~3s explode+groupBy rebuild. The publish /
-# prune / race machinery is the SHARED cache_util implementation
-# (one copy of the subtle logic, also used by node_graph.get_graph);
-# this module owns only the index-specific parts: what to build and
-# the _COMPLETE marker's corpus-stats payload.
+# session was paying the ~3s explode+groupBy rebuild. The store
+# lifecycle is the SHARED cache_util.INDEX; this module owns only the
+# index-specific parts: what to build and the _COMPLETE marker's
+# corpus-stats payload.
 # ---------------------------------------------------------------------------
 
-_INDEX_CACHE: dict = {}
-_INDEX_CACHE_DIRS: list = []
 
-
-def _index_cache_root() -> str:
-    import os
-    import tempfile
-
-    return os.environ.get(
-        "SPARK_GRAFT_INDEX_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_index_cache"),
-    )
+def _load_index(spark, final: str) -> tuple[DataFrame, int, float, str]:
+    """(index, n_docs, avgdl, path) of a published entry — the corpus
+    stats ride in its _COMPLETE marker."""
+    with open(os.path.join(final, "_COMPLETE")) as f:
+        meta = json.load(f)
+    index = read_tables(spark, final, ("index",))["index"]
+    return index, int(meta["n_docs"]), float(meta["avgdl"]), final
 
 
 def _index_key(
@@ -95,8 +95,6 @@ def _index_key(
     by the build, the append path, and the streaming maintenance
     attach (the _minhash_store_key discipline), so a key-format
     change can never desynchronize a reader from its entry."""
-    from ..cache_util import content_key
-
     extra = f"{id_col}|{text_col}"
     if append:
         extra = f"{extra}|append|{append}"
@@ -127,15 +125,7 @@ def get_text_index(
     in-session memo, so a parquet rewrite or a different-column call
     can never return a stale or wrong index.
     """
-    import json
-    import os
-
-    from ..cache_util import content_cached_dir
-
     ck = _index_key(src_path, id_col, text_col)
-    key = (spark.sparkContext.applicationId, ck)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
 
     def _build(tmp: str) -> None:
         docs = spark.read.parquet(src_path)
@@ -182,18 +172,7 @@ def get_text_index(
                 f,
             )
 
-    final = content_cached_dir(
-        _index_cache_root(), ck, _build, owned_dirs=_INDEX_CACHE_DIRS
-    )
-    with open(os.path.join(final, "_COMPLETE")) as f:
-        meta = json.load(f)
-    # a clear+rebuild lands NEW part files at the SAME path — drop
-    # Spark's file-status cache for it or a stale listing would point
-    # reads at deleted files (FAILED_READ_FILE)
-    spark.catalog.refreshByPath(f"{final}/index")
-    index = spark.read.parquet(f"{final}/index")
-    _INDEX_CACHE[key] = (index, int(meta["n_docs"]), float(meta["avgdl"]))
-    return _INDEX_CACHE[key]
+    return INDEX.get(spark, ck, _build, lambda final: _load_index(spark, final))[:3]
 
 
 def append_text_index(
@@ -227,30 +206,20 @@ def append_text_index(
     chained == one-shot == rebuild stats bit-exactly, pinned by the
     streamed-maintenance test. Returns (index, n_docs, avgdl, path).
     """
-    import json
-    import os
-
-    from ..cache_util import content_cached_dir, link_tree
-
     if base_append:
         base_ck = _index_key(src_path, id_col, text_col, append=base_append)
-        base_dir = os.path.join(_index_cache_root(), base_ck)
-        if not os.path.exists(os.path.join(base_dir, "_COMPLETE")):
-            raise ValueError(
-                f"append_text_index: chained base entry (append chain "
-                f"{base_append!r}) is not published — appends must stack "
-                "onto an existing entry in order"
-            )
+        base_dir = INDEX.require(
+            base_ck,
+            f"append_text_index: chained base entry (append chain {base_append!r})",
+            CHAIN_HINT,
+        )
         chain = f"{base_append}+{delta_key}"
     else:
         get_text_index(spark, src_path, id_col=id_col, text_col=text_col)
         base_ck = _index_key(src_path, id_col, text_col)
-        base_dir = os.path.join(_index_cache_root(), base_ck)
+        base_dir = INDEX.path(base_ck)
         chain = delta_key
     ck = _index_key(src_path, id_col, text_col, append=chain)
-    key = (spark.sparkContext.applicationId, ck)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
 
     def _build(tmp: str) -> None:
         import shutil as _sh
@@ -335,26 +304,7 @@ def append_text_index(
                 f,
             )
 
-    final = content_cached_dir(
-        _index_cache_root(), ck, _build, owned_dirs=_INDEX_CACHE_DIRS
-    )
-    with open(os.path.join(final, "_COMPLETE")) as f:
-        meta = json.load(f)
-    spark.catalog.refreshByPath(f"{final}/index")
-    index = spark.read.parquet(f"{final}/index")
-    out = (index, int(meta["n_docs"]), float(meta["avgdl"]), final)
-    _INDEX_CACHE[key] = out
-    return out
-
-
-def clear_index_cache() -> None:
-    """Drop in-session handles AND on-disk entries THIS session built
-    (tests use this to force a rebuild)."""
-    import shutil
-
-    _INDEX_CACHE.clear()
-    while _INDEX_CACHE_DIRS:
-        shutil.rmtree(_INDEX_CACHE_DIRS.pop(), ignore_errors=True)
+    return _load_index(spark, INDEX.publish(ck, _build))
 
 
 def corpus_stats(index: DataFrame) -> tuple[int, float]:

@@ -16,11 +16,15 @@ dimension index, not an RNG at runtime.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from ..cache_util import CHAIN_HINT, CODEBOOK, content_key, link_tree, read_tables
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -696,8 +700,20 @@ def random_sign_projection(
     ).select(id_col, F.col("__p.dim").alias("dim"), F.col("__p.component").alias("component"))
 
 
-_CODEBOOK_MEMO: dict[str, np.ndarray] = {}
-_CODEBOOK_DIRS: list[str] = []
+def _npy_store(spark, key: str, name: str, train) -> np.ndarray:
+    """The model array ``name`` of the codebook-store entry ``key``:
+    ``train(tmp)`` computes it when the entry is absent (``tmp`` is
+    the entry's build dir, free for staging)."""
+
+    def _build(tmp: str) -> None:
+        os.makedirs(tmp, exist_ok=True)
+        np.save(os.path.join(tmp, name), train(tmp))
+        with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
+            f.write(key)
+
+    return CODEBOOK.get(
+        spark, key, _build, lambda final: np.load(os.path.join(final, name))
+    )
 
 
 def pq_train(
@@ -1205,18 +1221,9 @@ def get_ivf_pq_index(
     This is the build-once/serve-many artifact shape of a production
     vector index at 100 TB: raw vectors stay in the source table,
     the serving index is m ints + a partition key per vector."""
-    import os
-    import tempfile
-
-    from ..cache_util import content_cached_dir
-
     key = _ivfpq_key(
         src_path, n_centroids, m, ks, n_iter, id_col, vec_col,
         residual=residual, rotate=rotate,
-    )
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
     )
 
     def _build(tmp: str) -> None:
@@ -1249,9 +1256,12 @@ def get_ivf_pq_index(
         with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
             f.write(key)
 
-    final = content_cached_dir(root, key, _build, owned_dirs=_CODEBOOK_DIRS)
-    spark.catalog.refreshByPath(f"{final}/index")
-    return spark.read.parquet(f"{final}/index")
+    return CODEBOOK.get(
+        spark,
+        key,
+        _build,
+        lambda final: read_tables(spark, final, ("index",))["index"],
+    )
 
 
 def _ivfpq_key(
@@ -1271,8 +1281,6 @@ def _ivfpq_key(
     discipline). ``residual`` is part of the key: a residual-encoded
     index and a raw-encoded one are DIFFERENT artifacts whose codes
     mean different things, so they must never share an entry."""
-    from ..cache_util import content_key
-
     extra = f"c{n_centroids}_m{m}_ks{ks}_i{n_iter}_{id_col}_{vec_col}"
     if residual:
         extra = f"{extra}_res"
@@ -1324,11 +1332,6 @@ def get_residual_pq_codebooks(
     bit-identically. Keyed alongside the other codebooks; the key
     embeds n_centroids because the residuals depend on the coarse
     model."""
-    import os
-    import tempfile
-
-    from ..cache_util import content_cached_dir, content_key
-
     key = content_key(
         "pqcbres",
         src_path,
@@ -1337,16 +1340,8 @@ def get_residual_pq_codebooks(
         code_files=(__file__,),
         suffixes=(".parquet",),
     )
-    memo = _CODEBOOK_MEMO.get(key)
-    if memo is not None:
-        return memo
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
-    )
 
-    def _build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
+    def _train(tmp: str) -> np.ndarray:
         cents = get_codebook(
             spark, src_path, k=n_centroids, n_iter=n_iter,
             id_col=id_col, vec_col=vec_col,
@@ -1375,14 +1370,9 @@ def get_residual_pq_codebooks(
         import shutil as _sh
 
         _sh.rmtree(f"{tmp}/residuals", ignore_errors=True)
-        np.save(os.path.join(tmp, "pq_codebooks.npy"), books)
-        with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-            f.write(key)
+        return books
 
-    final = content_cached_dir(root, key, _build, owned_dirs=_CODEBOOK_DIRS)
-    books = np.load(os.path.join(final, "pq_codebooks.npy"))
-    _CODEBOOK_MEMO[key] = books
-    return books
+    return _npy_store(spark, key, "pq_codebooks.npy", _train)
 
 
 def append_ivf_pq_index(
@@ -1415,33 +1405,21 @@ def append_ivf_pq_index(
     intra-delta duplicate vec ids. ``base_append`` chains waves (the
     append_dedup_documents contract). Returns {"path", "append_key",
     "index"}."""
-    import os
-    import tempfile
-
-    from ..cache_util import content_cached_dir, link_tree
-
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
-    )
     params = dict(
         n_centroids=n_centroids, m=m, ks=ks, n_iter=n_iter,
         id_col=id_col, vec_col=vec_col, residual=residual, rotate=rotate,
     )
     if base_append:
-        base_ck = _ivfpq_key(src_path, append=base_append, **params)
-        if not os.path.exists(os.path.join(root, base_ck, "_COMPLETE")):
-            raise ValueError(
-                f"append_ivf_pq_index: chained base entry (append chain "
-                f"{base_append!r}) is not published — appends must stack "
-                "onto an existing entry in order"
-            )
+        base_dir = CODEBOOK.require(
+            _ivfpq_key(src_path, append=base_append, **params),
+            f"append_ivf_pq_index: chained base entry (append chain {base_append!r})",
+            CHAIN_HINT,
+        )
         chain = f"{base_append}+{delta_key}"
     else:
         get_ivf_pq_index(spark, src_path, **params)
-        base_ck = _ivfpq_key(src_path, **params)
+        base_dir = CODEBOOK.path(_ivfpq_key(src_path, **params))
         chain = delta_key
-    base_dir = os.path.join(root, base_ck)
     ck = _ivfpq_key(src_path, append=chain, **params)
 
     def _build(tmp: str) -> None:
@@ -1507,12 +1485,11 @@ def append_ivf_pq_index(
         with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
             f.write(ck)
 
-    final = content_cached_dir(root, ck, _build, owned_dirs=_CODEBOOK_DIRS)
-    spark.catalog.refreshByPath(f"{final}/index")
+    final = CODEBOOK.publish(ck, _build)
     return {
         "path": final,
         "append_key": chain,
-        "index": spark.read.parquet(f"{final}/index"),
+        **read_tables(spark, final, ("index",)),
     }
 
 
@@ -1774,11 +1751,6 @@ def get_codebook(
     — the key names the input, so the trained artifact must be a
     function of that input alone, never of a caller-supplied frame
     that might not match it."""
-    import os
-    import tempfile
-
-    from ..cache_util import content_cached_dir, content_key
-
     key = content_key(
         "cb",
         src_path,
@@ -1786,31 +1758,18 @@ def get_codebook(
         code_files=(__file__,),
         suffixes=(".parquet",),
     )
-    memo = _CODEBOOK_MEMO.get(key)
-    if memo is not None:
-        return memo
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
-    )
-
-    def _build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        cents = spherical_kmeans(
+    return _npy_store(
+        spark,
+        key,
+        "codebook.npy",
+        lambda tmp: spherical_kmeans(
             spark.read.parquet(src_path),
             k=k,
             n_iter=n_iter,
             id_col=id_col,
             vec_col=vec_col,
-        )
-        np.save(os.path.join(tmp, "codebook.npy"), cents)
-        with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-            f.write(key)
-
-    final = content_cached_dir(root, key, _build, owned_dirs=_CODEBOOK_DIRS)
-    cents = np.load(os.path.join(final, "codebook.npy"))
-    _CODEBOOK_MEMO[key] = cents
-    return cents
+        ),
+    )
 
 
 def get_opq_rotation(
@@ -1828,11 +1787,6 @@ def get_opq_rotation(
     across partitionings and break attached == retrained). The d x d
     matrix is a model parameter like the k-means codebooks: .npy in
     the shared codebook cache root."""
-    import os
-    import tempfile
-
-    from ..cache_util import content_cached_dir, content_key
-
     key = content_key(
         "opqrot",
         src_path,
@@ -1840,16 +1794,8 @@ def get_opq_rotation(
         code_files=(__file__,),
         suffixes=(".parquet",),
     )
-    memo = _CODEBOOK_MEMO.get(key)
-    if memo is not None:
-        return memo
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
-    )
 
-    def _build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
+    def _train(tmp: str) -> np.ndarray:
         emb = spark.read.parquet(src_path).select(
             F.col(id_col), F.col(vec_col)
         )
@@ -1857,16 +1803,9 @@ def get_opq_rotation(
         first = emb.select(_as_double(F.col(vec_col)).alias("v")).filter(
             F.col("v").isNotNull()
         ).head(1)
-        dim = len(first[0]["v"])
-        R = opq_rotation(cov_rows, dim=dim, m=m)
-        np.save(os.path.join(tmp, "opq_rotation.npy"), R)
-        with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-            f.write(key)
+        return opq_rotation(cov_rows, dim=len(first[0]["v"]), m=m)
 
-    final = content_cached_dir(root, key, _build, owned_dirs=_CODEBOOK_DIRS)
-    R = np.load(os.path.join(final, "opq_rotation.npy"))
-    _CODEBOOK_MEMO[key] = R
-    return R
+    return _npy_store(spark, key, "opq_rotation.npy", _train)
 
 
 def get_pq_codebooks(
@@ -1886,11 +1825,6 @@ def get_pq_codebooks(
     the books on the OPQ-rotated corpus (R from
     :func:`get_opq_rotation`; flag in the content key — rotated and
     raw books are different artifacts)."""
-    import os
-    import tempfile
-
-    from ..cache_util import content_cached_dir, content_key
-
     key = content_key(
         "pqcb",
         src_path,
@@ -1899,16 +1833,8 @@ def get_pq_codebooks(
         code_files=(__file__,),
         suffixes=(".parquet",),
     )
-    memo = _CODEBOOK_MEMO.get(key)
-    if memo is not None:
-        return memo
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
-    )
 
-    def _build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
+    def _train(tmp: str) -> np.ndarray:
         src = spark.read.parquet(src_path)
         if rotate:
             R = get_opq_rotation(
@@ -1934,21 +1860,6 @@ def get_pq_codebooks(
             import shutil as _sh
 
             _sh.rmtree(f"{tmp}/rotated", ignore_errors=True)
-        np.save(os.path.join(tmp, "pq_codebooks.npy"), books)
-        with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-            f.write(key)
+        return books
 
-    final = content_cached_dir(root, key, _build, owned_dirs=_CODEBOOK_DIRS)
-    books = np.load(os.path.join(final, "pq_codebooks.npy"))
-    _CODEBOOK_MEMO[key] = books
-    return books
-
-
-def clear_codebook_cache() -> None:
-    """Drop in-session memos AND on-disk entries THIS session built
-    (tests); attached-only entries are other sessions' property."""
-    import shutil
-
-    _CODEBOOK_MEMO.clear()
-    while _CODEBOOK_DIRS:
-        shutil.rmtree(_CODEBOOK_DIRS.pop(), ignore_errors=True)
+    return _npy_store(spark, key, "pq_codebooks.npy", _train)

@@ -25,6 +25,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache_util import CHAIN_HINT, GRAPH, content_key, link_tree, read_tables
 from ..io_util import load
 from ..functions.type_inference import infer_type
 from ..operators import relationships as R
@@ -369,21 +370,6 @@ GRAPH_PREFIX = (
 )
 
 
-_GRAPH_CACHE: dict[tuple[int, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
-_MULTI_XREF_CACHE: dict[tuple[int, str], DataFrame] = {}
-_TRI_ORIENTED_CACHE: dict[tuple[int, str], DataFrame] = {}
-_PR_EDGES_CACHE: dict[tuple[int, str], DataFrame] = {}
-_PR_SPINE_CACHE: dict[tuple[int, str], DataFrame] = {}
-_PR_STATS_CACHE: dict[tuple[int, str], tuple[int, int]] = {}
-_PR_RANKS_CACHE: dict[tuple[int, str], DataFrame] = {}
-_DEGREES_CACHE: dict[tuple[int, str], DataFrame] = {}
-_TARGETS_CACHE: dict[tuple[int, str], DataFrame] = {}
-_LEVELS_CACHE: dict[tuple[int, str], DataFrame] = {}
-_AA_UND_CACHE: dict[tuple[int, str], DataFrame] = {}
-_AA_CENTERS_CACHE: dict[tuple[int, str], DataFrame] = {}
-_CORENESS_CACHE: dict[tuple[int, str], DataFrame] = {}
-_GRAPH_CACHE_DIRS: list[str] = []
-
 # the pagerank gate's deterministic edge subsample (xxhash64 mod 10
 # < 3, i.e. ~30%) — shared by the store build (pr_edges/pr_spine)
 # and any caller that needs to reproduce the gate's graph mix
@@ -539,16 +525,6 @@ def _sibling_rows(slices: DataFrame, chunks: DataFrame) -> DataFrame:
     )
 
 
-def _graph_cache_root() -> str:
-    import os
-    import tempfile
-
-    return os.environ.get(
-        "SPARK_GRAFT_GRAPH_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_graph_cache"),
-    )
-
-
 def _graph_code_files() -> tuple:
     """The build-code identity shared by the base store key and the
     appended-store keys: this module + the relationship /
@@ -584,8 +560,6 @@ def _graph_cache_key(sf_dir: str, build_coreness: bool = True) -> str:
     scopes the stale-prune prefix): a store without the coreness
     table is a DIFFERENT live configuration, never a stale sibling
     of the full store."""
-    from ..cache_util import content_key
-
     return content_key(
         "g",
         sf_dir,
@@ -604,8 +578,6 @@ def _graph_append_key(
     (streaming/ingest.current_maintained_graph), so a key-format
     change can never desynchronize a reader from the entry it
     expects."""
-    from ..cache_util import content_key
-
     return content_key(
         "ga",
         sf_dir,
@@ -626,9 +598,9 @@ def get_graph(
     fixpoint cost 22s/82s/351s at sf0.01/0.1/1, and at sf3 it roughly
     DOUBLES the cold build (1807s with vs ~804s without,
     BENCH_newops_r13). Corpora that never query k-core should opt
-    out. The flag is part of the persistent content key (two live
-    configurations, not stale siblings) and of the session handle
-    key; gates always use the default full store.
+    out. The flag is part of the content key (two live
+    configurations, not stale siblings); gates always use the
+    default full store.
 
     The driver runs every gate query back to back in one session;
     without materialization each query would recompute the ~18M-row
@@ -647,19 +619,21 @@ def get_graph(
     evaluate-once + parquet write + read-back costs ~30s total and
     every later scan is a vectorized, compressed, column-pruned read.
     """
-    from ..cache_util import content_cached_dir
+    t = _graph_tables(spark, sf_dir, build_coreness)
+    return t["nodes"], t["properties"], t["xrefs"]
 
-    # applicationId, not id(sparkContext): CPython reuses object
-    # addresses after GC, so an id()-keyed hit could hand back
-    # DataFrames bound to a STOPPED session
-    key = (
-        (spark.sparkContext.applicationId, sf_dir)
-        if build_coreness
-        else (spark.sparkContext.applicationId, sf_dir, "nocore")
-    )
-    if key in _GRAPH_CACHE:
-        return _GRAPH_CACHE[key]
 
+def graph_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One table of the default (full) store for ``sf_dir`` — any of
+    _STORE_SUBDIRS, all built by the same get_graph build."""
+    return _graph_tables(spark, sf_dir)[name]
+
+
+def _graph_tables(
+    spark: SparkSession, sf_dir: str, build_coreness: bool = True
+) -> dict[str, DataFrame]:
+    """Every table of the store for ``sf_dir``, built once per content
+    and attached by every later call and session (see get_graph)."""
     ck = _graph_cache_key(sf_dir, build_coreness=build_coreness)
 
     def _build(tmp: str) -> None:
@@ -690,13 +664,12 @@ def get_graph(
         with open(f"{tmp}/_COMPLETE", "w") as f:
             f.write(ck)
 
-    # publish / race / stale-prune / mtime-lease: the shared
-    # cache_util machinery (one copy of the subtle logic, also used
-    # by the BM25 index cache)
-    final = content_cached_dir(
-        _graph_cache_root(), ck, _build, owned_dirs=_GRAPH_CACHE_DIRS
+    return GRAPH.get(
+        spark,
+        ck,
+        _build,
+        lambda final: read_tables(spark, final, _store_subdirs(build_coreness)),
     )
-    return _attach_store(spark, sf_dir, final, key)
 
 
 def _write_store_tables(
@@ -1228,206 +1201,10 @@ _STORE_SUBDIRS = (
 )
 
 
-def _attach_store(
-    spark: SparkSession, sf_dir: str, final: str, key: tuple
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Bind a published store dir into this session's handle caches
-    and return the (nodes, properties, xrefs) triple — shared by
-    get_graph (base stores) regardless of whether this process built
-    or cold-attached the entry."""
-    import os as _os
-
-    # a clear+rebuild lands NEW part files at the SAME path — drop
-    # Spark's file-status cache for it or a stale listing would point
-    # reads at deleted files (FAILED_READ_FILE)
-    for sub in _STORE_SUBDIRS:
-        spark.catalog.refreshByPath(f"{final}/{sub}")
-    nodes = spark.read.parquet(f"{final}/nodes")
-    properties = spark.read.parquet(f"{final}/properties")
-    xrefs = spark.read.parquet(f"{final}/xrefs")
-    _GRAPH_CACHE[key] = (nodes, properties, xrefs)
-    _MULTI_XREF_CACHE[key] = spark.read.parquet(f"{final}/xrefs_multi")
-    _TRI_ORIENTED_CACHE[key] = spark.read.parquet(f"{final}/tri_oriented")
-    _PR_EDGES_CACHE[key] = spark.read.parquet(f"{final}/pr_edges")
-    _PR_SPINE_CACHE[key] = spark.read.parquet(f"{final}/pr_spine")
-    _PR_RANKS_CACHE[key] = spark.read.parquet(f"{final}/pr_ranks")
-    _DEGREES_CACHE[key] = spark.read.parquet(f"{final}/degrees")
-    _TARGETS_CACHE[key] = spark.read.parquet(f"{final}/targets")
-    _LEVELS_CACHE[key] = spark.read.parquet(f"{final}/node_levels")
-    _AA_UND_CACHE[key] = spark.read.parquet(f"{final}/aa_und")
-    _AA_CENTERS_CACHE[key] = spark.read.parquet(f"{final}/aa_centers")
-    # absent when the entry was built with build_coreness=False —
-    # get_coreness keys on the DEFAULT (full) store, so it never
-    # looks this handle up for an opted-out entry
-    if _os.path.isdir(f"{final}/coreness"):
-        _CORENESS_CACHE[key] = spark.read.parquet(f"{final}/coreness")
-    try:
-        with open(f"{final}/pr_stats.json") as f:
-            _stats = json.load(f)
-        _PR_STATS_CACHE[key] = (int(_stats["n"]), int(_stats["nd"]))
-    except (OSError, ValueError, KeyError):
-        # cold-attached store predating the sidecar: fall back to a
-        # one-off spine aggregate (what the pagerank operator would
-        # otherwise do per query)
-        _srow = (
-            _PR_SPINE_CACHE[key]
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.when(F.col("__deg").isNull(), 1)).alias("nd"),
-            )
-            .collect()[0]
-        )
-        _PR_STATS_CACHE[key] = (int(_srow["n"]), int(_srow["nd"]))
-    return _GRAPH_CACHE[key]
-
-
-
-def get_multi_xrefs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cached example multi-reference adapter output (same
-    content key and lifecycle as get_graph's store — built in the
-    same _build)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MULTI_XREF_CACHE:
-        get_graph(spark, sf_dir)
-    return _MULTI_XREF_CACHE[key]
-
-
-def get_tri_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The degree-oriented (u, w) edge set of the triangle gate's
-    graph mix, persisted in the store (same content key and
-    lifecycle as get_graph — built in the same _build)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TRI_ORIENTED_CACHE:
-        get_graph(spark, sf_dir)
-    return _TRI_ORIENTED_CACHE[key]
-
-
-def get_pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pagerank gate's deduped (src, dst) link-graph subsample,
-    persisted in the store (same content key and lifecycle as
-    get_graph — built in the same _build)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PR_EDGES_CACHE:
-        get_graph(spark, sf_dir)
-    return _PR_EDGES_CACHE[key]
-
-
-def get_pr_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (node, out-degree) spine of pr_edges (out-degree NULL =
-    dangling node), persisted in the store."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PR_SPINE_CACHE:
-        get_graph(spark, sf_dir)
-    return _PR_SPINE_CACHE[key]
-
-
-def get_pr_stats(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
-    """(node count, dangling count) of pr_spine, from the store's
-    build-time sidecar — no Spark job. Feeds pagerank's
-    ``spine_stats`` so an ad-hoc run starts at the first iteration
-    join instead of paying a setup aggregate over the spine."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PR_STATS_CACHE:
-        get_graph(spark, sf_dir)
-    return _PR_STATS_CACHE[key]
-
-
-def get_aa_und(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The link-prediction gate's distinct undirected pair set
-    (50% md5 subsample of attribute references), persisted in the
-    store."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _AA_UND_CACHE:
-        get_graph(spark, sf_dir)
-    return _AA_UND_CACHE[key]
-
-
-def get_aa_centers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The link-prediction gate's (v, degree, sorted neighbors)
-    center table over aa_und, persisted in the store (parameter-free:
-    degree filters apply in the operator)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _AA_CENTERS_CACHE:
-        get_graph(spark, sf_dir)
-    return _AA_CENTERS_CACHE[key]
-
-
-def get_xref_targets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The store's distinct xref target-id set (one string column,
-    node-domain-sized), built without scanning the written multiset —
-    see the build comment. Feeds the dangling-reference family."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TARGETS_CACHE:
-        get_graph(spark, sf_dir)
-    return _TARGETS_CACHE[key]
-
-
-def get_node_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The store's materialized tree levels (id, node_type, level),
-    walked once per build by hierarchy.node_tree_iterative
-    (max_depth=10 — the reference queries' bound)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LEVELS_CACHE:
-        get_graph(spark, sf_dir)
-    return _LEVELS_CACHE[key]
-
-
-def get_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The store's materialized (node_id, coreness) exact k-core
-    vector over the mixed reference graph (tri_oriented) — the
-    H-index fixpoint run once at build time (same content key and
-    lifecycle as get_graph; re-derived globally on appends like
-    pr_ranks, but integer-exact)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CORENESS_CACHE:
-        get_graph(spark, sf_dir)
-    return _CORENESS_CACHE[key]
-
-
-def get_pr_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The store's materialized (node, rank) PageRank vector over
-    pr_edges — 6 damping-0.85 rounds of operators/graph.py pagerank
-    run ONCE at build time (same content key and lifecycle as
-    get_graph). The rank vector is a pure function of the static
-    link graph, so like ``degrees`` it lives in the store rather
-    than being re-iterated per query."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PR_RANKS_CACHE:
-        get_graph(spark, sf_dir)
-    return _PR_RANKS_CACHE[key]
-
-
-def get_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full-graph (id, out_cnt, in_cnt) degree table, persisted
-    in the store (one build-time pass over the xref multiset; nodes
-    with no references are absent — consumers left-join + coalesce)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DEGREES_CACHE:
-        get_graph(spark, sf_dir)
-    return _DEGREES_CACHE[key]
-
-
-def clear_graph_cache() -> None:
-    """Drop the in-session handles AND the on-disk entries THIS
-    session BUILT (tests use this to force a rebuild). Attached-only
-    entries are left alone: they are other sessions' shared property,
-    and deleting them would bypass the pruning path's grace window."""
-    import shutil
-
-    _GRAPH_CACHE.clear()
-    _MULTI_XREF_CACHE.clear()
-    _TRI_ORIENTED_CACHE.clear()
-    _PR_EDGES_CACHE.clear()
-    _PR_SPINE_CACHE.clear()
-    _PR_STATS_CACHE.clear()
-    _PR_RANKS_CACHE.clear()
-    _DEGREES_CACHE.clear()
-    _TARGETS_CACHE.clear()
-    _LEVELS_CACHE.clear()
-    _AA_UND_CACHE.clear()
-    _AA_CENTERS_CACHE.clear()
-    while _GRAPH_CACHE_DIRS:
-        shutil.rmtree(_GRAPH_CACHE_DIRS.pop(), ignore_errors=True)
+def _store_subdirs(build_coreness: bool) -> tuple[str, ...]:
+    """The tables an entry of this configuration holds: coreness is
+    absent when the entry was built with build_coreness=False."""
+    return tuple(s for s in _STORE_SUBDIRS if build_coreness or s != "coreness")
 
 
 # ---------------------------------------------------------------------------
@@ -1465,16 +1242,6 @@ _APPEND_LINKED_SUBDIRS = (
     "aa_und",
     "aa_centers",
 )
-
-
-def _link_store_tree(base_dir: str, tmp: str) -> None:
-    """Mirror the base store's appendable tables into ``tmp`` as hard
-    links (the shared cache_util.link_tree clone step — one copy of
-    the hard-link subtleties, also used by the MinHash / components
-    store append paths)."""
-    from ..cache_util import link_tree
-
-    link_tree(base_dir, tmp, _APPEND_LINKED_SUBDIRS, what="store")
 
 
 def _append_guards(spark: SparkSession, base_dir: str, dn: DataFrame) -> None:
@@ -1590,35 +1357,28 @@ def append_documents(
     (tests/test_store_append.py pins the appended tables to a full
     rebuild over the unioned input, multiset-exact).
     """
-    import os
-
-    from ..cache_util import content_cached_dir
-
     if base_append:
         base_ck = _graph_append_key(
             sf_dir, base_append, build_coreness=build_coreness
         )
-        if not os.path.exists(
-            os.path.join(_graph_cache_root(), base_ck, "_COMPLETE")
-        ):
-            raise ValueError(
-                f"append_documents: chained base entry (append chain "
-                f"{base_append!r}) is not published — appends must stack "
-                "onto an existing entry in order"
-            )
+        base_dir = GRAPH.require(
+            base_ck,
+            f"append_documents: chained base entry (append chain {base_append!r})",
+            CHAIN_HINT,
+        )
         chain = f"{base_append}+{delta_key}"
     else:
         # ensure the base entry (of the matching configuration) exists
         get_graph(spark, sf_dir, build_coreness=build_coreness)
         base_ck = _graph_cache_key(sf_dir, build_coreness=build_coreness)
+        base_dir = GRAPH.path(base_ck)
         chain = delta_key
-    base_dir = os.path.join(_graph_cache_root(), base_ck)
     ck = _graph_append_key(sf_dir, chain, build_coreness=build_coreness)
 
     def _build(tmp: str) -> None:
         import shutil as _sh
 
-        _link_store_tree(base_dir, tmp)
+        link_tree(base_dir, tmp, _APPEND_LINKED_SUBDIRS, what="store")
         # materialize the delta frames once — detection, the walk,
         # and the appends all re-read them
         delta_nodes.write.mode("overwrite").parquet(f"{tmp}/delta_nodes")
@@ -1646,16 +1406,12 @@ def append_documents(
         with open(f"{tmp}/_COMPLETE", "w") as f:
             f.write(ck)
 
-    final = content_cached_dir(
-        _graph_cache_root(), ck, _build, owned_dirs=_GRAPH_CACHE_DIRS
-    )
-    out: dict = {"path": final, "append_key": chain}
-    for sub in _STORE_SUBDIRS:
-        if sub == "coreness" and not build_coreness:
-            continue
-        spark.catalog.refreshByPath(f"{final}/{sub}")
-        out[sub] = spark.read.parquet(f"{final}/{sub}")
-    return out
+    final = GRAPH.publish(ck, _build)
+    return {
+        "path": final,
+        "append_key": chain,
+        **read_tables(spark, final, _store_subdirs(build_coreness)),
+    }
 
 
 def synthesize_delta_document(
@@ -1842,7 +1598,7 @@ def hierarchy_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at sf0.1 — UnionLoop re-scans its anchor per level), and this
     # gate stays value-proven by the unchanged recursive-CTE oracle.
     return (
-        get_node_levels(spark, sf_dir)
+        graph_table(spark, sf_dir, "node_levels")
         .groupBy("level", "node_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("level", "node_type")
@@ -1948,7 +1704,7 @@ def node_connection_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-node counts come from the store's persisted degree
     # table (one build-time pass over the multiset) — the query is a
     # node-domain-sized join, never a 1.1B-row re-aggregation
-    deg = get_degrees(spark, sf_dir)
+    deg = graph_table(spark, sf_dir, "degrees")
     return (
         nodes.select("id", "node_type")
         .join(deg, "id", "left")
@@ -1987,7 +1743,7 @@ def most_connected(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table instead of re-aggregating the full multiset per call
     # (34s at sf1; at sf0.1 the old count-table broadcast was the
     # bench's noisiest row, 3-16s run to run).
-    touches = get_degrees(spark, sf_dir).select(
+    touches = graph_table(spark, sf_dir, "degrees").select(
         "id", (F.col("out_cnt") + F.col("in_cnt")).alias("connection_count")
     )
     # cut to top-10 BEFORE the node join: every xref endpoint resolves
@@ -2071,7 +1827,7 @@ def broken_references(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan-bound even behind the r8 plan barrier; now ~2s/4s). The
     # what-if part (which node type is deleted) stays per-query.
     return (
-        get_xref_targets(spark, sf_dir)
+        graph_table(spark, sf_dir, "targets")
         .join(
             surviving.select(F.col("id").alias("target_node_id")),
             "target_node_id",
@@ -2170,7 +1926,7 @@ def multi_references_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator itself is R.multi_references, exercised directly in
     tests/test_relationships.py)."""
     return (
-        get_multi_xrefs(spark, sf_dir)
+        graph_table(spark, sf_dir, "xrefs_multi")
         .select(
             "source_node_id",
             "target_node_id",
@@ -2433,7 +2189,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the degrees table behind most_connected. Ad-hoc graphs still run
     the live operator."""
     return (
-        get_pr_ranks(spark, sf_dir)
+        graph_table(spark, sf_dir, "pr_ranks")
         .orderBy(F.desc("rank"), "node")
         .limit(20)
     )
@@ -2509,7 +2265,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tri_oriented), so the query starts at the wedge join."""
     from ..operators.graph import triangle_count
 
-    return triangle_count(None, oriented=get_tri_oriented(spark, sf_dir))
+    return triangle_count(None, oriented=graph_table(spark, sf_dir, "tri_oriented"))
 
 
 GRAPH_TRIANGLES_ORACLE = GRAPH_PREFIX + """
@@ -2560,8 +2316,8 @@ def link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         None,
         k=50,
         max_degree=32,
-        und=get_aa_und(spark, sf_dir),
-        centers=get_aa_centers(spark, sf_dir),
+        und=graph_table(spark, sf_dir, "aa_und"),
+        centers=graph_table(spark, sf_dir, "aa_centers"),
     )
 
 
@@ -2619,7 +2375,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     any bijection of the simple edge set works)."""
     from ..operators.graph import degree_assortativity
 
-    return degree_assortativity(None, und=get_tri_oriented(spark, sf_dir))
+    return degree_assortativity(None, und=graph_table(spark, sf_dir, "tri_oriented"))
 
 
 GRAPH_ASSORT_ORACLE = GRAPH_PREFIX + _GRAPH_UND_SQL + """
@@ -2647,7 +2403,7 @@ def graph_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle counts; coeff rounds at 6dp)."""
     from ..operators.graph import local_clustering
 
-    return local_clustering(None, oriented=get_tri_oriented(spark, sf_dir))
+    return local_clustering(None, oriented=graph_table(spark, sf_dir, "tri_oriented"))
 
 
 GRAPH_CLUSTERING_ORACLE = GRAPH_PREFIX + _GRAPH_UND_SQL + """
@@ -2692,7 +2448,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the store==live equivalence test, but a data-dependent
     fixpoint is not SQL-expressible for the DuckDB oracle."""
     return (
-        get_coreness(spark, sf_dir)
+        graph_table(spark, sf_dir, "coreness")
         .orderBy(F.desc("coreness"), F.asc("node_id"))
         .limit(20)
     )

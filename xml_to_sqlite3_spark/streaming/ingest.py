@@ -23,6 +23,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache_util import CODEBOOK, DEDUP, GRAPH, INDEX, read_tables
 from ..io_util import events_ts_is_nanos, normalize_event_ts
 from ..sources.xml_source import _PARSE_SCHEMA, _parse_batches
 
@@ -566,12 +567,10 @@ def stream_document_maintenance(
         # chain-entry GC: superseded (non-head, past-retention) chain
         # entries for each artifact family (see _prune_chain_tail)
         from ..operators.dedup import _components_store_key, _minhash_store_key
-        from ..operators.dedup import _minhash_cache_root as _mh_root
         from ..operators.search import _index_key
-        from ..operators.search import _index_cache_root as _ix_root
 
         _prune_chain_tail(
-            _mh_root(),
+            DEDUP.root(),
             state["dedup_chain"],
             lambda ch: _minhash_store_key(
                 base_doc_path, n, k, id_col, text_col, append=ch
@@ -580,7 +579,7 @@ def stream_document_maintenance(
             grace_sec=chain_prune_grace_sec,
         )
         _prune_chain_tail(
-            _ix_root(),
+            INDEX.root(),
             state["index_chain"],
             lambda ch: _index_key(base_doc_path, id_col, text_col, append=ch),
             retention=chain_retention,
@@ -588,7 +587,7 @@ def stream_document_maintenance(
         )
         if maintain_components:
             _prune_chain_tail(
-                _mh_root(),
+                DEDUP.root(),
                 state["components_chain"],
                 lambda ch: _components_store_key(
                     base_doc_path, threshold, n, k, id_col, text_col,
@@ -616,21 +615,18 @@ def stream_document_maintenance(
     return writer.start()
 
 
-def _require_complete(final: str, what: str, chain: str, params: str) -> None:
-    """Fail-loud attach guard (the repo-wide _COMPLETE discipline): a
-    chain sidecar can name an entry that is not published here — the
-    cache root was cleared, a different SPARK_GRAFT_*_CACHE env is
-    set, or the caller's params differ from the stream's — and the
-    raw parquet path-not-found that would otherwise surface names
-    neither the chain nor the fix."""
-    if not os.path.exists(os.path.join(final, "_COMPLETE")):
-        raise ValueError(
-            f"{what}: the maintenance sidecar names append chain {chain!r} "
-            f"but no published entry exists at {final} — the cache root was "
-            "cleared, a different cache env var is set, or these params "
-            f"({params}) do not match the ones the maintenance stream ran "
-            "with"
-        )
+def _attach_chain(store, key: str, what: str, chain: str, params: str) -> str:
+    """The published entry a chain sidecar names (Store.require): it
+    can be missing here when the cache root was cleared, another
+    cache env var is set, or the caller's params differ from the
+    stream's."""
+    return store.require(
+        key,
+        f"{what}: the maintenance sidecar's append chain {chain!r}",
+        "the cache root was cleared, a different cache env var is set, or "
+        f"these params ({params}) do not match the ones the maintenance "
+        "stream ran with",
+    )
 
 
 def current_maintained_entries(
@@ -652,8 +648,12 @@ def current_maintained_entries(
     ``maintain_components=True``). Pure attach: the content-keyed
     entries already exist, so no Spark job beyond parquet reads runs
     here."""
-    from ..operators.dedup import _minhash_store_key
-    from ..operators.search import _index_cache_root, _index_key
+    from ..operators.dedup import (
+        _components_store_key,
+        _dedup_tables,
+        _minhash_store_key,
+    )
+    from ..operators.search import _index_key, _load_index
 
     state_path = os.path.join(checkpoint_dir, "maintenance_chain.json")
     if not os.path.exists(state_path):
@@ -679,70 +679,45 @@ def current_maintained_entries(
         )
     out: dict = {"dedup": None, "index": None, "components": None}
     if state.get("dedup_chain"):
-        from ..operators.dedup import _DEDUP_STORE_SUBDIRS, _minhash_cache_root
-
-        root = _minhash_cache_root()
-        ck = _minhash_store_key(
-            base_doc_path, n, k, id_col, text_col, append=state["dedup_chain"]
-        )
-        final = os.path.join(root, ck)
-        _require_complete(
-            final,
+        chain = state["dedup_chain"]
+        final = _attach_chain(
+            DEDUP,
+            _minhash_store_key(base_doc_path, n, k, id_col, text_col, append=chain),
             "current_maintained_entries (dedup)",
-            state["dedup_chain"],
-            f"n={n}, k={k}, id_col={id_col!r}, text_col={text_col!r}, "
-            f"minhash cache root={root}",
+            chain,
+            f"n={n}, k={k}, id_col={id_col!r}, text_col={text_col!r}",
         )
-        entry = {"path": final, "append_key": state["dedup_chain"]}
-        for sub in _DEDUP_STORE_SUBDIRS:
-            spark.catalog.refreshByPath(f"{final}/{sub}")
-            entry[sub] = spark.read.parquet(f"{final}/{sub}")
-        out["dedup"] = entry
+        out["dedup"] = {
+            "path": final,
+            "append_key": chain,
+            **_dedup_tables(spark, final, base_doc_path, n, k),
+        }
     if state.get("index_chain"):
-        ck = _index_key(
-            base_doc_path, id_col, text_col, append=state["index_chain"]
-        )
-        final = os.path.join(_index_cache_root(), ck)
-        _require_complete(
-            final,
+        chain = state["index_chain"]
+        final = _attach_chain(
+            INDEX,
+            _index_key(base_doc_path, id_col, text_col, append=chain),
             "current_maintained_entries (index)",
-            state["index_chain"],
-            f"id_col={id_col!r}, text_col={text_col!r}, "
-            f"index cache root={_index_cache_root()}",
+            chain,
+            f"id_col={id_col!r}, text_col={text_col!r}",
         )
-        with open(os.path.join(final, "_COMPLETE")) as f:
-            meta = json.load(f)
-        spark.catalog.refreshByPath(f"{final}/index")
-        out["index"] = (
-            spark.read.parquet(f"{final}/index"),
-            int(meta["n_docs"]),
-            float(meta["avgdl"]),
-            final,
-        )
+        out["index"] = _load_index(spark, final)
     if state.get("components_chain"):
-        from ..operators.dedup import (
-            _components_store_key,
-            _minhash_cache_root,
-        )
-
-        root = _minhash_cache_root()
-        ck = _components_store_key(
-            base_doc_path, threshold, n, k, id_col, text_col,
-            append=state["components_chain"],
-        )
-        final = os.path.join(root, ck)
-        _require_complete(
-            final,
+        chain = state["components_chain"]
+        final = _attach_chain(
+            DEDUP,
+            _components_store_key(
+                base_doc_path, threshold, n, k, id_col, text_col, append=chain
+            ),
             "current_maintained_entries (components)",
-            state["components_chain"],
+            chain,
             f"threshold={threshold}, n={n}, id_col={id_col!r}, "
-            f"text_col={text_col!r}, minhash cache root={root}",
+            f"text_col={text_col!r}",
         )
-        spark.catalog.refreshByPath(f"{final}/components")
         out["components"] = {
             "path": final,
-            "append_key": state["components_chain"],
-            "components": spark.read.parquet(f"{final}/components"),
+            "append_key": chain,
+            **read_tables(spark, final, ("components",)),
         }
     return out
 
@@ -807,17 +782,10 @@ def stream_embedding_maintenance(
         state["last_batch"] = batch_id
         _write_state(state_path, state)
         # chain-entry GC (see _prune_chain_tail)
-        import tempfile
-
         from ..operators.similarity import _ivfpq_key
 
         _prune_chain_tail(
-            os.environ.get(
-                "SPARK_GRAFT_CODEBOOK_CACHE",
-                os.path.join(
-                    tempfile.gettempdir(), "spark_graft_codebook_cache"
-                ),
-            ),
+            CODEBOOK.root(),
             state["chain"],
             lambda ch: _ivfpq_key(
                 base_vec_path, n_centroids, m, ks, n_iter, id_col, vec_col,
@@ -858,8 +826,6 @@ def current_maintained_index(
     """Attach the IVF-PQ index a maintenance stream has built so far
     (None before the first batch commits). Pure attach — parquet
     reads only."""
-    import tempfile
-
     from ..operators.similarity import _ivfpq_key
 
     state_path = os.path.join(checkpoint_dir, "ivfpq_chain.json")
@@ -869,27 +835,21 @@ def current_maintained_index(
         state = json.load(f)
     if not state.get("chain"):
         return None
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
-    )
-    ck = _ivfpq_key(
-        base_vec_path, n_centroids, m, ks, n_iter, id_col, vec_col,
-        append=state["chain"],
-    )
-    final = os.path.join(root, ck)
-    _require_complete(
-        final,
+    final = _attach_chain(
+        CODEBOOK,
+        _ivfpq_key(
+            base_vec_path, n_centroids, m, ks, n_iter, id_col, vec_col,
+            append=state["chain"],
+        ),
         "current_maintained_index",
         state["chain"],
         f"n_centroids={n_centroids}, m={m}, ks={ks}, n_iter={n_iter}, "
-        f"id_col={id_col!r}, vec_col={vec_col!r}, codebook cache root={root}",
+        f"id_col={id_col!r}, vec_col={vec_col!r}",
     )
-    spark.catalog.refreshByPath(f"{final}/index")
     return {
         "path": final,
         "append_key": state["chain"],
-        "index": spark.read.parquet(f"{final}/index"),
+        **read_tables(spark, final, ("index",)),
     }
 
 
@@ -980,10 +940,10 @@ def stream_graph_maintenance(
             state["last_batch"] = batch_id
             _write_state(state_path, state)
             # chain-entry GC (see _prune_chain_tail)
-            from ..plans.node_graph import _graph_append_key, _graph_cache_root
+            from ..plans.node_graph import _graph_append_key
 
             _prune_chain_tail(
-                _graph_cache_root(),
+                GRAPH.root(),
                 state["chain"],
                 lambda ch: _graph_append_key(
                     sf_dir, ch, build_coreness=build_coreness
@@ -1015,11 +975,7 @@ def current_maintained_graph(
     far: ``{"path", "append_key", <table>: DataFrame, ...}``, or None
     before the first batch commits. Pure attach — parquet reads
     only."""
-    from ..plans.node_graph import (
-        _STORE_SUBDIRS,
-        _graph_append_key,
-        _graph_cache_root,
-    )
+    from ..plans.node_graph import _graph_append_key, _store_subdirs
 
     state_path = os.path.join(checkpoint_dir, "graph_chain.json")
     if not os.path.exists(state_path):
@@ -1028,19 +984,15 @@ def current_maintained_graph(
         state = json.load(f)
     if not state.get("chain"):
         return None
-    ck = _graph_append_key(sf_dir, state["chain"], build_coreness=build_coreness)
-    final = os.path.join(_graph_cache_root(), ck)
-    _require_complete(
-        final,
+    final = _attach_chain(
+        GRAPH,
+        _graph_append_key(sf_dir, state["chain"], build_coreness=build_coreness),
         "current_maintained_graph",
         state["chain"],
-        f"sf_dir={sf_dir!r}, build_coreness={build_coreness}, "
-        f"graph cache root={_graph_cache_root()}",
+        f"sf_dir={sf_dir!r}, build_coreness={build_coreness}",
     )
-    out: dict = {"path": final, "append_key": state["chain"]}
-    for sub in _STORE_SUBDIRS:
-        if sub == "coreness" and not build_coreness:
-            continue
-        spark.catalog.refreshByPath(f"{final}/{sub}")
-        out[sub] = spark.read.parquet(f"{final}/{sub}")
-    return out
+    return {
+        "path": final,
+        "append_key": state["chain"],
+        **read_tables(spark, final, _store_subdirs(build_coreness)),
+    }
