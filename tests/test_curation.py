@@ -339,33 +339,6 @@ def test_pack_sequences_two_phase_matches_naive(spark):
     assert max(r.seq_id for r in out.values()) == (total - 1) // 128
 
 
-def test_heavy_hitters_guarantee(spark):
-    # zipf-ish: token i appears (200 - i) times for i in 0..99
-    rows = [(f"tok{i}",) for i in range(100) for _ in range(200 - i)]
-    df = spark.createDataFrame(rows, ["t"]).repartition(8)
-    n_total = len(rows)
-    k = 40
-    out = {r.value: r.est_count for r in C.heavy_hitters(df, "t", k=k).collect()}
-    exact = {}
-    for (t,) in rows:
-        exact[t] = exact.get(t, 0) + 1
-    bound = n_total / k
-    for tok, true_cnt in exact.items():
-        # every value with freq > 2n/k must be present...
-        if true_cnt > 2 * bound:
-            assert tok in out, (tok, true_cnt, bound)
-        # ...and any reported estimate is a lower bound within n/k
-        if tok in out:
-            assert out[tok] <= true_cnt
-            assert true_cnt - out[tok] <= bound
-
-
-def test_heavy_hitters_exact_when_k_large(spark):
-    df = spark.createDataFrame([("a",)] * 5 + [("b",)] * 3 + [("c",)], ["t"])
-    out = {r.value: r.est_count for r in C.heavy_hitters(df, "t", k=100).collect()}
-    assert out == {"a": 5, "b": 3, "c": 1}  # k > domain -> exact
-
-
 def test_mix_sources(spark):
     from xml_to_sqlite3_spark.operators.curation import mix_sources
 
@@ -391,38 +364,6 @@ def test_mix_sources(spark):
         ).groupBy("source").count().collect()
     }
     assert again == by_src
-
-
-def test_cms_estimate_upper_bounds_and_exact_without_collisions(spark):
-    from xml_to_sqlite3_spark.operators.curation import (
-        cms_estimate,
-        count_min_sketch,
-    )
-
-    rows = [("a",)] * 50 + [("b",)] * 20 + [("c",)] * 5 + [("d",)] * 1
-    df = spark.createDataFrame(rows, ["v"])
-    truth = {"a": 50, "b": 20, "c": 5, "d": 1}
-
-    # tiny width forces collisions: estimates only ever overshoot
-    tiny = count_min_sketch(df, "v", width=2, depth=3)
-    probes = spark.createDataFrame([(k,) for k in truth] + [("zz",)], ["v"])
-    est = {
-        r["value"]: r["est_count"]
-        for r in cms_estimate(tiny, probes, "v", width=2, depth=3).collect()
-    }
-    for k, true_cnt in truth.items():
-        assert est[k] >= true_cnt, (k, est[k], true_cnt)
-    # total mass bounds any single estimate
-    assert max(est.values()) <= sum(truth.values())
-
-    # wide sketch: 4 values over 1024 buckets x 4 rows — md5 is not
-    # adversarial here, estimates are exact, unseen values read 0
-    wide = count_min_sketch(df, "v", width=1024, depth=4)
-    est_w = {
-        r["value"]: r["est_count"]
-        for r in cms_estimate(wide, probes, "v", width=1024, depth=4).collect()
-    }
-    assert est_w == {**truth, "zz": 0}
 
 
 def test_cms_merges_by_cell_sum(spark):
@@ -787,10 +728,7 @@ def test_hll_daily_merge_equals_from_raw(spark):
 
 class TestBloomFilter:
     def test_no_false_negatives_and_bounded_fpr(self, spark):
-        from xml_to_sqlite3_spark.operators.curation import (
-            bloom_bits,
-            bloom_member_values,
-        )
+        from xml_to_sqlite3_spark.operators.curation import bloom_bits, bloom_filter
 
         members = spark.range(0, 200).select(
             F.concat(F.lit("in_"), F.col("id")).alias("v")
@@ -800,11 +738,11 @@ class TestBloomFilter:
         )
         bits = bloom_bits(members, "v", m_bits=4096, k=3)
         # every inserted value must pass (Bloom's defining guarantee)
-        hits = bloom_member_values(members, "v", bits, m_bits=4096, k=3)
+        hits = bloom_filter(members, "v", bits, m_bits=4096, k=3)
         assert hits.count() == 200
         # non-members pass only by collision; with n=200, m=4096, k=3
         # theory gives ~0.3% FPR — allow a generous 5% ceiling
-        fp = bloom_member_values(probes, "v", bits, m_bits=4096, k=3).count()
+        fp = bloom_filter(probes, "v", bits, m_bits=4096, k=3).count()
         assert fp <= 50, f"false-positive rate implausibly high: {fp}/1000"
 
     def test_mergeable_by_union(self, spark):

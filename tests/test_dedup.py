@@ -80,16 +80,6 @@ def test_ngram_jaccard_max_df(spark):
     assert again[(7, 8)] == 1.0
 
 
-def test_minhash_signature_shape(docs):
-    sigs = D.minhash_signatures(docs, k=32).collect()
-    assert all(len(r["signature"]) == 32 for r in sigs)
-    by_id = {r["doc_id"]: r["signature"] for r in sigs}
-    assert by_id[1] == by_id[2]  # identical docs, identical signatures
-    # near-dup signatures mostly agree
-    agree = sum(1 for x, y in zip(by_id[1], by_id[3]) if x == y)
-    assert agree >= 16
-
-
 def test_minhash_lsh_pairs(docs):
     pairs = {
         (r["doc_a"], r["doc_b"]): r.asDict()

@@ -1,5 +1,5 @@
-"""Multimodal plumbing tests: schemas, batch shapes, fan-out,
-determinism, and the gated real-decode stub."""
+"""Multimodal tests: real image decode and its gated seam, perceptual
+hashing and near-dup pairs, and audio metadata."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import Row
 
 from xml_to_sqlite3_spark.operators import multimodal as M
-from xml_to_sqlite3_spark.operators import similarity as S
 
 
 @pytest.fixture(scope="module")
@@ -148,72 +147,6 @@ def test_real_decode_pixel_means(real_images):
     assert out[14]["mean_b"] == pytest.approx(90, abs=3)
 
 
-def test_real_resize_pixels(real_images):
-    from xml_to_sqlite3_spark.operators.codecs import decode_pnm
-
-    out = {
-        r["media_id"]: r.asDict()
-        for r in M.resize_image(real_images, 4, 4).collect()
-    }
-    assert all(r["meta"]["width"] == 4 and r["meta"]["height"] == 4 for r in out.values())
-    arr = decode_pnm(bytes(out[10]["data"]))
-    assert arr.shape == (4, 4, 3)
-    # nearest-neighbor of the 2x2 red|blue image: left half red, right half blue
-    assert (arr[:, :2] == (255, 0, 0)).all()
-    assert (arr[:, 2:] == (0, 0, 255)).all()
-
-
-def test_pixel_features_content_derived(spark, real_images):
-    import numpy as np
-
-    feats = {
-        r["media_id"]: np.array(r["embedding"])
-        for r in M.extract_pixel_features(real_images, dim=16).collect()
-    }
-    # the BMP, PNG, and PPM encode the SAME pixels -> identical
-    # vectors, which hash-derived features could never produce
-    assert np.allclose(feats[10], feats[12])
-    assert np.allclose(feats[10], feats[13])
-    # different content -> different vector
-    assert not np.allclose(feats[10], feats[11])
-    assert all(abs(np.linalg.norm(v) - 1.0) < 1e-6 for v in feats.values())
-
-
-def test_fake_decode_deterministic(media):
-    a = {r["media_id"]: (r["mean_r"], r["mean_g"], r["mean_b"]) for r in M.fake_decode_image(media).collect()}
-    b = {r["media_id"]: (r["mean_r"], r["mean_g"], r["mean_b"]) for r in M.fake_decode_image(media).collect()}
-    assert a == b
-    assert all(0 <= v < 1 for t in a.values() for v in t)
-    assert a[1] != a[2]  # different bytes -> different stats
-
-
-def test_resize_plan_rewrites_meta(media):
-    out = M.resize_plan(media, 224, 224).select("media_id", "meta.width", "meta.height", "meta.format").collect()
-    assert all(r["width"] == 224 and r["height"] == 224 for r in out)
-    fmts = {r["media_id"]: r["format"] for r in out}
-    assert fmts[3] == "mp4"  # untouched fields survive
-
-
-def test_frame_sampling_fanout(media):
-    frames = M.sample_frames(media, every_ms=1000).collect()
-    # only the video row fans out: 3500ms at 1000ms -> frames at 0,1000,2000,3000
-    assert len(frames) == 4
-    assert all(r["media_id"] == 3 for r in frames)
-    assert [r["ts_ms"] for r in sorted(frames, key=lambda r: r["frame_index"])] == [0, 1000, 2000, 3000]
-    assert len({r["frame_md5"] for r in frames}) == 4
-
-
-def test_features_feed_similarity(media):
-    feats = M.extract_features(media, dim=16)
-    assert dict(feats.dtypes)["embedding"] == "array<float>"
-    out = S.cosine_topk(
-        feats.filter("media_id = 1"), feats, k=2,
-        query_id="media_id", corpus_id="media_id", vec_col="embedding",
-    ).collect()
-    assert len(out) == 2
-    assert all(r["query_id"] == 1 and r["neighbor_id"] != 1 for r in out)
-
-
 @pytest.fixture(scope="module")
 def real_audio(spark):
     import numpy as np
@@ -234,96 +167,6 @@ def real_audio(spark):
         ),
     ]
     return spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-
-
-def test_real_audio_decode(real_audio):
-    out = {r["media_id"]: r.asDict() for r in M.decode_audio(real_audio).collect()}
-    # true waveform stats: a full-scale sine has RMS 1/sqrt(2) and a
-    # 440 Hz tone crosses zero ~880 times/s
-    assert out[20]["sample_rate_real"] == 8000
-    assert out[20]["duration_ms_real"] == 500
-    assert out[20]["n_channels"] == 1
-    assert out[20]["rms"] == pytest.approx(0.707, abs=0.01)
-    assert out[20]["zero_crossing_rate"] == pytest.approx(880 / 8000, rel=0.05)
-    assert out[21]["rms"] == 0.0
-    assert out[21]["duration_ms_real"] == 250
-
-
-def test_real_audio_decode_gates_compressed(spark):
-    rows = [
-        Row(
-            media_id=22, kind="audio", data=b"ID3fake-mp3",
-            meta=Row(width=None, height=None, sample_rate=44100, duration_ms=1000, format="mp3"),
-        )
-    ]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    # without soundfile: the documented NotImplementedError; with it:
-    # these fake bytes aren't a real mp3, so its open error surfaces
-    # (same contract as the image path's PIL gate test)
-    with pytest.raises(
-        Exception, match="pure-python codec for audio|soundfile|[Ff]ormat"
-    ):
-        M.decode_audio(df).collect()
-
-
-@pytest.mark.skipif(not M._HAS_SOUNDFILE, reason="soundfile not installed")
-def test_soundfile_seam_decodes_ogg(spark):
-    # real ogg fixture via soundfile itself; the seam routes any
-    # non-RIFF format through sf.read (mirror of the webp/PIL test)
-    import io
-
-    import numpy as np
-    import soundfile as sf
-
-    rate = 8000
-    t = np.arange(rate) / rate
-    wave = (0.5 * np.sin(2 * np.pi * 440 * t)).astype(np.float64)
-    buf = io.BytesIO()
-    sf.write(buf, wave, rate, format="OGG", subtype="VORBIS")
-    rows = [
-        Row(
-            media_id=31,
-            kind="audio",
-            data=buf.getvalue(),
-            meta=Row(
-                width=None,
-                height=None,
-                sample_rate=rate,
-                duration_ms=1000,
-                format="ogg",
-            ),
-        )
-    ]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    out = M.decode_audio(df).collect()[0]
-    assert out["sample_rate_real"] == rate
-    assert abs(out["duration_ms_real"] - 1000) <= 50
-    assert out["rms"] > 0.2  # a 0.5-amplitude sine decodes near 0.35
-
-
-def test_audio_features_content_derived(real_audio):
-    import numpy as np
-
-    feats = {
-        r["media_id"]: np.array(r["embedding"])
-        for r in M.extract_audio_features(real_audio, dim=16).collect()
-    }
-    assert len(feats[20]) == 16
-    # tone -> flat unit-norm envelope; silence -> zero vector
-    assert abs(np.linalg.norm(feats[20]) - 1.0) < 1e-6
-    assert np.abs(feats[21]).max() == 0.0
-
-
-def test_real_audio_resample(real_audio):
-    out = {
-        r["media_id"]: r.asDict()
-        for r in M.decode_audio(M.resample_audio(real_audio, 4000)).collect()
-    }
-    # half the rate, same duration, tone RMS preserved
-    assert out[20]["sample_rate_real"] == 4000
-    assert out[20]["duration_ms_real"] == pytest.approx(500, abs=2)
-    assert out[20]["rms"] == pytest.approx(0.707, abs=0.02)
-    assert out[21]["rms"] == 0.0
 
 
 def test_image_dhash_and_near_dup_pairs(spark):
@@ -369,71 +212,6 @@ def test_image_dhash_and_near_dup_pairs(spark):
     assert (1, 3) in pairs and pairs[(1, 3)] <= 10
     assert (1, 4) in pairs and pairs[(1, 4)] <= 10
     assert (1, 5) not in pairs and (2, 5) not in pairs
-
-
-def test_mjpeg_real_frame_sampling_and_near_dup(spark):
-    """Video frames are REAL for the mjpeg container: sample_frames
-    fingerprints the actual per-frame JPEG bytes, sample_frame_images
-    emits decodable image rows, and a planted near-duplicate frame
-    pair surfaces through the same image_near_dup_pairs path stills
-    use."""
-    import hashlib
-
-    import numpy as np
-    from pyspark.sql import Row
-
-    from xml_to_sqlite3_spark.operators import codecs
-
-    def blocky(seed):
-        blocks = np.random.RandomState(seed).randint(0, 256, (8, 8))
-        plane = np.kron(blocks, np.ones((8, 8))).astype(np.uint8)
-        return np.stack([plane, plane, plane], axis=2)
-
-    a = blocky(1)
-    noisy = np.clip(
-        a.astype(int) + np.random.RandomState(9).randint(-3, 4, a.shape), 0, 255
-    ).astype(np.uint8)
-    b = blocky(2)
-    c = blocky(3)
-    mj = codecs.encode_mjpeg([a, noisy, b, c], quality=95)
-
-    rows = [
-        Row(
-            media_id=5,
-            kind="video",
-            data=bytearray(mj),
-            meta=Row(
-                width=64, height=64, sample_rate=None,
-                duration_ms=4000, format="mjpeg",
-            ),
-        )
-    ]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-
-    fr = sorted(M.sample_frames(df, every_ms=1000).collect(), key=lambda r: r.frame_index)
-    assert [r.frame_index for r in fr] == [0, 1, 2, 3]
-    frames = codecs.split_mjpeg(mj)
-    assert len(frames) == 4
-    # the fingerprint is the md5 of the frame's OWN bytes, not a
-    # container-hash stand-in
-    assert [r.frame_md5 for r in fr] == [
-        hashlib.md5(f).hexdigest() for f in frames
-    ]
-
-    imgs = M.sample_frame_images(df, every_ms=1000)
-    # per-frame rasters decode through the ordinary image path
-    dec = M.decode_image(
-        imgs.selectExpr("frame_id AS media_id", "kind", "data", "meta")
-    ).collect()
-    assert len(dec) == 4
-    assert all(r.width == 64 and r.height == 64 for r in dec)
-
-    pairs = M.image_near_dup_pairs(imgs, max_hamming=16, id_col="frame_id").collect()
-    got = {tuple(sorted((r.doc_a, r.doc_b))) for r in pairs}
-    fid = lambda i: 5 * 1_000_000 + i  # noqa: E731
-    assert (fid(0), fid(1)) in got, f"planted near-dup pair missing: {got}"
-    for x, y in [(0, 2), (0, 3), (1, 2), (1, 3), (2, 3)]:
-        assert (fid(x), fid(y)) not in got, f"false pair ({x},{y}): {got}"
 
 
 def test_audio_metadata_wav_mp3_and_unknown(spark, real_audio):

@@ -208,36 +208,6 @@ def test_projection_and_cms_have_no_python_and_no_shuffle(spark):
     assert "partial_count" in plan2 or "HashAggregate" in plan2
 
 
-def test_audit_plan_reports_structured_facts(spark):
-    from pyspark.sql import functions as F
-
-    from xml_to_sqlite3_spark.plans.audit import assert_scale_clean, audit_plan
-
-    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-    df = li.filter(F.col("l_quantity") > 10).select("l_orderkey", "l_quantity")
-    a = audit_plan(df)
-    assert a["scans"] == 1 and a["python_stages"] == 0
-    assert any("l_quantity" in p for p in a["pushed_filters"])
-    assert a["read_schemas"][0] == ["l_orderkey", "l_quantity"]
-    # map-side-only plan: zero exchanges allowed
-    assert_scale_clean(df, max_exchanges=0)
-
-    agg = li.groupBy("l_returnflag").count()
-    a2 = audit_plan(agg)
-    assert a2["exchanges"] >= 1
-    import pytest as _pytest
-
-    with _pytest.raises(AssertionError, match="exchanges"):
-        assert_scale_clean(agg, max_exchanges=0)
-
-    @F.udf("int")
-    def py(x):  # pragma: no cover - never executed, plan-only
-        return x
-
-    with _pytest.raises(AssertionError, match="Python"):
-        assert_scale_clean(li.select(py(F.col("l_linenumber"))))
-
-
 def test_node_references_prunes_both_point_filters(spark):
     """node_references must be a UNION of two single-column point
     filters — an OR across source/target columns defeats row-group
@@ -368,15 +338,13 @@ def test_bloom_bits_broadcast_into_probe(spark):
     """The Bloom bit table is model-sized and must broadcast into
     the probe join — a shuffle of the probe side against a 4k-row
     sketch would be the scale mistake."""
-    from xml_to_sqlite3_spark.operators.curation import (
-        bloom_bits,
-        bloom_member_values,
-    )
     from pyspark.sql import functions as F
+
+    from xml_to_sqlite3_spark.operators.curation import bloom_bits, bloom_filter
 
     vals = spark.range(0, 1000).select(F.col("id").cast("string").alias("v"))
     bits = bloom_bits(vals.limit(100), "v", 1024, 3)
-    plan = _physical(bloom_member_values(vals, "v", bits, 1024, 3))
+    plan = _physical(bloom_filter(vals, "v", bits, 1024, 3))
     assert "BroadcastHashJoin" in plan
     assert "EvalPython" not in plan
 

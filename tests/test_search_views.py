@@ -1,4 +1,4 @@
-"""Full-text search (BM25) and auto-generated view tests."""
+"""Full-text search (BM25) tests."""
 
 from __future__ import annotations
 
@@ -8,14 +8,6 @@ import pytest
 
 from xml_to_sqlite3_spark.cache_util import INDEX
 from xml_to_sqlite3_spark.operators.search import bm25_search, build_text_index
-from xml_to_sqlite3_spark.plans.views import (
-    create_node_type_views,
-    create_sqlite_node_type_views,
-)
-from xml_to_sqlite3_spark.sources import read_xml_corpus
-from xml_to_sqlite3_spark.sinks import write_corpus_sqlite
-
-FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
 
 @pytest.fixture(scope="module")
@@ -55,28 +47,6 @@ def test_bm25_single_term(docs):
     idx = build_text_index(docs)
     out = bm25_search(idx, "gardening", k=4).collect()
     assert [r["doc_id"] for r in out] == [4]
-
-
-def test_spark_node_type_views(spark):
-    corpus = read_xml_corpus(spark, FIXTURES)
-    names = create_node_type_views(spark, corpus.nodes)
-    assert "nodes_album" in names and "nodes_item" in names
-    assert spark.sql("SELECT count(*) c FROM nodes_album").collect()[0]["c"] == 2
-    assert spark.sql("SELECT count(*) c FROM nodes_item").collect()[0]["c"] == 2
-
-
-def test_sqlite_node_type_views(spark, tmp_path):
-    corpus = read_xml_corpus(spark, FIXTURES)
-    db = str(tmp_path / "v.sqlite3")
-    write_corpus_sqlite(corpus, db)
-    names = create_sqlite_node_type_views(db)
-    assert "nodes_album" in names
-    import sqlite3
-
-    con = sqlite3.connect(db)
-    assert con.execute("SELECT count(*) FROM nodes_album").fetchone()[0] == 2
-    assert con.execute("SELECT count(*) FROM nodes_rating").fetchone()[0] == 3
-    con.close()
 
 
 def test_text_index_cache_lifecycle(spark, tmp_path):
@@ -246,17 +216,3 @@ class TestIndexAppend:
                 spark, appended["base_path"], appended["delta"], delta_key="ti-v1"
             )
         assert again[1] == appended["got"][1]
-
-
-def test_node_type_views_max_types_guard(spark):
-    """The distinct-type collect is schema-sized by design; a corpus
-    leaking data into tag names must trip the loud cap instead of
-    registering millions of temp views."""
-    import pytest as _pytest
-
-    nodes = spark.createDataFrame(
-        [(i, f"type_{i}") for i in range(12)], "id long, node_type string"
-    )
-    with _pytest.raises(ValueError, match="exceed max_types"):
-        create_node_type_views(spark, nodes, max_types=10)
-    assert len(create_node_type_views(spark, nodes, max_types=12)) == 12

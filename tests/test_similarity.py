@@ -923,7 +923,7 @@ class TestOpqRotation:
     """OPQ-style rotation (r14 VERDICT task 4): eigenvalue-allocated
     PCA rotation before PQ. The rotation is an isometry, so ADC
     semantics are exact in rotated space; recall lift is measured on
-    the clustered fixture (scripts/measure_clustered_recall.py)."""
+    the clustered fixture (BENCH_vecrecall_r14*.json)."""
 
     @pytest.fixture(scope="class")
     def corpus(self, spark):

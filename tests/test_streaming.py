@@ -14,7 +14,6 @@ from xml_to_sqlite3_spark.io_util import load
 from xml_to_sqlite3_spark.streaming import (
     read_event_stream,
     sessionize_stream,
-    stream_xml_corpus,
     windowed_event_aggregation,
 )
 
@@ -77,7 +76,10 @@ def test_sessionization_stream(spark):
 
 
 def test_streaming_xml_matches_batch_parse(spark, tmp_path):
+    """The XML stream the graph maintenance reads parses each file
+    exactly as the batch reader does, late arrivals included."""
     from xml_to_sqlite3_spark.sources import read_xml_corpus
+    from xml_to_sqlite3_spark.streaming.ingest import _xml_file_stream
 
     watch = str(tmp_path / "incoming")
     os.makedirs(watch)
@@ -91,8 +93,11 @@ def test_streaming_xml_matches_batch_parse(spark, tmp_path):
         df.filter(F.col("id").isNotNull()).write.mode("append").parquet(out_dir)
         batches.append(epoch_id)
 
-    q = stream_xml_corpus(
-        spark, watch, on_batch, checkpoint_dir=str(tmp_path / "ckpt")
+    q = (
+        _xml_file_stream(spark, watch, "*.xml", max_files_per_trigger=100)
+        .writeStream.option("checkpointLocation", str(tmp_path / "ckpt"))
+        .foreachBatch(on_batch)
+        .start()
     )
     q.processAllAvailable()
 
@@ -108,128 +113,6 @@ def test_streaming_xml_matches_batch_parse(spark, tmp_path):
         r["id"] for r in batch_nodes.select("id").collect()
     }
     assert len(batches) >= 2  # the late file triggered another micro-batch
-
-
-def test_stream_corpus_to_sqlite_incremental(spark, tmp_path):
-    """Watch-directory -> SQLite maintenance: files arriving across
-    micro-batches upsert into one database; re-parsed duplicates
-    converge (INSERT OR REPLACE), and the final contents equal the
-    batch pipeline's output over the same files."""
-    import shutil
-    import sqlite3
-
-    from xml_to_sqlite3_spark.streaming.ingest import stream_corpus_to_sqlite
-
-    in_dir = tmp_path / "xml_in"
-    in_dir.mkdir()
-    db = str(tmp_path / "live.sqlite3")
-    ckpt = str(tmp_path / "ckpt")
-
-    (in_dir / "a.xml").write_text(
-        '<catalog id="cat1"><item id="i1" kind="x">one</item></catalog>'
-    )
-    q = stream_corpus_to_sqlite(
-        spark, str(in_dir), db, ckpt, max_files_per_trigger=1, available_now=True
-    )
-    q.awaitTermination()
-    con = sqlite3.connect(db)
-    assert con.execute("SELECT COUNT(*) FROM nodes").fetchone()[0] == 2
-    con.close()
-
-    # second wave: a new file AND an update to the first document
-    (in_dir / "b.xml").write_text('<root id="r1"><leaf id="l1">two</leaf></root>')
-    (in_dir / "a2.xml").write_text(
-        '<catalog id="cat1"><item id="i1" kind="y">one-updated</item></catalog>'
-    )
-    q = stream_corpus_to_sqlite(
-        spark, str(in_dir), db, ckpt, max_files_per_trigger=1, available_now=True
-    )
-    q.awaitTermination()
-
-    con = sqlite3.connect(db)
-    # 2 (cat1 tree, upserted) + 2 (r1 tree)
-    assert con.execute("SELECT COUNT(*) FROM nodes").fetchone()[0] == 4
-    # the duplicate-id upsert kept exactly one i1 row, with the
-    # later file's attribute value
-    kinds = con.execute(
-        "SELECT property_value FROM node_properties np JOIN nodes n"
-        " ON np.node_id = n.id WHERE n.id = 'i1' AND property_name = 'kind'"
-    ).fetchall()
-    assert kinds == [("y",)]
-    assert con.execute("SELECT COUNT(*) FROM documents").fetchone()[0] == 3
-    # relationships are maintained per batch too: each 2-node tree
-    # contributes one parent_child + one child_parent edge, and
-    # re-ingesting a2.xml REPLACED a.xml's rows (delete-by-source
-    # -then-insert, no duplicate accumulation)
-    xr = dict(
-        con.execute(
-            "SELECT source_file, COUNT(*) FROM cross_references GROUP BY 1"
-        ).fetchall()
-    )
-    assert set(xr) == {"a", "b", "a2"}, xr
-    for n in xr.values():
-        assert n == 2, xr
-    con.close()
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_stream_rollup_to_parquet_incremental(spark, tmp_path):
-    """Two waves of event files maintain ONE parquet rollup whose
-    contents equal a batch recompute over all events seen so far."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from xml_to_sqlite3_spark.streaming.ingest import stream_rollup_to_parquet
-
-    in_dir = tmp_path / "ev_in"
-    in_dir.mkdir()
-    table = str(tmp_path / "rollup")
-    ckpt = str(tmp_path / "ckpt")
-
-    def mk(path, rows):
-        spark.createDataFrame(
-            rows, ["event_id", "user_id", "event_type", "ts_s", "value", "props"]
-        ).select(
-            "event_id", F.col("ts_s").cast("timestamp").alias("ts"),
-            "user_id", "event_type", "value", "props",
-        ).coalesce(1).write.mode("overwrite").parquet(str(path))
-        # file stream wants files in ONE watched dir
-        import glob as g
-        import shutil as sh
-
-        for f in g.glob(f"{path}/part-*.parquet"):
-            sh.move(f, str(in_dir / f"{path.name}.parquet"))
-        sh.rmtree(str(path), ignore_errors=True)
-
-    wave1 = [(1, 10, "view", "2024-01-01 10:05:00", 1.0, "{}"),
-             (2, 10, "view", "2024-01-01 10:20:00", 2.0, "{}"),
-             (3, 11, "click", "2024-01-01 11:05:00", 3.0, "{}")]
-    mk(tmp_path / "w1", wave1)
-    q = stream_rollup_to_parquet(spark, str(in_dir), table, ckpt, available_now=True)
-    q.awaitTermination()
-    first = {
-        (str(r["window_start"]), r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.read.parquet(table).collect()
-    }
-    assert first[("2024-01-01 10:00:00", "view")] == (2, 3.0)
-    assert first[("2024-01-01 11:00:00", "click")] == (1, 3.0)
-
-    # wave 2 touches one existing window and adds a new one
-    wave2 = [(4, 12, "view", "2024-01-01 10:40:00", 4.0, "{}"),
-             (5, 12, "purchase", "2024-01-01 12:10:00", 9.0, "{}")]
-    mk(tmp_path / "w2", wave2)
-    q = stream_rollup_to_parquet(spark, str(in_dir), table, ckpt, available_now=True)
-    q.awaitTermination()
-    got = {
-        (str(r["window_start"]), r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.read.parquet(table).collect()
-    }
-    assert got[("2024-01-01 10:00:00", "view")] == (3, 7.0)  # updated in place
-    assert got[("2024-01-01 11:00:00", "click")] == (1, 3.0)  # untouched survives
-    assert got[("2024-01-01 12:00:00", "purchase")] == (1, 9.0)  # new window
-    assert len(got) == 3
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_stream_document_maintenance_two_waves(spark, tmp_path, monkeypatch):
@@ -433,30 +316,22 @@ def test_maintenance_replay_rewind():
 
 
 def test_delta_key_nonce_migration():
-    """ADVICE r14: replaying the in-flight batch of a PRE-NONCE
-    sidecar (legacy ``b{N}`` chain keys, no nonce field) must keep the
-    legacy key format so the replay ATTACHES the already-published
-    entry instead of publishing a parallel one under a fresh nonce;
-    nonce minting resumes from the next new batch."""
+    """A fresh checkpoint mints its nonce at batch 0, and replaying
+    the in-flight batch of a nonce-bearing sidecar yields the SAME key,
+    so the replayed wave attaches its already-published entry."""
     from xml_to_sqlite3_spark.streaming.ingest import _delta_key
 
-    # legacy sidecar replaying its in-flight batch: legacy key, no mint
-    st = {"dedup_chain": "b0", "prev": {"dedup_chain": "b0"}, "last_batch": 1}
-    assert _delta_key(st, 1) == "b1"
-    assert "nonce" not in st
+    st = {"dedup_chain": ""}
+    dk0 = _delta_key(st, 0)
+    assert "nonce" in st and dk0 == f"{st['nonce']}-b0"
 
-    # the NEXT batch mints the nonce and switches format
-    dk = _delta_key(st, 2)
-    assert "nonce" in st and dk == f"{st['nonce']}-b2"
+    # the next batch keeps the nonce
+    dk = _delta_key(st, 1)
+    assert dk == f"{st['nonce']}-b1"
 
     # a nonce-bearing sidecar replays under the SAME nonce key
-    st["last_batch"] = 2
-    assert _delta_key(st, 2) == dk
-
-    # a fresh (never-run) checkpoint mints immediately at batch 0
-    st2 = {"dedup_chain": ""}
-    dk0 = _delta_key(st2, 0)
-    assert "nonce" in st2 and dk0 == f"{st2['nonce']}-b0"
+    st["last_batch"] = 1
+    assert _delta_key(st, 1) == dk
 
 
 def test_maintained_attach_requires_complete(spark, tmp_path, monkeypatch):

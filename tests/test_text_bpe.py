@@ -7,7 +7,6 @@ from collections import Counter
 
 from xml_to_sqlite3_spark.operators.text import (
     _merge_pair_in_symbols,
-    apply_bpe,
     train_bpe,
 )
 
@@ -57,26 +56,6 @@ def test_train_bpe_matches_reference(spark):
     assert got == want, (got, want)
 
 
-def test_apply_bpe_segments_with_learned_merges(spark):
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(CORPUS)], ["doc_id", "text"])
-    merges = [
-        (r["left"], r["right"])
-        for r in train_bpe(df, n_merges=10).orderBy("rank").collect()
-    ]
-    out = {r["doc_id"]: r for r in apply_bpe(df, merges).collect()}
-    # re-derive one doc by hand with the same merge rule
-    toks = []
-    for w in CORPUS[0].lower().split():
-        sym = list(w) + ["</w>"]
-        for l, r in merges:
-            sym = _merge_pair_in_symbols(sym, l, r)
-        toks.extend(sym)
-    assert out[0]["tokens"] == toks
-    assert out[0]["n_bpe_tokens"] == len(toks)
-    # 'low</w>' x5 in doc 0 should have merged into few symbols
-    assert out[0]["n_bpe_tokens"] < 5 * 4
-
-
 def test_merge_rule_non_overlapping():
     assert _merge_pair_in_symbols(["a", "a", "a"], "a", "a") == ["aa", "a"]
     assert _merge_pair_in_symbols(["a", "a", "a", "a"], "a", "a") == ["aa", "aa"]
@@ -98,21 +77,6 @@ def test_unicode_quality_flags_mojibake(spark):
     assert out[2]["non_ascii_ratio"] > 0 and out[2]["encoding_clean"]
     assert out[3]["replacement_chars"] == 2 and not out[3]["encoding_clean"]
     assert out[4]["control_chars"] == 2 and not out[4]["encoding_clean"]
-
-
-def test_compression_ratio_separates_repetitive_text(spark):
-    import zlib
-
-    from xml_to_sqlite3_spark.operators.text import compression_ratio
-
-    prose = "the quick brown fox jumps over the lazy dog " * 3
-    junk = "ab" * 500
-    df = spark.createDataFrame([(1, prose), (2, junk)], ["doc_id", "text"])
-    out = {r["doc_id"]: r["compression_ratio"] for r in compression_ratio(df).collect()}
-    assert out[2] < out[1] < 1.0
-    # exact replica of the UDF's arithmetic
-    want = round(len(zlib.compress(prose.encode(), 6)) / len(prose.encode()), 6)
-    assert out[1] == want
 
 
 def test_select_safe_batch_is_sequential_greedy():

@@ -4,10 +4,10 @@ The container has no media libraries, but netpbm (P5/P6) and
 uncompressed 24-bit BMP are plain byte grids, PNG needs nothing
 beyond stdlib zlib, RIFF/WAVE is struct parsing, and baseline JPEG
 lives in the sibling jpeg.py (pure-python Huffman + numpy DCT) — so
-decode -> resize/resample -> featurize runs on ACTUAL pixels and
-samples for ppm/pgm/bmp/png/jpeg/wav. Only formats needing real
-external codecs (webp/gif/mp3/video) stay behind the optional-PIL
-stub in multimodal.py.
+decode and perceptual hashing run on ACTUAL pixels and samples for
+ppm/pgm/bmp/png/jpeg/wav. Formats needing real external codecs
+(webp/gif/video) stay behind the optional-PIL seam in multimodal.py;
+mp3 gets a frame-header walk for metadata only.
 
 All functions are plain bytes->ndarray transforms so they vectorize
 naturally inside Arrow-batched mapInPandas workers: per-row
@@ -253,75 +253,6 @@ def decode_image_bytes(data: bytes, fmt: str) -> np.ndarray:
 
 
 SUPPORTED_FORMATS = ("ppm", "pgm", "pnm", "bmp", "png", "jpg", "jpeg")
-
-
-def split_mjpeg(data: bytes) -> list[bytes]:
-    """Split a raw MJPEG stream (concatenated baseline JPEG frames —
-    the on-disk layout of .mjpg/.mjpeg files and of MJPEG AVI payload
-    runs) into per-frame complete JPEG byte strings.
-
-    Frames are delimited by WALKING the marker structure, not by a
-    naive FFD8/FFD9 byte scan: length-prefixed segments (APPn with
-    embedded EXIF thumbnails — themselves complete JPEGs — DQT/DHT
-    payloads that may legally contain the FFD9 byte pair, COM text)
-    are skipped by their declared length, and only inside the
-    entropy-coded scan data does the FF-stuffing guarantee (every
-    0xFF is FF00 or a RSTn marker) make a bare marker byte
-    meaningful. A structurally corrupt frame ends the split at the
-    last well-formed frame boundary."""
-    frames: list[bytes] = []
-    n = len(data)
-    i = 0
-    while True:
-        # resync on SOI followed by another marker byte — the start
-        # of every well-formed JPEG (APPn/DQT/DHT/SOF all begin FF)
-        start = data.find(b"\xff\xd8\xff", i)
-        if start < 0:
-            break
-        pos = start + 2
-        end = None
-        while pos + 2 <= n:
-            if data[pos] != 0xFF:
-                break  # structure lost — stop at last good frame
-            marker = data[pos + 1]
-            if marker == 0xD9:  # EOI
-                end = pos + 2
-                break
-            if marker == 0xD8:
-                break  # unexpected nested SOI — corrupt
-            if marker == 0xFF:
-                pos += 1  # fill byte — the next FF starts the marker
-                continue
-            if 0xD0 <= marker <= 0xD7 or marker == 0x01:
-                pos += 2  # standalone marker
-                continue
-            if pos + 4 > n:
-                break
-            seglen = int.from_bytes(data[pos + 2 : pos + 4], "big")
-            if seglen < 2:
-                break
-            pos += 2 + seglen
-            if marker == 0xDA:  # SOS: entropy data until a real marker
-                while pos + 1 < n and not (
-                    data[pos] == 0xFF
-                    and data[pos + 1] != 0x00
-                    and not (0xD0 <= data[pos + 1] <= 0xD7)
-                ):
-                    pos += 1
-        if end is None:
-            break
-        frames.append(bytes(data[start:end]))
-        i = end
-    return frames
-
-
-def encode_mjpeg(frames: list[np.ndarray], quality: int = 85) -> bytes:
-    """Encode rasters into an MJPEG stream (concatenated JPEGs) via
-    the pure-python baseline encoder — the test-fixture / roundtrip
-    counterpart of split_mjpeg."""
-    from .jpeg import encode_jpeg
-
-    return b"".join(encode_jpeg(f, quality=quality) for f in frames)
 
 
 # ---------------------------------------------------------------------------
@@ -600,40 +531,6 @@ def nearest_resize(arr: np.ndarray, width: int, height: int) -> np.ndarray:
     rows = np.minimum(((np.arange(height) + 0.5) * h / height).astype(int), h - 1)
     cols = np.minimum(((np.arange(width) + 0.5) * w / width).astype(int), w - 1)
     return arr[rows][:, cols]
-
-
-def grid_pool_features(arr: np.ndarray, dim: int = 64) -> np.ndarray:
-    """Mean-pool the image onto a fixed grid and L2-normalize — a
-    deterministic, content-derived embedding (the slot where a model
-    inference UDF goes at scale). Gray images pool as one channel
-    replicated; output length is exactly ``dim``."""
-    gray = arr.astype(np.float64).mean(axis=2)
-    side = int(np.ceil(np.sqrt(dim)))
-    pooled = nearest_resize(gray[:, :, None], side, side)[:, :, 0].ravel()[:dim]
-    if pooled.size < dim:
-        pooled = np.pad(pooled, (0, dim - pooled.size))
-    n = np.linalg.norm(pooled)
-    return pooled / n if n > 0 else pooled
-
-
-def resample_audio(
-    samples: np.ndarray, src_rate: int, dst_rate: int
-) -> np.ndarray:
-    """Linear-interpolation resample of (n_frames, n_channels) float
-    samples — the audio analogue of nearest_resize (the seam where a
-    polyphase/sinc resampler slots in when a DSP library is present).
-    Duration is preserved: output has round(n * dst/src) frames."""
-    if src_rate == dst_rate:
-        return samples
-    n = samples.shape[0]
-    if n == 0:
-        return samples
-    m = max(int(round(n * dst_rate / src_rate)), 1)
-    src_pos = np.arange(m) * (n - 1) / max(m - 1, 1)
-    lo = np.floor(src_pos).astype(int)
-    hi = np.minimum(lo + 1, n - 1)
-    frac = (src_pos - lo)[:, None]
-    return samples[lo] * (1 - frac) + samples[hi] * frac
 
 
 # MPEG-1/2/2.5 audio (mp3) frame-header tables: bitrate kbps by

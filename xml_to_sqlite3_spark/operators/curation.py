@@ -1100,92 +1100,6 @@ def pack_training_sequences(
     )
 
 
-def heavy_hitters(
-    df: DataFrame,
-    col: str,
-    k: int = 100,
-) -> DataFrame:
-    """Mergeable Misra-Gries heavy-hitters sketch: approximate top
-    frequencies using k counters per partition and O(partitions x k)
-    total state — never a full groupBy over the value domain.
-
-    Phase 1 (mapInPandas, state carried across a partition's Arrow
-    batches): each partition maintains a k-counter Misra-Gries
-    summary — increment a live counter, else open one, else decrement
-    all (the classic stream algorithm). Phase 2: per-partition
-    summaries merge by summing surviving counters per value (the
-    standard mergeability result: combined undercount <= n/k where n
-    is the TOTAL item count).
-
-    Returns (value, est_count, n_total): est_count is a LOWER bound
-    on the true frequency, and true_count - est_count <= n_total / k
-    — so every value with true frequency > 2 * n_total / k is
-    guaranteed present. Exact counts per partition depend on the
-    partitioning, so this is test-verified by its guarantee, not a
-    value-hash oracle (use `vocabulary` when exactness matters).
-    """
-    from collections.abc import Iterator as _Iter
-
-    import pandas as _pd
-
-    def summarize(batches: _Iter[_pd.DataFrame]) -> _Iter[_pd.DataFrame]:
-        counters: dict = {}
-        n_seen = 0
-        for pdf in batches:
-            for v in pdf["__v"]:
-                n_seen += 1
-                if v in counters:
-                    counters[v] += 1
-                elif len(counters) < k:
-                    counters[v] = 1
-                else:
-                    dead = []
-                    for key in counters:
-                        counters[key] -= 1
-                        if counters[key] == 0:
-                            dead.append(key)
-                    for key in dead:
-                        del counters[key]
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        values = list(counters.keys())
-        counts = list(counters.values())
-        if not values and n_seen:
-            # all counters can die on a trailing decrement; the
-            # partition must still report its row count or n_total
-            # undercounts — emit a null-value marker row
-            values, counts = [None], [0]
-        yield _pd.DataFrame(
-            {
-                "value": values,
-                "part_count": counts,
-                "part_n": [n_seen] * len(values),
-                "part_id": [pid] * len(values),
-            }
-        )
-
-    vals = df.select(F.col(col).cast("string").alias("__v"))
-    summaries = vals.mapInPandas(
-        summarize, schema="value string, part_count long, part_n long, part_id int"
-    ).localCheckpoint(eager=True)
-    # n_total from the sketch itself (one part_n row per partition) —
-    # NOT a second full scan of the input; at 100 TB the extra pass
-    # would double the sketch's cost
-    totals = (
-        summaries.select("part_id", "part_n")
-        .distinct()
-        .agg(F.sum("part_n").alias("n_total"))
-    )
-    return (
-        summaries.filter(F.col("value").isNotNull())
-        .groupBy("value")
-        .agg(F.sum("part_count").alias("est_count"))
-        .crossJoin(F.broadcast(totals))
-        .orderBy(F.desc("est_count"), "value")
-    )
-
-
 def mix_sources(
     df: DataFrame,
     weights: dict[str, float],
@@ -1254,8 +1168,8 @@ def count_min_sketch(
 
     Point-estimate guarantee: for any value v,
     ``min_d cnt[d][h_d(v)]`` >= true_count(v), overshooting by more
-    than 2N/width with probability <= 2^-depth. Unlike heavy_hitters
-    (Misra-Gries, partition-order-dependent), the CMS is a pure
+    than 2N/width with probability <= 2^-depth. Unlike a Misra-Gries
+    summary (partition-order-dependent), the CMS is a pure
     function of the value multiset: the hash rows derive from the
     portable 60-bit md5 (stable_hash60 with a per-row tag), so the
     sketch itself is value-oracle-checkable in SQL, mergeable across
@@ -1285,43 +1199,6 @@ def count_min_sketch(
             *gcols, F.col("__c.row").alias("row"), F.col("__c.bucket").alias("bucket")
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def cms_estimate(
-    sketch: DataFrame,
-    values: DataFrame,
-    col: str,
-    width: int = 256,
-    depth: int = 4,
-) -> DataFrame:
-    """Point estimates from a count_min_sketch built with the same
-    (width, depth): for each probe value, min over hash rows of its
-    counter. An absent (row, bucket) cell means that counter is 0 —
-    the left join + coalesce keeps unseen values at estimate 0
-    instead of overestimating from the cells that do exist.
-    The sketch side is at most depth x width rows and broadcasts.
-    """
-    v = F.col(col).cast("string")
-    probes = values.select(
-        v.alias("value"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("row"),
-                        (stable_hash60(F.concat(F.lit(f"cms{d}|"), v)) % width).alias(
-                            "bucket"
-                        ),
-                    )
-                    for d in range(depth)
-                ]
-            )
-        ).alias("__p"),
-    ).select("value", F.col("__p.row").alias("row"), F.col("__p.bucket").alias("bucket"))
-    joined = probes.join(F.broadcast(sketch), ["row", "bucket"], "left")
-    return joined.groupBy("value").agg(
-        F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("est_count")
     )
 
 
@@ -1772,9 +1649,8 @@ def exact_percentiles(
 
 def bloom_positions(v: Column, m_bits: int = 4096, k: int = 3) -> list[Column]:
     """The k portable Bloom hash positions of a (string-cast) value —
-    ONE definition shared by bloom_bits, bloom_member_values and any
-    per-row prefilter composition, so the sketch's hash family cannot
-    drift between build and probe."""
+    ONE definition shared by bloom_bits and bloom_filter, so the
+    sketch's hash family cannot drift between build and probe."""
     return [
         (stable_hash60(F.concat(F.lit(f"bloom{i}|"), v)) % m_bits).cast("long")
         for i in range(k)
@@ -1810,30 +1686,24 @@ def bloom_bits(
     )
 
 
-def bloom_member_values(
+def bloom_filter(
     df: DataFrame,
     col: str,
     bits: DataFrame,
     m_bits: int = 4096,
     k: int = 3,
 ) -> DataFrame:
-    """The DISTINCT values of ``col`` that the Bloom filter ``bits``
-    (from bloom_bits with the SAME m_bits/k) may contain — i.e. ALL
-    k of the value's bit positions are set. No false negatives; the
-    caller semi-joins this against the full frame to apply the
-    prefilter.
+    """The rows of ``df`` whose ``col`` the Bloom filter ``bits`` (from
+    bloom_bits with the SAME m_bits/k) may contain — i.e. ALL k of
+    the value's bit positions are set. No false negatives; a NULL
+    value never passes.
 
-    Scale shape (r15): probe values dedup once, then each of the k
-    hash positions probes the broadcast model-sized bit table with
-    its own broadcast LEFT-SEMI join — "all positions set" is the
-    conjunction of k map-side hash probes, so after the single
-    probe-value dedup shuffle nothing exchanges at all (the old
-    explode → join → count-per-value aggregation paid a second full
-    shuffle of the exploded postings for the same answer; guide
-    §2.4)."""
-    v = F.col(col).cast("string")
-    out = df.filter(v.isNotNull()).select(v.alias(col)).distinct()
-    for pos in bloom_positions(F.col(col), m_bits, k):
+    Scale shape: each of the k hash positions probes the broadcast
+    model-sized bit table with its own broadcast LEFT-SEMI join —
+    "all positions set" is the conjunction of k map-side hash probes,
+    so the probe side never exchanges."""
+    out = df
+    for pos in bloom_positions(F.col(col).cast("string"), m_bits, k):
         out = out.join(F.broadcast(bits), pos == F.col("bit"), "left_semi")
     return out
 

@@ -44,32 +44,16 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def word_shingles(text_col, n: int = 3):
-    """Distinct word n-gram shingles of a text column (pure Column
-    expression). NOTE: Catalyst interprets higher-order lambdas
-    (no codegen) and slice-per-index is O(words^2); prefer
-    ``shingles_udf`` for corpus-scale paths — same output, one
-    Arrow-batched pass."""
-    norm = F.lower(F.regexp_replace(F.trim(text_col), r"\s+", " "))
-    words = F.split(norm, " ")
-    size = F.size(words)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(size - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(words, i, F.lit(n))),
-        )
-    )
-
-
 def shingles_udf(n: int = 3):
-    """Vectorized shingler — byte-identical output to
-    ``word_shingles`` (same \\s+ normalization, same edge case for
-    short docs, first-occurrence distinct order).
+    """Vectorized shingler: the distinct word ``n``-gram shingles of
+    each text in first-occurrence order, after trimming spaces,
+    collapsing ``\\s+`` runs to one space and lowercasing; a text
+    shorter than ``n`` words yields one shingle of all its words.
 
     Whitespace is the JVM's ASCII ``\\s`` class and trim strips
     spaces only — Python's Unicode-aware ``\\s``/``str.strip`` would
-    diverge from the Column formulation (and from the DuckDB oracles)
-    on NBSP-class characters and leading tabs."""
+    diverge from the DuckDB oracles on NBSP-class characters and
+    leading tabs."""
     ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
     @F.pandas_udf("array<string>")
@@ -318,17 +302,6 @@ def _signatures_from_tokens(tokens: DataFrame, k: int) -> DataFrame:
     return sigs.select(
         "doc_id", F.array(*[F.col(f"__m{i}") for i in range(k)]).alias("signature")
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    k: int = 64,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """k-permutation MinHash signature per document."""
-    return _signatures_from_tokens(_shingle_tokens(df, n, id_col, text_col), k)
 
 
 def _carry_meta(derived: DataFrame, source: DataFrame) -> DataFrame:
@@ -745,7 +718,7 @@ def positional_windows_udf(length: int = 8):
     formulation (transform+slice+concat_ws) is interpreted — Catalyst
     does not codegen higher-order lambdas — and measured 6x slower
     than this UDF with warm workers (7.1s vs 1.2s for the sf0.1
-    posting build), the same trade word_shingles documents."""
+    posting build), the same trade as ``shingles_udf``."""
     ws = re.compile(r"\s+")
 
     @F.pandas_udf("array<string>")

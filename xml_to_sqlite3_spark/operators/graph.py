@@ -209,17 +209,6 @@ def duplicate_groups(
     )
 
 
-def reachable(
-    edges: DataFrame,
-    source: str,
-    max_depth: int = 3,
-    src_col: str = "source_node_id",
-    dst_col: str = "target_node_id",
-) -> DataFrame:
-    """Node set reachable from ``source`` within ``max_depth`` hops."""
-    return bfs_distances(edges, source, max_depth, src_col, dst_col).select("node")
-
-
 def out_degree_spine(e: DataFrame) -> DataFrame:
     """(node, __deg) spine of a directed (src, dst) edge frame in ONE
     shuffle: src rows carry a marker 1, dst rows 0; the groupBy both

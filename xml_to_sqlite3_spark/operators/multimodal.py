@@ -1,38 +1,28 @@
 """Multimodal column handling: images / audio / video as opaque
-binary columns with typed metadata, decoded and featurized through
-Arrow-batched Pandas UDFs.
+binary columns with typed metadata, decoded through Arrow-batched
+Pandas UDFs.
 
-The Spark-side plumbing — schemas, mapInPandas batch shapes, fan-out
-(frame sampling), binary -> vector featurization feeding the ANN
-operators — is real and tested. The codec step is REAL for
-PPM/PGM/BMP, PNG (stdlib-zlib inflate + numpy unfilter, codecs.py)
-and baseline JPEG (pure-python Huffman + numpy IDCT, jpeg.py) —
-decode, nearest-neighbor resize, grid-pool featurization all operate
-on actual pixels — and for RIFF/WAVE audio (PCM + float,
-decode_audio / extract_audio_features work on actual samples).
-Video is REAL for the 'mjpeg' container (concatenated baseline
-JPEGs, split by codecs.split_mjpeg and decoded frame-by-frame through
-jpeg.py — sample_frames fingerprints actual frame bytes and
-sample_frame_images emits decodable per-frame image rows). Other
-formats (webp/gif/mp3, inter-frame-coded video) remain behind an
-optional-PIL stub, with deterministic ``fake_*`` stand-ins keeping
-the pipeline executable end-to-end for them.
+The codec step is REAL for PPM/PGM/BMP, PNG (stdlib-zlib inflate +
+numpy unfilter, codecs.py) and baseline JPEG (pure-python Huffman +
+numpy IDCT, jpeg.py): ``decode_image`` and the ``image_dhash``
+perceptual signature behind ``image_near_dup_pairs`` operate on
+actual pixels. ``audio_metadata`` reports RIFF/WAVE rows from the
+decoded waveform (PCM, float, G.711, IMA ADPCM) and mp3 rows from an
+MPEG frame-header walk. Other image formats (webp/gif) go through an
+optional-PIL seam and raise without it.
 
 At scale: binaries stay in columnar storage (parquet binary columns
 with metadata pushed to a sidecar struct so pruning works without
-touching bytes); decode work is per-row independent (no shuffle);
-frame fan-out multiplies rows inside the task, never on the driver.
+touching bytes); decode work is per-row independent (no shuffle).
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from . import codecs
 
@@ -48,13 +38,6 @@ try:  # pragma: no cover - not present in this environment
 except Exception:
     _HAS_PIL = False
 
-try:  # pragma: no cover - not present in this environment
-    import soundfile  # noqa: F401
-
-    _HAS_SOUNDFILE = True
-except Exception:
-    _HAS_SOUNDFILE = False
-
 
 def _decode_raster(data, fmt: str):
     """Decode to an HxWxC uint8 array via the pure-python codecs,
@@ -67,7 +50,7 @@ def _decode_raster(data, fmt: str):
         if not _HAS_PIL:
             raise NotImplementedError(
                 f"no pure-python codec for format {fmt!r} and PIL "
-                "is not installed; use fake_decode_image"
+                "is not installed"
             )
         import io
 
@@ -87,8 +70,7 @@ def decode_image(df: DataFrame) -> DataFrame:
     """REAL image decode (PPM/PGM/BMP/PNG/JPEG via the pure-python
     codecs): emits true pixel dimensions and channel means from the
     raster. Rows in unsupported formats (webp/gif) raise unless PIL
-    is importable — use ``fake_decode_image`` for pipeline-shape
-    testing of those."""
+    is importable."""
     schema = (
         MEDIA_SCHEMA
         + ", width int, height int, mean_r double, mean_g double, mean_b double"
@@ -115,102 +97,6 @@ def decode_image(df: DataFrame) -> DataFrame:
                 mg.append(float(means[1]))
                 mb.append(float(means[2]))
             yield pdf.assign(width=ws, height=hs, mean_r=mr, mean_g=mg, mean_b=mb)
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def resize_image(df: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL nearest-neighbor resize for the uncompressed formats: the
-    raster is decoded, resampled, re-encoded (PPM/PGM), and the
-    metadata struct rewritten to the new dimensions."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_data, out_meta = [], []
-            for data, meta in zip(pdf["data"], pdf["meta"]):
-                fmt = (meta["format"] if meta is not None else "") or ""
-                arr = _decode_raster(data, fmt)
-                # PNM has no alpha plane: encode_ppm writes P5/P6 for
-                # 1/3 channels only, so RGBA/LA rasters must drop
-                # alpha here or the re-encode silently corrupts
-                if arr.shape[2] == 4:
-                    arr = arr[:, :, :3]
-                elif arr.shape[2] == 2:
-                    arr = arr[:, :, :1]
-                resized = codecs.nearest_resize(arr, width, height)
-                out_data.append(codecs.encode_ppm(resized))
-                m = dict(meta) if meta is not None else {}
-                m["width"], m["height"] = width, height
-                m["format"] = "ppm" if resized.shape[2] == 3 else "pgm"
-                out_meta.append(m)
-            yield pdf.assign(data=out_data, meta=out_meta)
-
-    return df.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-def _decode_waveform(data, fmt: str):
-    """Decode to (samples[n, ch] float64, rate) — the ONE gating seam
-    every waveform consumer (decode_audio, extract_audio_features)
-    shares, mirroring ``_decode_raster``. RIFF/WAVE goes through the
-    pure-python codec (PCM 8/16/32-bit, float, G.711 mu-law/A-law,
-    mono IMA ADPCM); perceptual formats (mp3/ogg/flac) route through
-    the optional ``soundfile`` library when importable and raise the
-    documented NotImplementedError otherwise — a native decoder is
-    genuinely required for those bitstreams."""
-    if fmt in ("wav", "wave", ""):
-        return codecs.decode_wav(bytes(data))
-    if not _HAS_SOUNDFILE:
-        raise NotImplementedError(
-            f"no pure-python codec for audio format {fmt!r} and "
-            "soundfile is not installed; use fake_decode_audio"
-        )
-    import io
-
-    import soundfile as sf
-
-    x, rate = sf.read(io.BytesIO(bytes(data)), always_2d=True, dtype="float64")
-    return x, int(rate)
-
-
-def decode_audio(df: DataFrame) -> DataFrame:
-    """REAL audio decode for RIFF/WAVE rows (PCM 8/16/32-bit, float,
-    G.711 mu-law/A-law and mono IMA ADPCM — codecs.decode_wav):
-    emits true sample_rate, duration_ms, channel count, RMS level and
-    zero-crossing rate from the waveform. Perceptual codecs
-    (mp3/ogg/flac) decode through the optional soundfile seam
-    (``_decode_waveform``) and raise without it — mirror of the image
-    path's PIL gating."""
-    schema = (
-        MEDIA_SCHEMA
-        + ", sample_rate_real int, duration_ms_real int, n_channels int"
-        + ", rms double, zero_crossing_rate double"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rates, durs, chans, rmss, zcrs = [], [], [], [], []
-            for data, meta in zip(pdf["data"], pdf["meta"]):
-                fmt = ((meta["format"] if meta is not None else "") or "").lower()
-                x, rate = _decode_waveform(data, fmt)
-                mono = x.mean(axis=1)
-                rates.append(rate)
-                durs.append(int(round(len(x) / rate * 1000)))
-                chans.append(x.shape[1])
-                rmss.append(float(np.sqrt((mono**2).mean())) if len(mono) else 0.0)
-                zcrs.append(
-                    float((np.diff(np.signbit(mono)) != 0).mean())
-                    if len(mono) > 1
-                    else 0.0
-                )
-            yield pdf.assign(
-                sample_rate_real=rates,
-                duration_ms_real=durs,
-                n_channels=chans,
-                rms=rmss,
-                zero_crossing_rate=zcrs,
-            )
 
     return df.mapInPandas(run, schema=schema)
 
@@ -297,279 +183,6 @@ def audio_metadata(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(run, schema=schema)
-
-
-def extract_audio_features(df: DataFrame, dim: int = 64) -> DataFrame:
-    """REAL content featurization for WAV rows: the mono waveform's
-    frame-RMS envelope mean-pooled to ``dim`` values, L2-normalized —
-    the array<float> column the similarity operators consume, derived
-    from actual samples (same audio -> same vector; a re-encoded copy
-    -> a nearby vector)."""
-    schema = "media_id long, kind string, embedding array<float>"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            vecs = []
-            for data, meta in zip(pdf["data"], pdf["meta"]):
-                fmt = ((meta["format"] if meta is not None else "") or "").lower()
-                x, _ = _decode_waveform(data, fmt)
-                mono = x.mean(axis=1)
-                if len(mono) == 0:
-                    vecs.append([0.0] * dim)
-                    continue
-                # pool |x| into dim equal frames (pad the tail frame)
-                n = -(-len(mono) // dim) * dim
-                padded = np.zeros(n)
-                padded[: len(mono)] = np.abs(mono)
-                env = np.sqrt((padded.reshape(dim, -1) ** 2).mean(axis=1))
-                norm = np.linalg.norm(env)
-                vecs.append([float(v) for v in (env / norm if norm > 0 else env)])
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "kind": pdf["kind"], "embedding": vecs}
-            )
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def _digest_floats(data: bytes, n: int, salt: bytes = b"") -> list[float]:
-    """n floats in [0,1) derived from md5 chain over the bytes —
-    deterministic stand-in for decoded content statistics."""
-    out: list[float] = []
-    seed = hashlib.md5(salt + data).digest()
-    while len(out) < n:
-        seed = hashlib.md5(seed).digest()
-        for i in range(0, 16, 4):
-            out.append(int.from_bytes(seed[i : i + 4], "big") / 2**32)
-            if len(out) == n:
-                break
-    return out
-
-
-def fake_decode_image(df: DataFrame) -> DataFrame:
-    """Deterministic decode stand-in: per-image channel statistics
-    derived from the bytes. Output adds mean_r/mean_g/mean_b.
-    mapInPandas => whole Arrow batches cross the Python boundary."""
-    schema = MEDIA_SCHEMA + ", mean_r double, mean_g double, mean_b double"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            stats = [
-                _digest_floats(bytes(d) if d is not None else b"", 3, b"rgb")
-                for d in pdf["data"]
-            ]
-            yield pdf.assign(
-                mean_r=[s[0] for s in stats],
-                mean_g=[s[1] for s in stats],
-                mean_b=[s[2] for s in stats],
-            )
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def resize_plan(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes bytes through (stub) and rewrites the
-    metadata struct — the part Spark owns (schema evolution, batch
-    shape) is real; the pixel work is the stubbed codec step."""
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.col("meta.sample_rate").alias("sample_rate"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-            F.col("meta.format").alias("format"),
-        ),
-    )
-
-
-def _sampled_frame_plan(raw: bytes, meta, every_ms: int):
-    """Shared sampling plan for one video row: yields
-    (frame_index, ts_ms, frame_bytes_or_None). For the REAL container
-    format ('mjpeg', concatenated baseline JPEGs split by
-    codecs.split_mjpeg) frame timestamps come from spreading the
-    container's frames uniformly over duration_ms and frame_bytes is
-    the frame's own complete JPEG; for opaque formats frame_bytes is
-    None and callers fall back to the documented deterministic
-    stand-in fingerprint. ``meta`` must be non-None (callers filter
-    metadata-less rows before sampling — without duration_ms there
-    is no frame timeline to sample)."""
-    duration = int(meta["duration_ms"] or 0)
-    fmt = (meta["format"] or "").lower()
-    frames = codecs.split_mjpeg(raw) if fmt == "mjpeg" else None
-    for idx, ts in enumerate(range(0, duration, every_ms)):
-        fb = None
-        if frames:
-            fi = min(len(frames) - 1, ts * len(frames) // max(duration, 1))
-            fb = frames[fi]
-        yield idx, ts, fb
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame sampling fan-out for video rows: one output row per
-    sampled frame. The fan-out happens inside the task (mapInPandas
-    yielding more rows than it received) — never on the driver.
-
-    For 'mjpeg' videos the fingerprint is REAL — the md5 of the
-    sampled frame's own JPEG bytes (so two videos sharing a frame
-    agree, and frame-level exact dedup works across containers); for
-    opaque formats it falls back to the deterministic
-    container-hash stand-in."""
-    schema = "media_id long, frame_index int, ts_ms int, frame_md5 string"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, data, meta in zip(
-                pdf["media_id"], pdf["kind"], pdf["data"], pdf["meta"]
-            ):
-                if kind != "video" or meta is None:
-                    continue
-                raw = bytes(data) if data is not None else b""
-                for idx, ts, fb in _sampled_frame_plan(raw, meta, every_ms):
-                    fp = (
-                        hashlib.md5(fb).hexdigest()
-                        if fb is not None
-                        else hashlib.md5(raw + idx.to_bytes(4, "big")).hexdigest()
-                    )
-                    rows.append((int(mid), idx, ts, fp))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_index", "ts_ms", "frame_md5"]
-            )
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def sample_frame_images(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """REAL per-frame raster extraction for 'mjpeg' video rows: one
-    IMAGE row per sampled frame, each carrying the frame's complete
-    JPEG bytes and image metadata — directly consumable by
-    decode_image / image_dhash / image_near_dup_pairs, so video
-    frames flow through the same perceptual-dedup path as stills.
-    frame_id = media_id * 1_000_000 + frame_index (unique as long as
-    a video samples < 1M frames). Non-mjpeg video rows are skipped
-    (their decode is the documented stubbed modality)."""
-    schema = (
-        "frame_id long, media_id long, frame_index int, ts_ms int, "
-        "kind string, data binary, "
-        "meta struct<width: int, height: int, sample_rate: int, "
-        "duration_ms: int, format: string>"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, data, meta in zip(
-                pdf["media_id"], pdf["kind"], pdf["data"], pdf["meta"]
-            ):
-                if kind != "video" or meta is None:
-                    continue
-                raw = bytes(data) if data is not None else b""
-                for idx, ts, fb in _sampled_frame_plan(raw, meta, every_ms):
-                    if fb is None:
-                        continue
-                    rows.append(
-                        (
-                            int(mid) * 1_000_000 + idx,
-                            int(mid),
-                            idx,
-                            ts,
-                            "image",
-                            fb,
-                            {
-                                "width": None,
-                                "height": None,
-                                "sample_rate": None,
-                                "duration_ms": None,
-                                "format": "jpeg",
-                            },
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "frame_id",
-                    "media_id",
-                    "frame_index",
-                    "ts_ms",
-                    "kind",
-                    "data",
-                    "meta",
-                ],
-            )
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def extract_pixel_features(df: DataFrame, dim: int = 64) -> DataFrame:
-    """REAL content featurization for decodable images: grid-mean-pool
-    the raster to ``dim`` values, L2-normalized — the array<float>
-    column the similarity operators consume, derived from actual
-    pixels (two images with the same content get the same vector;
-    a resized copy gets a NEARBY vector, which hash-derived features
-    cannot provide)."""
-    schema = "media_id long, kind string, embedding array<float>"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vecs = []
-            for data, meta in zip(pdf["data"], pdf["meta"]):
-                fmt = (meta["format"] if meta is not None else "") or ""
-                arr = _decode_raster(data, fmt)
-                vecs.append([float(x) for x in codecs.grid_pool_features(arr, dim)])
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "kind": pdf["kind"], "embedding": vecs}
-            )
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def extract_features(df: DataFrame, dim: int = 64) -> DataFrame:
-    """binary -> embedding featurization (deterministic hash-derived
-    vector, unit-normalized) producing the array<float> column the
-    similarity operators consume. Works for ANY format (no decode);
-    see extract_pixel_features for the content-derived variant.
-    Arrow-batched; at scale this is where a real model inference UDF
-    slots in."""
-    schema = "media_id long, kind string, embedding array<float>"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vecs = []
-            for d in pdf["data"]:
-                v = _digest_floats(bytes(d) if d is not None else b"", dim, b"feat")
-                s = sum(x * x for x in v) ** 0.5 or 1.0
-                vecs.append([float(x / s) for x in v])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "embedding": vecs,
-                }
-            )
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def resample_audio(df: DataFrame, target_rate: int) -> DataFrame:
-    """REAL audio resample for WAV rows: decode, linear-interpolate
-    to ``target_rate``, re-encode 16-bit PCM, rewrite the metadata
-    struct — same shape as resize_image for the image modality."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_data, out_meta = [], []
-            for data, meta in zip(pdf["data"], pdf["meta"]):
-                x, rate = codecs.decode_wav(bytes(data))
-                y = codecs.resample_audio(x, rate, target_rate)
-                out_data.append(codecs.encode_wav(y, target_rate))
-                m = dict(meta) if meta is not None else {}
-                m["sample_rate"] = target_rate
-                out_meta.append(m)
-            yield pdf.assign(data=out_data, meta=out_meta)
-
-    return df.mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 def image_dhash(df: DataFrame, id_col: str = "media_id") -> DataFrame:

@@ -307,20 +307,6 @@ def append_text_index(
     return _load_index(spark, INDEX.publish(ck, _build))
 
 
-def corpus_stats(index: DataFrame) -> tuple[int, float]:
-    """(N, avgdl) — the index's scalar metadata, computed once at
-    build time. The 1-row collect is the documented exception to the
-    no-collect rule: two scalars stored alongside the index, exactly
-    as a warehouse would keep table-level stats."""
-    row = (
-        index.select("doc_id", "doc_len")
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avgdl"))
-        .first()
-    )
-    return int(row["n"]), float(row["avgdl"])
-
-
 def bm25_search(
     index: DataFrame,
     query: str,

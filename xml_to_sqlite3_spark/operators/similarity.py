@@ -41,10 +41,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
@@ -59,7 +55,6 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
         .filter(F.col("rank") <= k)
         .orderBy("query_id", "rank")
     )
-
 
 
 def cosine_topk(
@@ -1083,9 +1078,9 @@ def ivf_pq_topk(
     driver-side, still m lookups per row (the Jégou IVF-ADC recipe:
     the coarse quantizer absorbs between-cluster variance, so the
     same code budget quantizes finer). MEASURED both ways
-    (BENCH_vecrecall_r14): on the planted-cluster fixture
-    (scripts/measure_clustered_recall.py — 32 Gaussian clusters,
-    sigma 0.15, the shape of a real embedding corpus) residual wins
+    (BENCH_vecrecall_r14.json, which records the fixture): on the
+    planted-cluster fixture (32 Gaussian clusters, sigma 0.15, the
+    shape of a real embedding corpus) residual wins
     0.25 vs raw's 0.19 recall@20 at every probe setting, exactly as
     the theory predicts; on make_sf's deliberately cluster-DIFFUSING
     sf1 perturbation raw wins 0.55 vs 0.45 (no between-cluster

@@ -1,19 +1,11 @@
-"""Skew- and shuffle-management utilities.
+"""Skew-management utilities.
 
-Two of the load-bearing patterns for 100 TB joins:
-
-- ``salted_join``: a hot key (one customer with 100M rows) turns a
-  hash join into a single straggler task. Salting splits each left
-  key into S sub-keys and replicates the matching right rows S ways
-  — the hot partition becomes S even ones. AQE's skew-join handles
-  moderate skew automatically; explicit salting is for the extreme
-  tail where even a split partition exceeds memory.
-
-- ``write_bucketed`` / bucketed tables: pre-shuffle the data ONCE at
-  write time (bucketBy on the join key); subsequent joins between
-  tables bucketed on the same key by the same count run without any
-  exchange. This is how repeatedly-joined corpus tables (nodes ⋈
-  properties ⋈ xrefs on node ids) amortize their shuffles.
+``salted_join``: a hot key (one customer with 100M rows) turns a
+hash join into a single straggler task. Salting splits each left
+key into S sub-keys and replicates the matching right rows S ways —
+the hot partition becomes S even ones. AQE's skew-join handles
+moderate skew automatically; explicit salting is for the extreme
+tail where even a split partition exceeds memory.
 """
 
 from __future__ import annotations
@@ -57,27 +49,6 @@ def salted_join(
         "__salt", F.explode(F.array(*[F.lit(s) for s in range(salt)]))
     )
     return salted_left.join(salted_right, [key, "__salt"], how).drop("__salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    buckets: int = 16,
-    sort: bool = True,
-    mode: str = "overwrite",
-    path: str | None = None,
-) -> None:
-    """Persist as a bucketed (and optionally sorted) table: the
-    one-time shuffle that makes every later equi-join on ``key``
-    against a same-bucketed table exchange-free. ``path`` makes it
-    an external table (otherwise the session warehouse dir)."""
-    writer = df.write.mode(mode).format("parquet").bucketBy(buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    if path:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
 
 
 def skew_report(df: DataFrame, key_col: str, top: int = 10) -> DataFrame:

@@ -458,41 +458,6 @@ def train_bpe(
         )
 
 
-def apply_bpe(
-    df: DataFrame,
-    merges: list,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Segment text with a learned merge table: (id, n_bpe_tokens,
-    tokens). ``merges`` is the [(left, right), ...] list in rank
-    order (broadcast with the task binary — a merge table is
-    vocabulary-sized, never data-sized)."""
-    from pyspark.sql.functions import pandas_udf
-
-    ordered = [(l, r) for l, r, *_ in (list(m) for m in merges)]
-
-    @pandas_udf("array<string>")
-    def segment(col: pd.Series) -> pd.Series:
-        def one(text) -> list:
-            if text is None:
-                return []
-            toks: list = []
-            for w in str(text).lower().split():
-                sym = list(w) + ["</w>"]
-                for l, r in ordered:
-                    sym = _merge_pair_in_symbols(sym, l, r)
-                toks.extend(sym)
-            return toks
-
-        return col.map(one)
-
-    return df.select(
-        F.col(id_col),
-        segment(F.col(text_col)).alias("tokens"),
-    ).select(id_col, F.size("tokens").alias("n_bpe_tokens"), "tokens")
-
-
 def _adjacent_pairs(arr: Column) -> Column:
     """(a, b) struct pairs of adjacent elements of an array column —
     the shared bigram/merge-pair primitive for phrase_pmi and
@@ -601,37 +566,6 @@ def unicode_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
         repl.alias("replacement_chars"),
         ctl.alias("control_chars"),
         ((repl == 0) & (ctl == 0)).alias("encoding_clean"),
-    )
-
-
-def compression_ratio(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """zlib compression ratio per document — the classic cheap entropy
-    proxy for machine-generated/repetitive text (ratios near 0 mean
-    highly repetitive; natural prose sits ~0.3-0.6). Deterministic
-    (fixed zlib level 6) but not SQL-expressible — unit-tested, not
-    oracle-gated. Arrow-batched pandas UDF; per-row independent, so
-    it scales with partitions like every other map-side signal.
-    """
-    import zlib
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def ratio(col: pd.Series) -> pd.Series:
-        def one(t):
-            if t is None:
-                return None  # null text -> null ratio, not the ratio of 'None'
-            b = str(t).encode("utf-8", "replace")
-            if not b:
-                return 1.0
-            return round(len(zlib.compress(b, 6)) / len(b), 6)
-
-        return col.map(one)
-
-    return df.select(
-        F.col(id_col),
-        F.length(F.col(text_col)).alias("n_chars"),
-        ratio(F.col(text_col)).alias("compression_ratio"),
     )
 
 

@@ -790,18 +790,10 @@ def bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     esh = win8.filter(F.col("doc_id") < 10).localCheckpoint(eager=True)
     tsh = win8.filter(F.col("doc_id") >= 10)
     bits = C.bloom_bits(esh, "shingle", m_bits=4096, k=3)
-    # r15: per-ROW Bloom membership — each train posting probes the
-    # broadcast bit table once per hash function (k broadcast
-    # LEFT-SEMI joins, conjunction = all bits set). The old path
-    # dedup'd shingles, explode-joined the bit table, aggregated
-    # hit counts, checkpointed, then semi-joined postings AGAIN on
-    # the shingle string — three extra exchanges carrying the
-    # 32-char shingle keys for the same candidate set (guide §2.3:
-    # shuffle metadata decisions map-side when the model is
-    # broadcastable).
-    cand = tsh
-    for pos in C.bloom_positions(F.col("shingle").cast("string"), 4096, 3):
-        cand = cand.join(F.broadcast(bits), pos == F.col("bit"), "left_semi")
+    # per-ROW Bloom membership: each train posting probes the
+    # broadcast bit table once per hash function, so no shingle-keyed
+    # exchange is needed to find the candidates
+    cand = C.bloom_filter(tsh, "shingle", bits, m_bits=4096, k=3)
     bloom_docs = (
         cand.select("doc_id").distinct()
         .withColumn("bloom_candidate", F.lit(True))

@@ -2178,7 +2178,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-diffuse (raw 0.55 vs residual 0.45 recall@20 at sf1);
     measured the other way on the planted-cluster fixture residual
     wins 0.25 vs 0.19 at every probe setting
-    (BENCH_vecrecall_r14, scripts/measure_clustered_recall.py) — so
+    (BENCH_vecrecall_r14.json) — so
     the DOCUMENTED default for real, clustering embedding corpora is
     ``residual=True``, and this gate's raw mode is the
     corpus-matched exception. Rows-only like pq_search

@@ -1419,7 +1419,7 @@ def synthesize_delta_document(
 ) -> tuple[DataFrame, DataFrame]:
     """A self-contained NEW document (nodes, properties) shaped like
     the TPC-H graph of ``src_dir`` — the append harness's delta
-    generator (tests + scripts/measure_append.py). Every node id,
+    generator (tests; the BENCH_append_* runs). Every node id,
     parent_id, and reference-valued property token gains the ``tag_``
     prefix and the document_id becomes ``tpch_<tag>``, so the delta is
     id-disjoint from any base built over un-prefixed ids and resolves
@@ -1452,12 +1452,6 @@ def synthesize_delta_document(
         "data_type",
     )
     return nodes, properties
-
-
-def build_xrefs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """cross_references via the production detection operators."""
-    _, _, xrefs = get_graph(spark, sf_dir)
-    return xrefs
 
 
 # ---------------------------------------------------------------------------

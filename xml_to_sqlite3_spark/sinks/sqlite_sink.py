@@ -146,7 +146,6 @@ def write_corpus_sqlite(
     db_path: str,
     cross_references: DataFrame | None = None,
     batch_size: int = 1000,
-    optimize: bool = True,
 ) -> dict[str, int]:
     """Write the corpus (and optionally detected relationships) to a
     reference-schema SQLite database. Returns per-table row counts.
@@ -230,10 +229,9 @@ def write_corpus_sqlite(
             batch_size,
         )
 
-    if optimize:
-        con.execute("PRAGMA foreign_keys = ON")
-        con.execute("PRAGMA optimize")
-        con.execute("VACUUM")
+    con.execute("PRAGMA foreign_keys = ON")
+    con.execute("PRAGMA optimize")
+    con.execute("VACUUM")
     con.close()
     return counts
 

@@ -1,9 +1,8 @@
-"""Structured Streaming: incremental event analytics and streaming
-XML-corpus ingestion."""
+"""Structured Streaming: incremental event analytics and store
+maintenance streams."""
 
 from .ingest import (  # noqa: F401
     read_event_stream,
     sessionize_stream,
-    stream_xml_corpus,
     windowed_event_aggregation,
 )

@@ -1,24 +1,23 @@
 """Structured Streaming operators.
 
 The reference processes its corpus as a one-shot batch with async
-fibers (lib/async_processor.rb); the Spark-native generalization is
-a file-source stream — the same parse logic runs incrementally as
-files arrive, with exactly-once sink semantics via checkpointing,
-and event-time analytics get watermarked windows instead of
-post-hoc GROUP BYs.
+fibers (lib/async_processor.rb), which the CLI reproduces. Streams
+add what a batch cannot: event-time analytics over a file-source
+stream (watermarked windows instead of post-hoc GROUP BYs), and
+maintenance streams that keep the content-keyed stores current as
+documents arrive, exactly-once via checkpointed chain sidecars.
 
 Batch/stream parity: `windowed_event_aggregation` is the streaming
-form of plans/olap.events_windowed; `stream_xml_corpus` reuses the
-exact batch parser (sources/xml_source._parse_batches) inside
-foreachBatch, so a file processed by the stream lands byte-identical
-to the batch path.
+form of plans/olap.events_windowed; the XML stream behind
+`stream_graph_maintenance` reuses the exact batch parser
+(sources/xml_source._parse_batches), so a file processed by the
+stream parses identically to the batch path.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -110,11 +109,9 @@ def sessionize_stream(
 def _xml_file_stream(
     spark: SparkSession, input_dir: str, glob: str, max_files_per_trigger: int
 ) -> DataFrame:
-    """The ONE streaming XML source: binaryFile watch → the exact
-    batch parser (_parse_batches) — shared by every XML-consuming
-    stream (corpus hook, SQLite maintenance, graph maintenance) so a
-    parser-schema or source-option change can never make one stream's
-    parse diverge from the others or from the batch path."""
+    """The streaming XML source: binaryFile watch → the exact batch
+    parser (_parse_batches), so a parser-schema change can never make
+    the stream's parse diverge from the batch path."""
     files = (
         spark.readStream.format("binaryFile")
         .schema(
@@ -128,215 +125,21 @@ def _xml_file_stream(
     return files.mapInPandas(_parse_batches, schema=_PARSE_SCHEMA)
 
 
-def stream_xml_corpus(
-    spark: SparkSession,
-    input_dir: str,
-    on_batch: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-    glob: str = "*.xml",
-    max_files_per_trigger: int = 100,
-):
-    """Streaming XML ingestion: watch a directory, parse newly-arrived files
-    with the SAME parser as the batch path, hand each micro-batch's
-    parsed node DataFrame to ``on_batch`` (foreachBatch — the
-    exactly-once sink hook). Returns the StreamingQuery."""
-    parsed = _xml_file_stream(spark, input_dir, glob, max_files_per_trigger)
+def _delta_key(state: dict, batch_id: int) -> str:
+    """THE maintenance delta-key format — one definition for all three
+    streams, called AFTER :func:`_replay_rewind`.
 
-    return (
-        parsed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(on_batch)
-        .start()
-    )
-
-
-def stream_corpus_to_sqlite(
-    spark: SparkSession,
-    input_dir: str,
-    db_path: str,
-    checkpoint_dir: str,
-    glob: str = "*.xml",
-    max_files_per_trigger: int = 100,
-    available_now: bool = False,
-):
-    """Continuous reference-database maintenance: watch ``input_dir``
-    for new XML files and upsert each micro-batch into the
-    reference-schema SQLite at ``db_path`` — the end-to-end form of
-    the reference's async pipeline (main.rb: watch -> parse ->
-    database_writer), kept current instead of rebuilt.
-
-    Effectively exactly-once: the file source tracks processed files
-    in the checkpoint, and the sink is INSERT OR REPLACE on primary
-    keys, so a batch replayed after a crash converges to the same
-    database state. ``available_now=True`` drains the current backlog
-    and stops (the testable/batch-catchup mode).
-    """
-    from pyspark.sql import functions as F
-
-    from ..operators.relationships import detect_all_relationships
-    from ..sinks.sqlite_sink import write_corpus_sqlite
-    from ..sources.xml_source import corpus_from_parsed
-
-    def on_batch(parsed, batch_id: int) -> None:
-        # the batch feeds five actions (the emptiness check and the
-        # sink's one drain per table, the xref drain running detection
-        # over two projections) — without persist each one would
-        # re-run the XML parse of the batch's files
-        parsed = parsed.persist()
-        try:
-            if parsed.isEmpty():
-                return
-            _write_batch(parsed)
-        finally:
-            parsed.unpersist()
-
-    def _write_batch(parsed) -> None:
-        corpus = corpus_from_parsed(parsed)
-        # every reference type is WITHIN-document (sibling/parent
-        # joins and attribute refs all require document_id equality),
-        # so per-batch detection over the batch's own documents is
-        # exactly the full-corpus answer for those documents — the
-        # reference's per-document relationship_processor model.
-        # cross_references has a synthetic PK (no natural upsert
-        # key), so idempotence under batch replay is delete-by-
-        # source_file THEN insert — which write_corpus_sqlite does
-        # itself for the batch's documents before inserting.
-        xrefs = detect_all_relationships(corpus.nodes, corpus.properties).withColumn(
-            "source_file", F.col("document_id")
-        )
-        write_corpus_sqlite(
-            corpus, db_path, cross_references=xrefs, optimize=False
-        )
-
-    parsed = _xml_file_stream(spark, input_dir, glob, max_files_per_trigger)
-    writer = (
-        parsed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(on_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_rollup_to_parquet(
-    spark: SparkSession,
-    events_path: str,
-    table_path: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    available_now: bool = False,
-):
-    """Continuously-maintained aggregate TABLE: per-(window,
-    event_type) counts/sums kept current in parquet as event files
-    arrive — the streaming-materialized-view pattern (a warehouse
-    rollup that never goes stale and never full-recomputes).
-
-    Per micro-batch: aggregate ONLY the batch's rows (update mode —
-    the state store re-emits exactly the windows the batch touched,
-    with their complete updated values), then foreachBatch MERGEs
-    those windows into the parquet table via the same last-writer
-    semantics as operators/curation.merge_upsert: touched windows
-    replace their old rows, untouched windows pass through. Each
-    batch rewrites only table-sized data, never the event history.
-
-    Exactly-once: the checkpoint pins which files each batch read,
-    and the merge is idempotent per batch (replaying a batch writes
-    the same window values again). Watermarked, so state and the
-    re-emitted delta stay bounded.
-    """
-    from pyspark.sql import functions as SF
-
-    events = read_event_stream(spark, events_path)
-    agg = (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(SF.window("ts", window).alias("w"), "event_type")
-        .agg(
-            SF.count(SF.lit(1)).alias("n_events"),
-            SF.round(SF.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            SF.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-    def merge_batch(delta, batch_id: int) -> None:
-        if delta.isEmpty():
-            return
-        delta = delta.persist()
-        try:
-            if os.path.exists(os.path.join(table_path, "_SUCCESS")):
-                base = spark.read.parquet(table_path)
-                keep = base.join(
-                    delta.select("window_start", "event_type"),
-                    ["window_start", "event_type"],
-                    "left_anti",
-                )
-                merged = keep.unionByName(delta)
-            else:
-                merged = delta
-            # rewrite via tmp + rename so a crash mid-write never
-            # leaves a half table (the checkpoint will replay the
-            # batch against the intact previous version)
-            tmp = f"{table_path}.tmp.{batch_id}"
-            merged.write.mode("overwrite").parquet(tmp)
-            import shutil
-
-            old = f"{table_path}.old.{batch_id}"
-            if os.path.exists(table_path):
-                os.rename(table_path, old)
-            os.rename(tmp, table_path)
-            shutil.rmtree(old, ignore_errors=True)
-        finally:
-            delta.unpersist()
-
-    writer = (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _ensure_nonce(state: dict) -> None:
-    """Per-checkpoint identity folded into every maintenance delta
-    key: the appends' content keys otherwise depend only on (base,
-    chain string, code) — a RESET checkpoint replaying batch ids over
-    a warm cache root would silently ATTACH another run's entries
-    built from different data. Stored in the sidecar, so crash
-    replays reuse it (same keys, pure attach); only a crash before
-    the first sidecar save orphans one wave's entries (never
-    double-appends). ONE definition for all three maintenance streams
-    so the delta-key format can never desynchronize."""
+    A per-checkpoint nonce is folded into every key: the appends'
+    content keys otherwise depend only on (base, chain string, code) —
+    a RESET checkpoint replaying batch ids over a warm cache root
+    would silently ATTACH another run's entries built from different
+    data. The nonce is stored in the sidecar, so crash replays reuse
+    it (same keys, pure attach); only a crash before the first
+    sidecar save orphans one wave's entries (never double-appends)."""
     if "nonce" not in state:
         import secrets
 
         state["nonce"] = secrets.token_hex(4)
-
-
-def _delta_key(state: dict, batch_id: int) -> str:
-    """THE maintenance delta-key format — one definition for all three
-    streams (the _ensure_nonce discipline), called AFTER
-    :func:`_replay_rewind`.
-
-    Nonce MIGRATION (r14 ADVICE): a sidecar written by pre-nonce code
-    has chains keyed ``b{N}`` and no ``nonce`` field. If the crash
-    window replay (sidecar saved, checkpoint uncommitted) lands on
-    such a sidecar, minting a nonce FIRST would publish the replayed
-    wave under a fresh ``{nonce}-b{N}`` key — a parallel entry and
-    duplicated append work instead of the pure attach of the already-
-    published ``b{N}`` entry. So a nonce-less sidecar replaying its
-    in-flight batch keeps the legacy key format for THAT batch; the
-    nonce is minted from the next new batch onward (chain strings are
-    opaque, so mixed-format chains are fine)."""
-    if "nonce" not in state and state.get("last_batch") == batch_id:
-        return f"b{batch_id}"
-    _ensure_nonce(state)
     return f"{state['nonce']}-b{batch_id}"
 
 
@@ -461,8 +264,7 @@ def stream_document_maintenance(
     the MinHash/SimHash/window postings and the BM25 inverted index
     stay warm under continuous ingestion instead of going stale
     until the next full rebuild — the streaming-materialized-view
-    pattern of stream_rollup_to_parquet applied to the two
-    document-derived artifacts.
+    pattern applied to the two document-derived artifacts.
 
     ``maintain_components=True`` (r13 VERDICT task 5) ALSO chains the
     near-dup components closure per batch
