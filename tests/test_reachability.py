@@ -1,5 +1,6 @@
-"""Every top-level function and class in the package is reached from a
-product entry point, or is named in ``KEEP`` with the reason it stays.
+"""Every top-level function, class and UPPER_CASE constant in the
+package is reached from a product entry point, or is named in ``KEEP``
+with the reason it stays.
 
 The pass is static (AST only, nothing is imported). A def is reached
 when reached code uses its name as a ``Name``, an ``Attribute`` or an
@@ -8,16 +9,18 @@ imported name. The roots are the driver contract
 benchmark (``perfbench/``), ``scripts/``, ``examples/``, and each
 package module's top-level statements that are not a def, an
 assignment or an import (assignments such as ``QUERIES`` are reached
-through their uses). Package ``__init__`` re-exports are not callers,
-and neither are tests. Names resolve by name alone, so the pass can
-only over-count reachability: it never reports a def that has a real
-caller.
+through their uses). A module-level assignment to an UPPER_CASE name
+counts as a def: a constant nothing reads is dead code too. Package
+``__init__`` re-exports are not callers, and neither are tests. Names
+resolve by name alone, so the pass can only over-count reachability:
+it never reports a def that has a real caller.
 """
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 PKG = REPO / "xml_to_sqlite3_spark"
@@ -50,7 +53,11 @@ KEEP = {
     "current_maintained_graph": _APPEND,
     "_xml_file_stream": "the XML stream stream_graph_maintenance reads; its "
     "batch/stream parse parity is tested directly",
+    "XREF_COLS": "the cross_references schema examples/custom_adapters.py "
+    "documents for custom adapters",
 }
+
+_CONSTANT = re.compile(r"_?[A-Z][A-Z0-9_]*")
 
 
 def _names(node: ast.AST) -> set[str]:
@@ -67,7 +74,8 @@ def _names(node: ast.AST) -> set[str]:
 
 def _package():
     """({(module, name): names its body uses}, names used by the
-    modules' own top-level statements, {(module, name) of a def})."""
+    modules' own top-level statements, {(module, name) of a def or an
+    UPPER_CASE constant})."""
     bodies: dict[tuple[str, str], set[str]] = {}
     seeds: set[str] = set()
     defs = set()
@@ -86,6 +94,8 @@ def _package():
                     for n in ast.walk(t):
                         if isinstance(n, ast.Name):
                             bodies.setdefault((mod, n.id), set()).update(used)
+                            if _CONSTANT.fullmatch(n.id):
+                                defs.add((mod, n.id))
             elif not isinstance(st, (ast.Import, ast.ImportFrom)):
                 seeds |= _names(st)
     return bodies, seeds, defs

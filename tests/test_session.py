@@ -53,3 +53,27 @@ def test_conf_mutation_only_in_session_module():
         if pattern.search(line)
     ]
     assert offenders == []
+
+
+def test_warm_projections_compile_nothing(spark):
+    """The codegen cache holds more classes than a 120-query pass
+    generates, so the second pass compiles none (at Spark's default of
+    100 entries every one of them is evicted and recompiled)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def one_pass():
+        for i in range(120):
+            # the literal is inlined into each projection's generated code
+            spark.range(8).selectExpr(f"id * {i} AS x").collect()
+
+    one_pass()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    one_pass()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
+
+
+def test_origin_capture_off():
+    """Column calls make no per-call origin RPCs in get_spark sessions."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert is_debugging_enabled() is False

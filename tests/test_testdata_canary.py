@@ -19,7 +19,8 @@ import os
 
 import pytest
 
-from xml_to_sqlite3_spark.io_util import TABLES, load
+from tests.oracle_harness import TABLES
+from xml_to_sqlite3_spark.io_util import load
 
 SF_DIR = "/root/testdata/sf0.001"
 

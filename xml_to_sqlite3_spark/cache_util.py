@@ -44,6 +44,28 @@ def _code_digest(code_files: tuple[str, ...]) -> bytes:
     return h.digest()
 
 
+def stat_fingerprint(path: str, suffixes: tuple[str, ...] | None = None) -> str:
+    """The stat identity of ``path``: ``name:size:mtime_ns`` for each
+    entry of a directory (only names ending in ``suffixes`` when
+    given), or ``size:mtime_ns`` of a file. Empty when ``path`` cannot
+    be stat'ed (a glob, a remote URI). A rewrite in place that keeps
+    both the size and the mtime is invisible to it."""
+    parts = []
+    try:
+        if os.path.isdir(path):
+            for name in sorted(os.listdir(path)):
+                if suffixes is not None and not name.endswith(suffixes):
+                    continue
+                st = os.stat(os.path.join(path, name))
+                parts.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
+        else:
+            st = os.stat(path)
+            parts.append(f"{st.st_size}:{st.st_mtime_ns}")
+    except OSError:
+        pass
+    return "".join(parts)
+
+
 def content_key(
     prefix: str,
     src_path: str,
@@ -66,18 +88,7 @@ def content_key(
     real = os.path.realpath(src_path)
     h.update(real.encode())
     h.update(extra.encode())
-    try:
-        if os.path.isdir(real):
-            for name in sorted(os.listdir(real)):
-                if suffixes is not None and not name.endswith(suffixes):
-                    continue
-                st = os.stat(os.path.join(real, name))
-                h.update(f"{name}:{st.st_size}:{st.st_mtime_ns}".encode())
-        else:
-            st = os.stat(real)
-            h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-    except OSError:
-        pass
+    h.update(stat_fingerprint(real, suffixes).encode())
     h.update(_code_digest((*code_files, __file__)))
     sfh = hashlib.sha256(f"{real}|{extra}".encode()).hexdigest()[:10]
     return f"{prefix}_{sfh}_{h.hexdigest()[:16]}"

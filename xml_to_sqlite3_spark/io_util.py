@@ -1,4 +1,14 @@
-"""Table loading helpers for the driver's parquet layout."""
+"""Table loading helpers for the driver's parquet layout.
+
+Every parquet read here infers its schema at most once per file
+version: the inferred ``StructType`` is memoized on the path plus its
+stat fingerprint (``cache_util.stat_fingerprint``: name, size and
+mtime_ns of each directory entry, or size and mtime_ns of a file),
+and later reads pass it to ``spark.read.schema(...)``, which runs no
+footer job. A file rewritten in place gets a new mtime or size and so
+a new inference; a path that cannot be stat'ed (a glob, a remote URI)
+is inferred on every read.
+"""
 
 from __future__ import annotations
 
@@ -7,23 +17,10 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from .cache_util import stat_fingerprint
 from .session import scoped_conf
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -77,6 +74,7 @@ def events_ts_is_nanos(spark: SparkSession, path: str) -> bool:
 
 
 _NANOS_CONF_LOCK = threading.Lock()
+_SCHEMAS: dict[tuple[str, str], StructType] = {}
 
 
 def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
@@ -84,8 +82,16 @@ def _read_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
     # safe: two concurrent loads (the graph build overlaps its nodes
     # and properties writes from two threads) can interleave so one
     # thread's restore lands between another's set and its read —
-    # the module-level lock serializes the critical section.
+    # the module-level lock serializes the critical section (and the
+    # schema memo with it).
+    real = os.path.realpath(path)
+    key = (real, stat_fingerprint(real))
     with _NANOS_CONF_LOCK, scoped_conf(
         spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}
     ):
-        return spark.read.parquet(path)
+        if key in _SCHEMAS:
+            return spark.read.schema(_SCHEMAS[key]).parquet(path)
+        df = spark.read.parquet(path)
+        if key[1]:  # a path with no stat has no version to key on
+            _SCHEMAS[key] = df.schema
+        return df

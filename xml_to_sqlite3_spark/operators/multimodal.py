@@ -185,7 +185,7 @@ def audio_metadata(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema=schema)
 
 
-def image_dhash(df: DataFrame, id_col: str = "media_id") -> DataFrame:
+def image_dhash(df: DataFrame) -> DataFrame:
     """64-bit difference hash (dHash) per image: decode the real
     raster, grayscale, nearest-resize to 9x8, set bit (r*8+c) when
     pixel[r][c] > pixel[r][c+1]. The standard perceptual signature —
@@ -195,15 +195,15 @@ def image_dhash(df: DataFrame, id_col: str = "media_id") -> DataFrame:
 
     Arrow-batched mapInPandas over the binary column; per-row
     independent, scales with partitions. Unsupported formats raise
-    (same gating as decode_image)."""
-    schema = f"{id_col} long, dhash long"
+    (same gating as decode_image). Returns (media_id, dhash)."""
+    schema = "media_id long, dhash long"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
         for pdf in batches:
             ids, hashes = [], []
-            for mid, data, meta in zip(pdf[id_col], pdf["data"], pdf["meta"]):
+            for mid, data, meta in zip(pdf["media_id"], pdf["data"], pdf["meta"]):
                 fmt = (meta["format"] if meta is not None else "") or ""
                 arr = _decode_raster(data, fmt)
                 gray = arr.astype(np.float64)
@@ -226,17 +226,17 @@ def image_dhash(df: DataFrame, id_col: str = "media_id") -> DataFrame:
                 signed = int(h) - (1 << 64) if int(h) >= (1 << 63) else int(h)
                 ids.append(int(mid))
                 hashes.append(signed)
-            yield pd.DataFrame({id_col: ids, "dhash": hashes})
+            yield pd.DataFrame({"media_id": ids, "dhash": hashes})
 
     return df.mapInPandas(run, schema=schema)
 
 
-def image_near_dup_pairs(df: DataFrame, max_hamming: int = 6, id_col: str = "media_id") -> DataFrame:
+def image_near_dup_pairs(df: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Image near-duplicate pairs: dHash signatures through the
     threshold-complete Hamming banding (dedup.hamming_pairs). Returns
     (doc_a, doc_b, hamming) over media ids."""
     from .dedup import hamming_pairs
 
     return hamming_pairs(
-        image_dhash(df, id_col=id_col), max_hamming=max_hamming, id_col=id_col, sig_col="dhash"
+        image_dhash(df), max_hamming=max_hamming, id_col="media_id", sig_col="dhash"
     )

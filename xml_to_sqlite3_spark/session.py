@@ -31,6 +31,13 @@ def get_spark(
         moves batches, not rows.
       - UTC session timezone: parity with the DuckDB oracle and with
         any downstream engine reading our parquet.
+
+    Fixed per-query driver cost (query-many sessions; the comment at
+    each conf has the measurements):
+      - codegen cache of 4000 entries, above the 2,574 distinct classes
+        one full ``bench.py`` pass compiles (Spark's default is 100);
+      - no per-call origin capture: error messages lose only the Python
+        call-site line of their DataFrame query context.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
@@ -64,6 +71,20 @@ def get_spark(
         # and the console progress bar interleaves with it
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # A static conf, so it is set here or not at all. One full
+        # bench.py pass at sf0.1 compiles 2,574 distinct classes (counted with
+        # CodegenMetrics under an unbounded cache); the default 100
+        # entries evicted them between queries and each warm query paid
+        # Janino again (a traced perfbench curation round on 4 vCPUs:
+        # 26 classes, 384 ms).
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
+        # PySpark's _with_origin wrapper records the Python call site of
+        # every pyspark.sql.functions call with about five Py4J round
+        # trips (281 of the ~4,700 calls that build curate_corpus).
+        # Trade-off: error messages lose only the Python call-site line
+        # of the DataFrame query context; the error itself and its
+        # error class do not change.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Split sizing stays at Spark's 128 MB default. At test scale
         # factors every table is far below maxPartitionBytes anyway, so
         # the effective split is max(openCostInBytes, bytes/parallelism)
