@@ -10,7 +10,10 @@ benchmark (``perfbench/``), ``scripts/``, ``examples/``, and each
 package module's top-level statements that are not a def, an
 assignment or an import (assignments such as ``QUERIES`` are reached
 through their uses). A module-level assignment to an UPPER_CASE name
-counts as a def: a constant nothing reads is dead code too. Package
+counts as a def: a constant nothing reads is dead code too. So does
+each non-dunder method of a top-level class (reported as
+``Class.method``): it is reached when reached code uses its name. A
+reached class's whole body, methods included, is reached code. Package
 ``__init__`` re-exports are not callers, and neither are tests. Names
 resolve by name alone, so the pass can only over-count reachability:
 it never reports a def that has a real caller.
@@ -27,7 +30,6 @@ PKG = REPO / "xml_to_sqlite3_spark"
 
 _REFERENCE = "reference implementation a test checks the production path against"
 _FIXTURE = "fixture encoder building the inputs of a decoder the gates reach"
-_APPEND = "append/maintenance subsystem, reached only by tests (ROADMAP open item)"
 
 # Test-only defs that stay. A def reached only from one of these (a
 # private helper of a kept entry point) needs no entry of its own.
@@ -39,20 +41,6 @@ KEEP = {
     "ima_adpcm_encode": _FIXTURE + " (decode_wav)",
     "_linear_to_ulaw": _FIXTURE + " (decode_wav)",
     "_linear_to_alaw": _FIXTURE + " (decode_wav)",
-    "append_documents": _APPEND,
-    "synthesize_delta_document": _APPEND,
-    "append_dedup_documents": _APPEND,
-    "append_components": _APPEND,
-    "append_text_index": _APPEND,
-    "append_ivf_pq_index": _APPEND,
-    "stream_document_maintenance": _APPEND,
-    "stream_embedding_maintenance": _APPEND,
-    "stream_graph_maintenance": _APPEND,
-    "current_maintained_entries": _APPEND,
-    "current_maintained_index": _APPEND,
-    "current_maintained_graph": _APPEND,
-    "_xml_file_stream": "the XML stream stream_graph_maintenance reads; its "
-    "batch/stream parse parity is tested directly",
     "XREF_COLS": "the cross_references schema examples/custom_adapters.py "
     "documents for custom adapters",
 }
@@ -72,10 +60,17 @@ def _names(node: ast.AST) -> set[str]:
     return out
 
 
+def _is_method(st: ast.stmt) -> bool:
+    return isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)) and not (
+        st.name.startswith("__") and st.name.endswith("__")
+    )
+
+
 def _package():
     """({(module, name): names its body uses}, names used by the
-    modules' own top-level statements, {(module, name) of a def or an
-    UPPER_CASE constant})."""
+    modules' own top-level statements, {(module, name) of a def, a
+    method or an UPPER_CASE constant}). A method's name is
+    ``Class.method``; it is reached through its bare method name."""
     bodies: dict[tuple[str, str], set[str]] = {}
     seeds: set[str] = set()
     defs = set()
@@ -87,6 +82,10 @@ def _package():
             if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 bodies[(mod, st.name)] = _names(st)
                 defs.add((mod, st.name))
+                methods = st.body if isinstance(st, ast.ClassDef) else []
+                for m in filter(_is_method, methods):
+                    bodies[(mod, f"{st.name}.{m.name}")] = _names(m)
+                    defs.add((mod, f"{st.name}.{m.name}"))
             elif isinstance(st, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
                 targets = st.targets if isinstance(st, ast.Assign) else [st.target]
                 used = _names(st.value) if st.value is not None else set()
@@ -115,7 +114,7 @@ def _unreached_defs(extra_roots=()) -> set[tuple[str, str]]:
     bodies, seeds, defs = _package()
     by_name: dict[str, list[tuple[str, str]]] = {}
     for key in bodies:
-        by_name.setdefault(key[1], []).append(key)
+        by_name.setdefault(key[1].rsplit(".", 1)[-1], []).append(key)
     todo = list(_root_names() | seeds | set(extra_roots))
     seen: set[str] = set()
     reached = set()

@@ -120,99 +120,3 @@ class TestRRFFusion:
         out = rrf_fuse([lex], k=3).collect()
         assert [r["rank"] for r in out] == [1, 2, 3]
         assert [r["doc_id"] for r in out] == [1, 2, 3]
-
-
-class TestIndexAppend:
-    """O(delta) append for the BM25 index — the fourth persistent
-    artifact's append path; appended == full rebuild pinned as index
-    multiset identity + bit-exact merged stats + identical BM25."""
-
-    @pytest.fixture(scope="class")
-    def appended(self, spark, tmp_path_factory):
-        import os
-
-        from xml_to_sqlite3_spark.operators import search as S
-
-        root = tmp_path_factory.mktemp("icache")
-        data = tmp_path_factory.mktemp("icorpora")
-        old = os.environ.get("SPARK_GRAFT_INDEX_CACHE")
-        os.environ["SPARK_GRAFT_INDEX_CACHE"] = str(root)
-        INDEX.memo.clear()
-        schema = "doc_id long, text string"
-        base = spark.createDataFrame(
-            [
-                (1, "spark query engine for big data"),
-                (2, "the data engine handles query plans"),
-                (3, "gardening tips for spring flowers"),
-                (4, None),  # token-less: doc_ids only
-            ],
-            schema,
-        )
-        delta = spark.createDataFrame(
-            [
-                (10, "query optimizer rewrites the data plan"),
-                (11, "flowers need water and sun"),
-                (12, None),
-            ],
-            schema,
-        )
-        base_path = f"{data}/base"
-        union_path = f"{data}/union"
-        base.write.parquet(base_path)
-        base.unionByName(delta).write.parquet(union_path)
-        try:
-            got = S.append_text_index(spark, base_path, delta, delta_key="ti-v1")
-            want = S.get_text_index(spark, union_path)
-            yield {"spark": spark, "got": got, "want": want,
-                   "base_path": base_path, "delta": delta, "S": S}
-        finally:
-            INDEX.clear()
-            if old is None:
-                os.environ.pop("SPARK_GRAFT_INDEX_CACHE", None)
-            else:
-                os.environ["SPARK_GRAFT_INDEX_CACHE"] = old
-
-    def test_index_multiset_identity_and_stats(self, appended):
-        gidx, gn, gavg, _path = appended["got"]
-        widx, wn, wavg = appended["want"]
-        assert gidx.exceptAll(widx).count() == 0
-        assert widx.exceptAll(gidx).count() == 0
-        assert gn == wn
-        assert gavg == wavg  # bit-exact: integer sum merge
-
-    def test_bm25_identical_over_appended_index(self, appended):
-        from xml_to_sqlite3_spark.operators.search import bm25_search
-
-        gidx, gn, gavg, _path = appended["got"]
-        widx, wn, wavg = appended["want"]
-        a = bm25_search(gidx, "query data", k=5, n_docs=gn, avg_len=gavg).collect()
-        b = bm25_search(widx, "query data", k=5, n_docs=wn, avg_len=wavg).collect()
-        assert [(r["doc_id"], r["bm25"], r["rank"]) for r in a] == [
-            (r["doc_id"], r["bm25"], r["rank"]) for r in b
-        ]
-        assert any(r["doc_id"] == 10 for r in a)  # delta doc retrievable
-
-    def test_guards(self, appended):
-        spark, S = appended["spark"], appended["S"]
-        resent = spark.createDataFrame([(1, "changed")], "doc_id long, text string")
-        with pytest.raises(ValueError, match="already exist"):
-            S.append_text_index(spark, appended["base_path"], resent, delta_key="g1")
-        twice = spark.createDataFrame(
-            [(99, "x y"), (99, "x y")], "doc_id long, text string"
-        )
-        with pytest.raises(ValueError, match="more than once"):
-            S.append_text_index(spark, appended["base_path"], twice, delta_key="g2")
-
-    def test_cold_attach_no_retokenize(self, appended, monkeypatch):
-        spark, S = appended["spark"], appended["S"]
-        INDEX.memo.clear()
-
-        def _boom(*a, **kw):
-            raise AssertionError("re-tokenize attempted — attach contract broken")
-
-        with monkeypatch.context() as mp:
-            mp.setattr(S, "build_text_index", _boom)
-            again = S.append_text_index(
-                spark, appended["base_path"], appended["delta"], delta_key="ti-v1"
-            )
-        assert again[1] == appended["got"][1]

@@ -670,76 +670,6 @@ class TestPca:
         assert ok, detail
 
 
-class TestIvfPqAppend:
-    """O(delta) appends for the IVF-PQ index (the fifth persistent
-    artifact's append path): appended == rebuilt-over-union given the
-    SAME base-trained models, chained waves stack, guards fail loud."""
-
-    def _docs(self, spark, ids):
-        return spark.createDataFrame(
-            [(i, _vec(i)) for i in ids], "vec_id long, embedding array<double>"
-        )
-
-    def test_append_identity_and_chain(self, spark, tmp_path, monkeypatch):
-        import os
-
-        monkeypatch.setenv("SPARK_GRAFT_CODEBOOK_CACHE", str(tmp_path / "cb"))
-        base_path = str(tmp_path / "base_vecs")
-        self._docs(spark, range(40)).write.parquet(base_path)
-        kw = dict(n_centroids=8, m=4, ks=8, n_iter=2)
-
-        w1 = self._docs(spark, range(100, 110))
-        w2 = self._docs(spark, range(110, 120))
-        e1 = S.append_ivf_pq_index(spark, base_path, w1, delta_key="w1", **kw)
-        e2 = S.append_ivf_pq_index(
-            spark, base_path, w2, delta_key="w2", base_append=e1["append_key"], **kw
-        )
-        assert e2["append_key"] == "w1+w2"
-
-        # rebuilt-over-union with the SAME base models == chained append
-        cents = S.get_codebook(spark, base_path, k=8, n_iter=2)
-        books = S.get_pq_codebooks(spark, base_path, m=4, ks=8, n_iter=2)
-        union = self._docs(spark, list(range(40)) + list(range(100, 120)))
-        want = {
-            (r["vec_id"], r["cluster"], tuple(r["codes"]))
-            for r in S.ivf_pq_index(union, cents, books).collect()
-        }
-        got = {
-            (r["vec_id"], r["cluster"], tuple(r["codes"]))
-            for r in e2["index"].collect()
-        }
-        assert got == want
-
-        # the appended entry stays partitioned (delta landed IN the
-        # cluster directories, not a flat side file)
-        root = str(tmp_path / "cb")
-        entries = [d for d in os.listdir(root) if d.startswith("ivfpq")]
-        for d in entries:
-            subs = os.listdir(os.path.join(root, d, "index"))
-            assert all(
-                s.startswith(("cluster=", "_", ".")) for s in subs
-            ), (d, subs)
-
-        # probed query over the appended entry works end to end
-        out = S.ivf_pq_topk(e2["index"], cents, books, _vec(7), k=5, n_probe=8)
-        assert out.count() == 5
-
-        # guards: re-sent ids, intra-delta dups, unpublished chain
-        with pytest.raises(ValueError, match="already exist"):
-            S.append_ivf_pq_index(
-                spark, base_path, w1, delta_key="w1b",
-                base_append=e2["append_key"], **kw,
-            )
-        dup = w1.unionByName(w1)
-        with pytest.raises(ValueError, match="more than once"):
-            S.append_ivf_pq_index(spark, base_path, dup, delta_key="dup", **kw)
-        with pytest.raises(ValueError, match="not published"):
-            S.append_ivf_pq_index(
-                spark, base_path, w2, delta_key="x", base_append="nope", **kw
-            )
-        CODEBOOK.clear()
-
-
 class TestIvfPqResidual:
     """Residual (Jégou-style) IVF-ADC: codes quantize x - centroid,
     ADC uses a per-probed-cluster distance table."""
@@ -827,11 +757,7 @@ class TestIvfPqResidual:
         approx = {r["vec_id"] for r in out}
         assert len(approx & set(exact)) / 10 >= 0.6
 
-    def test_persistent_residual_index_and_append(
-        self, spark, corpus, tmp_path, monkeypatch
-    ):
-        import numpy as np
-
+    def test_persistent_residual_index(self, spark, corpus, tmp_path, monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_CODEBOOK_CACHE", str(tmp_path / "cb"))
         base_path = str(tmp_path / "base_vecs")
         corpus.write.parquet(base_path)
@@ -842,28 +768,18 @@ class TestIvfPqResidual:
         res_rows = {(r["vec_id"], tuple(r["codes"])) for r in idx.collect()}
         raw_rows = {(r["vec_id"], tuple(r["codes"])) for r in idx_raw.collect()}
         assert res_rows != raw_rows
-        # append under residual: identity vs fresh encode of the union
-        delta = spark.createDataFrame(
-            [(i, _vec(i)) for i in range(100, 110)],
-            "vec_id long, embedding array<double>",
-        )
-        e = S.append_ivf_pq_index(
-            spark, base_path, delta, delta_key="w1", residual=True, **kw
-        )
+        # the residual entry equals a fresh residual encode of the corpus
+        # under the same persistent models
         cents = S.get_codebook(spark, base_path, k=8, n_iter=2)
         books = S.get_residual_pq_codebooks(spark, base_path, n_centroids=8,
                                             m=4, ks=8, n_iter=2)
-        union = spark.createDataFrame(
-            [(i, _vec(i)) for i in list(range(60)) + list(range(100, 110))],
-            "vec_id long, embedding array<double>",
-        )
         want = {
             (r["vec_id"], r["cluster"], tuple(r["codes"]))
-            for r in S.ivf_pq_index(union, cents, books, residual=True).collect()
+            for r in S.ivf_pq_index(corpus, cents, books, residual=True).collect()
         }
         got = {
             (r["vec_id"], r["cluster"], tuple(r["codes"]))
-            for r in e["index"].collect()
+            for r in idx.collect()
         }
         assert got == want
         CODEBOOK.clear()

@@ -210,48 +210,10 @@ def content_cached_dir(
     return final
 
 
-def link_tree(base_dir: str, tmp: str, subdirs: tuple[str, ...], what: str = "store") -> None:
-    """Mirror ``subdirs`` of a published cache entry into ``tmp`` as
-    HARD LINKS — the shared clone step of every store's O(delta)
-    append path (node-graph, MinHash, components). O(#files) metadata
-    work, zero data copied, and both entries remain independently
-    valid: Spark's writers create new files and unlink old ones, they
-    never modify parquet bytes in place. Marker/CRC files (leading
-    ``_``/``.``) are skipped — committers re-create their own, and
-    truncating a linked ``_SUCCESS`` would write through the shared
-    inode. Raises when a subdir is missing (an old-layout base entry
-    must be rebuilt, not silently part-cloned)."""
-    for sub in subdirs:
-        src_root = os.path.join(base_dir, sub)
-        if not os.path.isdir(src_root):
-            raise FileNotFoundError(
-                f"base {what} at {base_dir} has no {sub}/ — rebuild the "
-                "base (old layout?) before appending"
-            )
-        for root, _dirs, files in os.walk(src_root):
-            dst_root = os.path.join(tmp, os.path.relpath(root, base_dir))
-            os.makedirs(dst_root, exist_ok=True)
-            for name in files:
-                if name.startswith(("_", ".")):
-                    continue
-                s, d = os.path.join(root, name), os.path.join(dst_root, name)
-                try:
-                    os.link(s, d)
-                except OSError:
-                    # cross-device cache roots (or a filesystem
-                    # without hard links): fall back to a real copy
-                    shutil.copy2(s, d)
-
-
-# the hint every chained append gives when its base entry is missing
-CHAIN_HINT = "appends must stack onto an existing entry in order"
-
-
 class Store:
     """One content-keyed cache root and its lifecycle: where entries
-    live, the in-session memo of what was loaded from them, the
-    fail-loud check for an entry that must already exist, and the
-    clear() that removes what this process built."""
+    live, ``get`` (build once, then the in-session memo of what was
+    loaded), and the clear() that removes what this process built."""
 
     def __init__(self, env: str, default: str) -> None:
         self.env = env
@@ -273,31 +235,14 @@ class Store:
     def path(self, key: str) -> str:
         return os.path.join(self.root(), key)
 
-    def publish(self, key: str, build: Callable[[str], None]) -> str:
-        """The published dir for ``key``, running ``build`` first when
-        absent. Unmemoized: append chains mint a new key per wave, so a
-        memo would grow for the life of a maintenance stream."""
-        return content_cached_dir(self.root(), key, build, owned_dirs=self.owned)
-
     def get(self, spark, key: str, build: Callable[[str], None], load: Callable):
         """``load(final)`` of the published entry for ``key``, building
         it first when absent; memoized per session."""
         mk = (spark.sparkContext.applicationId, key)
         if mk not in self.memo:
-            self.memo[mk] = load(self.publish(key, build))
+            final = content_cached_dir(self.root(), key, build, owned_dirs=self.owned)
+            self.memo[mk] = load(final)
         return self.memo[mk]
-
-    def require(self, key: str, what: str, hint: str) -> str:
-        """The published dir for ``key``, or a ValueError naming
-        ``what`` and ``hint`` — a raw parquet path-not-found would
-        name neither the missing entry nor the fix."""
-        final = self.path(key)
-        if not os.path.exists(os.path.join(final, "_COMPLETE")):
-            raise ValueError(
-                f"{what} is not published: no published entry exists at "
-                f"{final} — {hint}"
-            )
-        return final
 
     def clear(self) -> None:
         """Drop the memo AND the entries THIS process built (tests use

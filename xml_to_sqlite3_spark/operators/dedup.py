@@ -20,7 +20,6 @@ gate requirement and good pipeline hygiene).
 
 from __future__ import annotations
 
-import json
 import re
 
 import pandas as pd
@@ -28,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..cache_util import CHAIN_HINT, DEDUP, content_key, link_tree, read_tables
+from ..cache_util import DEDUP, content_key, read_tables
 
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -949,10 +948,8 @@ def remove_duplicated_spans(
 
 
 # every parquet table a published dedup-store entry holds; ALL are
-# per-document rows (pure functions of each document alone), so the
-# append path hard-links the whole list and lands delta files
-# alongside — no merge-rewrites at all, unlike the graph store
-_DEDUP_STORE_SUBDIRS = ("tokens", "sigs", "simhash", "win8", "doc_ids")
+# per-document rows (pure functions of each document alone)
+_DEDUP_STORE_SUBDIRS = ("tokens", "sigs", "simhash", "win8")
 
 
 # the dedup/components cache root, under this name for the benchmark
@@ -973,16 +970,12 @@ def _dedup_tables(spark, final: str, doc_path: str, n: int, k: int) -> dict:
     return out
 
 
-def _minhash_store_key(
-    doc_path: str, n: int, k: int, id_col: str, text_col: str, append: str = ""
-) -> str:
+def _minhash_store_key(doc_path: str, n: int, k: int, id_col: str, text_col: str) -> str:
     """THE content key of a dedup-store entry — one definition shared
-    by the build, the three getters, the append paths, and the test
-    harness, so a key-format or parameter-default change can never
-    desynchronize a reader from the entry it expects."""
+    by the build, the three getters, and the test harness, so a
+    key-format or parameter-default change can never desynchronize a
+    reader from the entry it expects."""
     extra = f"n{n}_k{k}_{id_col}_{text_col}"
-    if append:
-        extra = f"{extra}|append|{append}"
     return content_key(
         "mh", doc_path, extra=extra, code_files=(__file__,), suffixes=(".parquet",)
     )
@@ -995,26 +988,18 @@ def _components_store_key(
     k: int,
     id_col: str,
     text_col: str,
-    append: str = "",
 ) -> str:
     """THE content key of a components-store entry — the
-    _minhash_store_key discipline applied to the closure: one
-    definition shared by the build, the append path, and the
-    maintenance-stream attach accessor (streaming/ingest.py), so a
-    key-format change can never desynchronize a reader from the entry
-    it expects.
+    _minhash_store_key discipline applied to the closure.
 
     ``k`` is IN the key (r14 ADVICE) even though the closure itself is
-    k-independent (pairs come from exact token Jaccard): the CHAINED
-    build reads its pairing tokens from the k-keyed dedup entry at
-    ``base_append``, so two chains maintained with different k must
-    never share one components entry — if token derivation ever became
-    k-sensitive, a shared entry would silently serve the wrong chain."""
+    k-independent (pairs come from exact token Jaccard): the build
+    reads its pairing tokens from the k-keyed dedup entry, so if token
+    derivation ever became k-sensitive, an entry shared across k would
+    silently serve the wrong tokens."""
     from . import graph as _graph_mod
 
     extra = f"t{threshold}_n{n}_k{k}_{id_col}_{text_col}"
-    if append:
-        extra = f"{extra}|append|{append}"
     return content_key(
         "dupcomp",
         doc_path,
@@ -1078,12 +1063,6 @@ def _minhash_tables(
         shingle_hashes(docs, id_col=id_col, text_col=text_col, n=8).write.mode(
             "overwrite"
         ).parquet(f"{tmp}/win8")
-        # document inventory (EVERY input doc, including shingle-less
-        # ones absent from tokens/sigs): the append path's new-docs
-        # guard reads this instead of re-scanning the corpus
-        docs.select(F.col(id_col)).distinct().write.mode("overwrite").parquet(
-            f"{tmp}/doc_ids"
-        )
         with open(f"{tmp}/_COMPLETE", "w") as f:
             f.write(ck)
 
@@ -1168,396 +1147,6 @@ def get_components_store(
         _build,
         lambda final: read_tables(spark, final, ("components",))["components"],
     )
-
-
-def _dedup_append_guard(spark, base_dir: str, dd: DataFrame, id_col: str) -> None:
-    """Fail LOUD when a delta carries a document the base store
-    already holds OR carries the same doc id twice (a double-delivered
-    batch): every dedup-store table is per-doc rows, so a re-sent or
-    repeated document would DOUBLE its postings/signatures — silently
-    shifting Jaccard set sizes and component membership. Changed
-    documents need a rebuild, exactly like the graph store's
-    contract."""
-    dups = [
-        r[id_col]
-        for r in dd.groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(3)
-        .collect()
-    ]
-    if dups:
-        raise ValueError(
-            f"append to dedup store: delta carries doc ids {dups} more "
-            "than once — a double-delivered batch would double those "
-            "documents' postings; dedupe the delta first"
-        )
-    base_ids = spark.read.parquet(f"{base_dir}/doc_ids")
-    hits = [
-        r[id_col]
-        for r in dd.select(id_col).distinct().join(base_ids, id_col).limit(3).collect()
-    ]
-    if hits:
-        raise ValueError(
-            f"append to dedup store: doc ids {hits} already exist in the "
-            "base entry — appends must carry NEW documents; changed "
-            "documents need a rebuild"
-        )
-
-
-def append_dedup_documents(
-    spark,
-    doc_path: str,
-    delta_docs: DataFrame,
-    delta_key: str,
-    n: int = 3,
-    k: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    base_append: str = "",
-) -> dict:
-    """Publish a NEW dedup-store entry = the base entry for
-    ``doc_path`` plus ``delta_docs``, at O(delta) cost — the MinHash
-    half of the r11 append story (plans/node_graph.append_documents
-    covers the node-graph store; VERDICT r11 task 4 asked for the
-    same treatment here).
-
-    Every store table (hashed-shingle postings, MinHash signatures,
-    SimHash, 8-token-window postings, doc inventory) is per-document
-    rows and a pure function of each document alone, so the append is
-    a hard-link clone of the base entry plus a delta-only pass over
-    the new documents — NO merge-rewrites and no global re-derivation
-    at all (the graph store's pr_ranks has no analogue here; the
-    closure does, and lives in :func:`append_components`). Exactness
-    (appended == full rebuild over the unioned corpus, per-table
-    multisets) is pinned by tests/test_dedup_append.py.
-
-    ``delta_key`` is the caller's identity for the delta content; it
-    keys the published entry so the same (base, delta) pair
-    cold-attaches on later calls. ``base_append`` CHAINS appends: it
-    names the append chain of the entry to append ONTO (the previous
-    call's returned ``append_key``), so continuous ingestion —
-    streaming/ingest.stream_document_maintenance's per-micro-batch
-    appends — stacks O(delta) waves instead of re-appending against
-    the original base; chained == one-shot == full rebuild is pinned
-    by the streamed-maintenance multiset test. Returns ``{"path":
-    dir, "append_key": chain, <table>: DataFrame, ...}``. Gate
-    queries keep reading base entries through get_minhash_store;
-    appended entries are a pipeline capability with their own
-    identity.
-    """
-    if base_append:
-        base_ck = _minhash_store_key(
-            doc_path, n, k, id_col, text_col, append=base_append
-        )
-        base_dir = DEDUP.require(
-            base_ck,
-            "append_dedup_documents: chained base entry "
-            f"(append chain {base_append!r})",
-            CHAIN_HINT,
-        )
-        chain = f"{base_append}+{delta_key}"
-    else:
-        get_minhash_store(
-            spark, doc_path, n=n, k=k, id_col=id_col, text_col=text_col
-        )
-        base_ck = _minhash_store_key(doc_path, n, k, id_col, text_col)
-        base_dir = DEDUP.path(base_ck)
-        chain = delta_key
-    ck = _minhash_store_key(doc_path, n, k, id_col, text_col, append=chain)
-
-    def _build(tmp: str) -> None:
-        import shutil as _sh
-
-        from .curation import shingle_hashes
-
-        link_tree(base_dir, tmp, _DEDUP_STORE_SUBDIRS, what="dedup store")
-        # materialize the delta once — four passes read it
-        delta_docs.write.mode("overwrite").parquet(f"{tmp}/delta_docs")
-        dd = spark.read.parquet(f"{tmp}/delta_docs")
-        _dedup_append_guard(spark, base_dir, dd, id_col)
-        # ONE shingle pass (the UDF is the delta's dominant cost):
-        # stage the delta postings, then both the tokens append and
-        # the signature fold read the staged parquet
-        _shingle_tokens(dd, n, id_col, text_col).write.mode("overwrite").parquet(
-            f"{tmp}/delta_tokens"
-        )
-        dt = spark.read.parquet(f"{tmp}/delta_tokens")
-        dt.write.mode("append").parquet(f"{tmp}/tokens")
-        # the delta's signatures derive from the delta's OWN postings
-        # (per-doc min-fold — no cross-doc coupling to the base)
-        _signatures_from_tokens(dt, k).write.mode("append").parquet(f"{tmp}/sigs")
-        simhash_signatures(dd, id_col=id_col, text_col=text_col).write.mode(
-            "append"
-        ).parquet(f"{tmp}/simhash")
-        shingle_hashes(dd, id_col=id_col, text_col=text_col, n=8).write.mode(
-            "append"
-        ).parquet(f"{tmp}/win8")
-        # disjointness is guard-enforced, so appending the delta's
-        # distinct ids IS the union-distinct of the full rebuild
-        dd.select(F.col(id_col)).distinct().write.mode("append").parquet(
-            f"{tmp}/doc_ids"
-        )
-        with open(f"{tmp}/manifest.json", "w") as f:
-            json.dump({"kind": "append", "base_key": base_ck, "delta_key": delta_key}, f)
-        for scratch in ("delta_docs", "delta_tokens"):
-            _sh.rmtree(f"{tmp}/{scratch}", ignore_errors=True)
-        with open(f"{tmp}/_COMPLETE", "w") as f:
-            f.write(ck)
-
-    final = DEDUP.publish(ck, _build)
-    return {
-        "path": final,
-        "append_key": chain,
-        **_dedup_tables(spark, final, doc_path, n, k),
-    }
-
-
-def _incremental_jaccard_pairs(
-    delta_tokens: DataFrame,
-    base_tokens: DataFrame,
-    threshold: float,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs TOUCHING the delta: NEW-NEW and
-    NEW-OLD pairs with jaccard >= threshold, identical values to the
-    corresponding rows of ngram_jaccard_pairs over the unioned corpus
-    (same hashed-shingle index — 120-bit (h, h2) key when both
-    sides carry it — same rounding). OLD-OLD pairs
-    are deliberately absent — they are a pure function of unchanged
-    documents, already encoded in the base closure.
-
-    Inputs are (doc_id, h) postings: ``delta_tokens`` for the new
-    documents only, ``base_tokens`` for the existing corpus. Cost is
-    O(delta postings + postings of base docs sharing a shingle with
-    the delta) — the base side is pruned by a semi-join on the
-    delta's shingle keys BEFORE anything pairs, so a daily batch
-    against a 100 TB corpus never rescans cold documents.
-    """
-    # full 120-bit identity key when both sides carry it (legacy
-    # hand-built frames: h only)
-    vc = (
-        ["h", "h2"]
-        if "h2" in delta_tokens.columns and "h2" in base_tokens.columns
-        else ["h"]
-    )
-    d_sized = delta_tokens.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    d = (
-        delta_tokens.join(d_sized, "doc_id")
-        .select("doc_id", "n_sh", *vc)
-        .localCheckpoint(eager=False)
-    )
-    # base docs that can possibly pair: share >=1 shingle with the delta
-    d_sh = d.select(*vc).distinct()
-    hit_docs = (
-        base_tokens.join(d_sh, vc, "left_semi").select("doc_id").distinct()
-    )
-    b_hit = base_tokens.join(hit_docs, "doc_id", "left_semi")
-    # n_sh must be the doc's TOTAL distinct-shingle count, so size
-    # over the hit docs' FULL postings (not just the shared shingles)
-    b_sized = b_hit.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    b_old = (
-        b_hit.join(d_sh, vc, "left_semi")  # only shared shingles can pair
-        .join(b_sized, "doc_id")
-        .select("doc_id", "n_sh", *vc, F.lit(True).alias("is_old"))
-    )
-    b_all = d.select(
-        "doc_id", "n_sh", *vc, F.lit(False).alias("is_old")
-    ).unionByName(b_old)
-    a, b = d.alias("a"), b_all.alias("b")
-    key_eq = F.lit(True)
-    for c in vc:
-        key_eq = key_eq & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    shared = (
-        a.join(
-            b,
-            key_eq
-            # NEW-OLD pairs appear once (a = new); NEW-NEW pairs are
-            # ordered a < b so they don't double-count
-            & (F.col("b.is_old") | (F.col("a.doc_id") < F.col("b.doc_id"))),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("da"),
-            F.col("b.doc_id").alias("db"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    jac = F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
-    # orient (least, greatest) to match the symmetric operator's
-    # doc_a < doc_b contract — a NEW-OLD pair's new id can sort on
-    # either side
-    return (
-        shared.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
-    )
-
-
-def append_components(
-    spark,
-    doc_path: str,
-    delta_docs: DataFrame,
-    delta_key: str,
-    threshold: float = 0.3,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 64,
-    base_append: str = "",
-) -> dict:
-    """Publish a NEW components-store entry = the base closure for
-    ``doc_path`` merged with ``delta_docs``, at O(delta) cost — the
-    closure half of VERDICT r11 task 4.
-
-    Why merge-on-append is exact: the pair set is a pure function of
-    document pairs, so appending documents can only ADD edges, and
-    every added edge touches a new document (OLD-OLD similarities are
-    unchanged). Existing components can therefore only merge THROUGH
-    new documents. The base closure already encodes old connectivity,
-    and each base component's label is its minimum doc id — so
-    contracting every old endpoint to its base label preserves both
-    connectivity and the min-label invariant. The incremental closure
-    runs over the contracted graph (new docs + touched base labels +
-    previously-unpaired old docs — delta-sized, not corpus-sized),
-    and the final table is the base rows relabeled through the merge
-    map plus the contracted graph's own new rows.
-
-    Builds the delta pair set from :func:`append_dedup_documents`'s
-    postings (no re-shingling of the base corpus). Exactness vs a
-    full rebuild over the unioned corpus is pinned by
-    tests/test_dedup_append.py. ``base_append`` CHAINS waves onto a
-    previously-appended entry (the append_dedup_documents contract):
-    the closure base AND the pairing-token base both come from the
-    chained entries, so wave b costs O(wave b) against everything
-    before it. ``k`` does not change the CLOSURE (pairs come from
-    exact token Jaccard and tokens are k-independent) — it exists so
-    the internal dedup append aligns with the caller's (n, k) chain
-    (e.g. the maintenance stream's) and ATTACHES that entry instead
-    of publishing a parallel one. Returns {"path": dir, "append_key":
-    chain, "components": DataFrame}.
-    """
-    from .graph import connected_components
-
-    if base_append:
-        base_ck = _components_store_key(
-            doc_path, threshold, n, k, id_col, text_col, append=base_append
-        )
-        base_dir = DEDUP.require(
-            base_ck,
-            f"append_components: chained base entry (append chain {base_append!r})",
-            CHAIN_HINT,
-        )
-        chain = f"{base_append}+{delta_key}"
-    else:
-        get_components_store(
-            spark, doc_path, threshold=threshold, n=n, k=k,
-            id_col=id_col, text_col=text_col,
-        )
-        base_ck = _components_store_key(
-            doc_path, threshold, n, k, id_col, text_col
-        )
-        base_dir = DEDUP.path(base_ck)
-        chain = delta_key
-    ck = _components_store_key(
-        doc_path, threshold, n, k, id_col, text_col, append=chain
-    )
-    # the appended dedup store is both the delta postings' source and
-    # the artifact a real pipeline maintains alongside the closure
-    # (content-keyed, so when the caller — e.g. the maintenance
-    # stream — already appended this (delta, chain), this is an attach)
-    append_dedup_documents(
-        spark, doc_path, delta_docs, delta_key, n=n, k=k,
-        id_col=id_col, text_col=text_col, base_append=base_append,
-    )
-
-    def _build(tmp: str) -> None:
-        if base_append:
-            # pairing base = everything BEFORE this delta: the chained
-            # dedup entry at base_append (base corpus + prior waves)
-            pre_ck = _minhash_store_key(
-                doc_path, n, k, id_col, text_col, append=base_append
-            )
-            base_tokens = read_tables(spark, DEDUP.path(pre_ck), ("tokens",))[
-                "tokens"
-            ]
-        else:
-            base_tokens, _ = get_minhash_store(
-                spark, doc_path, n=n, k=k, id_col=id_col, text_col=text_col
-            )
-        base_comp = spark.read.parquet(f"{base_dir}/components")
-        # delta postings: re-shingle the DELTA alone — O(delta), and a
-        # pure function of each document so it equals the appended
-        # entry's rows exactly. (The first cut anti-joined the
-        # appended tokens table against the base inventory, which
-        # reads every BASE posting just to subtract it — an O(base)
-        # scan inside a path whose whole point is O(delta).)
-        delta_tokens = _shingle_tokens(delta_docs, n, id_col, text_col)
-        pairs = _incremental_jaccard_pairs(
-            delta_tokens.select("doc_id", "h", "h2"),
-            base_tokens.select("doc_id", "h", "h2"),
-            threshold,
-        )
-        # contract old endpoints to their base component labels; a
-        # doc absent from the base table was previously unpaired and
-        # stands for itself
-        lbl_a = base_comp.select(
-            F.col("doc_id").alias("doc_a"), F.col("component").alias("__ca")
-        )
-        lbl_b = base_comp.select(
-            F.col("doc_id").alias("doc_b"), F.col("component").alias("__cb")
-        )
-        contracted = (
-            pairs.join(lbl_a, "doc_a", "left")
-            .join(lbl_b, "doc_b", "left")
-            .select(
-                F.coalesce("__ca", "doc_a").alias("ca"),
-                F.coalesce("__cb", "doc_b").alias("cb"),
-            )
-            .filter(F.col("ca") != F.col("cb"))
-        )
-        merged = connected_components(contracted, src_col="ca", dst_col="cb")
-        # relabel base rows whose label merged; everything else keeps
-        remap = merged.select(
-            F.col("node").alias("component"), F.col("component").alias("__new")
-        )
-        out_base = base_comp.join(remap, "component", "left").select(
-            "doc_id", F.coalesce("__new", "component").alias("component")
-        )
-        # contracted-graph nodes that are NOT base labels are real
-        # docs entering the closure: new docs + previously-unpaired
-        # old docs
-        base_labels = base_comp.select("component").distinct().withColumnRenamed(
-            "component", "node"
-        )
-        out_new = merged.join(base_labels, "node", "left_anti").select(
-            F.col("node").alias("doc_id"), "component"
-        )
-        (
-            out_base.unionByName(out_new)
-            .select(
-                "doc_id",
-                "component",
-                (F.col("doc_id") == F.col("component")).alias("is_keeper"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/components")
-        )
-        with open(f"{tmp}/manifest.json", "w") as f:
-            json.dump({"kind": "append", "base_key": base_ck, "delta_key": delta_key}, f)
-        with open(f"{tmp}/_COMPLETE", "w") as f:
-            f.write(ck)
-
-    final = DEDUP.publish(ck, _build)
-    return {
-        "path": final,
-        "append_key": chain,
-        **read_tables(spark, final, ("components",)),
-    }
 
 
 # the blocking-key vocabulary for fuzzy matching: each entry maps a

@@ -348,8 +348,8 @@ def pagerank(
         # ONE setup job: spine size + dangling count together (the
         # initial ranks are the uniform 1/n, so the initial dangling
         # mass is n_dangling / n — no separate pass over ranks).
-        # ``spine_stats`` (e.g. the node-graph store's build-time
-        # pr_stats sidecar) skips even that: zero jobs before the
+        # ``spine_stats`` (e.g. the node-graph store build's own
+        # spine aggregate) skips even that: zero jobs before the
         # first iteration.
         if spine_stats is not None:
             n_total, n_dang = int(spine_stats[0]), int(spine_stats[1])

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..cache_util import CHAIN_HINT, INDEX, content_key, link_tree, read_tables
+from ..cache_util import INDEX, content_key, read_tables
 
 K1 = 1.2
 B = 0.75
@@ -79,25 +79,19 @@ def build_text_index(
 # ---------------------------------------------------------------------------
 
 
-def _load_index(spark, final: str) -> tuple[DataFrame, int, float, str]:
-    """(index, n_docs, avgdl, path) of a published entry — the corpus
-    stats ride in its _COMPLETE marker."""
+def _load_index(spark, final: str) -> tuple[DataFrame, int, float]:
+    """(index, n_docs, avgdl) of a published entry — the corpus stats
+    ride in its _COMPLETE marker."""
     with open(os.path.join(final, "_COMPLETE")) as f:
         meta = json.load(f)
     index = read_tables(spark, final, ("index",))["index"]
-    return index, int(meta["n_docs"]), float(meta["avgdl"]), final
+    return index, int(meta["n_docs"]), float(meta["avgdl"])
 
 
-def _index_key(
-    src_path: str, id_col: str, text_col: str, append: str = ""
-) -> str:
-    """THE content key of a text-index entry — one definition shared
-    by the build, the append path, and the streaming maintenance
-    attach (the _minhash_store_key discipline), so a key-format
-    change can never desynchronize a reader from its entry."""
+def _index_key(src_path: str, id_col: str, text_col: str) -> str:
+    """THE content key of a text-index entry (the _minhash_store_key
+    discipline)."""
     extra = f"{id_col}|{text_col}"
-    if append:
-        extra = f"{extra}|append|{append}"
     return content_key(
         "i", src_path, extra=extra, code_files=(__file__,), suffixes=(".parquet",)
     )
@@ -139,17 +133,7 @@ def get_text_index(
             .write.mode("overwrite")
             .parquet(f"{tmp}/index")
         )
-        # document inventory (EVERY input doc, including token-less
-        # ones absent from the index): the append path's new-docs
-        # guard reads this instead of scanning the postings
-        docs.select(F.col(id_col).alias("doc_id")).distinct().write.mode(
-            "overwrite"
-        ).parquet(f"{tmp}/doc_ids")
-        # store the EXACT integer doc-length sum alongside the doc
-        # count (avgdl derives as sum/n): the append path then merges
-        # stats with integer arithmetic and reproduces the rebuilt
-        # entry's avgdl bit-exactly, instead of reconstructing the
-        # sum from a rounded float average
+        # avgdl derives from the EXACT integer doc-length sum
         srow = (
             spark.read.parquet(f"{tmp}/index")
             .select("doc_id", "doc_len")
@@ -167,144 +151,11 @@ def get_text_index(
                     "key": ck,
                     "n_docs": n,
                     "avgdl": (sum_dl / n) if n else 0.0,
-                    "sum_dl": sum_dl,
                 },
                 f,
             )
 
-    return INDEX.get(spark, ck, _build, lambda final: _load_index(spark, final))[:3]
-
-
-def append_text_index(
-    spark,
-    src_path: str,
-    delta_docs: DataFrame,
-    delta_key: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    base_append: str = "",
-) -> tuple[DataFrame, int, float, str]:
-    """Publish a NEW index entry = the base index for ``src_path``
-    plus ``delta_docs``, at O(delta) cost — the FOURTH persistent
-    artifact's append path (node-graph / MinHash / components stores
-    got theirs in r11/r12; with this every store the engine
-    maintains takes snapshot appends).
-
-    The inverted index is per-document rows — (token, doc_id, tf,
-    doc_len) is a pure function of each document alone, and per-term
-    df is derived at QUERY time from the postings — so the append is
-    a hard-link clone plus a delta-only tokenize pass. The delta's
-    own token-range partitioning keeps per-file min/max stats tight,
-    so point-token row-group pruning keeps working across vintages.
-    The two corpus scalars merge with integer arithmetic (N' = N +
-    dN, sum_dl' = sum_dl + d_sum; avgdl derives), reproducing a full
-    rebuild's stats bit-exactly. Guards reject re-sent or intra-delta
-    duplicate doc ids (they would double postings and silently
-    inflate tf/df). ``base_append`` CHAINS appends (the dedup store's
-    contract): it names the append chain of the entry to append ONTO,
-    so per-micro-batch streaming maintenance stacks O(delta) waves —
-    chained == one-shot == rebuild stats bit-exactly, pinned by the
-    streamed-maintenance test. Returns (index, n_docs, avgdl, path).
-    """
-    if base_append:
-        base_ck = _index_key(src_path, id_col, text_col, append=base_append)
-        base_dir = INDEX.require(
-            base_ck,
-            f"append_text_index: chained base entry (append chain {base_append!r})",
-            CHAIN_HINT,
-        )
-        chain = f"{base_append}+{delta_key}"
-    else:
-        get_text_index(spark, src_path, id_col=id_col, text_col=text_col)
-        base_ck = _index_key(src_path, id_col, text_col)
-        base_dir = INDEX.path(base_ck)
-        chain = delta_key
-    ck = _index_key(src_path, id_col, text_col, append=chain)
-
-    def _build(tmp: str) -> None:
-        import shutil as _sh
-
-        link_tree(base_dir, tmp, ("index", "doc_ids"), what="text index")
-        delta_docs.write.mode("overwrite").parquet(f"{tmp}/delta_docs")
-        dd = spark.read.parquet(f"{tmp}/delta_docs")
-        dups = [
-            r[id_col]
-            for r in dd.groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(3)
-            .collect()
-        ]
-        if dups:
-            raise ValueError(
-                f"append_text_index: delta carries doc ids {dups} more "
-                "than once — a double-delivered batch would double their "
-                "postings; dedupe the delta first"
-            )
-        base_ids = spark.read.parquet(f"{base_dir}/doc_ids")
-        hits = [
-            r["doc_id"]
-            for r in dd.select(F.col(id_col).alias("doc_id"))
-            .distinct()
-            .join(base_ids, "doc_id")
-            .limit(3)
-            .collect()
-        ]
-        if hits:
-            raise ValueError(
-                f"append_text_index: doc ids {hits} already exist in the "
-                "base index — appends must carry NEW documents; changed "
-                "documents need a rebuild"
-            )
-        # materialize=True: the delta index has TWO consumers below
-        # (the partitioned write and the stats aggregate) — the eager
-        # checkpoint runs the tokenize pass once, and it is delta-sized
-        didx = build_text_index(dd, id_col=id_col, text_col=text_col)
-        par = spark.sparkContext.defaultParallelism
-        (
-            didx.repartitionByRange(max(2, par // 4), "token")
-            .sortWithinPartitions("token")
-            .write.mode("append")
-            .parquet(f"{tmp}/index")
-        )
-        dd.select(F.col(id_col).alias("doc_id")).distinct().write.mode(
-            "append"
-        ).parquet(f"{tmp}/doc_ids")
-        # merge the scalar stats: integer arithmetic, bit-exact vs a
-        # full rebuild. Re-read ONLY the delta's own aggregate (the
-        # appended files are the delta slice of the index dir — but
-        # reading by file subset is brittle; the delta index frame is
-        # still in scope and cheap)
-        dsrow = (
-            didx.select("doc_id", "doc_len")
-            .distinct()
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("s"))
-            .first()
-        )
-        with open(os.path.join(base_dir, "_COMPLETE")) as f:
-            base_meta = json.load(f)
-        if "sum_dl" not in base_meta:
-            raise ValueError(
-                f"base index at {base_dir} predates the sum_dl stats "
-                "layout — rebuild the base before appending"
-            )
-        n = int(base_meta["n_docs"]) + int(dsrow["n"] or 0)
-        sum_dl = int(base_meta["sum_dl"]) + int(dsrow["s"] or 0)
-        with open(f"{tmp}/manifest.json", "w") as f:
-            json.dump({"kind": "append", "base_key": base_ck, "delta_key": delta_key}, f)
-        _sh.rmtree(f"{tmp}/delta_docs", ignore_errors=True)
-        with open(f"{tmp}/_COMPLETE", "w") as f:
-            json.dump(
-                {
-                    "key": ck,
-                    "n_docs": n,
-                    "avgdl": (sum_dl / n) if n else 0.0,
-                    "sum_dl": sum_dl,
-                },
-                f,
-            )
-
-    return _load_index(spark, INDEX.publish(ck, _build))
+    return INDEX.get(spark, ck, _build, lambda final: _load_index(spark, final))
 
 
 def bm25_search(

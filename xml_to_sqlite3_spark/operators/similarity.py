@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..cache_util import CHAIN_HINT, CODEBOOK, content_key, link_tree, read_tables
+from ..cache_util import CODEBOOK, content_key, read_tables
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1025,8 +1025,8 @@ def ivf_pq_index(
     persistent entry's content key, so mismatched index/query flags
     cannot silently share an entry. The flag is ALSO stamped into the
     ``codes`` column metadata (Spark persists StructField metadata in
-    the parquet footer, so it survives the persistent entry and its
-    appends) — ivf_pq_topk validates it, turning an ad-hoc
+    the parquet footer, so it survives the persistent entry) —
+    ivf_pq_topk validates it, turning an ad-hoc
     flag-mismatched search from silently-wrong ADC distances into a
     loud error."""
     enc = _ivfpq_encode_udf(centroids, books, residual, rotation)
@@ -1267,22 +1267,19 @@ def _ivfpq_key(
     n_iter: int,
     id_col: str,
     vec_col: str,
-    append: str = "",
     residual: bool = False,
     rotate: bool = False,
 ) -> str:
-    """THE content key of an IVF-PQ index entry — one definition for
-    the build and the append chain (the _minhash_store_key
-    discipline). ``residual`` is part of the key: a residual-encoded
-    index and a raw-encoded one are DIFFERENT artifacts whose codes
-    mean different things, so they must never share an entry."""
+    """THE content key of an IVF-PQ index entry (the
+    _minhash_store_key discipline). ``residual`` is part of the key:
+    a residual-encoded index and a raw-encoded one are DIFFERENT
+    artifacts whose codes mean different things, so they must never
+    share an entry."""
     extra = f"c{n_centroids}_m{m}_ks{ks}_i{n_iter}_{id_col}_{vec_col}"
     if residual:
         extra = f"{extra}_res"
     if rotate:
         extra = f"{extra}_opq"
-    if append:
-        extra = f"{extra}|append|{append}"
     return content_key(
         "ivfpq", src_path, extra=extra, code_files=(__file__,),
         suffixes=(".parquet",),
@@ -1368,124 +1365,6 @@ def get_residual_pq_codebooks(
         return books
 
     return _npy_store(spark, key, "pq_codebooks.npy", _train)
-
-
-def append_ivf_pq_index(
-    spark,
-    src_path: str,
-    delta_df: DataFrame,
-    delta_key: str,
-    n_centroids: int = 16,
-    m: int = 8,
-    ks: int = 16,
-    n_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    base_append: str = "",
-    residual: bool = False,
-    rotate: bool = False,
-) -> dict:
-    """Append NEW vectors into the persistent IVF-PQ index at
-    O(delta) — the FIFTH persistent artifact's append path (the
-    vector-serving analogue of the dedup/index/graph/components
-    appends): encode the delta with the BASE-trained models (the
-    coarse codebook and PQ books are model parameters — an append
-    does NOT retrain them, exactly as a production vector index
-    serves arrivals under the existing quantizer and schedules a
-    retrain+rebuild when drift accumulates; the PSI/KS monitors are
-    the drift signal), hard-link clone the base entry, and land the
-    delta's (vec_id, codes) rows into their cluster partitions.
-    Appended == rebuilt-over-union is EXACT per-row identity GIVEN
-    the same models, pinned by tests; guards reject re-sent or
-    intra-delta duplicate vec ids. ``base_append`` chains waves (the
-    append_dedup_documents contract). Returns {"path", "append_key",
-    "index"}."""
-    params = dict(
-        n_centroids=n_centroids, m=m, ks=ks, n_iter=n_iter,
-        id_col=id_col, vec_col=vec_col, residual=residual, rotate=rotate,
-    )
-    if base_append:
-        base_dir = CODEBOOK.require(
-            _ivfpq_key(src_path, append=base_append, **params),
-            f"append_ivf_pq_index: chained base entry (append chain {base_append!r})",
-            CHAIN_HINT,
-        )
-        chain = f"{base_append}+{delta_key}"
-    else:
-        get_ivf_pq_index(spark, src_path, **params)
-        base_dir = CODEBOOK.path(_ivfpq_key(src_path, **params))
-        chain = delta_key
-    ck = _ivfpq_key(src_path, append=chain, **params)
-
-    def _build(tmp: str) -> None:
-        import shutil as _sh
-
-        link_tree(base_dir, tmp, ("index",), what="ivfpq index")
-        delta_df.write.mode("overwrite").parquet(f"{tmp}/delta_vecs")
-        dd = spark.read.parquet(f"{tmp}/delta_vecs")
-        dups = [
-            r[id_col]
-            for r in dd.groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(3)
-            .collect()
-        ]
-        if dups:
-            raise ValueError(
-                f"append_ivf_pq_index: delta carries vec ids {dups} more "
-                "than once — dedupe the delta first"
-            )
-        base_ids = spark.read.parquet(f"{base_dir}/index").select("vec_id")
-        hits = [
-            r["vec_id"]
-            for r in dd.select(F.col(id_col).alias("vec_id"))
-            .join(base_ids, "vec_id")
-            .limit(3)
-            .collect()
-        ]
-        if hits:
-            raise ValueError(
-                f"append_ivf_pq_index: vec ids {hits} already exist in the "
-                "base index — appends must carry NEW vectors; changed "
-                "vectors need a rebuild"
-            )
-        cents = get_codebook(
-            spark, src_path, k=n_centroids, n_iter=n_iter,
-            id_col=id_col, vec_col=vec_col,
-        )
-        R = (
-            get_opq_rotation(
-                spark, src_path, m=m, id_col=id_col, vec_col=vec_col
-            )
-            if rotate
-            else None
-        )
-        if residual:
-            books = get_residual_pq_codebooks(
-                spark, src_path, n_centroids=n_centroids, m=m, ks=ks,
-                n_iter=n_iter, id_col=id_col, vec_col=vec_col,
-                rotate=rotate,
-            )
-        else:
-            books = get_pq_codebooks(
-                spark, src_path, m=m, ks=ks, n_iter=n_iter,
-                id_col=id_col, vec_col=vec_col, rotate=rotate,
-            )
-        ivf_pq_index(
-            dd, cents, books, id_col=id_col, vec_col=vec_col,
-            residual=residual, rotation=R,
-        ).write.mode("append").partitionBy("cluster").parquet(f"{tmp}/index")
-        _sh.rmtree(f"{tmp}/delta_vecs", ignore_errors=True)
-        with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-            f.write(ck)
-
-    final = CODEBOOK.publish(ck, _build)
-    return {
-        "path": final,
-        "append_key": chain,
-        **read_tables(spark, final, ("index",)),
-    }
 
 
 def _embedding_covariance_fast(df: DataFrame, vec_col: str) -> DataFrame:

@@ -1670,8 +1670,7 @@ def near_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_canonical already read) instead of re-running the
     inverted-index Jaccard join + iterative min-label propagation
     per query — the store IS that computation, materialized once per
-    content key and maintained by O(delta) appends; same oracle,
-    same rows."""
+    content key; same oracle, same rows."""
     import os
 
     docs = load(spark, sf_dir, "documents")

@@ -25,7 +25,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache_util import CHAIN_HINT, GRAPH, content_key, link_tree, read_tables
+from ..cache_util import GRAPH, content_key, read_tables
 from ..io_util import load
 from ..functions.type_inference import infer_type
 from ..operators import relationships as R
@@ -526,14 +526,13 @@ def _sibling_rows(slices: DataFrame, chunks: DataFrame) -> DataFrame:
 
 
 def _graph_code_files() -> tuple:
-    """The build-code identity shared by the base store key and the
-    appended-store keys: this module + the relationship /
-    type-inference operators the build drives + the graph operators
-    whose orient_edges/pagerank outputs are store tables + the
-    hierarchy walk (node_levels) + the hash primitive (aa_und's
-    subsample — r10 ADVICE: a stable_hash60 change must invalidate
-    the store or the persisted subsample silently diverges from the
-    oracle's live md5 replay)."""
+    """The build-code identity of the store key: this module + the
+    relationship / type-inference operators the build drives + the
+    graph operators whose orient_edges/pagerank outputs are store
+    tables + the hierarchy walk (node_levels) + the hash primitive
+    (aa_und's subsample — r10 ADVICE: a stable_hash60 change must
+    invalidate the store or the persisted subsample silently diverges
+    from the oracle's live md5 replay)."""
     from ..functions import hashing as _hash
     from ..functions import type_inference as _ti
     from ..operators import graph as _gr
@@ -550,57 +549,22 @@ def _graph_code_files() -> tuple:
     )
 
 
-def _graph_cache_key(sf_dir: str, build_coreness: bool = True) -> str:
+def _graph_cache_key(sf_dir: str) -> str:
     """Content key: the input parquet identity (path + per-file size
     and mtime) and the build code itself (_graph_code_files, plus the
     shared cache machinery via cache_util.content_key). A code edit
     or regenerated testdata produces a new key — the stale entry for
-    that sf_dir is pruned after the fresh build succeeds.
-    ``build_coreness`` is part of the key (via ``extra``, so it also
-    scopes the stale-prune prefix): a store without the coreness
-    table is a DIFFERENT live configuration, never a stale sibling
-    of the full store."""
+    that sf_dir is pruned after the fresh build succeeds."""
     return content_key(
         "g",
         sf_dir,
-        extra="" if build_coreness else "nocore",
         code_files=_graph_code_files(),
         suffixes=(".parquet",),
     )
 
 
-def _graph_append_key(
-    sf_dir: str, chain: str, build_coreness: bool = True
-) -> str:
-    """THE content key of an APPENDED store entry (the
-    _minhash_store_key discipline): one definition shared by
-    append_documents and the maintenance-stream attach accessor
-    (streaming/ingest.current_maintained_graph), so a key-format
-    change can never desynchronize a reader from the entry it
-    expects."""
-    return content_key(
-        "ga",
-        sf_dir,
-        extra=f"append|{chain}" + ("" if build_coreness else "|nocore"),
-        code_files=_graph_code_files(),
-        suffixes=(".parquet",),
-    )
-
-
-def get_graph(
-    spark: SparkSession, sf_dir: str, build_coreness: bool = True
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def get_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(nodes, properties, xrefs), materialized once per CONTENT.
-
-    ``build_coreness=False`` skips the k-core H-index fixpoint (and
-    its coreness table) — the one store artifact only the graph_kcore
-    query reads, and the dominant GLOBAL cost at scale: measured
-    fixpoint cost 22s/82s/351s at sf0.01/0.1/1, and at sf3 it roughly
-    DOUBLES the cold build (1807s with vs ~804s without,
-    BENCH_newops_r13). Corpora that never query k-core should opt
-    out. The flag is part of the content key (two live
-    configurations, not stale siblings); gates always use the
-    default full store.
 
     The driver runs every gate query back to back in one session;
     without materialization each query would recompute the ~18M-row
@@ -619,22 +583,20 @@ def get_graph(
     evaluate-once + parquet write + read-back costs ~30s total and
     every later scan is a vectorized, compressed, column-pruned read.
     """
-    t = _graph_tables(spark, sf_dir, build_coreness)
+    t = _graph_tables(spark, sf_dir)
     return t["nodes"], t["properties"], t["xrefs"]
 
 
 def graph_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One table of the default (full) store for ``sf_dir`` — any of
-    _STORE_SUBDIRS, all built by the same get_graph build."""
+    """One table of the store for ``sf_dir`` — any of _STORE_SUBDIRS,
+    all built by the same get_graph build."""
     return _graph_tables(spark, sf_dir)[name]
 
 
-def _graph_tables(
-    spark: SparkSession, sf_dir: str, build_coreness: bool = True
-) -> dict[str, DataFrame]:
+def _graph_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Every table of the store for ``sf_dir``, built once per content
     and attached by every later call and session (see get_graph)."""
-    ck = _graph_cache_key(sf_dir, build_coreness=build_coreness)
+    ck = _graph_cache_key(sf_dir)
 
     def _build(tmp: str) -> None:
         # the nodes and properties writes are independent jobs —
@@ -659,8 +621,8 @@ def _graph_tables(
             fp.result()
         nodes_tmp = spark.read.parquet(f"{tmp}/nodes")
         props_tmp = spark.read.parquet(f"{tmp}/properties")
-        _write_store_tables(spark, tmp, nodes_tmp, props_tmp, mode="overwrite")
-        _write_rank_tables(spark, tmp, build_coreness=build_coreness)
+        _write_store_tables(spark, tmp, nodes_tmp, props_tmp)
+        _write_rank_tables(spark, tmp)
         with open(f"{tmp}/_COMPLETE", "w") as f:
             f.write(ck)
 
@@ -668,7 +630,7 @@ def _graph_tables(
         spark,
         ck,
         _build,
-        lambda final: read_tables(spark, final, _store_subdirs(build_coreness)),
+        lambda final: read_tables(spark, final, _STORE_SUBDIRS),
     )
 
 
@@ -677,28 +639,10 @@ def _write_store_tables(
     tmp: str,
     nodes_in: DataFrame,
     props_in: DataFrame,
-    mode: str = "overwrite",
-    base_dir: str | None = None,
 ) -> None:
     """Stage relationship detection over ``nodes_in``/``props_in`` and
-    write every derived store table except the rank tables
-    (pr_stats/pr_ranks — those are GLOBAL, see _write_rank_tables).
-
-    ``mode="overwrite"`` is the full build. ``mode="append"`` is the
-    DELTA build (append_documents): ``nodes_in`` holds only the new
-    documents, per-document-local tables append their delta files
-    into the (hard-linked) base table dirs, and the two tables whose
-    rows can MIX base and delta contributions — degrees and targets
-    (a parent_id or xref target string appears verbatim in both) —
-    merge against the base store read from ``base_dir`` and rewrite.
-    Every reference type the detector emits is within-document
-    (streaming/ingest.py's batch-local maintenance rests on the same
-    fact), so a delta detection over the delta documents alone is
-    EXACT — pinned by tests/test_store_append.py's multiset-identity
-    test against a full build over the unioned input.
-    """
-    if mode == "append" and base_dir is None:
-        raise ValueError("append mode requires base_dir")
+    write every derived store table except the GLOBAL rank tables
+    (pr_ranks, coreness — see _write_rank_tables)."""
     # Full xref set, PARTITIONED by reference_type: type
     # filters prune whole directories, and the type value
     # lives in the path instead of a per-row column (measured
@@ -713,10 +657,7 @@ def _write_store_tables(
     # cost; the write adds no extra sort because the child's
     # (reference_type, source_node_id) ordering already
     # satisfies the dynamic-partition writer's required
-    # reference_type prefix. An APPEND-mode write lands the
-    # delta's own range-sorted files in the same partition
-    # dirs — footer pruning is per-file, so every file (base
-    # or delta vintage) keeps its tight source bounds.
+    # reference_type prefix.
     #
     # STAGED, not fused: repartitionByRange SAMPLES its child to
     # estimate range boundaries — fused, that re-executed the
@@ -780,7 +721,7 @@ def _write_store_tables(
             sort_parts, "reference_type", "source_node_id"
         )
         .sortWithinPartitions("reference_type", "source_node_id")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("reference_type")
         .parquet(f"{tmp}/xrefs")
     )
@@ -812,7 +753,7 @@ def _write_store_tables(
         R.multi_references(nodes_in, props_in)
         .repartitionByRange(max(2, par // 4), "source_node_id")
         .sortWithinPartitions("source_node_id")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(f"{tmp}/xrefs_multi")
     )
     # degree-oriented edge set for the triangle gate's graph mix
@@ -823,12 +764,7 @@ def _write_store_tables(
     # one-time build — query time starts at the wedge join.
     # Derived from the STAGED frame, not the written store: the
     # two input types never come from the fat sibling tier, so the
-    # rows are identical, and the staged source works unchanged in
-    # append mode (reading the store back after an append would
-    # re-orient BASE edges too). Orientation is by degree WITHIN
-    # the input edge set — exact in append mode because every
-    # detected reference is within-document, so a delta node's
-    # degree in the merged graph equals its delta-local degree.
+    # rows are identical.
     from ..operators.graph import orient_edges
 
     xr_typed = staged.filter(
@@ -836,7 +772,7 @@ def _write_store_tables(
     )
     (
         orient_edges(xr_typed)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(f"{tmp}/tri_oriented")
     )
     # pagerank-ready link graph (r9): the centrality gate's
@@ -848,9 +784,7 @@ def _write_store_tables(
     # aggregation every session (measured ~4-7s of graph_
     # pagerank's single-shot time at sf0.1). Same contract as
     # tri_oriented: a store table FOR a specific gate's graph
-    # mix, rebuilt with the store. The in-mode dedup stays exact
-    # for appends: attribute references resolve within their own
-    # document, so base and delta edge sets are disjoint.
+    # mix, rebuilt with the store.
     pr_e = (
         staged.filter(F.col("reference_type") == "attribute_reference")
         .filter(
@@ -872,19 +806,9 @@ def _write_store_tables(
     )
     from ..operators.graph import out_degree_spine
 
-    if mode == "overwrite":
-        pr_e.write.mode("overwrite").parquet(f"{tmp}/pr_edges")
-        prs = spark.read.parquet(f"{tmp}/pr_edges")
-    else:
-        # stage the DELTA edges so the spine aggregates only them
-        # (the appended pr_edges dir would hand back base + delta)
-        pr_e.write.mode("overwrite").parquet(f"{tmp}/pr_edges_delta")
-        prs = spark.read.parquet(f"{tmp}/pr_edges_delta")
-        prs.write.mode("append").parquet(f"{tmp}/pr_edges")
-    # delta spine rows APPEND exactly: spine nodes are pr-edge
-    # endpoints = same-document-resolved node ids, disjoint from
-    # the base store's ids (append_documents guards enforce it)
-    out_degree_spine(prs).write.mode(mode).parquet(f"{tmp}/pr_spine")
+    pr_e.write.mode("overwrite").parquet(f"{tmp}/pr_edges")
+    prs = spark.read.parquet(f"{tmp}/pr_edges")
+    out_degree_spine(prs).write.mode("overwrite").parquet(f"{tmp}/pr_spine")
     # full-graph degree table (id, out_cnt, in_cnt) — the
     # aggregate most_connected / node_connection_counts otherwise
     # recompute over the full multiset per query (34s at sf1, and
@@ -945,24 +869,6 @@ def _write_store_tables(
             F.sum("i").alias("in_cnt"),
         )
     )
-    if mode == "append":
-        # degrees MERGE instead of appending: an id string can carry
-        # degree from both sides even across document-disjoint
-        # appends — parent_child/child_parent take parent_id
-        # VERBATIM (no existence join), so the same dangling parent
-        # string in two documents lands degree rows in both builds.
-        # One node-domain-sized re-aggregate keeps the one-row-per-id
-        # invariant the full build produces. (tmp/degrees is NOT
-        # hard-linked by the clone; the merged result writes fresh.)
-        deg = (
-            spark.read.parquet(f"{base_dir}/degrees")
-            .unionByName(deg)
-            .groupBy("id")
-            .agg(
-                F.sum("out_cnt").alias("out_cnt"),
-                F.sum("in_cnt").alias("in_cnt"),
-            )
-        )
     deg.write.mode("overwrite").parquet(f"{tmp}/degrees")
     # distinct xref TARGET set (node-domain-sized) — the dangling-
     # reference family otherwise re-distincts the full multiset per
@@ -983,11 +889,6 @@ def _write_store_tables(
         .select(F.col("id").alias("target_node_id"))
     )
     tgt = staged.select("target_node_id").unionByName(fat_tgt)
-    if mode == "append":
-        # same verbatim-string mixing as degrees (child_parent's
-        # target IS the parent_id string): distinct across the
-        # union, one node-domain shuffle
-        tgt = spark.read.parquet(f"{base_dir}/targets").unionByName(tgt)
     tgt.distinct().write.mode("overwrite").parquet(f"{tmp}/targets")
     # materialized tree levels (id, node_type, level) — the
     # recursive-hierarchy summary re-walked the static tree per
@@ -995,16 +896,13 @@ def _write_store_tables(
     # sf1); the level of a node only changes when the tree does,
     # so the walk runs once per build like pr_ranks/degrees. The
     # iterative operator stays the ad-hoc path, value-proven by
-    # the gate's unchanged recursive-CTE oracle. A delta-only walk
-    # appends exactly because append_documents guards reject any
-    # parent link crossing the base/delta boundary in either
-    # direction (the walk joins parent ids GLOBALLY).
+    # the gate's unchanged recursive-CTE oracle.
     from ..operators.hierarchy import node_tree_iterative as _walk
 
     (
         _walk(nodes_in, max_depth=10, columns=("id", "node_type", "parent_id"))
         .select("id", "node_type", "level")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(f"{tmp}/node_levels")
     )
     # link-prediction-ready adjacency (r10): the gate's
@@ -1017,9 +915,7 @@ def _write_store_tables(
     # Same contract as pr_edges/tri_oriented; parameter filters
     # (max_degree, d >= 2) stay in the operator, so the tables
     # are parameter-free. Any drift from the operator's own
-    # prep would trip the gate's full value oracle. Appends stay
-    # exact for both: attribute references are same-document, so
-    # delta pairs and delta centers are disjoint from the base's.
+    # prep would trip the gate's full value oracle.
     from ..functions.hashing import stable_hash60 as _h60
 
     _aa_h = _h60(
@@ -1035,13 +931,8 @@ def _write_store_tables(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    if mode == "overwrite":
-        _aa_pairs.write.mode("overwrite").parquet(f"{tmp}/aa_und")
-        _aa_und = spark.read.parquet(f"{tmp}/aa_und")
-    else:
-        _aa_pairs.write.mode("overwrite").parquet(f"{tmp}/aa_und_delta")
-        _aa_und = spark.read.parquet(f"{tmp}/aa_und_delta")
-        _aa_und.write.mode("append").parquet(f"{tmp}/aa_und")
+    _aa_pairs.write.mode("overwrite").parquet(f"{tmp}/aa_und")
+    _aa_und = spark.read.parquet(f"{tmp}/aa_und")
     (
         _aa_und.select(F.col("a").alias("v"), F.col("b").alias("n"))
         .unionByName(
@@ -1052,73 +943,32 @@ def _write_store_tables(
             F.count(F.lit(1)).alias("d"),
             F.sort_array(F.collect_list("n")).alias("ns"),
         )
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(f"{tmp}/aa_centers")
     )
-    # document inventory + unresolved-parent inventory (both
-    # node-domain-small) — the append path's guards read these
-    # instead of re-scanning the node table per append: doc_ids
-    # proves delta documents are NEW, dangling_parents catches a
-    # delta id that would retroactively resolve an existing
-    # dangling parent link (which would change existing
-    # node_levels rows — see append_documents)
-    nodes_ids = nodes_in.select("id")
-    doc_ids = nodes_in.select("document_id").distinct()
-    dang = (
-        nodes_in.filter(F.col("parent_id").isNotNull())
-        .select(F.col("parent_id"))
-        .distinct()
-        .join(nodes_ids.withColumnRenamed("id", "parent_id"), "parent_id", "left_anti")
-    )
-    if mode == "append":
-        doc_ids = (
-            spark.read.parquet(f"{base_dir}/doc_ids")
-            .unionByName(doc_ids)
-            .distinct()
-        )
-        # a string dangling in BOTH vintages must not duplicate;
-        # cross-boundary resolution is rejected by the guards, so
-        # union-distinct equals the full build's global anti-join
-        dang = (
-            spark.read.parquet(f"{base_dir}/dangling_parents")
-            .unionByName(dang)
-            .distinct()
-        )
-    doc_ids.write.mode("overwrite").parquet(f"{tmp}/doc_ids")
-    dang.write.mode("overwrite").parquet(f"{tmp}/dangling_parents")
     # the staging copies served the range sampling and the row
     # counts; shipping them in the published entry would bloat
     # the store's disk footprint
     import shutil as _sh
 
-    for scratch in ("xrefs_staged", "sib_chunks", "pr_edges_delta", "aa_und_delta"):
+    for scratch in ("xrefs_staged", "sib_chunks"):
         _sh.rmtree(f"{tmp}/{scratch}", ignore_errors=True)
 
 
-def _write_rank_tables(
-    spark: SparkSession, tmp: str, build_coreness: bool = True
-) -> None:
-    """The GLOBAL rank artifacts: the pr_stats sidecar and the
-    materialized pagerank vector. Separate from _write_store_tables
-    because they are the ONE part of the store that is a function of
-    the WHOLE graph, not of any single document — the teleport
-    uniform 1/n couples every component — so an append re-derives
-    them over the MERGED pr_edges/pr_spine (already containing the
-    delta's appended files) instead of appending. That recompute is
-    O(sampled link graph), the cheap tail of a build whose cost is
-    dominated by the sibling multiset (measured in SURVEY §6.4)."""
-    # sidecar: node/dangling counts of pr_spine, read back
-    # driver-side with NO Spark job — the pagerank gate needs
-    # both before its first iteration (teleport + initial
-    # dangling mass), and computing them per query cost a
-    # setup job + spine scan every session
+def _write_rank_tables(spark: SparkSession, tmp: str) -> None:
+    """The GLOBAL rank artifacts: the materialized pagerank vector and
+    the coreness table. Separate from _write_store_tables because they
+    are the part of the store that is a function of the WHOLE graph,
+    not of any single document — the teleport uniform 1/n couples
+    every component — and they read the written pr_edges/pr_spine and
+    tri_oriented tables back."""
+    # node/dangling counts of pr_spine: the pagerank run needs both
+    # before its first iteration (teleport + initial dangling mass)
     spine = spark.read.parquet(f"{tmp}/pr_spine")
     _srow = spine.agg(
         F.count(F.lit(1)).alias("n"),
         F.count(F.when(F.col("__deg").isNull(), 1)).alias("nd"),
     ).collect()[0]
-    with open(f"{tmp}/pr_stats.json", "w") as f:
-        json.dump({"n": _srow["n"], "nd": _srow["nd"]}, f)
     # materialized rank vector: pagerank over a STATIC stored
     # graph is a build-time artifact, exactly like degrees — the
     # reference's model is build-the-database-once, query-many.
@@ -1147,23 +997,13 @@ def _write_rank_tables(
     # edge set the triangle/clustering/assortativity gates read),
     # via operators/graph.kcore_decomposition's H-index fixpoint run
     # ONCE at build time. Like pr_ranks it is a function of the WHOLE
-    # graph (peeling couples every node in a component), so an append
-    # re-derives it over the merged tri_oriented rather than
-    # appending — and unlike pr_ranks the output is a deterministic
-    # INTEGER vector, so appended == rebuilt is exact multiset
-    # identity (tests/test_store_append.py). Measured convergence on
-    # this graph family: 22s/82s/351s at sf0.01/0.1/1, max coreness 4,
-    # well inside the default 100-round budget (the operator RAISES
+    # graph (peeling couples every node in a component). Measured
+    # convergence on this graph family: 22s/82s/351s at
+    # sf0.01/0.1/1, max coreness 4, well inside the default 100-round budget (the operator RAISES
     # loudly on non-convergence rather than publishing a wrong
     # vector; the fixpoint propagates one hop per round, and the
     # mixed graph's sibling chains stabilize locally because chain
     # nodes also carry attribute-reference edges).
-    if not build_coreness:
-        # opted out (get_graph(build_coreness=False)): the fixpoint
-        # is the dominant global build cost at scale and only the
-        # graph_kcore query reads its table — see get_graph's
-        # docstring for the measured cost ladder
-        return
     from ..operators.graph import kcore_decomposition as _kcore
 
     _kstats: dict = {}
@@ -1179,8 +1019,7 @@ def _write_rank_tables(
 
 
 # every parquet table a published store entry holds, in one place:
-# the attach path refreshes + re-reads each, and the append path's
-# hard-link clone walks this list (minus the merged/global rewrites)
+# the attach path refreshes + re-reads each
 _STORE_SUBDIRS = (
     "nodes",
     "properties",
@@ -1196,262 +1035,7 @@ _STORE_SUBDIRS = (
     "aa_und",
     "aa_centers",
     "coreness",
-    "doc_ids",
-    "dangling_parents",
 )
-
-
-def _store_subdirs(build_coreness: bool) -> tuple[str, ...]:
-    """The tables an entry of this configuration holds: coreness is
-    absent when the entry was built with build_coreness=False."""
-    return tuple(s for s in _STORE_SUBDIRS if build_coreness or s != "coreness")
-
-
-# ---------------------------------------------------------------------------
-# Incremental store maintenance (r11): append NEW documents to a built
-# store without re-paying the full build.
-#
-# The exactness argument rests on ONE fact the streaming SQLite path
-# already exploits (streaming/ingest.py: batch-local maintenance is
-# exact): every reference type the default detector emits is
-# WITHIN-document — structural types group on (document_id, parent_id)
-# and attribute references only resolve to a node in the SAME document.
-# So a new document's xrefs, degrees-contribution, tree levels, and
-# adjacency rows are computable from the delta alone, and at 100 TB an
-# append is a metadata-plus-delta transaction (hard-link the unchanged
-# multiset files, write O(delta) new ones — the same shape as an
-# Iceberg/Delta snapshot append) instead of a full rebuild. The ONE
-# whole-graph artifact is the rank vector (teleport couples every
-# component through 1/n), which re-derives over the merged sampled link
-# graph — the cheap tail of a build dominated by the sibling multiset.
-# ---------------------------------------------------------------------------
-
-# tables whose delta rows APPEND (hard-linked from the base, delta
-# files land alongside); degrees/targets/doc_ids/dangling_parents
-# MERGE-rewrite (verbatim parent_id strings can carry contributions
-# from both vintages), pr_ranks + pr_stats.json re-derive globally
-_APPEND_LINKED_SUBDIRS = (
-    "nodes",
-    "properties",
-    "xrefs",
-    "xrefs_multi",
-    "tri_oriented",
-    "pr_edges",
-    "pr_spine",
-    "node_levels",
-    "aa_und",
-    "aa_centers",
-)
-
-
-def _append_guards(spark: SparkSession, base_dir: str, dn: DataFrame) -> None:
-    """Fail LOUD before any append work when the delta would break the
-    within-document locality the incremental tables rely on:
-
-    1. delta document_ids must be NEW (an existing document's content
-       changing is an update, not an append — rebuild);
-    2. delta node ids must not collide with existing ids (degrees,
-       node_levels, aa_centers and every id-keyed consumer assume one
-       owner per id);
-    3. a delta parent_id must not resolve to an EXISTING node — the
-       node_levels walk joins parent ids globally, so such a link
-       would give the full build a level the delta-only walk can't
-       see;
-    4. a delta id must not retroactively resolve an existing DANGLING
-       parent link (the mirror image of 3: base node_levels rows
-       would change).
-    """
-    base_docs = spark.read.parquet(f"{base_dir}/doc_ids")
-    doc_hits = [
-        r["document_id"]
-        for r in dn.select("document_id")
-        .distinct()
-        .join(base_docs, "document_id")
-        .limit(3)
-        .collect()
-    ]
-    if doc_hits:
-        raise ValueError(
-            f"append_documents: document_ids {doc_hits} already exist in "
-            "the base store — appends must carry NEW documents; changed "
-            "documents need a rebuild"
-        )
-    d_ids = dn.select("id").distinct()
-    d_par = (
-        dn.filter(F.col("parent_id").isNotNull())
-        .select(F.col("parent_id").alias("id"))
-        .distinct()
-        .join(d_ids, "id", "left_anti")
-    )
-    probe = d_ids.select(
-        "id", F.lit("delta node id collides with an existing node id").alias("why")
-    ).unionByName(
-        d_par.select(
-            "id",
-            F.lit(
-                "delta parent_id resolves to an existing node — the delta "
-                "document is not self-contained"
-            ).alias("why"),
-        )
-    )
-    base_ids = spark.read.parquet(f"{base_dir}/nodes").select("id")
-    hits = (
-        probe.join(base_ids, "id")
-        .groupBy("why")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("id").alias("example"))
-        .collect()
-    )
-    if hits:
-        raise ValueError(
-            "append_documents: "
-            + "; ".join(f"{r['why']} ({r['n']} ids, e.g. {r['example']})" for r in hits)
-        )
-    dang = spark.read.parquet(f"{base_dir}/dangling_parents").withColumnRenamed(
-        "parent_id", "id"
-    )
-    dang_hits = [r["id"] for r in d_ids.join(dang, "id").limit(3).collect()]
-    if dang_hits:
-        raise ValueError(
-            f"append_documents: delta node ids {dang_hits} would resolve "
-            "existing dangling parent links — existing node_levels rows "
-            "would change; rebuild instead"
-        )
-
-
-def append_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    delta_nodes: DataFrame,
-    delta_properties: DataFrame,
-    delta_key: str,
-    check_guards: bool = True,
-    build_coreness: bool = True,
-    base_append: str = "",
-) -> dict:
-    """Publish a NEW store entry = the base store for ``sf_dir`` plus
-    the delta documents, at O(delta) cost (plus the global rank-vector
-    re-derivation — see _write_rank_tables; ``build_coreness=False``
-    appends onto the coreness-less base configuration and skips the
-    k-core fixpoint re-derivation, the dominant global append cost).
-
-    ``delta_key`` is the caller's identity for the delta content (fold
-    in input paths/mtimes and any synthesizer code) — it keys the
-    published entry, so the same (base, delta) pair cold-attaches on
-    later calls exactly like get_graph's own entries, and the entry
-    invalidates whenever the base inputs, the build code, or the delta
-    identity change. The base entry itself is never touched: the clone
-    is hard links, and a failed append leaves only its tmp dir (the
-    shared cache_util publish machinery removes it).
-
-    ``base_append`` CHAINS waves (the append_dedup_documents
-    contract): wave b appends onto the entry published for chain
-    ``base_append`` instead of the base store, so a maintenance
-    stream pays O(wave) per wave. The chained base carries merged
-    doc_ids/dangling_parents, so the locality guards hold across the
-    whole chain.
-
-    Returns ``{"path": <dir>, "append_key": <chain>, <table>:
-    DataFrame, ...}`` for every store table. Gate queries keep
-    reading the sf_dir-keyed BASE store through get_graph; appended
-    stores are a pipeline capability with their own identity
-    (tests/test_store_append.py pins the appended tables to a full
-    rebuild over the unioned input, multiset-exact).
-    """
-    if base_append:
-        base_ck = _graph_append_key(
-            sf_dir, base_append, build_coreness=build_coreness
-        )
-        base_dir = GRAPH.require(
-            base_ck,
-            f"append_documents: chained base entry (append chain {base_append!r})",
-            CHAIN_HINT,
-        )
-        chain = f"{base_append}+{delta_key}"
-    else:
-        # ensure the base entry (of the matching configuration) exists
-        get_graph(spark, sf_dir, build_coreness=build_coreness)
-        base_ck = _graph_cache_key(sf_dir, build_coreness=build_coreness)
-        base_dir = GRAPH.path(base_ck)
-        chain = delta_key
-    ck = _graph_append_key(sf_dir, chain, build_coreness=build_coreness)
-
-    def _build(tmp: str) -> None:
-        import shutil as _sh
-
-        link_tree(base_dir, tmp, _APPEND_LINKED_SUBDIRS, what="store")
-        # materialize the delta frames once — detection, the walk,
-        # and the appends all re-read them
-        delta_nodes.write.mode("overwrite").parquet(f"{tmp}/delta_nodes")
-        delta_properties.write.mode("overwrite").parquet(f"{tmp}/delta_properties")
-        dn = spark.read.parquet(f"{tmp}/delta_nodes")
-        dp = spark.read.parquet(f"{tmp}/delta_properties")
-        if check_guards:
-            _append_guards(spark, base_dir, dn)
-        dn.write.mode("append").parquet(f"{tmp}/nodes")
-        dp.write.mode("append").parquet(f"{tmp}/properties")
-        _write_store_tables(spark, tmp, dn, dp, mode="append", base_dir=base_dir)
-        _write_rank_tables(spark, tmp, build_coreness=build_coreness)
-        with open(f"{tmp}/manifest.json", "w") as f:
-            json.dump(
-                {
-                    "kind": "append",
-                    "base_key": base_ck,
-                    "delta_key": delta_key,
-                    "append_key": chain,
-                },
-                f,
-            )
-        for scratch in ("delta_nodes", "delta_properties"):
-            _sh.rmtree(f"{tmp}/{scratch}", ignore_errors=True)
-        with open(f"{tmp}/_COMPLETE", "w") as f:
-            f.write(ck)
-
-    final = GRAPH.publish(ck, _build)
-    return {
-        "path": final,
-        "append_key": chain,
-        **read_tables(spark, final, _store_subdirs(build_coreness)),
-    }
-
-
-def synthesize_delta_document(
-    spark: SparkSession, src_dir: str, tag: str = "dx"
-) -> tuple[DataFrame, DataFrame]:
-    """A self-contained NEW document (nodes, properties) shaped like
-    the TPC-H graph of ``src_dir`` — the append harness's delta
-    generator (tests; the BENCH_append_* runs). Every node id,
-    parent_id, and reference-valued property token gains the ``tag_``
-    prefix and the document_id becomes ``tpch_<tag>``, so the delta is
-    id-disjoint from any base built over un-prefixed ids and resolves
-    every internal link within itself (the append_documents contract).
-    """
-    pre = F.lit(f"{tag}_")
-    nodes = build_nodes(spark, src_dir).select(
-        F.concat(pre, "id").alias("id"),
-        "node_type",
-        F.lit(f"tpch_{tag}").alias("document_id"),
-        F.when(
-            F.col("parent_id").isNotNull(), F.concat(pre, F.col("parent_id"))
-        ).alias("parent_id"),
-        "position",
-        "content",
-        F.concat(F.lit(f"/{tag}"), "xpath").alias("xpath"),
-    )
-    # prefix every table-id token inside reference-valued property
-    # strings (single refs AND the space-separated lineitem_refs
-    # lists) so attribute/multi detection resolves within the delta;
-    # non-reference values contain no `<table>_` token and pass
-    # through untouched, keeping their inferred data_type valid
-    ref_pat = r"(^|[ ,])((region|nation|customer|supplier|part|order|lineitem)_)"
-    properties = build_properties(spark, src_dir).select(
-        F.concat(pre, "node_id").alias("node_id"),
-        "property_name",
-        F.regexp_replace(F.col("property_value"), ref_pat, f"$1{tag}_$2").alias(
-            "property_value"
-        ),
-        "data_type",
-    )
-    return nodes, properties
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,4 @@
-"""Structured Streaming: incremental event analytics and store
-maintenance streams."""
+"""Structured Streaming: incremental event analytics."""
 
 from .ingest import (  # noqa: F401
     read_event_stream,
