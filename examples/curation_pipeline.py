@@ -49,7 +49,7 @@ def main() -> None:
     )
 
     # 2. line-level cleaning on the survivors
-    cleaned = C.c4_line_filter(kept, min_words=3, require_terminal_punct=False)
+    cleaned = C.c4_line_filter(kept, min_words=3)
     survivors = kept.select("doc_id").join(
         cleaned.filter(F.col("n_lines_kept") > 0).select("doc_id"), "doc_id", "left_semi"
     )

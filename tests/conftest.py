@@ -15,5 +15,5 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", shuffle_partitions=8)
+    s = get_spark(app_name="tests", extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield s

@@ -49,37 +49,6 @@ def test_ngram_jaccard_pairs(docs):
     assert (1, 4) not in pairs
 
 
-def test_ngram_jaccard_max_df(spark):
-    # every doc shares the same stopword run; pairs only exist through
-    # that hot shingle. max_df drops it from the index, so the pair
-    # universe (and the hot shuffle key) disappears.
-    stop = "and then it was and then it was and then it was"
-    docs = spark.createDataFrame(
-        [(i, f"{stop} unique{'x' * i} tail{i} content{i} here{i}") for i in range(1, 7)],
-        "doc_id long, text string",
-    )
-    hot = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.ngram_jaccard_pairs(docs, threshold=0.1).collect()
-    }
-    assert hot  # the stopword shingles do pair everything without the guard
-    cold = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.ngram_jaccard_pairs(docs, threshold=0.1, max_df=3).collect()
-    }
-    assert not cold
-    # identical docs still pair (their rare shingles survive the filter)
-    docs2 = docs.union(
-        spark.createDataFrame([(7, "uniquex tailx contentx"), (8, "uniquex tailx contentx")],
-                              "doc_id long, text string")
-    )
-    again = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(docs2, threshold=0.5, max_df=3).collect()
-    }
-    assert again[(7, 8)] == 1.0
-
-
 def test_minhash_lsh_pairs(docs):
     pairs = {
         (r["doc_a"], r["doc_b"]): r.asDict()

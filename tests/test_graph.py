@@ -9,6 +9,9 @@ from xml_to_sqlite3_spark.operators.graph import (
     bfs_distances,
     connected_components,
     duplicate_groups,
+    orient_edges,
+    out_degree_spine,
+    pagerank,
 )
 
 
@@ -151,22 +154,20 @@ def _naive_pagerank(edges, damping=0.85, n_iter=10):
     return rank
 
 
-def test_pagerank_cycle_and_star(spark):
-    from xml_to_sqlite3_spark.operators.graph import pagerank
+def _pagerank(spark, edges, **kw):
+    """pagerank over a distinct edge list, fed like the node-graph
+    store feeds it: (src, dst) edges plus their out-degree spine."""
+    e = spark.createDataFrame(edges, "src string, dst string")
+    return {r["node"]: r["rank"] for r in pagerank(e, out_degree_spine(e), **kw).collect()}
 
+
+def test_pagerank_cycle_and_star(spark):
     # 2-cycle: symmetric -> equal ranks of 0.5
-    cyc = spark.createDataFrame(
-        [("a", "b"), ("b", "a")], "source_node_id string, target_node_id string"
-    )
-    got = {r["node"]: r["rank"] for r in pagerank(cyc).collect()}
+    got = _pagerank(spark, [("a", "b"), ("b", "a")])
     assert abs(got["a"] - 0.5) < 1e-8 and abs(got["b"] - 0.5) < 1e-8
 
     # star: leaves -> center; center is dangling (mass redistributes)
-    star = spark.createDataFrame(
-        [(f"l{i}", "c") for i in range(4)],
-        "source_node_id string, target_node_id string",
-    )
-    got = {r["node"]: r["rank"] for r in pagerank(star).collect()}
+    got = _pagerank(spark, [(f"l{i}", "c") for i in range(4)])
     exp = _naive_pagerank([(f"l{i}", "c") for i in range(4)])
     for v, r in exp.items():
         assert abs(got[v] - r) < 1e-7, (v, got[v], r)
@@ -177,14 +178,11 @@ def test_pagerank_cycle_and_star(spark):
 def test_pagerank_matches_naive_on_random_graph(spark):
     import random
 
-    from xml_to_sqlite3_spark.operators.graph import pagerank
-
     rng = random.Random(11)
     nodes = [f"n{i}" for i in range(30)]
     edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(120)})
     edges = [(s, d) for s, d in edges if s != d]
-    df = spark.createDataFrame(edges, "source_node_id string, target_node_id string")
-    got = {r["node"]: r["rank"] for r in pagerank(df, n_iter=12).collect()}
+    got = _pagerank(spark, edges, n_iter=12)
     exp = _naive_pagerank(edges, n_iter=12)
     assert set(got) == set(exp)
     for v in exp:
@@ -196,7 +194,7 @@ def test_triangle_count_known_graphs(spark):
 
     def run(edges):
         df = spark.createDataFrame(edges, ["source_node_id", "target_node_id"])
-        r = triangle_count(df).collect()[0]
+        r = triangle_count(orient_edges(df)).collect()[0]
         return r["n_edges"], r["n_triangles"]
 
     # K4: 6 edges, 4 triangles
@@ -229,7 +227,7 @@ def test_triangle_count_matches_bruteforce_random(spark):
         if b in adj[a] and c in adj[a] and c in adj[b]
     )
     df = spark.createDataFrame(edges, ["source_node_id", "target_node_id"])
-    r = triangle_count(df).collect()[0]
+    r = triangle_count(orient_edges(df)).collect()[0]
     assert (r["n_edges"], r["n_triangles"]) == (len(edges), want)
 
 
@@ -258,16 +256,14 @@ def test_scoped_confs_restored(spark, tmp_path):
                 out[k] = None
         return out
 
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")],
-        "source_node_id string, target_node_id string",
-    )
+    pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")]
+    edges = spark.createDataFrame(pairs, "source_node_id string, target_node_id string")
     before = snap()
-    from xml_to_sqlite3_spark.operators.graph import pagerank, triangle_count
+    from xml_to_sqlite3_spark.operators.graph import triangle_count
 
-    pagerank(edges, n_iter=2).count()
+    _pagerank(spark, pairs, n_iter=2)
     assert snap() == before
-    triangle_count(edges).count()
+    triangle_count(orient_edges(edges)).count()
     assert snap() == before
 
     from xml_to_sqlite3_spark.operators import hierarchy, text
@@ -329,7 +325,7 @@ class TestAssortativityAndClustering:
         import numpy as np
         from xml_to_sqlite3_spark.operators.graph import degree_assortativity
 
-        row = degree_assortativity(mixed).collect()[0]
+        row = degree_assortativity(orient_edges(mixed)).collect()[0]
         assert row["n_edges"] == 11
         assert row["n_endpoints"] == 22
         edges = [tuple(r) for r in mixed.collect()]
@@ -345,7 +341,7 @@ class TestAssortativityAndClustering:
     def test_local_clustering_hand_values(self, mixed):
         from xml_to_sqlite3_spark.operators.graph import local_clustering
 
-        out = {r["node_id"]: r for r in local_clustering(mixed).collect()}
+        out = {r["node_id"]: r for r in local_clustering(orient_edges(mixed)).collect()}
         # star: hub and leaves close no triangles
         assert out[0]["coeff"] == 0.0 and out[0]["triangles"] == 0
         assert out[1]["degree"] == 1 and out[1]["coeff"] == 0.0
@@ -371,11 +367,11 @@ class TestAssortativityAndClustering:
             [(1, 2), (2, 1), (1, 2), (1, 1), (2, 3), (3, 1)],
             "source_node_id long, target_node_id long",
         )
-        row = degree_assortativity(df).collect()[0]
+        row = degree_assortativity(orient_edges(df)).collect()[0]
         assert row["n_edges"] == 3  # the simple triangle 1-2-3
         # regular graph (all degrees 2): r undefined -> NULL, not error
         assert row["assortativity"] is None
-        out = {r["node_id"]: r for r in local_clustering(df).collect()}
+        out = {r["node_id"]: r for r in local_clustering(orient_edges(df)).collect()}
         assert all(out[v]["coeff"] == 1.0 for v in (1, 2, 3))
 
 
@@ -414,7 +410,7 @@ class TestKCore:
         )
         return {
             r["node_id"]: r["coreness"]
-            for r in kcore_decomposition(df).collect()
+            for r in kcore_decomposition(orient_edges(df)).collect()
         }
 
     def test_hand_graph(self, spark):
@@ -466,7 +462,7 @@ def test_kcore_store_table_equals_live_fixpoint(spark):
     live = {
         r["node_id"]: r["coreness"]
         for r in kcore_decomposition(
-            None, und=graph_table(spark, SF_SMOKE, "tri_oriented"), stats=stats
+            graph_table(spark, SF_SMOKE, "tri_oriented"), stats=stats
         ).collect()
     }
     assert stored == live and len(stored) > 0
@@ -484,10 +480,10 @@ def test_kcore_raises_on_nonconvergence(spark):
         "source_node_id long, target_node_id long",
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        kcore_decomposition(path, max_iter=3)
+        kcore_decomposition(orient_edges(path), max_iter=3)
     # and with budget it converges to all-1 (a path has no 2-core)
     got = {
         r["node_id"]: r["coreness"]
-        for r in kcore_decomposition(path, max_iter=50).collect()
+        for r in kcore_decomposition(orient_edges(path), max_iter=50).collect()
     }
     assert set(got.values()) == {1}

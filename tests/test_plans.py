@@ -239,7 +239,7 @@ def test_xref_store_sorted_by_source_within_files(spark):
     from xml_to_sqlite3_spark.plans import node_graph as NG
 
     NG.get_graph(spark, SF_SMOKE)  # ensure the cache exists
-    root = os.path.join(GRAPH.path(NG._graph_cache_key(SF_SMOKE)), "xrefs")
+    root = os.path.join(GRAPH.root(), NG._graph_cache_key(SF_SMOKE), "xrefs")
     checked = 0
     for dirpath, _dirs, files in os.walk(root):
         for f in files:

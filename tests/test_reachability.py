@@ -1,6 +1,8 @@
 """Every top-level function, class and UPPER_CASE constant in the
 package is reached from a product entry point, or is named in ``KEEP``
-with the reason it stays.
+with the reason it stays; and every True/False/None option has a
+product call that selects its other arm, or is named in
+``KEEP_OPTIONS`` (the option pass at the end of this file).
 
 The pass is static (AST only, nothing is imported). A def is reached
 when reached code uses its name as a ``Name``, an ``Attribute`` or an
@@ -100,12 +102,16 @@ def _package():
     return bodies, seeds, defs
 
 
-def _root_names() -> set[str]:
+def _root_files() -> list[pathlib.Path]:
     files = [REPO / "__spark_entry__.py", REPO / "bench.py", PKG / "__main__.py"]
     for d in ("perfbench", "scripts", "examples"):
         files += sorted((REPO / d).glob("*.py"))
+    return files
+
+
+def _root_names() -> set[str]:
     out: set[str] = set()
-    for f in files:
+    for f in _root_files():
         out |= _names(ast.parse(f.read_text()))
     return out
 
@@ -145,3 +151,178 @@ def test_no_other_test_only_defs():
     kept def; a new test-only def is deleted or justified in KEEP."""
     dead = sorted(f"{mod}:{name}" for mod, name in _unreached_defs(KEEP))
     assert not dead, f"package defs only tests reach: {dead}"
+
+
+# ---------------------------------------------------------------------------
+# The option pass: a parameter that defaults to True, False or None and
+# that every product call leaves at one value has an arm only tests run.
+# Make it a constant or a required argument and delete the dead arm, or
+# name it here (as ``function.parameter``) with the reason it stays.
+KEEP_OPTIONS = {
+    "_check_store_meta.n": "safety check: a precomputed tokens/sigs frame "
+    "built with another shingle width must raise, whatever n the callers "
+    "forward today",
+}
+
+_VARIES = "varies"
+_NOT_NONE = "not None"
+_LITERALS = (ast.Call, ast.Tuple, ast.List, ast.Dict, ast.Set, ast.JoinedStr, ast.Lambda)
+
+
+class _Def:
+    """One function definition: its positional parameter names (a
+    method's ``self`` dropped), every parameter name, the AST default
+    of each defaulted parameter, and the names it assigns."""
+
+    def __init__(self, node, mod: str, method: bool):
+        a = node.args
+        pos = a.posonlyargs + a.args
+        self.node, self.mod = node, mod
+        self.defaults = dict(zip([p.arg for p in pos][len(pos) - len(a.defaults):], a.defaults))
+        self.defaults.update(
+            (p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+        )
+        self.pos = [p.arg for p in pos][1 if method and pos else 0:]
+        self.params = set(self.pos) | {p.arg for p in a.kwonlyargs}
+        self.stored = {
+            n.id for n in ast.walk(node)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+        }
+
+
+def _product_calls():
+    """({name: [_Def]} of every def in product code, {callee name:
+    [(Call, enclosing _Defs innermost last)]}, names used as values).
+    Product code is the package plus the reachability roots; a callee
+    is the called Name (import aliases resolved) or Attribute name."""
+    defs: dict[str, list[_Def]] = {}
+    calls: dict[str, list] = {}
+    values: set[str] = set()
+    for f in _root_files() + sorted(PKG.rglob("*.py")):
+        tree = ast.parse(f.read_text())
+        alias = {
+            a.asname: a.name
+            for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+            for a in n.names if a.asname
+        }
+        called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+        values |= {
+            n.id if isinstance(n, ast.Name) else n.attr
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Name, ast.Attribute))
+            and isinstance(n.ctx, ast.Load) and id(n) not in called
+        }
+
+        def visit(node, chain, in_class, mod=str(f.relative_to(REPO)), alias=alias):
+            for ch in ast.iter_child_nodes(node):
+                if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    static = any(
+                        isinstance(d, ast.Name) and d.id == "staticmethod"
+                        for d in ch.decorator_list
+                    )
+                    d = _Def(ch, mod, in_class and not static)
+                    defs.setdefault(ch.name, []).append(d)
+                    visit(ch, chain + [d], False)
+                    continue
+                if isinstance(ch, ast.Call):
+                    fn = ch.func
+                    if isinstance(fn, ast.Name):
+                        calls.setdefault(alias.get(fn.id, fn.id), []).append((ch, chain))
+                    elif isinstance(fn, ast.Attribute):
+                        calls.setdefault(fn.attr, []).append((ch, chain))
+                visit(ch, chain, isinstance(ch, ast.ClassDef))
+
+        visit(tree, [], False)
+    return defs, calls, values
+
+
+def _single_valued_options() -> dict[str, object]:
+    """{"module:function.parameter": its one value} for each package
+    parameter defaulting to True/False/None whose every product call
+    leaves it out, passes a constant, forwards an enclosing def's
+    parameter that resolves the same way, or (for a None default)
+    passes a call or literal — "not None". ``*args``/``**kwargs`` at a
+    call, any other expression, and a def never called by name (or
+    also used as a value, e.g. stored in a dict) vary, so the pass can
+    only under-report."""
+    defs, calls, values = _product_calls()
+    memo: dict[tuple[int, str], set] = {}
+
+    def value(d: _Def, p: str, call: ast.Call, chain) -> set:
+        if any(isinstance(a, ast.Starred) for a in call.args) or any(
+            k.arg is None for k in call.keywords
+        ):
+            return {_VARIES}
+        expr = next((k.value for k in call.keywords if k.arg == p), None)
+        if expr is None and p in d.pos and d.pos.index(p) < len(call.args):
+            expr = call.args[d.pos.index(p)]
+        if expr is None:
+            if p not in d.defaults:
+                return {_VARIES}
+            expr = d.defaults[p]
+        if isinstance(expr, (ast.Constant, ast.UnaryOp)):
+            try:
+                return {repr(ast.literal_eval(expr))}
+            except ValueError:
+                return {_VARIES}
+        if isinstance(expr, ast.Name):
+            for outer in reversed(chain):
+                if expr.id in outer.params and expr.id not in outer.stored:
+                    return resolve(outer, expr.id)
+                if expr.id in outer.params or expr.id in outer.stored:
+                    break
+            return {_VARIES}
+        default = d.defaults.get(p)
+        if isinstance(default, ast.Constant) and default.value is None and isinstance(
+            expr, _LITERALS
+        ):
+            return {_NOT_NONE}
+        return {_VARIES}
+
+    def resolve(d: _Def, p: str) -> set:
+        key = (id(d), p)
+        if key not in memo:
+            memo[key] = {_VARIES}  # a recursive forward varies
+            sites = calls.get(d.node.name, [])
+            out = {_VARIES} if not sites or d.node.name in values else set()
+            for call, chain in sites:
+                out |= value(d, p, call, chain)
+            memo[key] = out
+        return memo[key]
+
+    found = {}
+    for name, ds in defs.items():
+        for d in ds:
+            if not d.mod.startswith(PKG.name):
+                continue
+            for p, default in d.defaults.items():
+                if not (
+                    isinstance(default, ast.Constant)
+                    and (default.value is None or isinstance(default.value, bool))
+                ):
+                    continue
+                vals = resolve(d, p)
+                if len(vals) == 1 and _VARIES not in vals:
+                    found[f"{d.mod}:{name}.{p}"] = next(iter(vals))
+    return found
+
+
+def test_keep_options_are_single_valued():
+    """A KEEP_OPTIONS entry whose parameter is gone or now varies must
+    leave KEEP_OPTIONS."""
+    found = {k.split(":", 1)[1] for k in _single_valued_options()}
+    stale = sorted(set(KEEP_OPTIONS) - found)
+    assert not stale, f"KEEP_OPTIONS names no single-valued option: {stale}"
+
+
+def test_no_single_valued_options():
+    """Every other True/False/None option has a product call that
+    selects its other arm."""
+    found = {
+        k: v for k, v in _single_valued_options().items()
+        if k.split(":", 1)[1] not in KEEP_OPTIONS
+    }
+    assert not found, (
+        "options every product call leaves at one value (make them a "
+        f"constant or a required argument, or justify in KEEP_OPTIONS): {found}"
+    )

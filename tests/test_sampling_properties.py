@@ -76,7 +76,7 @@ def test_temperature_mix_invariants(spark, sizes):
         for j in range(min(n % 7 + 1, 7))
     ]
     df = spark.createDataFrame(data, "doc_id long, source string, n_chars long")
-    out = C.temperature_mix(df, alpha=0.7).collect()
+    out = C.temperature_mix(df, "n_chars", alpha=0.7).collect()
     # shares are distributions
     assert abs(sum(r["raw_share"] for r in out) - 1.0) < 1e-4
     assert abs(sum(r["temp_share"] for r in out) - 1.0) < 1e-4

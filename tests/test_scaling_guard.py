@@ -163,7 +163,7 @@ def test_kcore_rounds_tripwire(warmed, spark):
 
     rounds = {}
     for sf, bound in ((SF_SMALL, 30), (SF_BIG, 45)):
-        store = GRAPH.path(ng._graph_cache_key(sf))
+        store = os.path.join(GRAPH.root(), ng._graph_cache_key(sf))
         sidecar = os.path.join(store, "kcore_stats.json")
         assert os.path.exists(sidecar), (
             f"{sf}: store published without kcore_stats.json — the build "

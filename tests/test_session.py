@@ -77,3 +77,20 @@ def test_origin_capture_off():
     from pyspark.errors.utils import is_debugging_enabled
 
     assert is_debugging_enabled() is False
+
+
+def test_driver_memory_fits_the_machine(spark):
+    """Without ``SPARK_GRAFT_DRIVER_MEM`` the driver heap follows the
+    machine: a local-mode JVM allowed to grow past physical memory is
+    killed by the kernel mid-build instead of failing with an error."""
+    import os
+
+    mem = spark.sparkContext.getConf().get("spark.driver.memory")
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        assert mem == override
+        return
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    heap = int(mem[:-1]) * units[mem[-1].lower()]
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    assert heap <= phys, (mem, phys)

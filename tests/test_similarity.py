@@ -670,125 +670,11 @@ class TestPca:
         assert ok, detail
 
 
-class TestIvfPqResidual:
-    """Residual (Jégou-style) IVF-ADC: codes quantize x - centroid,
-    ADC uses a per-probed-cluster distance table."""
-
-    @pytest.fixture(scope="class")
-    def corpus(self, spark):
-        rows = [(i, _vec(i)) for i in range(60)]
-        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    @pytest.fixture(scope="class")
-    def models(self, corpus):
-        import numpy as np
-
-        cents = S.spherical_kmeans(corpus, k=8, n_iter=3)
-        # residual frame replica for training: x - normalized-centroid
-        X = np.array([_vec(i) for i in range(60)])
-        return cents, X
-
-    def test_encode_matches_numpy_replica(self, spark, corpus, models):
-        import numpy as np
-
-        cents, X = models
-        C = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-        Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-        cl = np.argmax(Xn @ C.T, axis=1)
-        R = X - C[cl]
-        res_df = spark.createDataFrame(
-            [(i, list(map(float, R[i]))) for i in range(60)],
-            "vec_id long, embedding array<double>",
-        )
-        books = S.pq_train(res_df, m=4, ks=8, n_iter=2)
-        got = {
-            r["vec_id"]: (r["cluster"], list(r["codes"]))
-            for r in S.ivf_pq_index(corpus, cents, books, residual=True).collect()
-        }
-        m, ks, sub = books.shape
-        for i in range(60):
-            want_codes = [
-                int(((books[j] - R[i, j * sub : (j + 1) * sub]) ** 2)
-                    .sum(axis=1).argmin())
-                for j in range(m)
-            ]
-            assert got[i] == (int(cl[i]), want_codes), i
-
-    def test_residual_adc_matches_replica_and_recall(self, spark, corpus, models):
-        import numpy as np
-
-        cents, X = models
-        C = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-        Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-        cl = np.argmax(Xn @ C.T, axis=1)
-        R = X - C[cl]
-        res_df = spark.createDataFrame(
-            [(i, list(map(float, R[i]))) for i in range(60)],
-            "vec_id long, embedding array<double>",
-        )
-        books = S.pq_train(res_df, m=4, ks=8, n_iter=3)
-        index = S.ivf_pq_index(corpus, cents, books, residual=True)
-        q = np.asarray(_vec(7))
-        out = S.ivf_pq_topk(
-            index, cents, books, q, k=10, n_probe=8, residual=True
-        ).collect()
-        # replica: per-row ADC = sum over subspaces of
-        # ||books[j][code] - (q - C[cluster])[j-th slice]||^2
-        m, ks, sub = books.shape
-        codes = {
-            r["vec_id"]: (r["cluster"], np.asarray(r["codes"]))
-            for r in index.collect()
-        }
-        for r in out:
-            c, cd = codes[r["vec_id"]]
-            qr = q - C[c]
-            want = sum(
-                float(((books[j][cd[j]] - qr[j * sub : (j + 1) * sub]) ** 2).sum())
-                for j in range(m)
-            )
-            assert r["adc_dist"] == pytest.approx(round(want, 6), abs=1e-6)
-        # quality: residual ADC at full probe must recover most of the
-        # exact L2 top-10 on this corpus (raw-mode measured 0.55-0.7 on
-        # harder corpora; residual should not be WORSE than the same
-        # bound)
-        exact = sorted(
-            range(60), key=lambda i: float(((X[i] - q) ** 2).sum())
-        )[:10]
-        approx = {r["vec_id"] for r in out}
-        assert len(approx & set(exact)) / 10 >= 0.6
-
-    def test_persistent_residual_index(self, spark, corpus, tmp_path, monkeypatch):
-        monkeypatch.setenv("SPARK_GRAFT_CODEBOOK_CACHE", str(tmp_path / "cb"))
-        base_path = str(tmp_path / "base_vecs")
-        corpus.write.parquet(base_path)
-        kw = dict(n_centroids=8, m=4, ks=8, n_iter=2)
-        idx = S.get_ivf_pq_index(spark, base_path, residual=True, **kw)
-        # residual and raw entries are DIFFERENT artifacts
-        idx_raw = S.get_ivf_pq_index(spark, base_path, residual=False, **kw)
-        res_rows = {(r["vec_id"], tuple(r["codes"])) for r in idx.collect()}
-        raw_rows = {(r["vec_id"], tuple(r["codes"])) for r in idx_raw.collect()}
-        assert res_rows != raw_rows
-        # the residual entry equals a fresh residual encode of the corpus
-        # under the same persistent models
-        cents = S.get_codebook(spark, base_path, k=8, n_iter=2)
-        books = S.get_residual_pq_codebooks(spark, base_path, n_centroids=8,
-                                            m=4, ks=8, n_iter=2)
-        want = {
-            (r["vec_id"], r["cluster"], tuple(r["codes"]))
-            for r in S.ivf_pq_index(corpus, cents, books, residual=True).collect()
-        }
-        got = {
-            (r["vec_id"], r["cluster"], tuple(r["codes"]))
-            for r in idx.collect()
-        }
-        assert got == want
-        CODEBOOK.clear()
-
-
 class TestIvfPqResidualMarker:
-    """ADVICE r13: the index relation carries its encoding flag in the
-    codes column metadata; ivf_pq_topk turns a residual-flag mismatch
-    into a loud error instead of silently-wrong ADC distances."""
+    """ADVICE r13: the index relation carries its encoding flag (the
+    OPQ rotation) in the codes column metadata; ivf_pq_topk turns a
+    mismatch into a loud error instead of silently-wrong ADC
+    distances."""
 
     @pytest.fixture(scope="class")
     def corpus(self, spark):
@@ -802,28 +688,32 @@ class TestIvfPqResidualMarker:
         return cents, books
 
     def test_mismatch_raises_both_ways(self, corpus, models):
+        import numpy as np
+
         cents, books = models
-        raw = S.ivf_pq_index(corpus, cents, books, residual=False)
-        res = S.ivf_pq_index(corpus, cents, books, residual=True)
+        raw = S.ivf_pq_index(corpus, cents, books)
+        rot = S.ivf_pq_index(corpus, cents, books, rotation=np.eye(DIM))
         q = _vec(3)
-        with pytest.raises(ValueError, match="encoded with residual=False"):
-            S.ivf_pq_topk(raw, cents, books, q, residual=True)
-        with pytest.raises(ValueError, match="encoded with residual=True"):
-            S.ivf_pq_topk(res, cents, books, q, residual=False)
+        with pytest.raises(ValueError, match="encoded with rotate=False"):
+            S.ivf_pq_topk(raw, cents, books, q, rotation=np.eye(DIM))
+        with pytest.raises(ValueError, match="encoded with rotate=True"):
+            S.ivf_pq_topk(rot, cents, books, q)
 
     def test_marker_survives_parquet(self, spark, corpus, models, tmp_path):
         # the persistent entry is a partitioned parquet dir — the
         # marker must ride the schema footer through write+read, so
         # an attached index is protected too
+        import numpy as np
+
         cents, books = models
         p = str(tmp_path / "idx")
-        S.ivf_pq_index(corpus, cents, books, residual=True).write.mode(
+        S.ivf_pq_index(corpus, cents, books, rotation=np.eye(DIM)).write.mode(
             "overwrite"
         ).partitionBy("cluster").parquet(p)
         back = spark.read.parquet(p)
-        assert back.schema["codes"].metadata.get("ivfpq_residual") is True
-        with pytest.raises(ValueError, match="encoded with residual=True"):
-            S.ivf_pq_topk(back, cents, books, _vec(3), residual=False)
+        assert back.schema["codes"].metadata.get("ivfpq_rotate") is True
+        with pytest.raises(ValueError, match="encoded with rotate=True"):
+            S.ivf_pq_topk(back, cents, books, _vec(3))
 
     def test_unmarked_index_keeps_permissive_contract(self, spark, models):
         # indexes from other producers (no marker) skip the check
@@ -832,7 +722,7 @@ class TestIvfPqResidualMarker:
             [(1, 0, [0, 0, 0, 0])],
             "vec_id long, cluster int, codes array<int>",
         )
-        S.ivf_pq_topk(bare, cents, books, _vec(3), residual=False).collect()
+        S.ivf_pq_topk(bare, cents, books, _vec(3)).collect()
 
 
 class TestOpqRotation:
@@ -878,10 +768,10 @@ class TestOpqRotation:
     def test_rotated_encode_matches_numpy_replica(self, corpus, rot_models):
         import numpy as np
 
-        R, _, books = rot_models
+        R, cents, books = rot_models
         got = {
             r["vec_id"]: list(r["codes"])
-            for r in S.pq_encode(corpus, books, rotation=R).collect()
+            for r in S.ivf_pq_index(corpus, cents, books, rotation=R).collect()
         }
         m, ks, sub = books.shape
         for vid, vec in [(i, _vec(i)) for i in range(60)] + [(300, _vec(7))]:
@@ -902,8 +792,8 @@ class TestOpqRotation:
         distance == its own quantization error."""
         import numpy as np
 
-        R, _, books = rot_models
-        codes = S.pq_encode(corpus, books, rotation=R)
+        R, cents, books = rot_models
+        codes = S.ivf_pq_index(corpus, cents, books, rotation=R)
         q = _vec(7)
         top = S.pq_topk(codes, books, q, k=3, rotation=R).collect()
         ids = [r["vec_id"] for r in top]
@@ -915,11 +805,10 @@ class TestOpqRotation:
     ):
         R, cents, books = rot_models
         index = S.ivf_pq_index(corpus, cents, books, rotation=R)
-        codes = S.pq_encode(corpus, books, rotation=R)
         q = _vec(7)
         flat = [
             (r["vec_id"], r["adc_dist"])
-            for r in S.pq_topk(codes, books, q, k=15, rotation=R).collect()
+            for r in S.pq_topk(index, books, q, k=15, rotation=R).collect()
         ]
         ivf = [
             (r["vec_id"], r["adc_dist"])

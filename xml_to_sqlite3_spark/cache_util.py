@@ -71,12 +71,11 @@ def content_key(
     src_path: str,
     extra: str = "",
     code_files: tuple[str, ...] = (),
-    suffixes: tuple[str, ...] | None = None,
 ) -> str:
     """Cache key from the INPUT's identity (path + per-file size and
-    mtime, restricted to ``suffixes`` when given so stray files — a
-    writer's _SUCCESS/.crc, editor temp files — don't force spurious
-    rebuilds) and the BUILD CODE's bytes (``code_files`` — this
+    mtime of its ``.parquet`` entries, so stray files — a writer's
+    _SUCCESS/.crc, editor temp files — don't force spurious rebuilds)
+    and the BUILD CODE's bytes (``code_files`` — this
     module is always included, so helper behavior changes invalidate
     every entry too). ``extra`` folds in build parameters (e.g.
     which columns an index was built over) and participates in the
@@ -88,7 +87,7 @@ def content_key(
     real = os.path.realpath(src_path)
     h.update(real.encode())
     h.update(extra.encode())
-    h.update(stat_fingerprint(real, suffixes).encode())
+    h.update(stat_fingerprint(real, (".parquet",)).encode())
     h.update(_code_digest((*code_files, __file__)))
     sfh = hashlib.sha256(f"{real}|{extra}".encode()).hexdigest()[:10]
     return f"{prefix}_{sfh}_{h.hexdigest()[:16]}"
@@ -231,9 +230,6 @@ class Store:
         return os.environ.get(
             self.env, os.path.join(tempfile.gettempdir(), self.default)
         )
-
-    def path(self, key: str) -> str:
-        return os.path.join(self.root(), key)
 
     def get(self, spark, key: str, build: Callable[[str], None], load: Callable):
         """``load(final)`` of the published entry for ``key``, building

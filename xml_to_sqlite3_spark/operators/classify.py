@@ -211,7 +211,7 @@ def nb_score_proba(
     # max(when(...)) below would otherwise return NULL for EVERY doc,
     # silently poisoning downstream AUC/calibration. class_stats is
     # model-sized, so this eager check is one tiny collect (the
-    # binary_auc check_nonempty laziness note applies).
+    # binary_auc laziness note applies).
     labels = [r["label"] for r in fitted["class_stats"].select("label").collect()]
     if target not in labels:
         raise ValueError(
@@ -245,7 +245,6 @@ def binary_auc(
     df: DataFrame,
     label_col: str = "label",
     score_col: str = "prob",
-    check_nonempty: bool = True,
 ) -> DataFrame:
     """Exact ROC-AUC of a binary classifier via the Mann–Whitney
     rank statistic with proper tie handling — the evaluation step a
@@ -274,9 +273,9 @@ def binary_auc(
     exclusion keeps engine parity, since Spark windows order NULLs
     first while DuckDB orders them last.
 
-    NOTE (laziness, the psi/ks precedent): ``check_nonempty=True``
+    NOTE (laziness, the psi/ks precedent): the both-classes guard
     eagerly materializes the BOUNDED distinct-score relation
-    (localCheckpoint) and runs the guard on it, so the expensive
+    (localCheckpoint) and runs on it, so the expensive
     upstream pipeline (e.g. the full NB scoring DAG) evaluates ONCE —
     the guard and the returned AUC plan both read the checkpoint.
     """
@@ -289,19 +288,15 @@ def binary_auc(
         .groupBy("s")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos"))
         .withColumn("neg", F.col("n") - F.col("pos"))
+        .localCheckpoint(eager=True)
     )
-    if check_nonempty:
-        g = g.localCheckpoint(eager=True)
-        tot = g.agg(
-            F.sum("pos").alias("p"), F.sum("neg").alias("n")
-        ).collect()[0]
-        if not tot["p"] or not tot["n"]:
-            raise ValueError(
-                f"binary_auc: need both classes present, got "
-                f"{tot['p'] or 0} positives / {tot['n'] or 0} negatives "
-                "— AUC is undefined (pass check_nonempty=False to defer "
-                "to an evaluation-time error)"
-            )
+    tot = g.agg(F.sum("pos").alias("p"), F.sum("neg").alias("n")).collect()[0]
+    if not tot["p"] or not tot["n"]:
+        raise ValueError(
+            f"binary_auc: need both classes present, got "
+            f"{tot['p'] or 0} positives / {tot['n'] or 0} negatives "
+            "— AUC is undefined"
+        )
     w = W.orderBy("s").rowsBetween(W.unboundedPreceding, -1)
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     cum = g.withColumn(

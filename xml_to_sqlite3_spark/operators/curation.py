@@ -737,13 +737,12 @@ def hll_distinct(df: DataFrame, col: str, m: int = 64) -> DataFrame:
 
 def dsir_select(
     raw: DataFrame,
-    target: DataFrame,
+    target_ids: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = 1024,
     alpha: float = 0.5,
     k: int = 100,
-    target_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Data Selection with Importance Resampling (DSIR, Xie et al.
     2023): score every raw document that produced at least one token
@@ -765,8 +764,15 @@ def dsir_select(
     (fully value-oracled), and still distributionally faithful to
     importance resampling.
 
-    Scale shape: two explode+count passes (map-side combinable), one
-    broadcast join against the 1024-row model, per-gram log-ratios
+    The target is a SUBSET of ``raw`` (the DSIR shape — "select raw
+    docs that look like my in-domain slice"), given as its ids
+    (``target_ids``, an ``id_col`` column): the target's bucket counts
+    come from the already-materialized raw postings via one semi-join
+    instead of a second tokenize+UDF+explode pass over the target
+    text (the target rows' (doc, bucket) postings ARE those raw rows).
+
+    Scale shape: one explode pass and two map-side-combinable
+    counts, one broadcast join against the 1024-row model, per-gram log-ratios
     rounded then DECIMAL-summed (order-independent at any cluster
     size), and the top-k cut is a TakeOrdered threshold broadcast —
     no global window over the corpus."""
@@ -788,16 +794,17 @@ def dsir_select(
                 )
         return pd.Series(out)
 
-    def grams(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(uni_bi(tokenize(F.col(text_col)))).alias("g"),
-        ).select("doc_id", (stable_hash60(F.col("g")) % n_buckets).alias("b"))
-
     # raw_b feeds BOTH the model fit and the per-doc scoring —
     # materialize the (doc, bucket) postings once instead of running
     # the tokenize+explode twice (the repo-wide two-consumer rule)
-    raw_b = grams(raw).localCheckpoint(eager=True)
+    raw_b = (
+        raw.select(
+            F.col(id_col).alias("doc_id"),
+            F.explode(uni_bi(tokenize(F.col(text_col)))).alias("g"),
+        )
+        .select("doc_id", (stable_hash60(F.col("g")) % n_buckets).alias("b"))
+        .localCheckpoint(eager=True)
+    )
     # both bucket-count tables are 1024-row MODELS with two consumers
     # each (the totals aggregate and the log-ratio join) — without
     # the checkpoints the data-sized counting pass (and the target
@@ -807,19 +814,9 @@ def dsir_select(
         .agg(F.count(F.lit(1)).alias("rc"))
         .localCheckpoint(eager=False)
     )
-    # r15: when the target is a SUBSET of ``raw`` (the common DSIR
-    # shape — "select raw docs that look like my in-domain slice"),
-    # ``target_ids`` lets the target's bucket counts come from the
-    # already-materialized raw postings via one semi-join instead of
-    # a second tokenize+UDF+explode pass over the target text
-    # (guide §1.2-1: don't compute things twice). Values identical:
-    # the target rows' (doc, bucket) postings ARE those raw_b rows.
-    if target_ids is not None:
-        tgt_b = raw_b.join(
-            target_ids.select(F.col(id_col).alias("doc_id")), "doc_id", "left_semi"
-        )
-    else:
-        tgt_b = grams(target)
+    tgt_b = raw_b.join(
+        target_ids.select(F.col(id_col).alias("doc_id")), "doc_id", "left_semi"
+    )
     tgt_counts = (
         tgt_b
         .groupBy("b")
@@ -907,16 +904,14 @@ def _exploded_lines(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def c4_line_filter(
     df: DataFrame,
     min_words: int = 3,
-    require_terminal_punct: bool = True,
-    drop_brace_lines: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """C4-style line-level cleaning: drop lines with fewer than
-    ``min_words`` words, lines not ending in terminal punctuation
-    (. ! ? or a closing quote — the C4 heuristic for boilerplate
-    menus/headers), and lines containing curly braces (leaked
-    code/templating). Returns (id, clean_text, n_lines_kept,
+    ``min_words`` words and lines containing curly braces (leaked
+    code/templating). C4's terminal-punctuation rule is not applied:
+    unpunctuated text (this corpus's vocabulary has none) would lose
+    every line. Returns (id, clean_text, n_lines_kept,
     n_lines_total) with surviving lines rejoined in order; documents
     whose every line is dropped survive with clean_text = ''.
 
@@ -933,12 +928,12 @@ def c4_line_filter(
     lines = F.split(F.col(text_col), "\n")
 
     def _keep(ln):
-        k = (ln != "") & (F.size(F.split(ln, r"\s+")) >= min_words)
-        if require_terminal_punct:
-            k = k & ln.rlike("[.!?][\"')\\]]?$")
-        if drop_brace_lines:
-            k = k & ~ln.contains("{") & ~ln.contains("}")
-        return k
+        return (
+            (ln != "")
+            & (F.size(F.split(ln, r"\s+")) >= min_words)
+            & ~ln.contains("{")
+            & ~ln.contains("}")
+        )
 
     kept = F.filter(F.transform(lines, F.trim), _keep)
     return df.select(
@@ -1207,7 +1202,6 @@ def merge_upsert(
     changes: DataFrame,
     key_col: str = "doc_id",
     op_col: str = "op",
-    seq_col: str | None = None,
 ) -> DataFrame:
     """CDC MERGE: apply a change set (op in 'upsert' | 'delete') to a
     base table — the lakehouse MERGE INTO expressed as one
@@ -1217,9 +1211,8 @@ def merge_upsert(
     Shape: the change set (usually a tiny fraction of the base)
     broadcasts when small, else one co-partitioned equi-join on the
     key; the base is never reshuffled beyond that join. With multiple
-    change rows per key, ``seq_col`` (a real change sequence — LSN,
-    commit timestamp) picks the winner; without one, the tie-break is
-    the full value tuple — arbitrary but a PURE FUNCTION OF THE DATA.
+    change rows per key, the tie-break is the full value tuple —
+    arbitrary but a PURE FUNCTION OF THE DATA.
     (A monotonically_increasing_id tie-break would encode partition
     layout in its high bits and make the winner depend on file
     assignment — run-to-run nondeterminism.)
@@ -1230,10 +1223,7 @@ def merge_upsert(
     if missing:
         raise ValueError(f"changes missing value columns: {missing}")
 
-    if seq_col is not None:
-        order = [F.col(seq_col).desc()]
-    else:
-        order = [F.col(c).desc_nulls_last() for c in changes.columns if c != key_col]
+    order = [F.col(c).desc_nulls_last() for c in changes.columns if c != key_col]
     w = Window.partitionBy(key_col).orderBy(*order)
     latest = (
         changes.withColumn("__rn", F.row_number().over(w))
@@ -1288,11 +1278,7 @@ def scd2_build(
     )
 
 
-def table_profile(
-    df: DataFrame,
-    columns: Sequence[str] | None = None,
-    approx: bool = False,
-) -> DataFrame:
+def table_profile(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     """ANALYZE-style column statistics with NO per-column scans (two
     single-scan aggregates): for each column — row count, null count,
     distinct count, min/max (as strings for a uniform schema). The
@@ -1302,20 +1288,11 @@ def table_profile(
     Two full-scan aggregates (ALL columns' plain stats in one, ALL
     distinct counts in the other — never per-column scans), crossJoined
     as 1-row frames; see the in-body note for why one combined
-    aggregate planned as a sorted (not hashed) aggregation.
-    ``approx=False`` (the
-    oracle-gated default) uses exact count_distincts — Catalyst
-    expands N of them to N x the scan rows, fine at gate scale;
-    ``approx=True`` is the 100 TB path: approx_count_distinct (HLL++,
-    constant sketch state per column) in the exact same plan shape,
-    tolerance-tested against the exact twin.
+    aggregate planned as a sorted (not hashed) aggregation. Distinct
+    counts are exact (oracle-gated): Catalyst expands N
+    count_distincts to N x the scan rows, fine at gate scale.
     """
-    cols = list(columns) if columns is not None else df.columns
-    nd = (
-        (lambda c: F.approx_count_distinct(c, rsd=0.02))
-        if approx
-        else F.countDistinct
-    )
+    cols = list(columns)
     # r15: the stats and the distincts run as TWO aggregates over the
     # scan, crossJoined (both are 1-row, model-sized). Mixing them in
     # one agg put string min/max buffers (immutable — not
@@ -1343,7 +1320,7 @@ def table_profile(
             "column string, n_rows bigint, n_nulls bigint, "
             "n_distinct bigint, min_value string, max_value string",
         )
-    nd_aggs = [nd(c).alias(f"__nd_{c}") for c in cols]
+    nd_aggs = [F.countDistinct(c).alias(f"__nd_{c}") for c in cols]
     row = df.agg(*base_aggs).crossJoin(F.broadcast(df.agg(*nd_aggs)))
     parts = [
         F.struct(
@@ -1889,8 +1866,8 @@ def weighted_sample(
     df: DataFrame,
     weight_col: str,
     k: int,
+    group_col: str,
     key: str = "doc_id",
-    group_col: str | None = None,
 ) -> DataFrame:
     """Efraimidis–Spirakis weighted sampling without replacement:
     sample_key = ln(w) + Gumbel(u) with the Gumbel noise derived
@@ -1903,39 +1880,25 @@ def weighted_sample(
     "sample documents proportional to length/quality within each
     source".
 
-    With ``group_col``, top-k PER GROUP via a group-partitioned
-    window (groups are model-sized: sources, languages); without it,
-    a global top-k via the kth-key threshold (TakeOrdered + broadcast
-    scalar — no global window), where 6dp key ties at the threshold
-    may admit extras (same documented semantics as dsir_selection).
+    Top-k PER GROUP of ``group_col`` via a group-partitioned window
+    (groups are model-sized: sources, languages).
 
     Non-positive or NULL weights get a NULL sample_key and are never
-    selected. Returns (group_col?, key, weight_col, sample_key,
+    selected. Returns (group_col, key, weight_col, sample_key,
     selected) ordered by key — deterministic, fully SQL-replayable.
     """
     w = F.col(weight_col).cast("double")
     u = (stable_hash60(F.col(key)) + 0.5) / F.lit(HASH_SPACE)
     skey = F.when(w > 0, F.round(F.log(w) - F.log(-F.log(u)), 6))
-    cols = ([group_col] if group_col else []) + [key, weight_col]
+    cols = [group_col, key, weight_col]
     scored = df.select(*cols, skey.alias("sample_key"))
-    pos = scored.filter(F.col("sample_key").isNotNull())
-    if group_col is not None:
-        win = Window.partitionBy(group_col).orderBy(
-            F.desc("sample_key"), F.asc(key)
-        )
-        ranked = pos.withColumn("__rk", F.row_number().over(win)).select(
-            key, (F.col("__rk") <= k).alias("__sel")
-        )
-        out = scored.join(ranked, key, "left")
-    else:
-        kth = (
-            pos.orderBy(F.desc("sample_key"), F.asc(key))
-            .limit(k)
-            .agg(F.min("sample_key").alias("__th"))
-        )
-        out = scored.crossJoin(F.broadcast(kth)).withColumn(
-            "__sel", F.col("sample_key") >= F.col("__th")
-        )
+    win = Window.partitionBy(group_col).orderBy(F.desc("sample_key"), F.asc(key))
+    ranked = (
+        scored.filter(F.col("sample_key").isNotNull())
+        .withColumn("__rk", F.row_number().over(win))
+        .select(key, (F.col("__rk") <= k).alias("__sel"))
+    )
+    out = scored.join(ranked, key, "left")
     return out.select(
         *cols,
         "sample_key",
@@ -1945,14 +1908,14 @@ def weighted_sample(
 
 def temperature_mix(
     df: DataFrame,
+    weight_col: str,
     alpha: float = 0.7,
     source_col: str = "source",
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Temperature-scaled source mixing (the GPT-3/PaLM multilingual
     recipe): sampling share p_s ∝ n_s^alpha, where n_s is the
-    source's size (row count, or the sum of ``weight_col`` — e.g.
-    chars/tokens — when given) and alpha < 1 flattens the head so
+    source's size (the sum of ``weight_col`` — e.g. chars/tokens)
+    and alpha < 1 flattens the head so
     low-resource sources are up-sampled. Returns one row per source:
     (source, n, raw_share, temp_share, boost) with boost =
     temp_share / raw_share — the per-source up/down-sampling factor a
@@ -1962,9 +1925,7 @@ def temperature_mix(
     1-row broadcast total — model-sized everywhere after the first
     aggregate, so the operator costs one scan at any corpus size.
     """
-    n = (
-        F.sum(F.col(weight_col).cast("double")) if weight_col else F.count(F.lit(1)).cast("double")
-    )
+    n = F.sum(F.col(weight_col).cast("double"))
     per = df.groupBy(F.col(source_col).alias("source")).agg(n.alias("n"))
     totals = per.agg(
         F.sum("n").alias("__tot"),
@@ -2001,7 +1962,6 @@ def psi_drift(
     value_col: str = "value",
     bins: int = 10,
     eps: float = 1e-6,
-    check_nonempty: bool = True,
 ) -> DataFrame:
     """Population Stability Index between a reference window and a
     current window of a numeric column — the standard production
@@ -2028,13 +1988,9 @@ def psi_drift(
     on), ordered by bin.
 
     NOTE the empty-window guard is EAGER (the hard_negative_topk
-    contract): with ``check_nonempty`` (the default), CALLING this
-    function runs two 1-row count jobs before any result is consumed
-    — the returned frame is otherwise lazy as usual. Pass ``False``
-    to restore a fully lazy call when composing plans; an empty
-    window then surfaces only at evaluation, as Spark's ANSI
-    divide-by-zero on the 0/0 fractions — later and less named than
-    this guard's error.
+    contract): CALLING this function runs two 1-row count jobs before
+    any result is consumed — the returned frame is otherwise lazy as
+    usual.
     """
     r = ref.select(F.col(value_col).cast("double").alias("x"))
     c = cur.select(F.col(value_col).cast("double").alias("x"))
@@ -2054,19 +2010,18 @@ def psi_drift(
     n_cur = c.agg(F.count(F.lit(1)).cast("double").alias("nc")).localCheckpoint(
         eager=False
     )
-    if check_nonempty:
-        if not st.head()["nr"]:
-            raise ValueError(
-                "psi_drift: reference window has zero rows (after casting "
-                f"{value_col!r} to double); PSI fractions would be NaN — "
-                "fix the window predicate or the upstream feed"
-            )
-        if not n_cur.head()["nc"]:
-            raise ValueError(
-                "psi_drift: current window has zero rows (after casting "
-                f"{value_col!r} to double); PSI fractions would be NaN — "
-                "fix the window predicate or the upstream feed"
-            )
+    if not st.head()["nr"]:
+        raise ValueError(
+            "psi_drift: reference window has zero rows (after casting "
+            f"{value_col!r} to double); PSI fractions would be NaN — "
+            "fix the window predicate or the upstream feed"
+        )
+    if not n_cur.head()["nc"]:
+        raise ValueError(
+            "psi_drift: current window has zero rows (after casting "
+            f"{value_col!r} to double); PSI fractions would be NaN — "
+            "fix the window predicate or the upstream feed"
+        )
     width = F.greatest(
         (F.col("mx") - F.col("mn")) / F.lit(float(bins)), F.lit(eps)
     )
@@ -2120,7 +2075,6 @@ def ks_drift(
     cur: DataFrame,
     value_col: str = "value",
     buckets: int = 1024,
-    check_nonempty: bool = True,
 ) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov statistic between a
     reference and a current window — PSI's nonparametric sibling
@@ -2144,11 +2098,9 @@ def ks_drift(
 
     Fail-loud on an empty window (the psi_drift contract): an empty
     side has no CDF and a silent 0/NaN would defeat the monitor.
-    NOTE the guard is EAGER (the hard_negative_topk contract): with
-    ``check_nonempty`` (the default), CALLING this function runs a
-    1-row stats job before any result is consumed — the returned
-    frame is otherwise lazy as usual. Pass ``False`` to restore a
-    fully lazy call when composing plans.
+    NOTE the guard is EAGER (the hard_negative_topk contract):
+    CALLING this function runs a 1-row stats job before any result is
+    consumed — the returned frame is otherwise lazy as usual.
 
     Returns ONE row: (ks_stat, at_value, n_ref, n_cur) — the
     statistic (6dp), the smallest value attaining it, and the two
@@ -2172,20 +2124,19 @@ def ks_drift(
         F.min("x").alias("mn"),
         F.max("x").alias("mx"),
     ).localCheckpoint(eager=False)
-    if check_nonempty:
-        srow = st.head()
-        if not srow["n_ref"]:
-            raise ValueError(
-                "ks_drift: reference window has zero non-null rows (after "
-                f"casting {value_col!r} to double) — no CDF to compare; fix "
-                "the window predicate or the upstream feed"
-            )
-        if not srow["n_cur"]:
-            raise ValueError(
-                "ks_drift: current window has zero non-null rows (after "
-                f"casting {value_col!r} to double) — no CDF to compare; fix "
-                "the window predicate or the upstream feed"
-            )
+    srow = st.head()
+    if not srow["n_ref"]:
+        raise ValueError(
+            "ks_drift: reference window has zero non-null rows (after "
+            f"casting {value_col!r} to double) — no CDF to compare; fix "
+            "the window predicate or the upstream feed"
+        )
+    if not srow["n_cur"]:
+        raise ValueError(
+            "ks_drift: current window has zero non-null rows (after "
+            f"casting {value_col!r} to double) — no CDF to compare; fix "
+            "the window predicate or the upstream feed"
+        )
     width = F.greatest(
         (F.col("mx") - F.col("mn")) / F.lit(float(buckets)), F.lit(1e-12)
     )

@@ -110,7 +110,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_df: int | None = None,
     tokens: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing at least
@@ -119,11 +118,9 @@ def ngram_jaccard_pairs(
 
     At scale this shuffles on the shingle key; a stopword shingle
     shared by everything creates a hot key AND a quadratic pair
-    blow-up on it. ``max_df`` is the skew guard: shingles occurring
-    in more than ``max_df`` documents are dropped from the index
-    before pairing, and both the intersection and the set sizes are
-    computed over the surviving shingle space (so Jaccard stays a
-    true set similarity on the filtered universe).
+    blow-up on it — this operator is the EXACT replica the gates
+    oracle-check, so it pairs on every shingle; the scalable path is
+    MinHash-LSH.
     """
     # Join the inverted index on the fixed-width shingle HASH, not
     # the shingle string — same pairs and counts at far less shuffle
@@ -131,10 +128,9 @@ def ngram_jaccard_pairs(
     # both sides of the hot join. The key is BOTH md5 halves
     # (collisions ~n^2/2^121 — safe at 10^12 shingles; one 60-bit
     # half is collision-safe only to ~10^8). One shared shingle pass
-    # (_shingle_tokens) with the set size carried through the
-    # explode — or the persistent
-    # store's postings with the size re-derived by one count+join
-    # (postings are distinct per doc, so the count IS the set size).
+    # (_shingle_tokens) — or the persistent store's postings — with
+    # the size re-derived by one count (postings are distinct per
+    # doc, so the count IS the set size).
     kc = _KEY_COLS
     if tokens is not None:
         _check_store_meta(tokens, "tokens", n=n)
@@ -146,14 +142,6 @@ def ngram_jaccard_pairs(
         tokens = _carry_meta(tokens.select("doc_id", *kc), tokens)
     else:
         tokens = _shingle_tokens(df, n, id_col, text_col).select("doc_id", *kc)
-    if max_df is not None:
-        rare = (
-            tokens.groupBy(*kc)
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= max_df)
-            .select(*kc)
-        )
-        tokens = tokens.join(rare, kc, "left_semi")
     # r15: set sizes attach to the PAIR result, not to every posting.
     # The old store path joined the full posting table against its own
     # per-doc counts before the pair join — a corpus-sized shuffle to
@@ -162,8 +150,8 @@ def ngram_jaccard_pairs(
     # hot (h, h2) exchange. Postings now travel as bare (doc_id, key)
     # rows; the (far smaller) shared-count result joins the doc-level
     # size table twice (guide §2.3: shuffle keys, not payloads). The
-    # sizes are computed from the SAME (max_df-filtered) posting set,
-    # so n_a/n_b — and Jaccard — are value-identical.
+    # sizes are computed from the SAME posting set, so n_a/n_b — and
+    # Jaccard — are value-identical.
     sized = tokens.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
 
     a = tokens.alias("a")
@@ -233,26 +221,21 @@ _KEY_COLS = ["h", "h2"]
 _SPAN_KEY_EXPRS = ((_md5_long, "h"), (_md5_long_hi, "h2"))
 
 
-def _shingle_tokens(
-    df: DataFrame, n: int, id_col: str, text_col: str, with_size: bool = False
-) -> DataFrame:
-    """(doc_id[, n_sh], h) hashed-shingle postings — ONE shingle pass
+def _shingle_tokens(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, h, h2) hashed-shingle postings — ONE shingle pass
     over the text; everything downstream (signatures, banding, exact
     verify, Jaccard set sizes) works on the 8-byte hashes, never
-    re-reading the text. ``with_size`` carries the per-doc distinct
-    shingle count through the explode (free — no join needed)."""
+    re-reading the text."""
     par = df.sparkSession.sparkContext.defaultParallelism
     sh = (
         df.repartition(par, id_col)  # single-file sources otherwise hash on one core
         .select(F.col(id_col).alias("doc_id"), shingles_udf(n)(F.col(text_col)).alias("sh"))
         .filter(F.size("sh") > 0)
     )
-    size_cols = [F.size("sh").alias("n_sh")] if with_size else []
-    keep = ["doc_id"] + (["n_sh"] if with_size else [])
     return (
-        sh.select("doc_id", *size_cols, F.explode("sh").alias("shingle"))
+        sh.select("doc_id", F.explode("sh").alias("shingle"))
         .select(
-            *keep,
+            "doc_id",
             _md5_long(F.col("shingle")).alias("h"),
             # both digest halves always travel: exact-identity
             # consumers key on (h, h2) = 120 bits by default; the
@@ -977,7 +960,7 @@ def _minhash_store_key(doc_path: str, n: int, k: int, id_col: str, text_col: str
     reader from the entry it expects."""
     extra = f"n{n}_k{k}_{id_col}_{text_col}"
     return content_key(
-        "mh", doc_path, extra=extra, code_files=(__file__,), suffixes=(".parquet",)
+        "mh", doc_path, extra=extra, code_files=(__file__,)
     )
 
 
@@ -1005,7 +988,6 @@ def _components_store_key(
         doc_path,
         extra=extra,
         code_files=(__file__, _graph_mod.__file__),
-        suffixes=(".parquet",),
     )
 
 
@@ -1269,7 +1251,7 @@ def fuzzy_match_pairs(
        so candidate generation is a hash join, never all-pairs. A hot
        block (every name starting "the ...") is the quadratic risk,
        so DISTINCT-NAME block sizes above ``max_block`` raise loudly
-       BEFORE the pair join (the max_df / max_cluster_size policy).
+       BEFORE the pair join (the max_cluster_size policy).
     3. Length prefilter inside the join condition: ``|len_a - len_b|
        <= max_dist`` is a provable Levenshtein lower bound, pruned
        before the O(len²) distance evaluates.

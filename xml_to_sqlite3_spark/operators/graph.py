@@ -9,8 +9,7 @@ the edge set, as iterative frontier joins.
 Scale shape: per level one broadcast hash join frontier⋈edges (the
 edge side streams in place, never shuffles), with the visited set
 pruned by anti-join — never a driver-side set. localCheckpoint per
-level keeps lineage flat; a shuffle-join fallback exists for
-frontiers too large to broadcast.
+level keeps lineage flat.
 """
 
 from __future__ import annotations
@@ -28,8 +27,6 @@ def bfs_distances(
     max_depth: int = 3,
     src_col: str = "source_node_id",
     dst_col: str = "target_node_id",
-    broadcast_frontier: bool = True,
-    materialize_edges: bool = True,
     pushdown_limit: int = 2000,
 ) -> DataFrame:
     """Minimum hop-distance from ``source`` to every node reachable
@@ -50,31 +47,25 @@ def bfs_distances(
     through a broadcast join per level (measured at sf1: the full
     type-pruned scan was ~4s PER LEVEL; the pruned point-lookup is
     milliseconds). The mode is re-evaluated PER LEVEL: a frontier
-    that outgrows the limit uses the broadcast (or shuffle,
-    ``broadcast_frontier=False``) hash join for that level, and
-    pushdown resumes whenever a later frontier shrinks back under
-    the limit — each mode decision depends only on the current
-    frontier's size, so there is nothing sticky to preserve.
+    that outgrows the limit uses the broadcast hash join for that
+    level, and pushdown resumes whenever a later frontier shrinks
+    back under the limit — each mode decision depends only on the
+    current frontier's size, so there is nothing sticky to preserve.
 
-    ``materialize_edges=True`` (default) evaluates derived/filtered
-    edge inputs once into executor-local checkpoint blocks so every
-    level reads materialized blocks instead of re-running the
-    upstream plan. For edges that are ALREADY a bare (pruned) parquet
-    scan, pass False: it skips the up-front full copy AND keeps the
-    scan's row-group statistics visible to the pushdown path
-    (checkpoint blocks carry no footer stats, so the In filter would
-    stream every block).
+    ``edges`` should be a bare (pruned) parquet scan, like the
+    node-graph store's xrefs: every level re-reads it, and the scan's
+    row-group statistics are what the pushdown path prunes on
+    (checkpoint blocks would carry no footer stats, so the In filter
+    would stream every block).
 
     Per level runs ONE materializing action (a count over the lazily
     checkpointed level) plus, while in pushdown mode, a collect of
     the already-materialized level ids (block-local, no recompute).
     """
     spark = edges.sparkSession
+    # duplicate (src,dst) pairs are harmless: the per-level distinct
+    # dedups nodes
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    if materialize_edges:
-        # duplicate (src,dst) pairs are harmless either way
-        # (the per-level distinct dedups nodes)
-        e = e.distinct().localCheckpoint(eager=True)
 
     visited = spark.createDataFrame([(source, 0)], "node string, distance int")
     visited = visited.localCheckpoint(eager=True)
@@ -86,16 +77,11 @@ def bfs_distances(
                 F.col("dst").alias("node")
             )
         else:
-            f = frontier.select(F.col("node").alias("src"))
-            if broadcast_frontier:
-                f = F.broadcast(f)
+            f = F.broadcast(frontier.select(F.col("node").alias("src")))
             cand = e.join(f, "src").select(F.col("dst").alias("node"))
-        v = visited.select("node")
-        if broadcast_frontier:
-            v = F.broadcast(v)
         nxt = (
             cand.distinct()
-            .join(v, "node", "left_anti")
+            .join(F.broadcast(visited.select("node")), "node", "left_anti")
             .withColumn("distance", F.lit(depth))
         )
         nxt = nxt.localCheckpoint(eager=False)
@@ -213,9 +199,8 @@ def out_degree_spine(e: DataFrame) -> DataFrame:
     """(node, __deg) spine of a directed (src, dst) edge frame in ONE
     shuffle: src rows carry a marker 1, dst rows 0; the groupBy both
     enumerates every node and counts out-edges (count 0 -> NULL __deg
-    = dangling). Shared by pagerank's inline prep and the node-graph
-    store's persisted pr_spine — the dangling-node encoding must stay
-    identical in both."""
+    = dangling). The node-graph store persists it as pr_spine, the
+    spine pagerank iterates over."""
     return (
         e.select(F.col("src").alias("node"), F.lit(1).alias("m"))
         .unionByName(e.select(F.col("dst").alias("node"), F.lit(0).alias("m")))
@@ -243,17 +228,14 @@ def _copartitioned_join_confs(n_part: int) -> dict[str, str]:
 
 def pagerank(
     edges: DataFrame,
+    spine: DataFrame,
     damping: float = 0.85,
     n_iter: int = 10,
-    src_col: str = "source_node_id",
-    dst_col: str = "target_node_id",
-    n_partitions: int | None = None,
-    spine: DataFrame | None = None,
-    edges_deduped: bool = False,
     tol: float = 0.0,
-    spine_stats: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """PageRank over the directed edge set: (node, rank), ranks
+    """PageRank over the DISTINCT directed (src, dst) edge set
+    ``edges`` and its :func:`out_degree_spine` ``spine`` — the
+    node-graph store's pr_edges/pr_spine: (node, rank), ranks
     summing to ~1. The reference names "graph traversal operations"
     as the database's purpose (main.rb:22-24); centrality over the
     cross-reference graph is that surface's analytical core.
@@ -261,12 +243,10 @@ def pagerank(
     Distributed power iteration, all-DataFrame, engineered so each
     round is ONE job with ONE shuffle:
 
-    - The edge list is hash-partitioned by src in ONE shuffle
-      (dropDuplicates after the repartition dedups in place —
-      HashPartitioning(src) already satisfies the (src, dst)
-      clustering requirement) and localCheckpointed; the (node,
-      out-degree) spine is built with a single marker-union groupBy
-      (no distinct + join) and checkpointed hash-partitioned by node.
+    - The edge list is hash-partitioned by src and the (node,
+      out-degree) spine by node, each in ONE shuffle, and both are
+      localCheckpointed (parquet persistence cannot carry a
+      HashPartitioning).
     - Per round, rank⋈edges runs as a co-partitioned shuffled hash
       join (ranks inherit the spine's (node, P) partitioning, edges
       are (src, P) — no exchange on either side), the contribution
@@ -298,27 +278,17 @@ def pagerank(
       and the BroadcastNestedLoop planning). The driver-side
       bottleneck at small scale is per-round PLANNING, not job
       count — keep the round plan minimal. The initial dangling mass
-      rides the same single aggregate that counts the spine (or the
-      caller-provided ``spine_stats``), so setup is at most one job.
+      rides the same single aggregate that counts the spine, so setup
+      is one job.
 
-    ``n_partitions`` defaults to min(8, defaultParallelism) — the
+    The iteration runs on min(8, defaultParallelism) partitions — the
     per-round frames are sketch-sized and task-launch overhead
-    dominates them; a billion-node corpus on a real cluster should
-    pass its own P. Output rounds to 8 decimals: per-partition float
+    dominates them. Output rounds to 8 decimals: per-partition float
     summation order perturbs ~1e-15 relative, far below the
     rounding, so results are deterministic run to run.
 
     NOT thread-safe: the scoped confs are session-global for the
     duration of the iteration — see session.scoped_conf.
-
-    ``edges_deduped=True`` skips the (src, dst) dedup for an input
-    already known distinct; ``spine`` accepts a PRECOMPUTED (node,
-    __deg) table (out-degree NULL = dangling) — e.g. the node-graph
-    store's persisted pr_spine — so the per-query cost starts at the
-    iteration joins instead of re-paying the dedup shuffle and the
-    spine aggregation every session. Both are repartitioned here to
-    the iteration's co-partitioning (parquet persistence cannot carry
-    a HashPartitioning).
 
     ``tol > 0`` enables a rank-delta early exit: the loop stops once
     max |rank_i - rank_{i-1}| <= tol, read off the SAME per-round
@@ -329,36 +299,26 @@ def pagerank(
     the round count).
     """
     spark = edges.sparkSession
-    n_part = n_partitions or min(8, spark.sparkContext.defaultParallelism)
+    n_part = min(8, spark.sparkContext.defaultParallelism)
     with scoped_conf(spark, _copartitioned_join_confs(n_part)):
-        e = edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        ).repartition(n_part, "src")
-        if not edges_deduped:
-            e = e.dropDuplicates(["src", "dst"])
-        e = e.localCheckpoint(eager=False)
-        if spine is not None:
-            spine = (
-                spine.select("node", "__deg")
-                .repartition(n_part, "node")
-                .localCheckpoint(eager=False)
-            )
-        else:
-            spine = out_degree_spine(e).localCheckpoint(eager=False)
+        e = (
+            edges.select("src", "dst")
+            .repartition(n_part, "src")
+            .localCheckpoint(eager=False)
+        )
+        spine = (
+            spine.select("node", "__deg")
+            .repartition(n_part, "node")
+            .localCheckpoint(eager=False)
+        )
         # ONE setup job: spine size + dangling count together (the
         # initial ranks are the uniform 1/n, so the initial dangling
         # mass is n_dangling / n — no separate pass over ranks).
-        # ``spine_stats`` (e.g. the node-graph store build's own
-        # spine aggregate) skips even that: zero jobs before the
-        # first iteration.
-        if spine_stats is not None:
-            n_total, n_dang = int(spine_stats[0]), int(spine_stats[1])
-        else:
-            srow = spine.agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.count(F.when(F.col("__deg").isNull(), 1)).alias("__nd"),
-            ).collect()[0]
-            n_total, n_dang = srow["__n"], srow["__nd"]
+        srow = spine.agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.count(F.when(F.col("__deg").isNull(), 1)).alias("__nd"),
+        ).collect()[0]
+        n_total, n_dang = srow["__n"], srow["__nd"]
         if n_total == 0:
             # empty graph degrades to an empty result like bfs/triangles
             # (1.0 / n_total below would raise on the driver otherwise)
@@ -428,7 +388,6 @@ def orient_edges(
     edges: DataFrame,
     src_col: str = "source_node_id",
     dst_col: str = "target_node_id",
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Degree-oriented edge list (u, w) of the undirected simple
     graph of ``edges``: every edge oriented from its lower-degree
@@ -440,8 +399,7 @@ def orient_edges(
     tri_oriented) and the triangle gate starts at the wedge join
     instead of paying the dedup + degree + orientation joins per
     query."""
-    spark = edges.sparkSession
-    n_part = n_partitions or min(16, spark.sparkContext.defaultParallelism)
+    n_part = min(16, edges.sparkSession.sparkContext.defaultParallelism)
     und = (
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),
@@ -476,14 +434,11 @@ def orient_edges(
     )
 
 
-def triangle_count(
-    edges: DataFrame | None,
-    src_col: str = "source_node_id",
-    dst_col: str = "target_node_id",
-    oriented: DataFrame | None = None,
-) -> DataFrame:
-    """Global triangle count over the undirected simple graph of
-    ``edges``. Returns one row: (n_edges, n_triangles).
+def triangle_count(oriented: DataFrame) -> DataFrame:
+    """Global triangle count over the undirected simple graph whose
+    degree-oriented edge list (u, w) is ``oriented`` — an
+    orient_edges result such as the node-graph store's persisted
+    tri_oriented table. Returns one row: (n_edges, n_triangles).
 
     The scale-critical trick is DEGREE ORIENTATION (the standard
     distributed formulation): orient every undirected edge from its
@@ -494,8 +449,9 @@ def triangle_count(
     wedge join's fan-out per vertex is bounded by the oriented
     out-degree, which is O(sqrt(m)) for any graph, so a celebrity
     vertex with 10M neighbors contributes sqrt-bounded work instead
-    of 10M^2 wedge candidates. Three hash joins, no cross product,
-    no driver state.
+    of 10M^2 wedge candidates. Two hash joins, no cross product,
+    no driver state. Orientation (the dedup/degree/orientation joins)
+    happens once, at store build; the query starts at the wedge join.
 
     The whole pipeline runs under scoped confs (restored in a
     finally): fixed shuffle partitions + AQE off keep the wedge
@@ -505,23 +461,12 @@ def triangle_count(
     "small") as broadcast candidates — which silently re-collected
     and re-broadcast the FULL 1.5M-edge set per join.
 
-    ``oriented`` accepts a PRECOMPUTED orient_edges result (e.g. the
-    node-graph store's persisted tri_oriented table): the query then
-    skips the dedup/degree/orientation joins entirely — one
-    repartition of the (u, w) longs and straight to the wedge join.
-
     NOT thread-safe: the scoped confs are session-global — see
     session.scoped_conf.
     """
-    if oriented is None and edges is None:
-        raise ValueError("triangle_count needs edges or a precomputed oriented set")
-    spark = (oriented if oriented is not None else edges).sparkSession
+    spark = oriented.sparkSession
     n_part = min(16, spark.sparkContext.defaultParallelism)
     with scoped_conf(spark, _copartitioned_join_confs(n_part)):
-        if oriented is None:
-            oriented = orient_edges(
-                edges, src_col, dst_col, n_partitions=n_part
-            )
         oriented = (
             oriented
             # hash-partition the checkpoint on the pivot: the wedge
@@ -558,14 +503,26 @@ def triangle_count(
         ).localCheckpoint(eager=True)
 
 
+def aa_centers(und: DataFrame) -> DataFrame:
+    """The (v, d, ns) center table of a DISTINCT undirected (a, b)
+    pair set: each vertex's degree and sorted neighbor list, in one
+    map-side-combinable aggregation ((v, n) is unique because ``und``
+    is distinct). adamic_adar_topk's wedge expansion starts from it;
+    the node-graph store persists it as aa_centers."""
+    adj = und.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
+        und.select(F.col("b").alias("v"), F.col("a").alias("n"))
+    )
+    return adj.groupBy("v").agg(
+        F.count(F.lit(1)).alias("d"),
+        F.sort_array(F.collect_list("n")).alias("ns"),
+    )
+
+
 def adamic_adar_topk(
-    edges: DataFrame | None,
+    und: DataFrame,
+    centers: DataFrame,
     k: int = 50,
-    src_col: str = "source_node_id",
-    dst_col: str = "target_node_id",
     max_degree: int | None = 1000,
-    und: DataFrame | None = None,
-    centers: DataFrame | None = None,
 ) -> DataFrame:
     """Link prediction by Adamic-Adar index: for node pairs NOT yet
     connected, score = sum over common neighbors v of 1/ln(deg(v));
@@ -583,43 +540,19 @@ def adamic_adar_topk(
     rides the same aggregated row. Per-row expansion memory is
     deg^2/2 structs, bounded by ``max_degree`` (the guard that also
     drops celebrity centers: a 10M-degree hub contributes ~0 weight —
-    1/ln(10M) spread over 10^14 pairs — exactly ngram_jaccard's
-    max_df trade). Existing edges leave by anti-join; the final cut
+    1/ln(10M) spread over 10^14 pairs — a stopword-shingle
+    document-frequency cap's trade). Existing edges leave by anti-join; the final cut
     is a TakeOrdered, not a global window. Determinism: per-wedge
     weights are rounded then DECIMAL-summed (order-independent), ties
     break on the pair itself.
 
-    ``und`` accepts a PRECOMPUTED distinct undirected (a, b) pair set
-    and ``centers`` the (v, d, ns) degree/sorted-neighbor table —
-    e.g. the node-graph store's persisted aa_und/aa_centers — so a
-    repeated query starts at the wedge expansion instead of re-paying
-    the edge scan + two aggregation shuffles per session (the
-    pr_edges/pr_spine contract). ``centers`` must already reflect the
-    same edge set as ``und``; the degree filters still apply here.
+    ``und`` is a DISTINCT undirected (a, b) pair set (a < b, no
+    self-loops) and ``centers`` its :func:`aa_centers` table — the
+    node-graph store's persisted aa_und/aa_centers — so the query
+    starts at the wedge expansion instead of re-paying the edge scan
+    + two aggregation shuffles per session (the pr_edges/pr_spine
+    contract). The degree filters apply here.
     """
-    if und is None:
-        if edges is None:
-            raise ValueError("adamic_adar_topk needs edges or a precomputed und")
-        und = (
-            edges.select(
-                F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-                F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    if centers is None:
-        adj = und.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
-            und.select(F.col("b").alias("v"), F.col("a").alias("n"))
-        )
-        # degree AND the sorted neighbor list in one map-side-
-        # combinable aggregation; (v, n) is unique by construction
-        # (und is distinct)
-        centers = adj.groupBy("v").agg(
-            F.count(F.lit(1)).alias("d"),
-            F.sort_array(F.collect_list("n")).alias("ns"),
-        )
     centers = centers.filter(F.col("d") >= 2)
     if max_degree is not None:
         centers = centers.filter(F.col("d") <= max_degree)
@@ -683,12 +616,7 @@ def adamic_adar_topk(
     return novel.orderBy(F.desc("aa_score"), "node_a", "node_b").limit(k)
 
 
-def degree_assortativity(
-    edges: DataFrame | None,
-    src_col: str = "source_node_id",
-    dst_col: str = "target_node_id",
-    und: DataFrame | None = None,
-) -> DataFrame:
+def degree_assortativity(und: DataFrame) -> DataFrame:
     """Newman degree assortativity of the undirected simple graph:
     the Pearson correlation of endpoint degrees over the directed
     endpoint list (each undirected edge contributes both
@@ -697,36 +625,20 @@ def degree_assortativity(
     link to leaves (star/reference shape) — the one-number summary a
     pipeline owner checks before trusting degree-based skew guards.
 
-    Plan: dedup to the simple edge set, one degree aggregation, two
-    (broadcastable node-domain) joins back, one corr aggregate — all
-    map-side-combinable, nothing quadratic. ``und`` accepts a
-    precomputed undirected pair set (e.g. the store's oriented
-    table — orientation is irrelevant here, any (a, b) bijection of
-    the simple edge set works).
+    ``und`` is the simple edge set as a two-column pair frame, one row
+    per undirected edge (e.g. the store's tri_oriented table —
+    orientation is irrelevant here, any (a, b) bijection of the
+    simple edge set works). Plan: one degree aggregation, one
+    (broadcastable node-domain) join back, one corr aggregate — all
+    map-side-combinable, nothing quadratic.
 
     NOTE (r16): CALLING this function is eager — it materializes the
     (node-domain-sized) degree checkpoint and counts it to decide
     whether the degree join-back broadcasts (see the in-body note);
     the returned 1-row frame is lazy as usual.
     """
-    if und is None:
-        if edges is None:
-            raise ValueError("degree_assortativity needs edges or und")
-        und = (
-            edges.select(
-                F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-                F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-            )
-            .filter(F.col("a") != F.col("b"))
-            .dropDuplicates(["a", "b"])
-            # the derived dedup feeds two consumers (degree union +
-            # endpoint list) — pin it; the store path below is a
-            # parquet rescan and needs no checkpoint blocks
-            .localCheckpoint(eager=False)
-        )
-    else:
-        cols = und.columns
-        und = und.select(F.col(cols[0]).alias("a"), F.col(cols[1]).alias("b"))
+    cols = und.columns
+    und = und.select(F.col(cols[0]).alias("a"), F.col(cols[1]).alias("b"))
     both = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -796,12 +708,7 @@ def degree_assortativity(
     )
 
 
-def local_clustering(
-    edges: DataFrame | None,
-    src_col: str = "source_node_id",
-    dst_col: str = "target_node_id",
-    oriented: DataFrame | None = None,
-) -> DataFrame:
+def local_clustering(oriented: DataFrame) -> DataFrame:
     """Per-node local clustering coefficient over the undirected
     simple graph: coeff(v) = 2 * T(v) / (d(v) * (d(v) - 1)) where
     T(v) = triangles through v — the node-level refinement of
@@ -814,32 +721,9 @@ def local_clustering(
     Scale shape: identical to triangle_count through the closing
     join (per-vertex wedge fan-out O(sqrt(m)) after orientation);
     the listing adds 3 rows per triangle (linear in the triangle
-    count) and one corner groupBy. ``oriented`` accepts the store's
-    persisted orient_edges output.
+    count) and one corner groupBy. ``oriented`` is an orient_edges
+    result, such as the store's persisted tri_oriented table.
     """
-    if oriented is None and edges is None:
-        raise ValueError("local_clustering needs edges or a precomputed oriented set")
-    spark = (oriented if oriented is not None else edges).sparkSession
-    n_part = min(16, spark.sparkContext.defaultParallelism)
-    if oriented is None:
-        # the derived orientation feeds FOUR consumers (both wedge
-        # sides, the closing set, the degree union) — checkpoint it
-        # once so the dedup/degree/orient joins don't run 4x.
-        # KNOWN RISK (accepted, documented): the checkpointed
-        # LogicalRDD reports broadcast-small stats — the misestimate
-        # triangle_count guards with scoped confs, which only work
-        # because that operator materializes its 1-row result INSIDE
-        # the scope; this function returns a LAZY node-level frame,
-        # so no conf scope can pin its eventual plan. On the pinned
-        # pyspark the plan lands on SortMergeJoin (verified); callers
-        # with large AD-HOC edge inputs should pass a store-backed
-        # ``oriented`` (real parquet stats) instead, as every gate
-        # does.
-        oriented = (
-            orient_edges(edges, src_col, dst_col, n_partitions=n_part)
-            .repartition(n_part, "u")
-            .localCheckpoint(eager=True)
-        )
     # The store path reads tri_oriented PARQUET directly: real size
     # stats (no broadcast misestimate), cheap rescans for the four
     # consumers, and AQE free to split skewed wedge partitions.
@@ -888,10 +772,7 @@ def local_clustering(
 
 
 def kcore_decomposition(
-    edges: DataFrame | None,
-    src_col: str = "source_node_id",
-    dst_col: str = "target_node_id",
-    und: DataFrame | None = None,
+    und: DataFrame,
     max_iter: int = 100,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -915,24 +796,12 @@ def kcore_decomposition(
     shape). Not SQL-expressible (data-dependent iteration), hence a
     rows-only gate pinned by a pure-python peeling replica.
 
-    ``und`` accepts a precomputed undirected pair set (e.g. the
-    store's oriented table). Returns (node_id, coreness).
+    ``und`` is the simple edge set as a two-column pair frame, one
+    row per undirected edge (e.g. the store's tri_oriented table).
+    Returns (node_id, coreness).
     """
-    if und is None:
-        if edges is None:
-            raise ValueError("kcore_decomposition needs edges or und")
-        und = (
-            edges.select(
-                F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-                F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-            )
-            .filter(F.col("a") != F.col("b"))
-            .dropDuplicates(["a", "b"])
-        )
-    else:
-        cols = und.columns
-        und = und.select(F.col(cols[0]).alias("a"), F.col(cols[1]).alias("b"))
-    spark = und.sparkSession
+    cols = und.columns
+    und = und.select(F.col(cols[0]).alias("a"), F.col(cols[1]).alias("b"))
     # symmetrize once; this derived frame feeds every round — pin it
     # (bounded: ONE checkpoint per operator call, not per round)
     sym = (

@@ -52,7 +52,6 @@ def node_tree_iterative(
     nodes: DataFrame,
     max_depth: int = 100,
     columns: tuple = ("id", "node_type", "parent_id", "content"),
-    broadcast_frontier: bool = True,
 ) -> DataFrame:
     """Breadth-first frontier-join equivalent of node_tree.
 
@@ -68,14 +67,10 @@ def node_tree_iterative(
     ten levels of materialization is the difference between walking
     ids and copying the corpus ten times.
 
-    ``broadcast_frontier=True`` (default) broadcasts each level's
-    parent-id set so the node table streams in place per level — no
-    per-level shuffle of the full node set (measured ~2x on the whole
-    walk at sf0.1: the shuffle-join form reshuffles the node table by
-    parent_id at EVERY level). A tree level is one generation of the
-    hierarchy; for degenerate fan-outs where a single level exceeds
-    the broadcast budget, pass False to fall back to shuffle joins —
-    the same trade bfs_distances documents.
+    Each level's parent-id set is broadcast so the node table streams
+    in place per level — no per-level shuffle of the full node set
+    (measured ~2x on the whole walk at sf0.1: the shuffle-join form
+    reshuffles the node table by parent_id at EVERY level).
     """
     if "id" not in columns or "parent_id" not in columns:
         raise ValueError(f"columns must include id and parent_id: {columns}")
@@ -89,9 +84,7 @@ def node_tree_iterative(
     level = 0
     frontier = frontier.localCheckpoint(eager=True)
     while level < max_depth:
-        f = frontier.select(F.col("id").alias("__pid"))
-        if broadcast_frontier:
-            f = F.broadcast(f)
+        f = F.broadcast(frontier.select(F.col("id").alias("__pid")))
         child = base.alias("n").join(
             f.alias("f"),
             F.col("n.parent_id") == F.col("f.__pid"),

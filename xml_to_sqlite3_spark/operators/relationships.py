@@ -308,7 +308,7 @@ def multi_references(nodes: DataFrame, properties: DataFrame) -> DataFrame:
     )
 
 
-def same_type_relationships(nodes: DataFrame, max_group: int | None = None) -> DataFrame:
+def same_type_relationships(nodes: DataFrame) -> DataFrame:
     """Semantic adapter, type groupings (examples/.../semantic_adapter.rb:30-50):
     every ordered pair of same-type nodes with non-null content in a
     document, confidence 0.6. Only NULL content is excluded — the
@@ -318,13 +318,6 @@ def same_type_relationships(nodes: DataFrame, max_group: int | None = None) -> D
     base = nodes.filter(F.col("content").isNotNull()).select(
         "document_id", "node_type", "id"
     )
-    if max_group is not None:
-        counts = base.groupBy("document_id", "node_type").agg(F.count(F.lit(1)).alias("__n"))
-        base = (
-            base.join(counts, ["document_id", "node_type"])
-            .filter(F.col("__n") <= max_group)
-            .drop("__n")
-        )
     a = base.alias("a")
     b = base.alias("b")
     return (
@@ -420,23 +413,17 @@ def content_similarity_relationships(
 def detect_all_relationships(
     nodes: DataFrame,
     properties: DataFrame,
-    include_examples: bool = False,
     max_siblings: int | None = None,
 ) -> DataFrame:
     """The reference's default detector registers the structural and
     attribute-reference adapters (main.rb:104-110); the example
-    adapters are opt-in. ``max_siblings`` passes through to
+    adapters (multi_references, same_type_relationships,
+    content_similarity_relationships) are registered by the caller —
+    see examples/custom_adapters.py. ``max_siblings`` passes through to
     structural_relationships — the store build caps the staged pair
     join at the two-tier split point and generates hot parents' k²
     sibling multisets inside its final write tasks instead of
     routing them through detection."""
-    out = structural_relationships(
+    return structural_relationships(
         nodes, max_siblings=max_siblings
     ).unionByName(attribute_references(nodes, properties))
-    if include_examples:
-        out = (
-            out.unionByName(multi_references(nodes, properties))
-            .unionByName(same_type_relationships(nodes))
-            .unionByName(content_similarity_relationships(nodes))
-        )
-    return out

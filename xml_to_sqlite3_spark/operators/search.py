@@ -42,20 +42,14 @@ def build_text_index(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Inverted index: (token, doc_id, tf, doc_len). One explode +
-    one groupBy.
-
-    ``materialize=True`` (the default) eagerly localCheckpoints the
-    built index — an index is a write-once/query-many artifact (the
-    reference roadmap's FTS5 is a *persistent* index), and a lazy
-    index is recomputed from the corpus by every plan branch that
-    touches it: bench r4 measured one bm25_search call re-running
-    the full explode+groupBy 3x (hits, the stats aggregate, and
-    df_per_term are three branches), 9.8s vs 2.1s materialized. At
-    cluster scale the equivalent is writing the index table to the
-    warehouse once."""
+    one groupBy, returned LAZY: an index is a write-once/query-many
+    artifact (the reference roadmap's FTS5 is a *persistent* index),
+    so :func:`get_text_index` writes it once per corpus content. A
+    lazy index read by several plan branches is recomputed per branch
+    (bench r4: one bm25_search call re-ran the explode+groupBy 3x) —
+    query the persisted index, not this frame."""
     par = df.sparkSession.sparkContext.defaultParallelism
     toks = (
         df.repartition(par, id_col)
@@ -65,7 +59,7 @@ def build_text_index(
     idx = toks.groupBy("token", "doc_id", "doc_len").agg(
         F.count(F.lit(1)).alias("tf")
     )
-    return idx.localCheckpoint(eager=True) if materialize else idx
+    return idx
 
 
 # ---------------------------------------------------------------------------
@@ -93,7 +87,7 @@ def _index_key(src_path: str, id_col: str, text_col: str) -> str:
     discipline)."""
     extra = f"{id_col}|{text_col}"
     return content_key(
-        "i", src_path, extra=extra, code_files=(__file__,), suffixes=(".parquet",)
+        "i", src_path, extra=extra, code_files=(__file__,)
     )
 
 
@@ -123,9 +117,7 @@ def get_text_index(
 
     def _build(tmp: str) -> None:
         docs = spark.read.parquet(src_path)
-        idx = build_text_index(
-            docs, id_col=id_col, text_col=text_col, materialize=False
-        )
+        idx = build_text_index(docs, id_col=id_col, text_col=text_col)
         par = spark.sparkContext.defaultParallelism
         (
             idx.repartitionByRange(par, "token")

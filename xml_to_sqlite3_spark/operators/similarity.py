@@ -591,7 +591,7 @@ def semdedup(
     # the assignment so the Arrow UDF runs once
     v = v.localCheckpoint(eager=False)
     if max_cluster_size is not None:
-        # quadratic guard (same fail-loud policy as max_df /
+        # quadratic guard (same fail-loud policy as
         # max_siblings / _MAX_FAT_MEMBERS): the within-cluster pair
         # join is k² in the largest cluster, so a degenerate codebook
         # — or an adversarial corpus collapsing onto one centroid —
@@ -846,7 +846,7 @@ def opq_rotation(cov_rows, dim: int, m: int) -> np.ndarray:
 
 def _rotate_udf(rotation: np.ndarray):
     """R @ x per Arrow batch — stages a rotated corpus for rotated
-    PQ training (the _residual_udf pattern)."""
+    PQ training."""
     R = np.asarray(rotation, dtype=np.float64)
 
     @F.pandas_udf("array<double>")
@@ -859,25 +859,19 @@ def _rotate_udf(rotation: np.ndarray):
     return rot
 
 
-def _pq_encode_udf(books: np.ndarray, rotation: np.ndarray | None = None):
+def _pq_encode_udf(books: np.ndarray):
     """Vectorized PQ encoder: per Arrow batch, one (N, ks) squared-L2
     distance matrix per subspace via the expanded form — argmin ties
-    break to the lowest cluster id (np.argmin's contract).
-    ``rotation`` (an orthonormal (dim, dim) R) applies R @ x before
-    the subspace slicing — the OPQ path; the books must have been
-    trained on rotated input."""
+    break to the lowest cluster id (np.argmin's contract)."""
     m, ks, sub = books.shape
     # per-subspace centroid norms, precomputed once in the closure
     c_sq = (books**2).sum(axis=2)  # (m, ks)
-    R = None if rotation is None else np.asarray(rotation, dtype=np.float64)
 
     @F.pandas_udf("array<int>")
     def encode(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype=object)
         M = np.vstack([np.asarray(x, dtype=np.float64) for x in vs])
-        if R is not None:
-            M = M @ R.T
         n = M.shape[0]
         codes = np.empty((n, m), dtype=np.int32)
         for j in range(m):
@@ -896,14 +890,11 @@ def pq_encode(
     books: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    rotation: np.ndarray | None = None,
 ) -> DataFrame:
     """(vec_id, codes) — each vector's m nearest-subcentroid indices.
     One Arrow-batched pass; the codes column is the ONLY thing the
-    search path ever reads (the compressed corpus representation).
-    ``rotation`` enables the OPQ path (see :func:`opq_rotation`) —
-    pass the SAME matrix the books were trained under."""
-    enc = _pq_encode_udf(books, rotation)
+    search path ever reads (the compressed corpus representation)."""
+    enc = _pq_encode_udf(books)
     return df.select(
         F.col(id_col).alias("vec_id"),
         enc(_as_double(F.col(vec_col))).alias("codes"),
@@ -958,15 +949,10 @@ def pq_topk(
 def _ivfpq_encode_udf(
     centroids: np.ndarray,
     books: np.ndarray,
-    residual: bool,
     rotation: np.ndarray | None = None,
 ):
-    """(cluster, codes) in ONE Arrow pass. ``residual=True`` is the
-    textbook IVF-ADC (Jégou et al.): PQ encodes the RESIDUAL
-    x - centroid[cluster] instead of x itself — the coarse quantizer
-    absorbs the between-cluster variance, so the per-subspace cells
-    only have to cover the (much smaller) within-cluster spread and
-    the same (m, ks) budget buys a finer quantization."""
+    """(cluster, codes) in ONE Arrow pass: the coarse assignment and
+    the PQ codes of x itself."""
     C = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
     m, ks, sub = books.shape
     c_sq = (books**2).sum(axis=2)  # (m, ks)
@@ -980,12 +966,10 @@ def _ivfpq_encode_udf(
         M = np.vstack([np.asarray(x, dtype=np.float64) for x in vs])
         Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
         cl = np.argmax(Mn @ C.T, axis=1)
-        X = M - C[cl] if residual else M
-        if R is not None:
-            # OPQ: coarse assignment stays in the original frame (the
-            # coarse codebook is raw-space); only the PQ-quantized
-            # remainder rotates — the books were trained on R X
-            X = X @ R.T
+        # OPQ: coarse assignment stays in the original frame (the
+        # coarse codebook is raw-space); only the PQ-quantized vector
+        # rotates — the books were trained on R X
+        X = M if R is None else M @ R.T
         n = X.shape[0]
         codes = np.empty((n, m), dtype=np.int32)
         for j in range(m):
@@ -1005,7 +989,6 @@ def ivf_pq_index(
     books: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    residual: bool = False,
     rotation: np.ndarray | None = None,
 ) -> DataFrame:
     """The IVF-PQ index relation (vec_id, cluster, codes): each
@@ -1018,18 +1001,12 @@ def ivf_pq_index(
     ``partitionBy("cluster")`` (see :func:`get_ivf_pq_index`) and a
     probed query reads only n_probe/n_centroids of the files.
 
-    ``residual=True`` (Jégou-style IVF-ADC) encodes x - centroid[c]
-    — train the books on residuals too
-    (:func:`get_residual_pq_codebooks`) and search with
-    ``ivf_pq_topk(..., residual=True)``; the flag is part of the
-    persistent entry's content key, so mismatched index/query flags
-    cannot silently share an entry. The flag is ALSO stamped into the
-    ``codes`` column metadata (Spark persists StructField metadata in
-    the parquet footer, so it survives the persistent entry) —
-    ivf_pq_topk validates it, turning an ad-hoc
-    flag-mismatched search from silently-wrong ADC distances into a
-    loud error."""
-    enc = _ivfpq_encode_udf(centroids, books, residual, rotation)
+    ``rotation`` (OPQ) is stamped into the ``codes`` column metadata
+    (Spark persists StructField metadata in the parquet footer, so it
+    survives the persistent entry) — ivf_pq_topk validates it, turning
+    a search in the wrong frame from silently-wrong ADC distances into
+    a loud error."""
+    enc = _ivfpq_encode_udf(centroids, books, rotation)
     return (
         corpus.select(
             F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
@@ -1040,10 +1017,7 @@ def ivf_pq_index(
             F.col("__e.cluster").alias("cluster"),
             F.col("__e.codes").alias(
                 "codes",
-                metadata={
-                    "ivfpq_residual": bool(residual),
-                    "ivfpq_rotate": rotation is not None,
-                },
+                metadata={"ivfpq_rotate": rotation is not None},
             ),
         )
     )
@@ -1056,7 +1030,6 @@ def ivf_pq_topk(
     query,
     k: int = 10,
     n_probe: int = 4,
-    residual: bool = False,
     rotation: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF-ADC top-k: coarse-probe then ADC, never a full-corpus
@@ -1066,42 +1039,24 @@ def ivf_pq_topk(
     those clusters — an isin over the partition column, so a
     partitioned index prunes to n_probe/n_centroids of its files
     before any Python runs — and the distance-table ADC scores only
-    the surviving codes. With ``n_probe == n_centroids`` and
-    ``residual=False`` this is EXACTLY pq_topk over the whole index
-    (the identity the tests pin); smaller n_probe trades recall for
-    a proportional scan cut, the knob billion-vector serving
-    actually turns.
+    the surviving codes. With ``n_probe == n_centroids`` this is
+    EXACTLY pq_topk over the whole index (the identity the tests
+    pin); smaller n_probe trades recall for a proportional scan cut,
+    the knob billion-vector serving actually turns.
 
-    ``residual=True`` must match the flag the index was built with:
-    ADC then uses a PER-PROBED-CLUSTER distance table built from
-    (q - centroid[c]) — still n_probe small (m, ks) tables computed
-    driver-side, still m lookups per row (the Jégou IVF-ADC recipe:
-    the coarse quantizer absorbs between-cluster variance, so the
-    same code budget quantizes finer). MEASURED both ways
-    (BENCH_vecrecall_r14.json, which records the fixture): on the
-    planted-cluster fixture (32 Gaussian clusters, sigma 0.15, the
-    shape of a real embedding corpus) residual wins
-    0.25 vs raw's 0.19 recall@20 at every probe setting, exactly as
-    the theory predicts; on make_sf's deliberately cluster-DIFFUSING
-    sf1 perturbation raw wins 0.55 vs 0.45 (no between-cluster
-    variance to absorb). Default to residual=True for corpora that
-    actually cluster — real embedding corpora do; keep raw for
-    near-uniform vector sets. r15 CONDITION on that guidance
-    (BENCH_vecrecall_r15aniso/axis): residual's win further requires
-    near-ISOTROPIC within/between-cluster spread — on fixtures with a
-    decaying per-dimension spectrum (unnormalized anisotropic
-    embeddings) residual COLLAPSES below raw (0.05-0.12 vs
-    0.22-0.23), because the unit-normalized coarse centroids stop
-    approximating the scaled vectors and the residual inherits the
-    full centroid error. Normalize (or whiten) such corpora before
-    choosing residual.
+    The codes are of x itself (raw IVF-PQ). The residual variant
+    (Jégou IVF-ADC: encode x - centroid[c], one distance table per
+    probed cluster) was measured and removed: it won recall@20 only
+    on near-isotropic planted clusters (0.25 vs 0.19,
+    BENCH_vecrecall_r14.json), lost on make_sf's sf1 vectors (0.45
+    vs 0.55) and collapsed on anisotropic ones (0.05-0.12 vs
+    0.22-0.23, BENCH_vecrecall_r15aniso/axis), and no gate served it.
 
     ``rotation`` (OPQ, r14 VERDICT task 4) searches an index encoded
     under :func:`opq_rotation`'s R — must match the index's encoding
     (metadata-validated). MEASURED across three fixture regimes
     (BENCH_vecrecall_r15{,aniso,axis}, m=8/ks=16/d=64): rotation
-    never lifted the raw arm and lifted residual only where residual
-    had already collapsed below raw, so ``rotation=None`` stays the
+    never lifted the raw arm, so ``rotation=None`` stays the
     default; the machinery is the opt-in for corpora whose own
     measurement says otherwise.
 
@@ -1112,22 +1067,12 @@ def ivf_pq_topk(
         raise ValueError(
             f"ivf_pq_topk: n_probe={n_probe} outside [1, {n_cent}]"
         )
-    # indexes built by ivf_pq_index carry their encoding flag in the
-    # codes column metadata (persisted through parquet) — a mismatched
-    # residual flag would otherwise return silently-wrong ADC
-    # distances (codes encode x-centroid while the table assumes x, or
-    # vice versa). Indexes from other producers (no marker) skip the
-    # check, preserving the old permissive contract.
+    # indexes built by ivf_pq_index carry their OPQ flag in the codes
+    # column metadata (persisted through parquet) — a mismatched frame
+    # would otherwise return silently-wrong ADC distances. Indexes from
+    # other producers (no marker) skip the check.
     if "codes" in index.columns:
         meta = index.schema["codes"].metadata or {}
-        marker = meta.get("ivfpq_residual")
-        if marker is not None and bool(marker) != bool(residual):
-            raise ValueError(
-                f"ivf_pq_topk: residual={bool(residual)} but the index was "
-                f"encoded with residual={bool(marker)} — ADC distance "
-                "tables must match the encoding; search with the flag the "
-                "index was built with (or rebuild the index)"
-            )
         rmark = meta.get("ivfpq_rotate")
         if rmark is not None and bool(rmark) != (rotation is not None):
             raise ValueError(
@@ -1141,57 +1086,8 @@ def ivf_pq_topk(
     qn = q / max(np.linalg.norm(q), 1e-12)
     order = np.argsort(-(C @ qn), kind="stable")[:n_probe]
     probed = [int(c) for c in order]
-    if not residual:
-        pruned = index.filter(F.col("cluster").isin(probed)).select(
-            "vec_id", "codes"
-        )
-        return pq_topk(pruned, books, q, k=k, rotation=rotation)
-
-    m, ks, sub = books.shape
-    if q.shape[0] != m * sub:
-        raise ValueError(f"ivf_pq_topk: query dim {q.shape[0]} != {m * sub}")
-    # one (m, ks) table per probed cluster, from the query's residual
-    # against THAT cluster's centroid (rotated into the books' OPQ
-    # frame when the index is); stacked (n_probe, m, ks) and indexed
-    # by a cluster -> slot map in the UDF closure
-    R = None if rotation is None else np.asarray(rotation, dtype=np.float64)
-
-    def _qres(c: int) -> np.ndarray:
-        r = q - C[c]
-        return R @ r if R is not None else r
-
-    dts = np.stack(
-        [
-            np.stack(
-                [
-                    (
-                        (books[j] - _qres(c)[j * sub : (j + 1) * sub]) ** 2
-                    ).sum(axis=1)
-                    for j in range(m)
-                ]
-            )
-            for c in probed
-        ]
-    )
-    slot = {c: i for i, c in enumerate(probed)}
-
-    @F.pandas_udf("double")
-    def adc(cluster: pd.Series, codes: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype=float)
-        Cd = np.vstack([np.asarray(c, dtype=np.int64) for c in codes])
-        sl = cluster.map(slot).to_numpy(dtype=np.int64)
-        return pd.Series(dts[sl[:, None], np.arange(m), Cd].sum(axis=1))
-
-    return (
-        index.filter(F.col("cluster").isin(probed))
-        .select(
-            "vec_id",
-            F.round(adc(F.col("cluster"), F.col("codes")), 6).alias("adc_dist"),
-        )
-        .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
-        .limit(k)
-    )
+    pruned = index.filter(F.col("cluster").isin(probed)).select("vec_id", "codes")
+    return pq_topk(pruned, books, q, k=k, rotation=rotation)
 
 
 def get_ivf_pq_index(
@@ -1203,7 +1099,6 @@ def get_ivf_pq_index(
     n_iter: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    residual: bool = False,
     rotate: bool = False,
 ) -> DataFrame:
     """Content-keyed PERSISTENT IVF-PQ index for ``src_path``:
@@ -1217,8 +1112,7 @@ def get_ivf_pq_index(
     vector index at 100 TB: raw vectors stay in the source table,
     the serving index is m ints + a partition key per vector."""
     key = _ivfpq_key(
-        src_path, n_centroids, m, ks, n_iter, id_col, vec_col,
-        residual=residual, rotate=rotate,
+        src_path, n_centroids, m, ks, n_iter, id_col, vec_col, rotate=rotate
     )
 
     def _build(tmp: str) -> None:
@@ -1233,20 +1127,13 @@ def get_ivf_pq_index(
             if rotate
             else None
         )
-        if residual:
-            books = get_residual_pq_codebooks(
-                spark, src_path, n_centroids=n_centroids, m=m, ks=ks,
-                n_iter=n_iter, id_col=id_col, vec_col=vec_col,
-                rotate=rotate,
-            )
-        else:
-            books = get_pq_codebooks(
-                spark, src_path, m=m, ks=ks, n_iter=n_iter,
-                id_col=id_col, vec_col=vec_col, rotate=rotate,
-            )
+        books = get_pq_codebooks(
+            spark, src_path, m=m, ks=ks, n_iter=n_iter,
+            id_col=id_col, vec_col=vec_col, rotate=rotate,
+        )
         ivf_pq_index(
             spark.read.parquet(src_path), cents, books,
-            id_col=id_col, vec_col=vec_col, residual=residual, rotation=R,
+            id_col=id_col, vec_col=vec_col, rotation=R,
         ).write.mode("overwrite").partitionBy("cluster").parquet(f"{tmp}/index")
         with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
             f.write(key)
@@ -1267,104 +1154,18 @@ def _ivfpq_key(
     n_iter: int,
     id_col: str,
     vec_col: str,
-    residual: bool = False,
     rotate: bool = False,
 ) -> str:
     """THE content key of an IVF-PQ index entry (the
-    _minhash_store_key discipline). ``residual`` is part of the key:
-    a residual-encoded index and a raw-encoded one are DIFFERENT
-    artifacts whose codes mean different things, so they must never
-    share an entry."""
+    _minhash_store_key discipline). ``rotate`` is part of the key: a
+    rotated index and a raw one are DIFFERENT artifacts whose codes
+    mean different things, so they must never share an entry."""
     extra = f"c{n_centroids}_m{m}_ks{ks}_i{n_iter}_{id_col}_{vec_col}"
-    if residual:
-        extra = f"{extra}_res"
     if rotate:
         extra = f"{extra}_opq"
     return content_key(
         "ivfpq", src_path, extra=extra, code_files=(__file__,),
-        suffixes=(".parquet",),
     )
-
-
-def _residual_udf(centroids: np.ndarray):
-    """x - centroid[assign(x)] per Arrow batch — the frame the
-    residual PQ books train on."""
-    C = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-
-    @F.pandas_udf("array<double>")
-    def res(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        M = np.vstack([np.asarray(x, dtype=np.float64) for x in vs])
-        Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        cl = np.argmax(Mn @ C.T, axis=1)
-        return pd.Series(list(M - C[cl]))
-
-    return res
-
-
-def get_residual_pq_codebooks(
-    spark,
-    src_path: str,
-    n_centroids: int = 16,
-    m: int = 8,
-    ks: int = 16,
-    n_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rotate: bool = False,
-) -> np.ndarray:
-    """Content-keyed PERSISTENT PQ codebooks trained on COARSE
-    RESIDUALS (x - centroid[assign(x)]) — the books a residual
-    IVF-PQ index needs: training on raw vectors would size the cells
-    for the full spread while the index only ever quantizes the
-    within-cluster remainder. Deterministic like pq_train (same
-    hash-seeded init ids, the residual transform is a pure function
-    of the deterministic coarse codebook), so attached == retrained
-    bit-identically. Keyed alongside the other codebooks; the key
-    embeds n_centroids because the residuals depend on the coarse
-    model."""
-    key = content_key(
-        "pqcbres",
-        src_path,
-        extra=f"c{n_centroids}_m{m}_ks{ks}_i{n_iter}_{id_col}_{vec_col}"
-        + ("_opq" if rotate else ""),
-        code_files=(__file__,),
-        suffixes=(".parquet",),
-    )
-
-    def _train(tmp: str) -> np.ndarray:
-        cents = get_codebook(
-            spark, src_path, k=n_centroids, n_iter=n_iter,
-            id_col=id_col, vec_col=vec_col,
-        )
-        res = _residual_udf(cents)
-        # stage the residual frame once: pq_train scans its input
-        # n_iter+1 times (init + one reduce per Lloyd round), and
-        # re-running the residual UDF per scan would multiply the
-        # corpus-sized Arrow work by the iteration count. With
-        # rotate=True the OPQ rotation composes into the SAME staged
-        # pass (R (x - c)) so the books train in rotated space.
-        staged = res(_as_double(F.col(vec_col)))
-        if rotate:
-            R = get_opq_rotation(
-                spark, src_path, m=m, id_col=id_col, vec_col=vec_col
-            )
-            staged = _rotate_udf(R)(staged)
-        spark.read.parquet(src_path).select(
-            F.col(id_col),
-            staged.alias(vec_col),
-        ).write.mode("overwrite").parquet(f"{tmp}/residuals")
-        books = pq_train(
-            spark.read.parquet(f"{tmp}/residuals"),
-            m=m, ks=ks, n_iter=n_iter, id_col=id_col, vec_col=vec_col,
-        )
-        import shutil as _sh
-
-        _sh.rmtree(f"{tmp}/residuals", ignore_errors=True)
-        return books
-
-    return _npy_store(spark, key, "pq_codebooks.npy", _train)
 
 
 def _embedding_covariance_fast(df: DataFrame, vec_col: str) -> DataFrame:
@@ -1630,7 +1431,6 @@ def get_codebook(
         src_path,
         extra=f"k{k}_i{n_iter}_{id_col}_{vec_col}",
         code_files=(__file__,),
-        suffixes=(".parquet",),
     )
     return _npy_store(
         spark,
@@ -1666,7 +1466,6 @@ def get_opq_rotation(
         src_path,
         extra=f"m{m}_{id_col}_{vec_col}",
         code_files=(__file__,),
-        suffixes=(".parquet",),
     )
 
     def _train(tmp: str) -> np.ndarray:
@@ -1705,7 +1504,6 @@ def get_pq_codebooks(
         extra=f"m{m}_ks{ks}_i{n_iter}_{id_col}_{vec_col}"
         + ("_opq" if rotate else ""),
         code_files=(__file__,),
-        suffixes=(".parquet",),
     )
 
     def _train(tmp: str) -> np.ndarray:
@@ -1715,7 +1513,7 @@ def get_pq_codebooks(
                 spark, src_path, m=m, id_col=id_col, vec_col=vec_col
             )
             # stage the rotated frame once: pq_train scans its input
-            # n_iter+1 times (the get_residual_pq_codebooks pattern)
+            # n_iter+1 times (init + one reduce per Lloyd round)
             rot = _rotate_udf(R)
             src.select(
                 F.col(id_col),

@@ -427,17 +427,11 @@ ORDER BY w.doc_id
 
 def c4_line_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style line filter over the wrapped documents. The synthetic
-    vocabulary has no punctuation, so the gate exercises the
-    min-words rule (drops each document's short tail line); the
-    terminal-punctuation and brace rules are exercised on punctuated
-    fixtures in tests/test_curation.py."""
+    vocabulary has no braces, so the gate exercises the min-words
+    rule (drops each document's short tail line); the brace rule is
+    exercised on fixtures in tests/test_curation.py."""
     return (
-        C.c4_line_filter(
-            _wrapped_docs(spark, sf_dir),
-            min_words=12,
-            require_terminal_punct=False,
-            drop_brace_lines=True,
-        )
+        C.c4_line_filter(_wrapped_docs(spark, sf_dir), min_words=12)
         .select(
             "doc_id",
             F.md5("clean_text").alias("text_md5"),
@@ -703,8 +697,7 @@ def dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # target ⊆ raw, so pass the id slice: the operator reuses the raw
     # postings for the target counts instead of re-tokenizing (r15)
     return C.dsir_select(
-        docs, target, n_buckets=1024, alpha=0.5, k=100,
-        target_ids=target.select("doc_id"),
+        docs, target.select("doc_id"), n_buckets=1024, alpha=0.5, k=100
     )
 
 

@@ -2172,15 +2172,11 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row), probed at n_probe=4 of 16 coarse lists, ADC top-20
     within the probed lists only. The billion-vector shape: the
     probe filter is partition pruning over the index files, the scan
-    is codes-only, the reduction is a TakeOrdered. The gate serves
-    RAW-mode encoding because THIS synthetic corpus is deliberately
-    cluster-diffuse (raw 0.55 vs residual 0.45 recall@20 at sf1);
-    measured the other way on the planted-cluster fixture residual
-    wins 0.25 vs 0.19 at every probe setting
-    (BENCH_vecrecall_r14.json) — so
-    the DOCUMENTED default for real, clustering embedding corpora is
-    ``residual=True``, and this gate's raw mode is the
-    corpus-matched exception. Rows-only like pq_search
+    is codes-only, the reduction is a TakeOrdered. The index encodes
+    x itself (raw IVF-PQ); the residual variant was measured
+    (BENCH_vecrecall_r14*.json, BENCH_vecrecall_r15*.json: it lost
+    0.45 vs 0.55 recall@20 on this sf1 corpus) and removed — see
+    ivf_pq_topk. Rows-only like pq_search
     (float k-means codebooks); exhaustive-probe == pq_topk identity
     and reduced-probe recall are pinned by tests/test_similarity.py."""
     path = f"{sf_dir}/embeddings.parquet"
@@ -2203,8 +2199,7 @@ def ann_ivf_pq_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     OPQ; R persistent + content-keyed via get_opq_rotation, flag in
     the index key AND the codes-column metadata). MEASURED VERDICT
     (BENCH_vecrecall_r15{,aniso,axis}): across all three fixture
-    regimes rotation never lifted the raw arm and lifted residual
-    only where residual had already collapsed below raw — so
+    regimes rotation never lifted the raw arm — so
     ``rotate`` stays an opt-in knob, not the default; this gate
     pins the serving path end to end
     (rows-only like ann_ivf_pq: float k-means + eigh models;

@@ -559,7 +559,6 @@ def _graph_cache_key(sf_dir: str) -> str:
         "g",
         sf_dir,
         code_files=_graph_code_files(),
-        suffixes=(".parquet",),
     )
 
 
@@ -932,19 +931,10 @@ def _write_store_tables(
         .distinct()
     )
     _aa_pairs.write.mode("overwrite").parquet(f"{tmp}/aa_und")
-    _aa_und = spark.read.parquet(f"{tmp}/aa_und")
-    (
-        _aa_und.select(F.col("a").alias("v"), F.col("b").alias("n"))
-        .unionByName(
-            _aa_und.select(F.col("b").alias("v"), F.col("a").alias("n"))
-        )
-        .groupBy("v")
-        .agg(
-            F.count(F.lit(1)).alias("d"),
-            F.sort_array(F.collect_list("n")).alias("ns"),
-        )
-        .write.mode("overwrite")
-        .parquet(f"{tmp}/aa_centers")
+    from ..operators.graph import aa_centers
+
+    aa_centers(spark.read.parquet(f"{tmp}/aa_und")).write.mode("overwrite").parquet(
+        f"{tmp}/aa_centers"
     )
     # the staging copies served the range sampling and the row
     # counts; shipping them in the published entry would bloat
@@ -962,13 +952,6 @@ def _write_rank_tables(spark: SparkSession, tmp: str) -> None:
     not of any single document — the teleport uniform 1/n couples
     every component — and they read the written pr_edges/pr_spine and
     tri_oriented tables back."""
-    # node/dangling counts of pr_spine: the pagerank run needs both
-    # before its first iteration (teleport + initial dangling mass)
-    spine = spark.read.parquet(f"{tmp}/pr_spine")
-    _srow = spine.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(F.col("__deg").isNull(), 1)).alias("nd"),
-    ).collect()[0]
     # materialized rank vector: pagerank over a STATIC stored
     # graph is a build-time artifact, exactly like degrees — the
     # reference's model is build-the-database-once, query-many.
@@ -976,21 +959,17 @@ def _write_rank_tables(spark: SparkSession, tmp: str) -> None:
     # (~1 planning pass + 1 job per round; measured 5-9s for 6
     # rounds at sf0.1, ~17s at sf1, regardless of data size),
     # which is the wrong place to pay for a vector that only
-    # changes when the graph does. The pagerank OPERATOR stays
-    # the ad-hoc path and is value-proven to 1e-7 against a
-    # single-process oracle in tests/test_graph.py; this call IS
-    # that operator, run once per build.
+    # changes when the graph does. The pagerank operator is
+    # value-proven to 1e-7 against a single-process oracle in
+    # tests/test_graph.py; this call runs it once per build over the
+    # store's own pr_edges/pr_spine.
     from ..operators.graph import pagerank as _pagerank
 
     _pagerank(
         spark.read.parquet(f"{tmp}/pr_edges"),
+        spark.read.parquet(f"{tmp}/pr_spine"),
         n_iter=6,
-        src_col="src",
-        dst_col="dst",
-        spine=spine,
-        edges_deduped=True,
         tol=1e-10,
-        spine_stats=(int(_srow["n"]), int(_srow["nd"])),
     ).write.mode("overwrite").parquet(f"{tmp}/pr_ranks")
     # coreness: the SECOND global artifact (r11 VERDICT task 6) —
     # exact k-core of the mixed reference graph (the same tri_oriented
@@ -1007,9 +986,9 @@ def _write_rank_tables(spark: SparkSession, tmp: str) -> None:
     from ..operators.graph import kcore_decomposition as _kcore
 
     _kstats: dict = {}
-    _kcore(
-        None, und=spark.read.parquet(f"{tmp}/tri_oriented"), stats=_kstats
-    ).write.mode("overwrite").parquet(f"{tmp}/coreness")
+    _kcore(spark.read.parquet(f"{tmp}/tri_oriented"), stats=_kstats).write.mode(
+        "overwrite"
+    ).parquet(f"{tmp}/coreness")
     # persist the round count next to the table: convergence behavior
     # per corpus is the thing to watch as chains lengthen (the
     # operator hard-raises at max_iter; this sidecar is the early
@@ -1666,9 +1645,7 @@ def graph_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the xref store is a bare parquet scan with the type filter
     # pushed to row groups — per-level pruned scans beat copying the
     # ~8M-row edge set into checkpoint blocks first
-    return bfs_distances(
-        edges, "customer_7", max_depth=3, materialize_edges=False
-    ).orderBy("node")
+    return bfs_distances(edges, "customer_7", max_depth=3).orderBy("node")
 
 
 GRAPH_DISTANCES_ORACLE = GRAPH_PREFIX + """
@@ -1843,7 +1820,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tri_oriented), so the query starts at the wedge join."""
     from ..operators.graph import triangle_count
 
-    return triangle_count(None, oriented=graph_table(spark, sf_dir, "tri_oriented"))
+    return triangle_count(graph_table(spark, sf_dir, "tri_oriented"))
 
 
 GRAPH_TRIANGLES_ORACLE = GRAPH_PREFIX + """
@@ -1875,8 +1852,8 @@ def link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree is 33) while dropping the hub tail — 1,000 supplier
     vertices of degree ~600 that alone hold 94%% of the total wedge
     volume yet contribute a negligible 1/ln(600) weight spread over
-    ~180k pairs each (the exact trade ngram_jaccard's max_df
-    documents). Measured 101s -> ~8s at sf0.1 for an unchanged
+    ~180k pairs each (a stopword-shingle document-frequency cap's
+    trade). Measured 101s -> ~8s at sf0.1 for an unchanged
     informative top-50."""
     from ..operators.graph import adamic_adar_topk
 
@@ -1891,11 +1868,10 @@ def link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _build): the query starts at the wedge expansion, and any
     # drift in the persisted prep would trip this oracle.
     return adamic_adar_topk(
-        None,
+        graph_table(spark, sf_dir, "aa_und"),
+        graph_table(spark, sf_dir, "aa_centers"),
         k=50,
         max_degree=32,
-        und=graph_table(spark, sf_dir, "aa_und"),
-        centers=graph_table(spark, sf_dir, "aa_centers"),
     )
 
 
@@ -1953,7 +1929,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     any bijection of the simple edge set works)."""
     from ..operators.graph import degree_assortativity
 
-    return degree_assortativity(None, und=graph_table(spark, sf_dir, "tri_oriented"))
+    return degree_assortativity(graph_table(spark, sf_dir, "tri_oriented"))
 
 
 GRAPH_ASSORT_ORACLE = GRAPH_PREFIX + _GRAPH_UND_SQL + """
@@ -1981,7 +1957,7 @@ def graph_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle counts; coeff rounds at 6dp)."""
     from ..operators.graph import local_clustering
 
-    return local_clustering(None, oriented=graph_table(spark, sf_dir, "tri_oriented"))
+    return local_clustering(graph_table(spark, sf_dir, "tri_oriented"))
 
 
 GRAPH_CLUSTERING_ORACLE = GRAPH_PREFIX + _GRAPH_UND_SQL + """

@@ -1,8 +1,10 @@
 """SparkSession builder.
 
-Local-mode defaults are sized for the test harness (local[32],
-128 GiB single JVM); on a real cluster the same settings are safe —
-AQE re-plans shuffle partition counts at runtime, so the static
+Local-mode defaults follow the machine: one local thread per CPU
+(``SPARK_GRAFT_CPUS`` overrides) and a single driver JVM of half the
+physical memory, capped at 48g (``SPARK_GRAFT_DRIVER_MEM``
+overrides). On a real cluster the same settings are safe — AQE
+re-plans shuffle partition counts at runtime, so the static
 ``spark.sql.shuffle.partitions`` value is only an upper bound for the
 small scale factors used in tests.
 """
@@ -16,10 +18,21 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 48g: the driver JVM is the
+    whole local-mode cluster, and a heap sized past the machine lets
+    a store build grow until the kernel kills the JVM (a cold sf0.1
+    graph build under a fixed 48g on a 15 GB machine)."""
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (ValueError, OSError, AttributeError):
+        return "48g"
+    return f"{min(48 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "xml_to_sqlite3_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
@@ -41,8 +54,7 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = max(int(cpus) if cpus.isdigit() else 32, 8)
+    shuffle_partitions = max(int(cpus) if cpus.isdigit() else 32, 8)
 
     builder = (
         SparkSession.builder.master(master)
@@ -54,12 +66,15 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         # Long single-JVM sessions (the driver runs ~70 gate queries
         # back to back) accumulate weakly-referenced state — per-level
         # localCheckpoint blocks from the iterative operators, AQE
         # plan garbage, shuffle files. The cleaner only reclaims these
-        # after a JVM GC, and with a 48g heap the default 30min
+        # after a JVM GC, and with a large heap the default 30min
         # periodic GC never fires inside a bench run — the heap fills
         # until ONE random query pays a ~60-70s full-GC stall
         # (observed: hierarchy_levels 70.8s, descendants 71.5s in

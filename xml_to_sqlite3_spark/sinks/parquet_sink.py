@@ -2,9 +2,8 @@
 
 This is the 100 TB path — the reference's single SQLite file is a
 single-writer bottleneck by construction (lib/database_writer.rb is
-explicitly one consumer fiber); at scale the corpus lands as parquet
-partitioned by document_id hash-bucket so downstream joins on
-document_id prune partitions.
+explicitly one consumer fiber); at scale the corpus lands as one
+parquet table per relation, written by every task in parallel.
 """
 
 from __future__ import annotations
@@ -20,7 +19,6 @@ def write_corpus_parquet(
     corpus: XmlCorpus,
     out_dir: str,
     mode: str = "overwrite",
-    buckets: int | None = None,
 ) -> None:
     """Write the corpus as four parquet tables.
 
@@ -37,17 +35,13 @@ def write_corpus_parquet(
         corpus.properties, ["node_id", "property_name"], "ordinal"
     ).drop("ordinal")
 
-    def _write(df, name, bucket_col=None):
-        writer = df.write.mode(mode)
-        if buckets and bucket_col is not None:
-            df = df.withColumn("bucket", F.abs(F.hash(bucket_col)) % buckets)
-            writer = df.write.mode(mode).partitionBy("bucket")
-        writer.parquet(os.path.join(out_dir, name))
-
-    _write(corpus.documents, "documents")
-    _write(nodes, "nodes", "document_id")
-    _write(properties, "node_properties", "node_id")
-    _write(corpus.errors, "errors")
+    for df, name in (
+        (corpus.documents, "documents"),
+        (nodes, "nodes"),
+        (properties, "node_properties"),
+        (corpus.errors, "errors"),
+    ):
+        df.write.mode(mode).parquet(os.path.join(out_dir, name))
 
 
 def zorder_key(cols: list, bits_per_dim: int = 8, ranges: dict | None = None):
@@ -88,8 +82,8 @@ def write_zordered(
     df,
     path: str,
     cols: list,
+    n_files: int,
     bits_per_dim: int = 8,
-    n_files: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Write parquet clustered on the Z-order curve of ``cols`` so
@@ -111,9 +105,8 @@ def write_zordered(
     ).first()
     ranges = {c: (stats[f"__lo_{c}"], stats[f"__hi_{c}"]) for c in cols}
     keyed = df.withColumn("__z", zorder_key(cols, bits_per_dim, ranges))
-    n = n_files or df.sparkSession.sparkContext.defaultParallelism
     (
-        keyed.repartitionByRange(n, "__z")
+        keyed.repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode(mode)
@@ -126,7 +119,6 @@ def compact_parquet(
     in_path: str,
     out_path: str,
     target_file_bytes: int = 128 << 20,
-    partition_col: str | None = None,
 ) -> int:
     """Bin-pack a parquet dataset into ~``target_file_bytes`` files;
     returns the file count written. The small-files problem:
@@ -135,12 +127,8 @@ def compact_parquet(
     footer cost dominates scans. Compaction = size the output file
     count from the INPUT's on-disk bytes (compressed, from the
     filesystem listing — no data read), then one round-robin
-    ``repartition(n)`` rewrite for evenly-sized files.
-
-    With ``partition_col`` the directory layout is preserved and each
-    output file holds one partition value (repartition BY COLUMN so
-    the writer task and the directory agree — round-robin would make
-    every task write every directory).
+    ``repartition(n)`` rewrite for evenly-sized files (a flat,
+    unpartitioned layout).
 
     This is the maintenance half of the lakehouse OPTIMIZE pattern
     (write_zordered is the clustering half; compose by compacting
@@ -154,16 +142,7 @@ def compact_parquet(
             if f.endswith(".parquet"):
                 total += os.path.getsize(os.path.join(root, f))
     n = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(in_path)
-    if partition_col is not None:
-        (
-            df.repartition(n, partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(out_path)
-        )
-    else:
-        df.repartition(n).write.mode("overwrite").parquet(out_path)
+    spark.read.parquet(in_path).repartition(n).write.mode("overwrite").parquet(out_path)
     written = 0
     for root, _dirs, files in os.walk(out_path):
         written += sum(1 for f in files if f.endswith(".parquet"))

@@ -323,14 +323,14 @@ def read_xml_corpus(
     spark: SparkSession,
     input_dir: str,
     glob: str = "*.xml",
-    recursive: bool = True,
 ) -> XmlCorpus:
-    """Scan a directory of XML files into the reference's relational
-    model: (documents, nodes, properties, errors) DataFrames."""
+    """Scan a directory tree of XML files (subdirectories included)
+    into the reference's relational model: (documents, nodes,
+    properties, errors) DataFrames."""
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true" if recursive else "false")
+        .option("recursiveFileLookup", "true")
         .load(input_dir)
         .select("path", "length", "content")
     )
