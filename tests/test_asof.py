@@ -22,7 +22,9 @@ def test_asof_basic(spark):
     )
     out = {
         r["event_id"]: r["price_asof"]
-        for r in asof_join(left, right, on="ts", by="user_id").collect()
+        for r in asof_join(
+            left, right, on="ts", by="user_id", value_cols=["price"]
+        ).collect()
     }
     assert out == {1: 100.0, 2: 200.0, 3: None, 4: None}
     # 3: u2's only right row is LATER (8 > 7) -> no match
@@ -36,7 +38,7 @@ def test_asof_inclusive_at_equal_ts(spark):
     right = spark.createDataFrame(
         [("u1", _t(5), 42.0)], "user_id string, ts timestamp, price double"
     )
-    out = asof_join(left, right, on="ts", by="user_id").collect()
+    out = asof_join(left, right, on="ts", by="user_id", value_cols=["price"]).collect()
     assert out[0]["price_asof"] == 42.0  # right sorts before left at equal ts
 
 
@@ -51,7 +53,9 @@ def test_asof_null_in_latest_right_row_wins_atomically(spark):
         [("u1", _t(2), 100.0, "old"), ("u1", _t(8), None, "new")],
         "user_id string, ts timestamp, price double, tag string",
     )
-    out = asof_join(left, right, on="ts", by="user_id").collect()[0]
+    out = asof_join(
+        left, right, on="ts", by="user_id", value_cols=["price", "tag"]
+    ).collect()[0]
     assert out["tag_asof"] == "new"
     assert out["price_asof"] is None  # NOT 100.0 from the older row
 
@@ -64,7 +68,7 @@ def test_asof_latest_wins(spark):
         [("u1", _t(i), float(i)) for i in (1, 10, 20, 25)],
         "user_id string, ts timestamp, price double",
     )
-    out = asof_join(left, right, on="ts", by="user_id").collect()
+    out = asof_join(left, right, on="ts", by="user_id", value_cols=["price"]).collect()
     assert out[0]["price_asof"] == 25.0
 
 
@@ -115,7 +119,8 @@ def test_asof_matches_pandas_merge_asof(spark):
         got = {
             r["event_id"]: r["val_asof"]
             for r in asof_join(
-                left, right, on="t", by="key", direction=direction, tolerance=tol
+                left, right, on="t", by="key", value_cols=["val"],
+                direction=direction, tolerance=tol,
             ).collect()
         }
         for eid in left_pd["event_id"]:

@@ -432,6 +432,12 @@ def test_components_store_attach_and_equivalence(spark, tmp_path, monkeypatch):
 
 
 class TestFuzzyMatch:
+    @staticmethod
+    def _pairs(df, **kw):
+        return {
+            (r["name_a"], r["name_b"]): r for r in D.fuzzy_match(df, **kw).collect()
+        }
+
     def test_blocked_levenshtein_pairs(self, spark):
         df = spark.createDataFrame(
             [
@@ -443,63 +449,53 @@ class TestFuzzyMatch:
             ],
             "id long, name string",
         )
-        out = {
-            (r["id_a"], r["id_b"]): (r["dist"], r["similarity"])
-            for r in D.fuzzy_match_pairs(df, max_dist=3).collect()
-        }
-        assert out[(1, 2)][0] == 1
-        assert out[(1, 2)][1] == pytest.approx(round(1 - 1 / 10, 6))
-        assert out[(1, 5)][0] == 0  # min_dist=0 keeps exacts
-        assert out[(1, 3)][0] == 2
-        assert not any(4 in p for p in out)
-        # min_dist excludes the exact band
-        fuzzy = {
-            (r["id_a"], r["id_b"])
-            for r in D.fuzzy_match_pairs(df, max_dist=3, min_dist=1).collect()
-        }
-        assert (1, 5) not in fuzzy and (1, 2) in fuzzy
+        out = self._pairs(df, max_dist=3)
+        r = out[("red widget", "red widgit")]
+        assert (r["dist"], r["n_a"], r["n_b"], r["n_pairs"]) == (1, 2, 1, 2)
+        assert r["similarity"] == pytest.approx(round(1 - 1 / 10, 6))
+        assert out[("red gadget", "red widget")]["dist"] == 2
+        assert not any("blue widget" in p for p in out)
+        # the exact band (dist 0) is never a fuzzy match
+        assert all(a != b for a, b in out)
 
     def test_normalization_and_length_prefilter(self, spark):
         df = spark.createDataFrame(
-            [(1, "  Red   Widget "), (2, "red widget"), (3, "red w")],
+            [(1, "  Red   Widget "), (2, "red widget"), (3, "red w"), (4, "RED WIDGIT")],
             "id long, name string",
         )
-        out = {
-            (r["id_a"], r["id_b"]): r["dist"]
-            for r in D.fuzzy_match_pairs(df, max_dist=2).collect()
-        }
-        # case/whitespace normalize to equal -> dist 0
-        assert out[(1, 2)] == 0
+        out = self._pairs(df, max_dist=2)
+        # case/whitespace normalize to one name: a group of two records
+        assert out[("red widget", "red widgit")]["n_a"] == 2
         # |len 10 - len 5| = 5 > max_dist -> pruned before levenshtein
-        assert (1, 3) not in out and (2, 3) not in out
+        assert not any("red w" in p for p in out)
 
     def test_null_and_empty_names_excluded(self, spark):
         # NULL names can't match a block equi-join and whitespace-only
         # names would pair at 0/0 similarity (NULL, or DIVIDE_BY_ZERO
         # under ANSI) — both are excluded up front by contract
         df = spark.createDataFrame(
-            [(1, "red widget"), (2, None), (3, "   "), (4, "\t"), (5, "red widget")],
+            [(1, "red widget"), (2, None), (3, "   "), (4, "\t"), (5, "red widget"),
+             (6, "red widgit")],
             "id long, name string",
         )
-        out = {
-            (r["id_a"], r["id_b"]) for r in D.fuzzy_match_pairs(df, max_dist=2).collect()
-        }
-        assert out == {(1, 5)}
+        out = self._pairs(df, max_dist=2)
+        assert set(out) == {("red widget", "red widgit")}
+        assert out[("red widget", "red widgit")]["n_a"] == 2
 
     def test_fat_block_raises(self, spark):
         df = spark.createDataFrame(
             [(i, f"the item{i}") for i in range(50)], "id long, name string"
         )
         with pytest.raises(ValueError, match="max_block"):
-            D.fuzzy_match_pairs(df, max_block=10)
+            D.fuzzy_match(df, max_block=10)
         # raising the bound (or a finer key) unblocks
-        assert D.fuzzy_match_pairs(df, max_block=100).count() >= 0
+        assert D.fuzzy_match(df, max_block=100).count() >= 0
 
     def test_second_blocking_key_recovers_first_word_typos(self, spark):
-        """r14 VERDICT task 6: first-token blocking never compares
-        names whose FIRST word is the typo'd one — the union
-        last-token block recovers them; pairs matched under BOTH keys
-        score once; the default stays byte-identical to single-key."""
+        """First-token blocking never compares names whose FIRST word
+        is the typo'd one — the union last-token block recovers them;
+        pairs matched under BOTH keys score once; the default stays
+        byte-identical to single-key."""
         df = spark.createDataFrame(
             [
                 (1, "green metallic paint"),
@@ -512,12 +508,12 @@ class TestFuzzyMatch:
         )
         first_only = {
             (r["name_a"], r["name_b"]): r["dist"]
-            for r in D.fuzzy_match_names(df, max_dist=3).collect()
+            for r in D.fuzzy_match(df, max_dist=3).collect()
         }
         assert ("green metallic paint", "gren metallic paint") not in first_only
         both = {
             (r["name_a"], r["name_b"]): r["dist"]
-            for r in D.fuzzy_match_names(
+            for r in D.fuzzy_match(
                 df, max_dist=3, block_keys=("first", "last")
             ).collect()
         }
@@ -527,28 +523,20 @@ class TestFuzzyMatch:
         assert set(first_only) <= set(both)
         # double-key match appears exactly once with the same dist
         assert both[("green metalic paint", "green metallic paint")] == 1
-        rows = D.fuzzy_match_names(
+        rows = D.fuzzy_match(
             df, max_dist=3, block_keys=("first", "last")
         ).collect()
         assert len(rows) == len({(r["name_a"], r["name_b"]) for r in rows})
-        # the record-pair expansion honors the same knob
-        pair_ids = {
-            (r["id_a"], r["id_b"])
-            for r in D.fuzzy_match_pairs(
-                df, max_dist=3, min_dist=1, block_keys=("first", "last")
-            ).collect()
-        }
-        assert (1, 2) in pair_ids and (1, 3) in pair_ids and (1, 4) in pair_ids
         # an unknown key fails loudly
         with pytest.raises(ValueError, match="block_keys"):
-            D.fuzzy_match_names(df, block_keys=("soundex",))
+            D.fuzzy_match(df, block_keys=("soundex",))
 
 
 class TestFuzzyMatchProperties:
-    """Hypothesis property test: the distinct-name + expansion plan
-    must equal a brute-force record-level python replica on arbitrary
-    small corpora (the r12 rewrite changed the PLAN, not the
-    semantics — this pins that claim beyond the hand cases)."""
+    """Hypothesis property test: the blocked distinct-name plan must
+    equal a brute-force python replica over every name pair on
+    arbitrary small corpora — this pins the semantics beyond the hand
+    cases."""
 
     @staticmethod
     def _lev(a: str, b: str) -> int:
@@ -565,30 +553,31 @@ class TestFuzzyMatchProperties:
     @classmethod
     def _replica(cls, rows, max_dist, min_dist):
         import re
+        from collections import Counter
 
-        norm = {}
-        for i, name in rows:
+        groups = Counter()
+        for _, name in rows:
             if name is None:
                 continue
             nm = re.sub(r"[ \t\n\x0b\f\r]+", " ", name).strip(" ").lower()
             # operator trims spaces only AFTER collapsing, like Spark
             if nm == "":
                 continue
-            norm[i] = nm
+            groups[nm] += 1
         out = {}
-        ids = sorted(norm)
-        for x in range(len(ids)):
-            for y in range(x + 1, len(ids)):
-                a, b = ids[x], ids[y]
-                na, nb = norm[a], norm[b]
+        names = sorted(groups)
+        for x in range(len(names)):
+            for y in range(x + 1, len(names)):
+                na, nb = names[x], names[y]
                 if na.split(" ")[0] != nb.split(" ")[0]:
                     continue
                 if abs(len(na) - len(nb)) > max_dist:
                     continue
                 d = cls._lev(na, nb)
-                if min_dist <= d <= max_dist:
+                if max(min_dist, 1) <= d <= max_dist:
                     sim = round(1 - d / max(len(na), len(nb)), 6)
-                    out[(a, b)] = (na, nb, d, sim)
+                    n_a, n_b = groups[na], groups[nb]
+                    out[(na, nb)] = (d, sim, n_a, n_b, n_a * n_b)
         return out
 
     def test_matches_brute_force_replica(self, spark):
@@ -617,10 +606,10 @@ class TestFuzzyMatchProperties:
                 rows, "id long, name string"
             ) if rows else spark.createDataFrame([], "id long, name string")
             got = {
-                (r["id_a"], r["id_b"]): (
-                    r["name_a"], r["name_b"], r["dist"], r["similarity"]
+                (r["name_a"], r["name_b"]): (
+                    r["dist"], r["similarity"], r["n_a"], r["n_b"], r["n_pairs"]
                 )
-                for r in D.fuzzy_match_pairs(
+                for r in D.fuzzy_match(
                     df, max_dist=max_dist, min_dist=min_dist
                 ).collect()
             }
@@ -642,27 +631,24 @@ def test_fuzzy_match_names_rollup(spark):
     )
     out = {
         (r["name_a"], r["name_b"]): r
-        for r in D.fuzzy_match_names(df, max_dist=2).collect()
+        for r in D.fuzzy_match(df, max_dist=2).collect()
     }
     r = out[("red widget", "red widgit")]
     assert (r["dist"], r["n_a"], r["n_b"], r["n_pairs"]) == (1, 3, 1, 3)
     assert r["similarity"] == pytest.approx(round(1 - 1 / 10, 6))
-    # widgit<->gadget dist 2? w->g, i->a, d=d, g->d... check: "red widgit" vs "red gadget"
     # ordered by dist then names; no same-name rows ever
     assert all(a != b for a, b in out)
     # min_dist coerced to >= 1: passing 0 changes nothing
     again = {
         (r["name_a"], r["name_b"])
-        for r in D.fuzzy_match_names(df, max_dist=2, min_dist=0).collect()
+        for r in D.fuzzy_match(df, max_dist=2, min_dist=0).collect()
     }
     assert again == set(out)
 
 
 def test_fuzzy_match_default_api(spark):
-    """The public entry point (r12 VERDICT task 3): fuzzy_match
-    defaults to the vocabulary-level name relation; the output-sized
-    record expansion sits behind expand_records=True and matches
-    fuzzy_match_pairs exactly."""
+    """The public entry point returns the vocabulary-level name
+    relation with its record-group sizes."""
     df = spark.createDataFrame(
         [
             (1, "red widget"), (2, "red widget"),
@@ -677,15 +663,6 @@ def test_fuzzy_match_default_api(spark):
         "name_a", "name_b", "dist", "similarity", "n_a", "n_b", "n_pairs"
     }
     assert names[0]["n_pairs"] == 2
-    expanded = {
-        (r["id_a"], r["id_b"])
-        for r in D.fuzzy_match(df, max_dist=2, expand_records=True).collect()
-    }
-    direct = {
-        (r["id_a"], r["id_b"])
-        for r in D.fuzzy_match_pairs(df, max_dist=2, min_dist=1).collect()
-    }
-    assert expanded == direct == {(1, 3), (2, 3)}
 
 
 class TestExactIdentityKeyWidth:

@@ -471,11 +471,11 @@ def test_fuzzy_match_blocked_join_no_python(spark):
     """Candidate generation must be an equi-join on the block key
     (hash-joinable), the bounded levenshtein stays JVM-side, and the
     length prefilter sits in the join, not after it."""
-    from xml_to_sqlite3_spark.operators.dedup import fuzzy_match_pairs
+    from xml_to_sqlite3_spark.operators.dedup import fuzzy_match
 
     df = spark.read.parquet(f"{SF_SMOKE}/part.parquet")
     plan = _physical(
-        fuzzy_match_pairs(df, id_col="p_partkey", name_col="p_name", max_dist=2)
+        fuzzy_match(df, id_col="p_partkey", name_col="p_name", max_dist=2)
     )
     assert "EvalPython" not in plan  # levenshtein is a JVM expression
     assert "CartesianProduct" not in plan

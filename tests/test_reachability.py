@@ -38,6 +38,8 @@ _FIXTURE = "fixture encoder building the inputs of a decoder the gates reach"
 KEEP = {
     "infer_type_regex": _REFERENCE + " (infer_type)",
     "node_tree": _REFERENCE + " (the recursive-CTE replica of the iterative walk)",
+    "_parse_one": _REFERENCE + " (the DOM walk the expat parser _parse_one_stream "
+    "must match row for row)",
     "encode_bmp": _FIXTURE + " (decode_bmp)",
     "encode_wav_compressed": _FIXTURE + " (decode_wav)",
     "ima_adpcm_encode": _FIXTURE + " (decode_wav)",
@@ -190,30 +192,55 @@ class _Def:
         }
 
 
+def _import_source(f: pathlib.Path, node: ast.ImportFrom) -> str | None:
+    """The repo-relative module file an ``ImportFrom`` names, or None
+    when it is not a plain module file (a package, or outside the
+    repo)."""
+    base = f.parent if node.level else REPO
+    for _ in range(node.level - 1):
+        base = base.parent
+    if not node.module:
+        return None
+    p = base.joinpath(*node.module.split(".")).with_suffix(".py")
+    return str(p.relative_to(REPO)) if p.is_file() else None
+
+
 def _product_calls():
     """({name: [_Def]} of every def in product code, {callee name:
-    [(Call, enclosing _Defs innermost last)]}, names used as values).
+    [(Call, enclosing _Defs innermost last)]}, defs used as values).
     Product code is the package plus the reachability roots; a callee
-    is the called Name (import aliases resolved) or Attribute name."""
+    is the called Name (import aliases resolved) or Attribute name. A
+    value use is ``(module, name)`` for a bare Name, which names its
+    own module's def or the def it was imported from, and the bare
+    name for an Attribute (or an import whose module is no plain
+    file), which may name any def of that name."""
     defs: dict[str, list[_Def]] = {}
     calls: dict[str, list] = {}
-    values: set[str] = set()
+    values: set = set()
     for f in _root_files() + sorted(PKG.rglob("*.py")):
         tree = ast.parse(f.read_text())
-        alias = {
-            a.asname: a.name
-            for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
-            for a in n.names if a.asname
-        }
+        mod = str(f.relative_to(REPO))
+        alias, source = {}, {}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom):
+                for a in n.names:
+                    if a.asname:
+                        alias[a.asname] = a.name
+                    src = _import_source(f, n)
+                    source[a.asname or a.name] = (src, a.name) if src else a.name
         called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
-        values |= {
-            n.id if isinstance(n, ast.Name) else n.attr
-            for n in ast.walk(tree)
-            if isinstance(n, (ast.Name, ast.Attribute))
-            and isinstance(n.ctx, ast.Load) and id(n) not in called
-        }
+        for n in ast.walk(tree):
+            if not (
+                isinstance(n, (ast.Name, ast.Attribute))
+                and isinstance(n.ctx, ast.Load) and id(n) not in called
+            ):
+                continue
+            if isinstance(n, ast.Attribute):
+                values.add(n.attr)
+            else:  # a function-local import may shadow the module's def
+                values |= {(mod, n.id), source.get(n.id, (mod, n.id))}
 
-        def visit(node, chain, in_class, mod=str(f.relative_to(REPO)), alias=alias):
+        def visit(node, chain, in_class, mod=mod, alias=alias):
             for ch in ast.iter_child_nodes(node):
                 if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     static = any(
@@ -243,8 +270,9 @@ def _single_valued_options() -> dict[str, object]:
     parameter that resolves the same way, or (for a None default)
     passes a call or literal — "not None". ``*args``/``**kwargs`` at a
     call, any other expression, and a def never called by name (or
-    also used as a value, e.g. stored in a dict) vary, so the pass can
-    only under-report."""
+    also used as a value, e.g. stored in a dict: a bare Name marks
+    only the def it resolves to, an Attribute every def of its name)
+    vary, so the pass can only under-report."""
     defs, calls, values = _product_calls()
     memo: dict[tuple[int, str], set] = {}
 
@@ -284,7 +312,8 @@ def _single_valued_options() -> dict[str, object]:
         if key not in memo:
             memo[key] = {_VARIES}  # a recursive forward varies
             sites = calls.get(d.node.name, [])
-            out = {_VARIES} if not sites or d.node.name in values else set()
+            as_value = d.node.name in values or (d.mod, d.node.name) in values
+            out = {_VARIES} if not sites or as_value else set()
             for call, chain in sites:
                 out |= value(d, p, call, chain)
             memo[key] = out

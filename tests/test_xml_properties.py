@@ -39,7 +39,7 @@ def xml_tree(draw, depth=0):
 @settings(max_examples=60, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(xml_tree())
 def test_parser_invariants(xml):
-    rows = _parse_one(xml.encode(), "/tmp/prop.xml", len(xml))
+    rows = _parse_one_stream(xml.encode(), "/tmp/prop.xml", len(xml))
     assert rows, "every parse emits at least a documents row"
     node_rows = [r for r in rows if r[4] is not None]
     errors = [r for r in rows if r[3] is not None]
@@ -69,7 +69,7 @@ def test_parser_invariants(xml):
 @settings(max_examples=30, deadline=None)
 @given(st.text(alphabet="abcdef<>&\"' \n0123456789", max_size=60))
 def test_parser_never_crashes_on_garbage(garbage):
-    rows = _parse_one(garbage.encode(), "/tmp/garbage.xml", len(garbage))
+    rows = _parse_one_stream(garbage.encode(), "/tmp/garbage.xml", len(garbage))
     assert rows, "always at least one row (node or error)"
     # either a parse error or a well-formed result — never an exception
     assert all(len(r) == 12 for r in rows)
@@ -78,8 +78,8 @@ def test_parser_never_crashes_on_garbage(garbage):
 @settings(max_examples=60, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(xml_tree())
 def test_streaming_parser_parity(xml):
-    """The expat streaming path (large-file route) is row-for-row
-    identical to the DOM path on arbitrary trees."""
+    """The expat parser (the production path) is row-for-row
+    identical to the reference DOM walk on arbitrary trees."""
     data = xml.encode()
     assert _parse_one_stream(data, "/tmp/prop.xml", len(data)) == _parse_one(
         data, "/tmp/prop.xml", len(data)

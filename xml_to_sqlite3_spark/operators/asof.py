@@ -21,7 +21,7 @@ def asof_join(
     right: DataFrame,
     on: str,
     by: str,
-    value_cols: list[str] | None = None,
+    value_cols: list[str],
     suffix: str = "_asof",
     direction: str = "backward",
     tolerance: float | None = None,
@@ -34,8 +34,8 @@ def asof_join(
     ``on`` column's native units; seconds for timestamps) discards
     matches farther than that distance.
 
-    ``value_cols``: right columns to carry (default: all but on/by).
-    Matches are inclusive at equal timestamps.
+    ``value_cols``: right columns to carry, each returned as
+    ``<col><suffix>``. Matches are inclusive at equal timestamps.
 
     The right side is carried as ONE struct of all value columns (plus
     its own ``on``), so the entire matched right row wins atomically —
@@ -45,8 +45,6 @@ def asof_join(
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward/forward/nearest, got {direction!r}")
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in (on, by)]
 
     rights = right.select(
         by,

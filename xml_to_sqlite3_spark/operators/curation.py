@@ -92,20 +92,18 @@ def source_quota(
     group_col: str = "source",
     max_per_group: int = 100,
     order_col: str = "doc_id",
-    descending: bool = False,
 ) -> DataFrame:
     """Cap documents per source/domain — the anti-over-representation
     step of corpus assembly (a single crawl domain must not dominate
     the training mix). Keeps the first `max_per_group` rows per group
-    ordered by `order_col` (e.g. a quality score, descending).
+    in ascending `order_col` order.
 
     One shuffle on `group_col`; the rank-and-filter window does no
     buffering beyond the group. Ties broken by the order column only
     — pass a unique column (or a (score, id) struct) for full
     determinism; the default doc_id is unique.
     """
-    oc = F.col(order_col).desc() if descending else F.col(order_col).asc()
-    w = Window.partitionBy(group_col).orderBy(oc)
+    w = Window.partitionBy(group_col).orderBy(F.col(order_col).asc())
     return (
         df.withColumn("__rank", F.row_number().over(w))
         .filter(F.col("__rank") <= max_per_group)

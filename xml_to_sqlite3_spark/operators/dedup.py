@@ -1145,28 +1145,24 @@ def _blocked_name_candidates(
     block_keys: tuple,
     max_dist: int,
     max_block: int,
-    fn_name: str,
-    extra_cols: tuple = (),
 ) -> DataFrame:
-    """Candidate DISTINCT-name pairs for fuzzy matching, generated as
-    the UNION over ``block_keys`` equi-join blocks — shared by
-    :func:`fuzzy_match_pairs` and :func:`fuzzy_match_names` so the
-    blocking semantics (fat-block guard per (key, block), length
-    prefilter, cross-key dedup BEFORE the distance evaluates) can
-    never diverge between the two surfaces.
+    """Candidate DISTINCT-name pairs for :func:`fuzzy_match`, generated
+    as the UNION over ``block_keys`` equi-join blocks: fat-block guard
+    per (key, block), length prefilter, cross-key dedup BEFORE the
+    distance evaluates.
 
-    ``names`` must carry (nm, ln) plus ``extra_cols``; returns
-    (nma, nmb, lna, lnb, a_<extra>, b_<extra>) with nma < nmb, each
-    pair exactly once even when several keys match it. With a single
-    key this is the classic one-block hash join (no dedup shuffle
-    added); every added key costs one more postings branch and one
-    dropDuplicates on the candidate (vocabulary-bounded) relation —
-    never a corpus-sized shuffle.
+    ``names`` must carry (nm, ln, n_rec); returns (nma, nmb, lna, lnb,
+    a_n_rec, b_n_rec) with nma < nmb, each pair exactly once even when
+    several keys match it. With a single key this is the classic
+    one-block hash join (no dedup shuffle added); every added key
+    costs one more postings branch and one dropDuplicates on the
+    candidate (vocabulary-bounded) relation — never a corpus-sized
+    shuffle.
     """
     unknown = [k2 for k2 in block_keys if k2 not in _BLOCK_KEY_EXPRS]
     if not block_keys or unknown:
         raise ValueError(
-            f"{fn_name}: block_keys must be a non-empty subset of "
+            "fuzzy_match: block_keys must be a non-empty subset of "
             f"{sorted(_BLOCK_KEY_EXPRS)}, got {block_keys!r}"
         )
     keyed = None
@@ -1174,7 +1170,7 @@ def _blocked_name_candidates(
         part = names.select(
             "nm",
             "ln",
-            *extra_cols,
+            "n_rec",
             F.lit(kind).alias("bk"),
             _BLOCK_KEY_EXPRS[kind](F.col("nm")).alias("bv"),
         )
@@ -1194,7 +1190,7 @@ def _blocked_name_candidates(
             f"{r['bk']}-token block '{r['bv']}': {r['n']} names" for r in fat
         )
         raise ValueError(
-            f"{fn_name}: block(s) exceed max_block={max_block} distinct "
+            f"fuzzy_match: block(s) exceed max_block={max_block} distinct "
             f"names ({detail}); the within-block pair join is quadratic "
             "in the name vocabulary — use a finer blocking key or raise "
             "max_block explicitly if the cost is intended"
@@ -1211,8 +1207,8 @@ def _blocked_name_candidates(
         F.col("b.nm").alias("nmb"),
         F.col("a.ln").alias("lna"),
         F.col("b.ln").alias("lnb"),
-        *[F.col(f"a.{c}").alias(f"a_{c}") for c in extra_cols],
-        *[F.col(f"b.{c}").alias(f"b_{c}") for c in extra_cols],
+        F.col("a.n_rec").alias("a_n_rec"),
+        F.col("b.n_rec").alias("b_n_rec"),
     )
     if len(block_keys) > 1:
         # a pair whose names share SEVERAL block values (same first
@@ -1221,12 +1217,12 @@ def _blocked_name_candidates(
     return cand
 
 
-def fuzzy_match_pairs(
+def fuzzy_match(
     df: DataFrame,
     id_col: str = "id",
     name_col: str = "name",
     max_dist: int = 2,
-    min_dist: int = 0,
+    min_dist: int = 1,
     max_block: int = 100_000,
     block_keys: tuple = ("first",),
 ) -> DataFrame:
@@ -1237,20 +1233,27 @@ def fuzzy_match_pairs(
     dedup family catches — Levenshtein distance 1 on a short name can
     be Jaccard 0 on its shingles.
 
+    Returns the VOCABULARY-sized relation: matched DISTINCT-name pairs
+    with their record-group sizes, (name_a, name_b, dist, similarity,
+    n_a, n_b, n_pairs) with name_a < name_b, ordered by (dist, name_a,
+    name_b); similarity = 1 - dist / max(len) rounded to 6dp and
+    n_pairs = n_a * n_b, the record pairs the match implies. The whole
+    computation is bounded by the name vocabulary, not the record
+    count (the sf0.1 part table is 20,000 records over 64 distinct
+    names; at sf1 the n_a x n_b record-pair expansion would be ~150M
+    rows, this relation ~16). ``min_dist`` is coerced to >= 1:
+    same-name record groups are exact_duplicates' output, not a fuzzy
+    match. NULL and whitespace-only names are excluded up front: they
+    cannot be matched, and empty names would pair at 0/0 similarity.
+
     Plan shape, in scale order:
-    1. Every edit distance is computed over DISTINCT NAMES, once —
-       record-level results expand back through two equi-joins on the
-       name. This is the load-bearing step at scale: entity columns
-       repeat heavily (the sf0.1 part table is 20,000 records over 64
-       distinct names), and the first record-level cut of this
-       operator measured 52.9s at sf0.1 where the distinct-name form
-       runs the SAME 64x64 comparisons the sf0.01 corpus needs — the
-       distance work is bounded by the name vocabulary, not the
-       record count.
-    2. BLOCK on the normalized name's first token — an equi-join key,
-       so candidate generation is a hash join, never all-pairs. A hot
-       block (every name starting "the ...") is the quadratic risk,
-       so DISTINCT-NAME block sizes above ``max_block`` raise loudly
+    1. Names are normalized (whitespace collapsed, trimmed,
+       lowercased) and grouped, so every edit distance is computed
+       once per DISTINCT name pair.
+    2. BLOCK on ``block_keys`` — equi-join keys, so candidate
+       generation is a hash join, never all-pairs. A hot block (every
+       name starting "the ...") is the quadratic risk, so
+       DISTINCT-NAME block sizes above ``max_block`` raise loudly
        BEFORE the pair join (the max_cluster_size policy).
     3. Length prefilter inside the join condition: ``|len_a - len_b|
        <= max_dist`` is a provable Levenshtein lower bound, pruned
@@ -1259,150 +1262,17 @@ def fuzzy_match_pairs(
        early-exits above ``max_dist`` (returns -1), so the per-pair
        cost is O(len * max_dist), not O(len²).
 
-    ``min_dist`` lets a caller exclude exact duplicates (dist 0 —
-    exact_duplicates already handles those) and keep only the fuzzy
-    band; dist-0 record pairs (same name, different records) are
-    generated from the name groups directly when ``min_dist == 0``,
-    never through levenshtein. Returns (id_a, id_b, name_a, name_b,
-    dist, similarity) with id_a < id_b and similarity = 1 - dist /
-    max(len) rounded to 6dp — fully value-oracled (DuckDB's
-    levenshtein implements the same classic unweighted distance).
-
-    NOTE the result is OUTPUT-sized by contract: a matched name pair
-    expands to n_a x n_b record pairs, and a corpus with thousands of
-    records per name makes that expansion the dominant cost (measured
-    142-155s at sf1 where each of 64 names covers ~3,125 records —
-    ~150M record pairs) — treat it as a sink-side materialization,
-    sized like the output it is, not a review step. The DEFAULT public
-    API is :func:`fuzzy_match` (name-level relation); this expansion
-    sits behind its ``expand_records=True``.
-
     RECALL BOUND inherent to blocking: names are only compared WITHIN
     a block, so a typo in the blocking token lands in different
-    blocks and is never compared. ``block_keys`` widens recall by
-    UNIONING candidate generation over several keys (r14 VERDICT
-    task 6): the default ``("first",)`` blocks on the first token
-    (the r12 behavior, byte-identical results); ``("first", "last")``
-    ALSO pairs names sharing their LAST token, so a first-word typo
-    ('gren metallic' vs 'green metallic') is recovered through the
-    last-token block. Candidates matched under several keys are
-    deduped BEFORE the distance evaluates, so each name pair is
-    scored once; the fat-block guard applies per (key, block). A pair
-    typo'd in EVERY blocking token remains unmatched — that is the
-    inherent blocked-record-linkage trade.
-    """
-    # EXPLICIT empty/NULL-name contract (the hard_negative_topk
-    # null-label precedent): a record with no usable entity string
-    # cannot be matched, so NULL and whitespace-only names are
-    # excluded up front — visibly, instead of NULL names silently
-    # failing the block equi-join and empty names pairing with each
-    # other at similarity 0/0 (NULL, or a DIVIDE_BY_ZERO error under
-    # ANSI mode).
-    norm = F.lower(F.trim(F.regexp_replace(F.col(name_col), r"\s+", " ")))
-    base = df.select(
-        F.col(id_col).alias("id"),
-        norm.alias("nm"),
-        F.length(norm).alias("ln"),
-    ).filter(F.col("nm").isNotNull() & (F.col("ln") > 0))
-    # consumers: the distinct-name projection, the record expansion
-    # joins, and (min_dist == 0) the same-name pair generator — pin
-    # so the normalize projection runs once (semdedup's pattern)
-    base = base.localCheckpoint(eager=False)
-    names = base.select("nm", "ln").distinct()
-    cand = _blocked_name_candidates(
-        names, block_keys, max_dist, max_block, "fuzzy_match_pairs"
-    )
-    dist = F.levenshtein(F.col("nma"), F.col("nmb"), max_dist)
-    # each DISTINCT name pair scored once; nm ordering only
-    # canonicalizes the comparison — record-level (id_a < id_b)
-    # orientation is restored in the expansion below
-    name_pairs = cand.select(
-        "nma",
-        "nmb",
-        dist.alias("dist"),
-        F.greatest(F.col("lna"), F.col("lnb")).alias("__mx"),
-    ).filter(
-        (F.col("dist") >= F.greatest(F.lit(min_dist), F.lit(1)))
-        & (F.col("dist") <= max_dist)
-    )
-    ra = base.select(F.col("nm").alias("nma"), F.col("id").alias("ida"))
-    rb = base.select(F.col("nm").alias("nmb"), F.col("id").alias("idb"))
-    cross_name = (
-        name_pairs.join(ra, "nma")
-        .join(rb, "nmb")
-        .select(
-            F.least("ida", "idb").alias("id_a"),
-            F.greatest("ida", "idb").alias("id_b"),
-            F.when(F.col("ida") < F.col("idb"), F.col("nma"))
-            .otherwise(F.col("nmb"))
-            .alias("name_a"),
-            F.when(F.col("ida") < F.col("idb"), F.col("nmb"))
-            .otherwise(F.col("nma"))
-            .alias("name_b"),
-            "dist",
-            "__mx",
-        )
-    )
-    out = cross_name
-    if min_dist == 0:
-        # dist-0 pairs = record pairs SHARING a name: generated from
-        # the name groups (output-sized), never through levenshtein
-        sa = base.select("nm", "ln", F.col("id").alias("ida")).alias("sa")
-        sb = base.select("nm", F.col("id").alias("idb")).alias("sb")
-        same = (
-            sa.join(sb, "nm")
-            .filter(F.col("ida") < F.col("idb"))
-            .select(
-                F.col("ida").alias("id_a"),
-                F.col("idb").alias("id_b"),
-                F.col("nm").alias("name_a"),
-                F.col("nm").alias("name_b"),
-                F.lit(0).alias("dist"),
-                F.col("ln").alias("__mx"),
-            )
-        )
-        out = cross_name.unionByName(same)
-    return out.select(
-        "id_a",
-        "id_b",
-        "name_a",
-        "name_b",
-        "dist",
-        F.round(1.0 - F.col("dist") / F.col("__mx").cast("double"), 6).alias(
-            "similarity"
-        ),
-    )
-
-
-def fuzzy_match_names(
-    df: DataFrame,
-    id_col: str = "id",
-    name_col: str = "name",
-    max_dist: int = 2,
-    min_dist: int = 1,
-    max_block: int = 100_000,
-    block_keys: tuple = ("first",),
-) -> DataFrame:
-    """The VOCABULARY-sized view of fuzzy entity matching: matched
-    DISTINCT-name pairs with their record-group sizes — what a
-    pipeline reviews (and a human eyeballs) before committing to the
-    n_a x n_b record-pair expansion that :func:`fuzzy_match_pairs`
-    materializes. Same blocking, guard, prefilter, and bounded
-    levenshtein; the whole computation is bounded by the name
-    vocabulary, so this stays cheap at ANY record count (the r12 sf1
-    measurement: the record expansion is ~150M rows / 142-155s, this
-    relation is ~16 rows). ``min_dist`` is coerced to >= 1: same-name
-    record groups are exact_duplicates' output, not a fuzzy match.
-
-    Same blocking machinery as :func:`fuzzy_match_pairs`
-    (``block_keys``, shared :func:`_blocked_name_candidates`), and
-    the same RECALL BOUND per key: with the default first-token
-    blocking a typo in the first word is never compared — pass
-    ``block_keys=("first", "last")`` to recover those through the
-    last-token block.
-
-    Returns (name_a, name_b, dist, similarity, n_a, n_b, n_pairs)
-    with name_a < name_b, ordered by (dist, name_a, name_b).
+    blocks and is never compared. The default ``("first",)`` blocks
+    on the first token; ``("first", "last")`` ALSO pairs names
+    sharing their LAST token, so a first-word typo ('gren metallic'
+    vs 'green metallic') is recovered through the last-token block.
+    Candidates matched under several keys are deduped BEFORE the
+    distance evaluates, so each name pair is scored once; the
+    fat-block guard applies per (key, block). A pair typo'd in EVERY
+    blocking token remains unmatched — the inherent blocked
+    record-linkage trade.
     """
     norm = F.lower(F.trim(F.regexp_replace(F.col(name_col), r"\s+", " ")))
     base = df.select(
@@ -1412,14 +1282,7 @@ def fuzzy_match_names(
     ).filter(F.col("nm").isNotNull() & (F.col("ln") > 0))
     base = base.localCheckpoint(eager=False)
     sized = base.groupBy("nm", "ln").agg(F.count(F.lit(1)).alias("n_rec"))
-    cand = _blocked_name_candidates(
-        sized,
-        block_keys,
-        max_dist,
-        max_block,
-        "fuzzy_match_names",
-        extra_cols=("n_rec",),
-    )
+    cand = _blocked_name_candidates(sized, block_keys, max_dist, max_block)
     dist = F.levenshtein(F.col("nma"), F.col("nmb"), max_dist)
     return (
         cand.select(
@@ -1446,52 +1309,6 @@ def fuzzy_match_names(
             (F.col("n_a") * F.col("n_b")).alias("n_pairs"),
         )
         .orderBy("dist", "name_a", "name_b")
-    )
-
-
-def fuzzy_match(
-    df: DataFrame,
-    id_col: str = "id",
-    name_col: str = "name",
-    max_dist: int = 2,
-    min_dist: int = 1,
-    max_block: int = 100_000,
-    expand_records: bool = False,
-    block_keys: tuple = ("first",),
-) -> DataFrame:
-    """The public entry point for fuzzy entity matching. DEFAULT is
-    the VOCABULARY-sized name relation (:func:`fuzzy_match_names` —
-    matched distinct-name pairs with group sizes and the implied
-    ``n_pairs`` expansion count), because that is what a pipeline
-    reviews and it stays cheap at ANY record count.
-
-    ``expand_records=True`` materializes the full record-pair
-    expansion instead (:func:`fuzzy_match_pairs`). COST STATEMENT,
-    mirroring ``max_block``'s: the expansion is OUTPUT-sized by
-    contract — a matched name pair becomes n_a x n_b record pairs
-    (~150M rows / 142-155s measured at sf1, where 64 names cover
-    ~3,125 records each) — so treat it as a sink-side write whose
-    size you have already read off the default relation's ``n_pairs``
-    column, not as a review step.
-    """
-    if expand_records:
-        return fuzzy_match_pairs(
-            df,
-            id_col=id_col,
-            name_col=name_col,
-            max_dist=max_dist,
-            min_dist=min_dist,
-            max_block=max_block,
-            block_keys=block_keys,
-        )
-    return fuzzy_match_names(
-        df,
-        id_col=id_col,
-        name_col=name_col,
-        max_dist=max_dist,
-        min_dist=min_dist,
-        max_block=max_block,
-        block_keys=block_keys,
     )
 
 

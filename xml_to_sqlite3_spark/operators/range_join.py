@@ -41,7 +41,6 @@ def interval_join(
     end_col: str,
     by: Sequence[str] = (),
     bucket_seconds: int = 3600,
-    how: str = "inner",
 ) -> DataFrame:
     """Join each point row to every interval row containing it:
     ``start <= ts <= end`` (inclusive both ends, merge_asof-style),
@@ -52,8 +51,6 @@ def interval_join(
     Timestamp and TIMESTAMP_NTZ columns are handled via the shared
     NTZ-safe epoch conversion; plain numeric columns work unchanged.
     """
-    if how != "inner":
-        raise ValueError("interval_join currently supports how='inner' only")
     by = list(by)
 
     def _secs(df: DataFrame, c: str) -> F.Column:

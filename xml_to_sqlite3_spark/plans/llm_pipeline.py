@@ -2022,15 +2022,12 @@ ORACLES["audio_metadata"] = AUDIO_METADATA_ORACLE
 
 
 def fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy entity matching over part names, served through the
-    DEFAULT public API (operators/dedup.fuzzy_match, which returns
-    the VOCABULARY-level relation — first-token blocks, length
-    prefilter, bounded Levenshtein over DISTINCT names, record-group
-    sizes carried): the review relation a pipeline inspects before
-    committing to the n_a x n_b record expansion
-    (expand_records=True — which at sf1 is a legitimate but
-    ~150M-row output). The fuzzy band only (dist 1..3; same-name
-    groups are exact_duplicates' output)."""
+    """Fuzzy entity matching over part names (operators/dedup.fuzzy_match,
+    which returns the VOCABULARY-level relation — first-token blocks,
+    length prefilter, bounded Levenshtein over DISTINCT names,
+    record-group sizes and the implied n_a x n_b record-pair count
+    carried). The fuzzy band only (dist 1..3; same-name groups are
+    exact_duplicates' output)."""
     parts = load(spark, sf_dir, "part")
     return D.fuzzy_match(
         parts, id_col="p_partkey", name_col="p_name", max_dist=3, min_dist=1

@@ -204,8 +204,8 @@ def write_corpus_sqlite(
         # cross_references has a synthetic autoincrement PK, so
         # INSERT OR REPLACE can never replace — re-writing the same
         # documents would silently duplicate every xref row. Delete
-        # the rows previously written for these source files first;
-        # this is also what makes a replayed streaming batch
+        # the rows previously written for these source files first,
+        # so re-writing a document into an existing database is
         # idempotent. Committed on its own so a document that now has
         # no xrefs still loses its old ones.
         _delete_xrefs_on(con, [r[0] for r in docs])

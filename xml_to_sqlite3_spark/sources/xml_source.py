@@ -24,11 +24,15 @@ projections (documents / nodes / node_properties) are cheap
 DataFrame selects on top. Type inference runs JVM-side afterwards
 (functions/type_inference.py) — not in Python.
 
+Every file is parsed by one forward-only expat pass
+(``_parse_one_stream``): time is linear in the element count, and the
+parse holds the emitted rows plus the open-element stack, never a DOM
+(the reference DOM-parses each whole file with nokogiri).
+
 At 100 TB: millions of files spread across executors; parse cost is
-per-file and independent; output is columnar immediately. Documents
-too large for one task should be pre-chunked upstream — same
-constraint as any whole-file format (the reference is also
-whole-file: nokogiri DOM-parses each file in memory).
+per-file and independent; output is columnar immediately. A file's
+bytes still travel as one ``binaryFile`` row, so a single file must
+fit one task (Spark caps a binary value at 2 GB).
 """
 
 from __future__ import annotations
@@ -62,105 +66,19 @@ class XmlCorpus(NamedTuple):
     errors: DataFrame
 
 
-def _local_name(tag: str) -> str:
-    # ElementTree namespaces tags as '{uri}local'; the reference
-    # (nokogiri element.name) reports the local name.
-    return tag.rsplit("}", 1)[-1] if tag.startswith("{") else tag
-
-
-def _parse_one(content: bytes, path: str, size: int) -> list[tuple]:
-    """Parse one XML file to node rows. Pure function — no Spark."""
-    import xml.etree.ElementTree as ET
-
-    document_id = os.path.splitext(os.path.basename(path))[0]
-    rows: list[tuple] = []
-    try:
-        root = ET.fromstring(content)
-    except ET.ParseError as exc:
-        return [(document_id, path, size, f"parse error: {exc}",
-                 None, None, None, None, None, None, None, None)]
-
-    # Preorder walk (document order): the reference's writer upserts
-    # rows in parse order, so in-file duplicate ids resolve to the
-    # LAST occurrence (test_edge_cases.rb test_xml_with_duplicate_ids);
-    # ``ordinal`` records that order for deterministic distributed
-    # last-writer-wins.
-    stack = [(root, None, None)]  # (element, parent_element, xpath)
-    ordinal = 0
-
-    def xpath_for(el, parent, parent_path) -> str:
-        name = _local_name(el.tag)
-        if parent is None:
-            return f"/{name}"
-        siblings = [c for c in parent if isinstance(c.tag, str)]
-        same_named = [c for c in siblings if _local_name(c.tag) == name]
-        if len(same_named) > 1:
-            idx = next(i for i, c in enumerate(same_named, 1) if c is el)
-            return f"{parent_path}/{name}[{idx}]"
-        return f"{parent_path}/{name}"
-
-    while stack:
-        el, parent, parent_path = stack.pop()
-        if not isinstance(el.tag, str):  # comments / PIs
-            continue
-        my_path = xpath_for(el, parent, parent_path)
-
-        el_id = el.get("id")
-        if el_id is not None:
-            if parent is not None:
-                siblings = [c for c in parent if isinstance(c.tag, str)]
-                position = next(i for i, c in enumerate(siblings) if c is el)
-                parent_id = parent.get("id")
-            else:
-                position = 0
-                parent_id = None
-            content_text = "".join(el.itertext()).strip()
-            attrs = [
-                {"property_name": _local_name(k), "property_value": v}
-                for k, v in el.attrib.items()
-                if _local_name(k) != "id"
-            ]
-            rows.append(
-                (
-                    document_id,
-                    path,
-                    size,
-                    None,
-                    el_id,
-                    _local_name(el.tag),
-                    parent_id,
-                    position,
-                    content_text,
-                    my_path,
-                    ordinal,
-                    attrs,
-                )
-            )
-            ordinal += 1
-        # push children reversed so the stack pops them in document order
-        for child in reversed(list(el)):
-            stack.append((child, el, my_path))
-
-    if not rows:
-        # Document with no id-bearing nodes still gets a documents row.
-        rows.append((document_id, path, size, None,
-                     None, None, None, None, None, None, None, None))
-    return rows
-
-
-# Files at or above this size parse via the expat streaming path —
-# memory stays O(open-element stack + emitted rows + accumulated text
-# of open id-bearing elements) instead of O(whole DOM). A 2 GB
-# document with sparse ids parses in a few hundred MB of Python heap
-# where the DOM path would need ~5-10x the file size.
-STREAM_THRESHOLD_BYTES = 32 * 1024 * 1024
-
-
 def _parse_one_stream(content: bytes, path: str, size: int) -> list[tuple]:
-    """Streaming (expat/SAX) equivalent of _parse_one for large files.
+    """Parse one XML file to node rows in one forward-only expat
+    (SAX) pass. Pure function — no Spark.
 
-    Row-for-row identical output (tests/test_xml_source.py parity
-    suite). The only deferred decision is the nokogiri-style xpath
+    Rows come in document order with a preorder ``ordinal``: the
+    reference's writer upserts rows in parse order, so in-file
+    duplicate ids resolve to the LAST occurrence
+    (test_edge_cases.rb test_xml_with_duplicate_ids), and ``ordinal``
+    makes that last-writer-wins deterministic once distributed.
+
+    Row-for-row identical to the DOM walk ``_parse_one`` (the parity
+    tests in tests/test_xml_properties.py and tests/test_xml_stream.py).
+    The only deferred decision is the nokogiri-style xpath
     index (``name[i]`` appears only when an element has 2+ same-named
     siblings — not knowable until the parent closes), so each row
     holds segment CELLS finalized at parent close and rendered at
@@ -278,12 +196,6 @@ def _parse_one_stream(content: bytes, path: str, size: int) -> list[tuple]:
     return out
 
 
-def _parse_dispatch(content: bytes, path: str, size: int) -> list[tuple]:
-    if len(content) >= STREAM_THRESHOLD_BYTES:
-        return _parse_one_stream(content, path, size)
-    return _parse_one(content, path, size)
-
-
 def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     cols = [
         "document_id",
@@ -315,7 +227,7 @@ def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # documents.file_hash (001_create_base_schema.rb:14 —
             # declared by the reference schema; md5 of the raw bytes)
             fh = hashlib.md5(b).hexdigest()
-            out.extend(r + (fh,) for r in _parse_dispatch(b, local, int(size)))
+            out.extend(r + (fh,) for r in _parse_one_stream(b, local, int(size)))
         yield pd.DataFrame(out, columns=cols)
 
 
@@ -347,9 +259,8 @@ def read_xml_corpus(
 
 def corpus_from_parsed(parsed: DataFrame) -> XmlCorpus:
     """Project raw parsed node rows (_PARSE_SCHEMA) into the
-    reference's relational model — shared by the batch reader and the
-    streaming foreachBatch sink, so both paths produce byte-identical
-    tables from the same parse."""
+    reference's relational model: documents, nodes, properties (with
+    JVM-side type inference) and parse errors."""
     documents = (
         parsed.groupBy("document_id")
         .agg(
@@ -418,3 +329,88 @@ def dedupe_last_writer(df: DataFrame, key_cols: list[str], order_col: str) -> Da
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def _local_name(tag: str) -> str:
+    # ElementTree namespaces tags as '{uri}local'; the reference
+    # (nokogiri element.name) reports the local name.
+    return tag.rsplit("}", 1)[-1] if tag.startswith("{") else tag
+
+
+def _parse_one(content: bytes, path: str, size: int) -> list[tuple]:
+    """DOM (ElementTree) walk giving the same rows as
+    ``_parse_one_stream``. No product path calls it: it is the
+    reference the parity tests compare the expat parser against, and
+    it is quadratic in the number of sibling elements."""
+    import xml.etree.ElementTree as ET
+
+    document_id = os.path.splitext(os.path.basename(path))[0]
+    rows: list[tuple] = []
+    try:
+        root = ET.fromstring(content)
+    except ET.ParseError as exc:
+        return [(document_id, path, size, f"parse error: {exc}",
+                 None, None, None, None, None, None, None, None)]
+
+    # Preorder walk (document order), as ``ordinal`` requires.
+    stack = [(root, None, None)]  # (element, parent_element, xpath)
+    ordinal = 0
+
+    def xpath_for(el, parent, parent_path) -> str:
+        name = _local_name(el.tag)
+        if parent is None:
+            return f"/{name}"
+        siblings = [c for c in parent if isinstance(c.tag, str)]
+        same_named = [c for c in siblings if _local_name(c.tag) == name]
+        if len(same_named) > 1:
+            idx = next(i for i, c in enumerate(same_named, 1) if c is el)
+            return f"{parent_path}/{name}[{idx}]"
+        return f"{parent_path}/{name}"
+
+    while stack:
+        el, parent, parent_path = stack.pop()
+        if not isinstance(el.tag, str):  # comments / PIs
+            continue
+        my_path = xpath_for(el, parent, parent_path)
+
+        el_id = el.get("id")
+        if el_id is not None:
+            if parent is not None:
+                siblings = [c for c in parent if isinstance(c.tag, str)]
+                position = next(i for i, c in enumerate(siblings) if c is el)
+                parent_id = parent.get("id")
+            else:
+                position = 0
+                parent_id = None
+            content_text = "".join(el.itertext()).strip()
+            attrs = [
+                {"property_name": _local_name(k), "property_value": v}
+                for k, v in el.attrib.items()
+                if _local_name(k) != "id"
+            ]
+            rows.append(
+                (
+                    document_id,
+                    path,
+                    size,
+                    None,
+                    el_id,
+                    _local_name(el.tag),
+                    parent_id,
+                    position,
+                    content_text,
+                    my_path,
+                    ordinal,
+                    attrs,
+                )
+            )
+            ordinal += 1
+        # push children reversed so the stack pops them in document order
+        for child in reversed(list(el)):
+            stack.append((child, el, my_path))
+
+    if not rows:
+        # Document with no id-bearing nodes still gets a documents row.
+        rows.append((document_id, path, size, None,
+                     None, None, None, None, None, None, None, None))
+    return rows
