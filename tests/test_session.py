@@ -94,3 +94,16 @@ def test_driver_memory_fits_the_machine(spark):
     heap = int(mem[:-1]) * units[mem[-1].lower()]
     phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
     assert heap <= phys, (mem, phys)
+
+
+def test_spark_defaults_hold_in_get_spark_sessions(spark):
+    """get_spark leaves these to Spark's defaults; the engine relies on
+    each value (AQE coalescing and skew splitting in place of
+    hand-sized partition counts, parquet predicate pushdown into the
+    store reads, 128 MB file splits)."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
+    assert spark.conf.get("spark.sql.parquet.filterPushdown") == "true"
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    assert sql_conf.filesMaxPartitionBytes() == 128 * 1024 * 1024

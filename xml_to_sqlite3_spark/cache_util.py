@@ -18,10 +18,15 @@ once:
   code version (observed: a parallel test sweep crashed mid-flight).
 - mtime lease: attaching refreshes the entry's mtime, since parquet
   READS never touch it and the grace window is mtime-based.
+- code identity: an entry's key covers the bytes of its builder
+  module's import closure inside this package (:func:`code_closure`),
+  derived from the imports themselves, so no hand-kept file list can
+  drift from the code that built the entry.
 """
 
 from __future__ import annotations
 
+import ast
 import functools
 import hashlib
 import os
@@ -31,16 +36,80 @@ import time
 from collections.abc import Callable, Iterable
 
 
+def _module_file(pkg_dir: str, dotted: str) -> str | None:
+    """The source file of module ``dotted`` relative to ``pkg_dir``
+    (a ``.py`` file or a package's ``__init__.py``), None when it is
+    not a module (a name the package re-exports)."""
+    base = os.path.join(pkg_dir, *dotted.split("."))
+    for cand in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(cand):
+            return cand
+    return None
+
+
+def _relative_imports(module_file: str) -> set[str]:
+    """The package files ``module_file`` imports relatively, at module
+    level or inside a function: ``from .x import y`` names x, and y
+    too when y is itself a module."""
+    with open(module_file, "rb") as f:
+        tree = ast.parse(f.read(), module_file)
+    here = os.path.dirname(module_file)
+    out = set()
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.ImportFrom) or not node.level:
+            continue
+        pkg_dir = here
+        for _ in range(node.level - 1):
+            pkg_dir = os.path.dirname(pkg_dir)
+        if node.module:
+            target = _module_file(pkg_dir, node.module)
+            if target is not None:
+                out.add(target)
+            pkg_dir = os.path.join(pkg_dir, *node.module.split("."))
+        for alias in node.names:
+            target = _module_file(pkg_dir, alias.name)
+            if target is not None:
+                out.add(target)
+    return out
+
+
 @functools.lru_cache(maxsize=None)
-def _code_digest(code_files: tuple[str, ...]) -> bytes:
-    """Digest of the build-code files' bytes, computed ONCE per
-    process — module sources cannot change under a running
-    interpreter, and re-reading them on every cache lookup put file
-    I/O in front of the in-session memo hit path."""
+def code_closure(module_file: str) -> tuple[str, ...]:
+    """Every package source file that importing ``module_file`` runs: the
+    modules it reaches by relative import, transitively, plus the
+    ``__init__.py`` of each package on their way. An AST walk, so
+    imports inside functions count too; computed once per process.
+
+    The package has no absolute or dynamic self-imports, so relative
+    imports are the whole closure. It is per module, so it
+    over-includes: a file that only a builder module's query
+    functions import still invalidates that builder's store. That
+    costs an extra rebuild, never a stale read."""
+    seen: set[str] = set()
+    todo = [os.path.abspath(module_file)]
+    while todo:
+        path = todo.pop()
+        if path in seen:
+            continue
+        seen.add(path)
+        todo.extend(_relative_imports(path))
+        # importing a submodule runs its package's __init__ first
+        init = os.path.join(os.path.dirname(path), "__init__.py")
+        if os.path.isfile(init):
+            todo.append(init)
+    return tuple(sorted(seen))
+
+
+@functools.lru_cache(maxsize=None)
+def _code_digest(module_file: str) -> bytes:
+    """Digest of the bytes of ``module_file``'s import closure,
+    computed ONCE per process — module sources cannot change under a
+    running interpreter, and re-reading them on every cache lookup put
+    file I/O in front of the in-session memo hit path."""
     h = hashlib.sha256()
-    for mod in code_files:
-        with open(mod, "rb") as f:
-            h.update(f.read())
+    for path in code_closure(module_file):
+        with open(path, "rb") as f:
+            h.update(hashlib.sha256(f.read()).digest())
     return h.digest()
 
 
@@ -66,18 +135,17 @@ def stat_fingerprint(path: str, suffixes: tuple[str, ...] | None = None) -> str:
     return "".join(parts)
 
 
-def content_key(
-    prefix: str,
-    src_path: str,
-    extra: str = "",
-    code_files: tuple[str, ...] = (),
-) -> str:
+def content_key(prefix: str, src_path: str, builder: str, extra: str = "") -> str:
     """Cache key from the INPUT's identity (path + per-file size and
     mtime of its ``.parquet`` entries, so stray files — a writer's
     _SUCCESS/.crc, editor temp files — don't force spurious rebuilds)
-    and the BUILD CODE's bytes (``code_files`` — this
-    module is always included, so helper behavior changes invalidate
-    every entry too). ``extra`` folds in build parameters (e.g.
+    and the BUILD CODE's bytes: the import closure of ``builder``, the
+    building module's ``__file__`` (:func:`code_closure`). Every
+    builder imports this module, so a change to the shared cache
+    machinery invalidates every entry too. The closure is per module
+    and over-includes — an edit to a file only the builder's query
+    functions import rebuilds the store once, it never serves a stale
+    entry. ``extra`` folds in build parameters (e.g.
     which columns an index was built over) and participates in the
     key's PREFIX: stale-sibling pruning is prefix-scoped, and two
     entries differing only in build parameters are distinct live
@@ -88,7 +156,7 @@ def content_key(
     h.update(real.encode())
     h.update(extra.encode())
     h.update(stat_fingerprint(real, (".parquet",)).encode())
-    h.update(_code_digest((*code_files, __file__)))
+    h.update(_code_digest(builder))
     sfh = hashlib.sha256(f"{real}|{extra}".encode()).hexdigest()[:10]
     return f"{prefix}_{sfh}_{h.hexdigest()[:16]}"
 

@@ -7,8 +7,9 @@ Why a separate module (r10 ADVICE): the node-graph store materializes
 subsample) with ``stable_hash60``, so a change to this hash must
 invalidate that store — but keying the store on all of
 ``operators/curation.py`` would rebuild a multi-GB store on every
-unrelated curation edit. This file IS the hash; it appears in
-``plans/node_graph._graph_cache_key``'s ``code_files`` tuple, and
+unrelated curation edit. This file IS the hash; ``plans/node_graph``
+imports it, so it is in the graph store's key (the key covers the
+builder's import closure, ``cache_util.code_closure``), and
 ``operators/curation`` re-exports it for the rest of the package.
 
 The hash is the first 60 bits of md5(value) as a non-negative int64 —

@@ -959,9 +959,7 @@ def _minhash_store_key(doc_path: str, n: int, k: int, id_col: str, text_col: str
     key-format or parameter-default change can never desynchronize a
     reader from the entry it expects."""
     extra = f"n{n}_k{k}_{id_col}_{text_col}"
-    return content_key(
-        "mh", doc_path, extra=extra, code_files=(__file__,)
-    )
+    return content_key("mh", doc_path, __file__, extra=extra)
 
 
 def _components_store_key(
@@ -980,15 +978,8 @@ def _components_store_key(
     reads its pairing tokens from the k-keyed dedup entry, so if token
     derivation ever became k-sensitive, an entry shared across k would
     silently serve the wrong tokens."""
-    from . import graph as _graph_mod
-
     extra = f"t{threshold}_n{n}_k{k}_{id_col}_{text_col}"
-    return content_key(
-        "dupcomp",
-        doc_path,
-        extra=extra,
-        code_files=(__file__, _graph_mod.__file__),
-    )
+    return content_key("dupcomp", doc_path, __file__, extra=extra)
 
 
 def get_minhash_store(
@@ -1102,8 +1093,8 @@ def get_components_store(
     materialization) reads the same table instead of re-running the
     Jaccard verify join + iterative propagation per query. Builds
     from the minhash store's postings (no re-shingling); keyed on
-    this module AND operators/graph.py (connected_components is the
-    other half of the build code)."""
+    this module's import closure, which holds operators/graph.py
+    (connected_components is the other half of the build code)."""
     from .graph import duplicate_groups
 
     ck = _components_store_key(doc_path, threshold, n, k, id_col, text_col)

@@ -86,9 +86,7 @@ def _index_key(src_path: str, id_col: str, text_col: str) -> str:
     """THE content key of a text-index entry (the _minhash_store_key
     discipline)."""
     extra = f"{id_col}|{text_col}"
-    return content_key(
-        "i", src_path, extra=extra, code_files=(__file__,)
-    )
+    return content_key("i", src_path, __file__, extra=extra)
 
 
 def get_text_index(

@@ -1163,9 +1163,7 @@ def _ivfpq_key(
     extra = f"c{n_centroids}_m{m}_ks{ks}_i{n_iter}_{id_col}_{vec_col}"
     if rotate:
         extra = f"{extra}_opq"
-    return content_key(
-        "ivfpq", src_path, extra=extra, code_files=(__file__,),
-    )
+    return content_key("ivfpq", src_path, __file__, extra=extra)
 
 
 def _embedding_covariance_fast(df: DataFrame, vec_col: str) -> DataFrame:
@@ -1421,16 +1419,13 @@ def get_codebook(
     an attached codebook is bit-identical to a retrained one; gates
     and repeated sessions share one training run instead of each
     paying ~5 Lloyd iterations over the corpus. Key = input file
-    identity + this module's code + (k, n_iter). The training corpus
+    identity + this module's import closure + (k, n_iter). The training corpus
     is read FROM src_path inside the build (like get_minhash_store)
     — the key names the input, so the trained artifact must be a
     function of that input alone, never of a caller-supplied frame
     that might not match it."""
     key = content_key(
-        "cb",
-        src_path,
-        extra=f"k{k}_i{n_iter}_{id_col}_{vec_col}",
-        code_files=(__file__,),
+        "cb", src_path, __file__, extra=f"k{k}_i{n_iter}_{id_col}_{vec_col}"
     )
     return _npy_store(
         spark,
@@ -1461,12 +1456,7 @@ def get_opq_rotation(
     across partitionings and break attached == retrained). The d x d
     matrix is a model parameter like the k-means codebooks: .npy in
     the shared codebook cache root."""
-    key = content_key(
-        "opqrot",
-        src_path,
-        extra=f"m{m}_{id_col}_{vec_col}",
-        code_files=(__file__,),
-    )
+    key = content_key("opqrot", src_path, __file__, extra=f"m{m}_{id_col}_{vec_col}")
 
     def _train(tmp: str) -> np.ndarray:
         emb = spark.read.parquet(src_path).select(
@@ -1501,9 +1491,9 @@ def get_pq_codebooks(
     key = content_key(
         "pqcb",
         src_path,
+        __file__,
         extra=f"m{m}_ks{ks}_i{n_iter}_{id_col}_{vec_col}"
         + ("_opq" if rotate else ""),
-        code_files=(__file__,),
     )
 
     def _train(tmp: str) -> np.ndarray:

@@ -525,41 +525,15 @@ def _sibling_rows(slices: DataFrame, chunks: DataFrame) -> DataFrame:
     )
 
 
-def _graph_code_files() -> tuple:
-    """The build-code identity of the store key: this module + the
-    relationship / type-inference operators the build drives + the
-    graph operators whose orient_edges/pagerank outputs are store
-    tables + the hierarchy walk (node_levels) + the hash primitive
-    (aa_und's subsample — r10 ADVICE: a stable_hash60 change must
-    invalidate the store or the persisted subsample silently diverges
-    from the oracle's live md5 replay)."""
-    from ..functions import hashing as _hash
-    from ..functions import type_inference as _ti
-    from ..operators import graph as _gr
-    from ..operators import hierarchy as _hi
-    from ..operators import relationships as _rel
-
-    return (
-        __file__,
-        _rel.__file__,
-        _ti.__file__,
-        _gr.__file__,
-        _hi.__file__,
-        _hash.__file__,
-    )
-
-
 def _graph_cache_key(sf_dir: str) -> str:
     """Content key: the input parquet identity (path + per-file size
-    and mtime) and the build code itself (_graph_code_files, plus the
-    shared cache machinery via cache_util.content_key). A code edit
-    or regenerated testdata produces a new key — the stale entry for
-    that sf_dir is pruned after the fresh build succeeds."""
-    return content_key(
-        "g",
-        sf_dir,
-        code_files=_graph_code_files(),
-    )
+    and mtime) and the build code itself — this module's import
+    closure (cache_util.code_closure), which holds the operators the
+    build drives, io_util's reader and the hash primitive behind
+    aa_und's subsample. A code edit or regenerated testdata produces
+    a new key — the stale entry for that sf_dir is pruned after the
+    fresh build succeeds."""
+    return content_key("g", sf_dir, __file__)
 
 
 def get_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:

@@ -38,8 +38,10 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     Tuning rationale (100 TB posture):
-      - AQE on: runtime shuffle-partition coalescing + skew-join
-        splitting replaces hand-tuned partition counts at scale.
+      - AQE, its partition coalescing and skew-join splitting, parquet
+        filter pushdown and 128 MB file splits are Spark's defaults and
+        are left to them (tests/test_session.py pins the effective
+        values).
       - Arrow on: every pandas-UDF operator (XML parse, multimodal)
         moves batches, not rows.
       - UTC session timezone: parity with the DuckDB oracle and with
@@ -60,12 +62,8 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
@@ -100,17 +98,6 @@ def get_spark(
         # of the DataFrame query context; the error itself and its
         # error class do not change.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # Split sizing stays at Spark's 128 MB default. At test scale
-        # factors every table is far below maxPartitionBytes anyway, so
-        # the effective split is max(openCostInBytes, bytes/parallelism)
-        # — lowering the cap buys nothing (measured: a 16 MB session
-        # cap left warm query times unchanged but tripled the graph
-        # cache build). The env var stays as an explicit override for
-        # experiments only.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(128 * 1024 * 1024)),
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

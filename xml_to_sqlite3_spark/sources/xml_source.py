@@ -81,35 +81,46 @@ def _parse_one_stream(content: bytes, path: str, size: int) -> list[tuple]:
     The only deferred decision is the nokogiri-style xpath
     index (``name[i]`` appears only when an element has 2+ same-named
     siblings — not knowable until the parent closes), so each row
-    holds segment CELLS finalized at parent close and rendered at
+    holds its path CELL, finalized at parent close and rendered at
     document end. Everything else — position among element siblings,
     preorder ordinal, descendant text — is computable forward-only.
+
+    Work is linear in nesting depth as well as sibling count: text
+    chunks go to one shared list (an element's content is the join of
+    the chunks after its start), and each cell links to its parent's
+    cell, so a path prefix is rendered once and shared.
     """
     from xml.parsers import expat
 
     document_id = os.path.splitext(os.path.basename(path))[0]
 
     # stack entry per open element:
-    # [lname, el_id, cell, child_count, same_counts, texts|None,
-    #  needed_cells, registered]
-    # cell = [lname, ordinal_among_same_named, show_idx]
+    # [el_id, cell, child_count, same_counts, needed_cells, registered,
+    #  row|None]
+    # cell = [lname, ordinal_among_same_named, show_idx, parent_cell,
+    #         rendered_xpath|None]
     stack: list[list] = []
     rows: list[list] = []
+    # the text chunks since the outermost open id-bearing element
+    # started; emptied whenever none is open, so text no row contains
+    # is never held
+    texts: list[str] = []
+    open_ids = 0
     ordinal = 0
 
     def on_start(name: str, attrs: dict) -> None:
-        nonlocal ordinal
+        nonlocal ordinal, open_ids
         lname = name.rsplit("}", 1)[-1]
         parent = stack[-1] if stack else None
         if parent is not None:
-            position = parent[3]
-            parent[3] += 1
-            cnt = parent[4].get(lname, 0) + 1
-            parent[4][lname] = cnt
+            position = parent[2]
+            parent[2] += 1
+            cnt = parent[3].get(lname, 0) + 1
+            parent[3][lname] = cnt
+            cell = [lname, cnt, False, parent[1], None]
         else:
             position = 0
-            cnt = 1
-        cell = [lname, cnt, False]
+            cell = [lname, 1, False, None, None]
         el_id = None
         props = []
         for k, v in attrs.items():
@@ -125,50 +136,52 @@ def _parse_one_stream(content: bytes, path: str, size: int) -> list[tuple]:
                 el_id = v
             elif kl != "id":
                 props.append({"property_name": kl, "property_value": v})
-        entry = [lname, el_id, cell, 0, {}, None, [], False]
+        entry = [el_id, cell, 0, {}, [], False, None]
         if el_id is not None:
-            entry[5] = []  # text accumulator — this element emits
             # register each un-registered ancestor cell with ITS
             # parent so the parent finalizes the [idx] decision at
             # close; stops at the first already-registered ancestor
             prev = entry
             for anc in reversed(stack):
-                if prev[7]:
+                if prev[5]:
                     break
-                anc[6].append(prev[2])
-                prev[7] = True
+                anc[4].append(prev[1])
+                prev[5] = True
                 prev = anc
-            rows.append(
-                [
-                    document_id,
-                    path,
-                    size,
-                    None,
-                    el_id,
-                    lname,
-                    parent[1] if parent is not None else None,
-                    position,
-                    None,  # content filled at close
-                    [e[2] for e in stack] + [cell],  # path cells
-                    ordinal,
-                    props,
-                ]
-            )
-            entry.append(rows[-1])  # back-ref for content fill
+            entry[6] = [
+                document_id,
+                path,
+                size,
+                None,
+                el_id,
+                lname,
+                parent[0] if parent is not None else None,
+                position,
+                len(texts),  # content start; the content itself at close
+                cell,  # rendered to the xpath at document end
+                ordinal,
+                props,
+            ]
+            rows.append(entry[6])
             ordinal += 1
+            open_ids += 1
         stack.append(entry)
 
     def on_chars(data: str) -> None:
-        for e in stack:
-            if e[5] is not None:
-                e[5].append(data)
+        if open_ids:
+            texts.append(data)
 
     def on_end(_name: str) -> None:
+        nonlocal open_ids
         e = stack.pop()
-        for cell in e[6]:
-            cell[2] = e[4][cell[0]] > 1
-        if e[5] is not None:
-            e[8][8] = "".join(e[5]).strip()
+        for cell in e[4]:
+            cell[2] = e[3][cell[0]] > 1
+        row = e[6]
+        if row is not None:
+            row[8] = "".join(texts[row[8]:]).strip()
+            open_ids -= 1
+            if not open_ids:
+                texts.clear()
 
     parser = expat.ParserCreate(namespace_separator="}")
     parser.buffer_text = True
@@ -184,16 +197,26 @@ def _parse_one_stream(content: bytes, path: str, size: int) -> list[tuple]:
     if not rows:
         return [(document_id, path, size, None,
                  None, None, None, None, None, None, None, None)]
-    out = []
-    for r in rows:
-        xpath = "/" + "/".join(
-            f"{c[0]}[{c[1]}]" if c[2] else c[0] for c in r[9]
-        )
-        out.append(
-            (r[0], r[1], r[2], r[3], r[4], r[5], r[6], r[7], r[8], xpath,
-             r[10], r[11])
-        )
-    return out
+
+    def xpath(cell: list) -> str:
+        # walk up to the nearest rendered ancestor (iteratively: a
+        # deep document would exceed the recursion limit), then render
+        # down, storing each prefix for the cells below it
+        chain = []
+        while cell is not None and cell[4] is None:
+            chain.append(cell)
+            cell = cell[3]
+        prefix = "" if cell is None else cell[4]
+        for c in reversed(chain):
+            prefix += f"/{c[0]}[{c[1]}]" if c[2] else f"/{c[0]}"
+            c[4] = prefix
+        return prefix
+
+    return [
+        (r[0], r[1], r[2], r[3], r[4], r[5], r[6], r[7], r[8], xpath(r[9]),
+         r[10], r[11])
+        for r in rows
+    ]
 
 
 def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
